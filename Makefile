@@ -1,4 +1,4 @@
-.PHONY: test test-full check bench smoke lint examples
+.PHONY: test test-full check bench perfbench perfbench-trace smoke lint examples
 
 # default tier: slow-tier tests (tests/conftest.py SLOW_TIER_NODE_IDS)
 # are skipped so the run fits a CI/verify window (~14 min)
@@ -18,6 +18,22 @@ check-smoke:
 
 bench:
 	python bench.py
+
+# the repo benchmark (BENCHMARK.json): both workloads, seed 1, 20 s
+# each; per-run detail lands in .perfbench/
+PERFBENCH_WORKLOADS = wimbd_scan neardup_dedup
+PERFBENCH_SEED = 1
+
+perfbench:
+	for w in $(PERFBENCH_WORKLOADS); do \
+		python3 perfbench/run.py --workload $$w --seed $(PERFBENCH_SEED) \
+			--seconds 20 --trace 0 || exit 1; done
+
+# the same with Spark's event log folded into per-operation layer rows
+perfbench-trace:
+	for w in $(PERFBENCH_WORKLOADS); do \
+		python3 perfbench/run.py --workload $$w --seed $(PERFBENCH_SEED) \
+			--seconds 20 --trace 1 || exit 1; done
 
 smoke:
 	python -c "import __spark_entry__ as e; from wimbd_spark import get_spark; \

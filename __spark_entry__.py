@@ -44,6 +44,7 @@ from wimbd_spark.search import (
     count_total_occurrences_of_unigrams,
     get_documents_containing_phrases,
 )
+from wimbd_spark.session import local_frame
 
 # ---------------------------------------------------------------- helpers
 
@@ -3753,7 +3754,7 @@ def q_streaming_decontaminate_src0(spark, sf_dir):
         )
         # materialize before the temp dir disappears
         rows = kept.collect()
-        return spark.createDataFrame(rows, kept.schema)
+        return local_frame(spark, rows, kept.schema)
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
@@ -4371,8 +4372,8 @@ def q_domain_blocklist_filter(spark, sf_dir):
     from wimbd_spark.operators.urlfilter import filter_by_domain_blocklist
 
     docs = _docs_with_urls(spark, sf_dir)
-    blocked = spark.createDataFrame(
-        [(d,) for d in BLOCKED_DOMAINS], ["domain"]
+    blocked = local_frame(
+        spark, [(d,) for d in BLOCKED_DOMAINS], "domain string"
     )
     kept = filter_by_domain_blocklist(docs, blocked)
     return kept.select(F.col("doc_id").cast("long").alias("doc_id"))
@@ -4662,7 +4663,9 @@ TAXONOMY = [
 def q_taxonomy_counts(spark, sf_dir):
     from wimbd_spark.operators.pii import taxonomy_counts
 
-    wordlist = spark.createDataFrame(TAXONOMY, ["word", "categorization"])
+    wordlist = local_frame(
+        spark, TAXONOMY, "word string, categorization string"
+    )
     return taxonomy_counts(_docs(spark, sf_dir), wordlist).select(
         "categorization", F.col("count").cast("long").alias("count")
     )
@@ -6583,7 +6586,7 @@ def _replay_events_stream(
               for c, cast in cols]
         )
         rows = out.collect()  # materialize before the temp dir goes
-        return spark.createDataFrame(rows, out.schema)
+        return local_frame(spark, rows, out.schema)
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
@@ -7508,7 +7511,7 @@ def q_streaming_ivf_dedup(spark, sf_dir):
     # degenerate guard: the gate refuses an empty base index by
     # contract; an empty corpus means an empty feed anyway
     if base.limit(1).count() == 0:
-        return spark.createDataFrame([], "vec_id long")
+        return local_frame(spark, [], "vec_id long")
     root = tempfile.mkdtemp(prefix="wimbd_stream_ivfdedup_")
     try:
         idx = f"{root}/idx"
@@ -7533,9 +7536,7 @@ def q_streaming_ivf_dedup(spark, sf_dir):
         ]
     finally:
         shutil.rmtree(root, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "vec_id long"
-    ) if rows else spark.createDataFrame([], "vec_id long")
+    return local_frame(spark, rows, "vec_id long")
 
 
 def o_streaming_ivf_dedup():

@@ -388,6 +388,35 @@ def test_ngram_jaccard_rejects_unknown_string_cap(spark):
         ngram_jaccard_pairs(df, max_shingle_freq="always")
 
 
+def test_lsh_uncapped_duplicated_ids_never_self_pair(spark):
+    """Uncapped LSH gathers (id, band-hash vector) members, so an id
+    duplicated with two different signatures is two members of the
+    bucket they share. It must not pair with itself, and the pair set
+    must equal the capped branch's (which gathers bare ids)."""
+    from wimbd_spark.operators.neardup import _pairs_from_sigs
+
+    cols = "doc_id long, mh0 long, mh1 long, mh2 long, mh3 long"
+    sigs = spark.createDataFrame(
+        [
+            (1, 10, 11, 12, 13),
+            (1, 10, 11, 98, 99),  # same id, agrees only in band 0
+            (2, 10, 11, 12, 13),
+            (3, 50, 51, 98, 99),
+        ],
+        cols,
+    )
+
+    def pairs(cap):
+        return {
+            (r["id_a"], r["id_b"])
+            for r in _pairs_from_sigs(sigs, "doc_id", 4, 2, cap).collect()
+        }
+
+    uncapped = pairs(None)
+    assert all(a < b for a, b in uncapped), uncapped
+    assert uncapped == pairs(64) == {(1, 2), (1, 3)}
+
+
 def test_neardup_components_and_drop(spark):
     from wimbd_spark.operators.neardup import (
         drop_near_duplicates,

@@ -393,36 +393,48 @@ def test_bucketed_table_variant(spark, corpus, tmp_path):
         spark.sql("DROP TABLE IF EXISTS postings_bucketed")
 
 
-def test_corpus_grams_engine_parity(spark, documents):
-    """The opt-in arrow enumeration (kept as a documented measured
-    negative — see _enum_grams_arrow) must emit exactly the expression
-    plan's candidate stream across slop/with_doc/vocab shapes."""
-    import pyspark.sql.functions as F
+def _parquet_files(path):
+    import glob
 
-    from wimbd_spark.functions.text import tokenize
-    from wimbd_spark.index import (
-        build_phrase_index,
-        corpus_grams_from_postings,
-        load_phrase_index,
+    return glob.glob(f"{path}/*.parquet")
+
+
+def test_default_layout_is_data_sized(spark, corpus, tmp_path):
+    """num_files=None writes as many files as the data needs (one for
+    a tiny corpus); an explicit count is honoured; both answer the same
+    phrase counts and contamination rate."""
+    from wimbd_spark.index import compact_phrase_index
+    from wimbd_spark.operators.bm25 import build_doclen_stats
+    from wimbd_spark.operators.dedup import contamination_rate_indexed
+
+    sized, fixed = str(tmp_path / "sized"), str(tmp_path / "fixed")
+    build_phrase_index(corpus, sized)
+    build_phrase_index(corpus, fixed, num_files=32)
+    assert len(_parquet_files(sized)) == 1
+    # a fixed count writes one file per non-empty hash partition
+    assert len(_parquet_files(fixed)) > 1
+    doclens = build_doclen_stats(spark, sized)
+    assert len(_parquet_files(doclens)) == 1
+    compact_phrase_index(spark, fixed, str(tmp_path / "compact"))
+    assert len(_parquet_files(str(tmp_path / "compact"))) == 1
+
+    a, b = load_phrase_index(spark, sized), load_phrase_index(spark, fixed)
+    assert sorted(a.collect()) == sorted(b.collect())
+    assert sorted(
+        count_documents_for_each_phrase_indexed(a, PHRASES).collect()
+    ) == sorted(count_documents_for_each_phrase_indexed(b, PHRASES).collect())
+    # reversed leading bigrams: some occur in the corpus, some do not
+    ev = corpus.select(
+        F.array_join(
+            F.reverse(F.slice(F.split(F.col("text"), " "), 1, 2)), " "
+        ).alias("phrase")
     )
-    import tempfile, os
+    assert contamination_rate_indexed(
+        a, ev, "phrase"
+    ).collect() == contamination_rate_indexed(b, ev, "phrase").collect()
 
-    with tempfile.TemporaryDirectory() as td:
-        path = os.path.join(td, "idx")
-        build_phrase_index(documents, path)
-        idx = load_phrase_index(spark, path)
-        vocab = documents.select(
-            F.explode(tokenize(F.col("text"))).alias("token")
-        ).limit(2000)
-        for slop in (0, 1):
-            for wd in (False, True):
-                a = corpus_grams_from_postings(
-                    idx, [3, 4], with_doc=wd, vocab=vocab, slop=slop,
-                    engine="arrow",
-                )
-                x = corpus_grams_from_postings(
-                    idx, [3, 4], with_doc=wd, vocab=vocab, slop=slop,
-                    engine="expr",
-                )
-                assert a.exceptAll(x).count() == 0
-                assert x.exceptAll(a).count() == 0
+
+def test_explicit_num_files_honoured(corpus, tmp_path):
+    path = str(tmp_path / "two")
+    build_phrase_index(corpus, path, num_files=2)
+    assert len(_parquet_files(path)) == 2

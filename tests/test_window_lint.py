@@ -15,6 +15,11 @@ somewhere below it in the same subtree. A future unpartitioned window
 slapped directly on a scan/join output fails loudly with the query
 name and the offending subtree.
 
+The same walk also fails any query whose plan reads an RDD with a
+PythonRDD in its lineage — a frame built from a Python list, which
+re-pickles its rows in a Python worker on every execution (driver-side
+rows go through ``session.local_frame``).
+
 The walk is plan-only (no job runs for the lint itself; queries whose
 CONSTRUCTION runs bounded prep jobs — index builds, model fits — run
 them exactly as the driver does).
@@ -64,6 +69,34 @@ def _lint_plan(name: str, df) -> list[str]:
     return bad
 
 
+def _iter_with_inner(jnode):
+    """Every node, descending into inner plans too (a persisted
+    subtree's cached physical plan, subqueries)."""
+    stack = [jnode]
+    while stack:
+        n = stack.pop()
+        yield n
+        stack.extend(_children(n))
+        inner = n.innerChildren()
+        stack.extend(inner.apply(i) for i in range(inner.size()))
+
+
+def _lint_python_rdd(name: str, df) -> list[str]:
+    """A list-built frame (``spark.createDataFrame(<list>)``) is an RDD
+    whose lineage holds a PythonRDD: every execution starts a Python
+    worker to re-pickle its rows. Driver-side rows must go through
+    ``session.local_frame`` instead."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    bad = []
+    for n in _iter_with_inner(plan):
+        if n.getClass().getSimpleName() not in ("LogicalRDD", "RDDScanExec"):
+            continue
+        lineage = n.rdd().toDebugString()
+        if "PythonRDD" in lineage:
+            bad.append(f"{name}: Python-built RDD in the plan\n{lineage}")
+    return bad
+
+
 def test_registry_has_no_unbounded_global_windows(spark):
     import sys
     from pathlib import Path
@@ -83,6 +116,7 @@ def test_registry_has_no_unbounded_global_windows(spark):
             if n.getClass().getSimpleName() == "Window":
                 windows_seen += 1
         offenders.extend(_lint_plan(name, df))
+        offenders.extend(_lint_python_rdd(name, df))
         checked += 1
     assert checked >= 50
     # the lint must actually be exercising Window sites, not
@@ -112,3 +146,19 @@ def test_lint_accepts_post_limit_rank(spark):
     w = Window.orderBy(F.col("n_chars").desc())
     df = top.withColumn("r", F.row_number().over(w))
     assert not _lint_plan("post_limit", df)
+
+
+def test_lint_catches_a_list_built_frame(spark):
+    """Negative control for the PythonRDD lint, and its pass case."""
+    from wimbd_spark.session import local_frame
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    listed = spark.createDataFrame([(1,), (2,)], "doc_id long")
+    assert _lint_python_rdd("planted", docs.join(listed, "doc_id"))
+    cached = listed.persist()
+    try:
+        assert _lint_python_rdd("planted_cached", docs.join(cached, "doc_id"))
+    finally:
+        cached.unpersist()
+    arrow = local_frame(spark, [(1,), (2,)], "doc_id long")
+    assert not _lint_python_rdd("arrow", docs.join(arrow, "doc_id"))

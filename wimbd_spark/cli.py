@@ -360,7 +360,10 @@ def main(argv: list[str] | None = None) -> int:
     sp.add_argument("--out", required=True, help="index parquet path")
     sp.add_argument("--id-col", default=None,
                     help="doc id column (default: first column)")
-    sp.add_argument("--num-files", type=int, default=32)
+    sp.add_argument(
+        "--num-files", type=int, default=None,
+        help="posting files to write (default: sized from the data)",
+    )
     sp.add_argument("--doclens", action="store_true",
                     help="also build the BM25 _doclens sidecar (done "
                     "lazily by the first ranked query otherwise)")

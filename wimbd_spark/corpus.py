@@ -33,6 +33,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from wimbd_spark.session import local_frame
+
 # Canonical union document schema (SURVEY.md §1.1; ES mapping
 # wimbd/es/README.md "Indices Mapping" + observed optional fields).
 DOCUMENT_SCHEMA = StructType(
@@ -304,7 +306,7 @@ def _read_arrow_shards(spark: SparkSession, files: list[str]) -> DataFrame:
                     for batch in rd:
                         yield batch.to_pandas()
 
-    paths = spark.createDataFrame([(p,) for p in files], "path string")
+    paths = local_frame(spark, [(p,) for p in files], "path string")
     n = min(len(files), spark.sparkContext.defaultParallelism)
     return paths.repartition(n).mapInPandas(gen, schema=schema)
 

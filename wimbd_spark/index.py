@@ -45,7 +45,11 @@ from pyspark.sql.window import Window
 
 from wimbd_spark.functions.text import tokenize
 from wimbd_spark.search import analyze_phrase
-from wimbd_spark.session import parquet_plan
+from wimbd_spark.session import local_frame, parquet_plan
+
+#: Bucket count of the ``as_table`` catalog variant when num_files is
+#: None.
+DEFAULT_INDEX_BUCKETS = 32
 
 
 def build_phrase_index(
@@ -53,7 +57,7 @@ def build_phrase_index(
     path: str,
     id_col: str = "doc_id",
     text_col: str = "text",
-    num_files: int = 32,
+    num_files: int | None = None,
     mode: str = "overwrite",
     as_table: str | None = None,
     tokenizer=None,
@@ -76,13 +80,19 @@ def build_phrase_index(
     ``functions.text._uax29_words`` there; the defaults pair
     ``tokenize`` with ``str.split``).
 
+    ``num_files``: None (default) sizes the output from the data —
+    see ``_token_layout``; an int writes exactly that many
+    token-hashed files.
+
     ``as_table`` additionally registers the postings as a BUCKETED
     catalog table (bucketBy token, external data at ``path``): on a
     cluster, joins and aggregations keyed on token then read
     pre-partitioned buckets with no exchange, and bucket pruning
-    serves token-equality lookups. The plain-path variant keeps the
-    same physical layout (hash-distributed + sorted on token) without
-    needing a metastore.
+    serves token-equality lookups. Its bucket count is ``num_files``,
+    or DEFAULT_INDEX_BUCKETS when that is None: a bucket spec is part
+    of the table's contract, so it is never data-sized. The plain-path
+    variant keeps the same physical layout (hash-distributed + sorted
+    on token) without needing a metastore.
     """
     if id_col == text_col:
         raise ValueError(
@@ -101,21 +111,36 @@ def build_phrase_index(
         .agg(F.sort_array(F.collect_list("pos")).alias("positions"))
     )
     if as_table:
+        n_buckets = num_files or DEFAULT_INDEX_BUCKETS
         (
-            posts.repartition(num_files, "token")
-            .write.bucketBy(num_files, "token")
+            posts.repartition(n_buckets, "token")
+            .write.bucketBy(n_buckets, "token")
             .sortBy("token", "doc_id")
             .option("path", path)
             .mode(mode)
             .saveAsTable(as_table)
         )
         return
-    (
-        posts.repartition(num_files, "token")
-        .sortWithinPartitions("token", "doc_id")
-        .write.mode(mode)
-        .parquet(path)
+    _token_layout(posts, num_files).write.mode(mode).parquet(path)
+
+
+def _token_layout(posts: DataFrame, num_files: int | None) -> DataFrame:
+    """Postings hash-distributed on token and token-sorted within each
+    file, so a token lookup prunes to few files and row groups.
+
+    ``num_files=None`` repartitions on token with no count: the
+    shuffle has spark.sql.shuffle.partitions partitions and AQE
+    coalesces them to its advisory size, so a small index is written
+    as one file and a large one as at most that many. A fixed count
+    writes one file per non-empty hash partition however little data
+    each holds, and each file costs a write task and a read split. An
+    int keeps that fixed count."""
+    parts = (
+        posts.repartition("token")
+        if num_files is None
+        else posts.repartition(num_files, "token")
     )
+    return parts.sortWithinPartitions("token", "doc_id")
 
 
 def load_phrase_index(spark: SparkSession, path: str) -> DataFrame:
@@ -194,12 +219,13 @@ def compact_phrase_index(
     spark: SparkSession,
     path: str,
     fresh_path: str,
-    num_files: int = 32,
+    num_files: int | None = None,
     mode: str = "error",
 ) -> None:
     """Compact a streaming-appended postings index into ``fresh_path``
-    with the canonical single-generation layout (``num_files``
-    token-hashed, token-sorted files) — restoring the file-pruning
+    with the canonical single-generation layout (token-hashed,
+    token-sorted files, data-sized unless ``num_files`` is given; see
+    ``_token_layout``) — restoring the file-pruning
     behavior that per-batch appends erode (each micro-batch adds its
     own ``num_files`` files, so a token lookup degrades from 1 file to
     1-per-batch; see streaming_phrase_index).
@@ -231,12 +257,7 @@ def compact_phrase_index(
             ).alias("positions")
         )
     )
-    (
-        posts.repartition(num_files, "token")
-        .sortWithinPartitions("token", "doc_id")
-        .write.mode(mode)
-        .parquet(fresh_path)
-    )
+    _token_layout(posts, num_files).write.mode(mode).parquet(fresh_path)
     # if the source index carried a BM25 _doclens sidecar, rebuild it
     # for the compacted generation — appends are exactly when the
     # sidecar goes stale (operators/bm25.build_doclen_stats docstring)
@@ -316,100 +337,6 @@ def slop_combination_count(lengths: list[int], slop: int) -> int:
     return sum(math.comb(L + slop - 1, L - 1) for L in set(lengths))
 
 
-def _enum_grams_arrow(
-    tokpos: DataFrame, Ls: list[int], slop: int, max_l: int
-) -> DataFrame:
-    """Candidate (doc_id, _L, _toks) stream enumerated per document in
-    numpy instead of the window/collect_list expression plan.
-
-    The expression form pays, per (pruned) posting row, a sorted
-    window materializing an (L+slop)-struct array plus one interpreted
-    CASE per anchored combination; here one applyInPandas group per
-    document sorts its positions once and gathers every combination's
-    token matrix vectorized. Emits exactly the rows the window plan's
-    explode emits (same anchors, same span checks, duplicates
-    included) — downstream match_keys semi-join / dedup are unchanged,
-    so parity is pinned at this stream's level in tests.
-
-    MEASURED NEGATIVE at sf1 (kept as an opt-in, NOT the default):
-    the candidate stream — millions of (doc, L, token-array) rows —
-    must cross the Python→JVM Arrow boundary before the match_keys
-    semi-join can prune it, and that serialization cost exceeds the
-    whole expression plan (contamination_slop1_indexed 4.2 s → 20.4 s,
-    phrase_df_counts 2.8 s → 13.3 s). The lead()-column rewrite of
-    the expression plan attacks the same per-row window cost without
-    shipping candidates out of the JVM.
-    """
-    import numpy as np
-
-    id_t = tokpos.schema["doc_id"].dataType.simpleString()
-    out_schema = f"doc_id {id_t}, _L int, _toks array<string>"
-    combos = [
-        (L, np.asarray(c, dtype=np.int64) - 1)
-        for L in Ls
-        for c in (
-            [tuple(range(1, L + 1))] if slop == 0 else _slop_combos(L, slop)
-        )
-    ]
-    slop_i = int(slop)
-
-    def enum(pdf):
-        import pandas as pd
-
-        n = len(pdf)
-        if n == 0:
-            return pd.DataFrame(
-                {
-                    "doc_id": pd.Series(dtype="object"),
-                    "_L": pd.Series(dtype="int32"),
-                    "_toks": pd.Series(dtype="object"),
-                }
-            )
-        P = pdf["_pos"].to_numpy()
-        order = np.argsort(P)
-        P = P[order]
-        T = pdf["token"].to_numpy()[order]
-        did = pdf["doc_id"].iloc[0]
-        out_l: list = []
-        out_t: list = []
-        for L, c in combos:
-            last = int(c[-1])
-            m = n - last
-            if m <= 0:
-                continue
-            anchors = np.arange(m)
-            span = P[anchors + last] - P[anchors]
-            # slop=0 demands exact contiguity (== L-1); slop>0 a
-            # window bound (<= L+slop-1) — the window plan's CASEs
-            valid = (
-                span == (L - 1) if slop_i == 0 else span <= (L + slop_i - 1)
-            )
-            k = int(valid.sum())
-            if k == 0:
-                continue
-            idx = anchors[valid][:, None] + c[None, :]
-            out_l.append(np.full(k, L, dtype=np.int32))
-            out_t.extend(T[idx].tolist())
-        if not out_l:
-            return pd.DataFrame(
-                {
-                    "doc_id": pd.Series(dtype="object"),
-                    "_L": pd.Series(dtype="int32"),
-                    "_toks": pd.Series(dtype="object"),
-                }
-            )
-        all_l = np.concatenate(out_l)
-        return pd.DataFrame(
-            {
-                "doc_id": [did] * len(all_l),
-                "_L": all_l,
-                "_toks": out_t,
-            }
-        )
-
-    return tokpos.groupBy("doc_id").applyInPandas(enum, out_schema)
-
-
 def corpus_grams_from_postings(
     index: DataFrame,
     lengths: list[int],
@@ -417,7 +344,6 @@ def corpus_grams_from_postings(
     vocab: DataFrame | None = None,
     slop: int = 0,
     match_keys: DataFrame | None = None,
-    engine: str = "expr",
 ) -> DataFrame:
     """Distinct token L-gram keys of the INDEXED corpus for every L in
     ``lengths``, reconstructed from postings alone (positions →
@@ -464,8 +390,6 @@ def corpus_grams_from_postings(
         raise ValueError("lengths must contain at least one L >= 1")
     if slop < 0:
         raise ValueError("slop must be >= 0")
-    if engine not in ("arrow", "expr"):
-        raise ValueError(f"unknown engine {engine!r}")
     if slop and (n := slop_combination_count(Ls, slop)) > MAX_SLOP_COMBINATIONS:
         raise ValueError(
             f"slop={slop} over lengths {Ls} enumerates {n:,} per-position"
@@ -481,25 +405,17 @@ def corpus_grams_from_postings(
         tokpos = tokpos.join(
             vocab.select("token").distinct(), "token", "left_semi"
         )
-    if engine == "arrow":
-        out = _enum_grams_arrow(tokpos, Ls, slop, max_l)
-        if match_keys is not None:
-            out = out.join(
-                match_keys.select("_L", "_toks"),
-                ["_L", "_toks"],
-                "left_semi",
-            )
-        if with_doc:
-            return out.dropDuplicates(["doc_id", "_L", "_toks"])
-        return out.select("_L", "_toks").distinct()
     # NOTE (r16, measured negative): rewriting this lookahead as
     # lead(k) columns over one window spec — primitive columns, no
     # per-row array — was uniformly SLOWER (each distinct lead offset
     # gets its own OffsetWindowFunctionFrame, so 2·(max_l+slop−1)
     # frame processors replace one collect_list frame; at the
     # mixed-length tokens_slop1 shape, 3 s → 19 s). The collect_list
-    # window below stands as the measured-best plan, alongside the
-    # engine="arrow" negative documented on _enum_grams_arrow.
+    # window below stands as the measured-best plan. It also beat a
+    # per-document numpy enumeration (applyInPandas), whose candidate
+    # stream had to cross the Arrow boundary before the match_keys
+    # semi-join could prune it: 5x slower at sf1
+    # (contamination_slop1_indexed 4.2 s → 20.4 s).
     w = (
         Window.partitionBy("doc_id")
         .orderBy("_pos")
@@ -584,11 +500,13 @@ def _phrase_matches_gram_join(
     """
     spark = index.sparkSession
     lengths = sorted({len(t) for t in ptoks})
-    qdf = spark.createDataFrame(
+    qdf = local_frame(
+        spark,
         [(pid, len(t), t) for pid, t in enumerate(ptoks)],
         schema="pid int, _L int, _toks array<string>",
     )
-    vocab = spark.createDataFrame(
+    vocab = local_frame(
+        spark,
         [(t,) for t in sorted({tok for p in ptoks for tok in p})],
         schema="token string",
     )
@@ -725,7 +643,8 @@ def phrase_matches_batch(
                 "heavy shuffle",
                 stacklevel=2,
             )
-    qdf = spark.createDataFrame(
+    qdf = local_frame(
+        spark,
         rows, schema="pid int, slot int, token string, L int"
     )
     per = (
@@ -871,7 +790,8 @@ def count_documents_for_each_phrase_indexed(
             flat.append(ph)
     spark = index.sparkSession
     m = phrase_matches_batch(index, flat, slop, analyzer)
-    gmeta = spark.createDataFrame(
+    gmeta = local_frame(
+        spark,
         [(gid, len(g), names[gid]) for gid, g in enumerate(groups)],
         schema="gid int, nm int, phrase string",
     )
@@ -885,7 +805,8 @@ def count_documents_for_each_phrase_indexed(
             F.count(F.lit(1)).alias("count")
         )
     else:
-        pid2gid = spark.createDataFrame(
+        pid2gid = local_frame(
+            spark,
             pid_gid, schema="pid int, gid int"
         )
         counts = (
@@ -1147,7 +1068,8 @@ def contaminated_examples(
         )
     if not lengths:
         spark = index.sparkSession
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [], schema="phrase string, doc_id long, rank int"
         )
     # vocabulary prune from the CACHED valid-length phrase table —
@@ -1184,7 +1106,7 @@ def count_total_occurrences_of_unigrams_indexed(
         .agg(F.sum(F.size("positions")).alias("count"))
     )
     spark = index.sparkSession
-    wanted = spark.createDataFrame([(u,) for u in unigrams], ["unigram"])
+    wanted = local_frame(spark, [(u,) for u in unigrams], "unigram string")
     return (
         wanted.join(
             got.withColumnRenamed("token", "unigram"), "unigram", "left"

@@ -47,7 +47,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from wimbd_spark.functions.text import tokenize
-from wimbd_spark.session import parquet_plan
+from wimbd_spark.session import local_frame, parquet_plan
 
 DEFAULT_K1 = 1.2
 DEFAULT_B = 0.75
@@ -231,7 +231,7 @@ def _ranked_topk(scored: DataFrame, k: int, id_col: str) -> DataFrame:
 
 
 def build_doclen_stats(
-    spark: SparkSession, index_path: str, num_files: int = 8
+    spark: SparkSession, index_path: str, num_files: int | None = None
 ) -> str:
     """Materialize the per-document length table for a posting-list
     index at `<index_path>/_doclens` (doc_id, dl) and return that path.
@@ -264,7 +264,12 @@ def build_doclen_stats(
         .groupBy("doc_id")
         .agg(F.sum(F.size("positions")).alias("dl"))
     )
-    doclens.repartition(num_files).write.mode("overwrite").parquet(out)
+    # None: data-sized, as for the postings (index._token_layout)
+    (
+        doclens.repartition("doc_id")
+        if num_files is None
+        else doclens.repartition(num_files)
+    ).write.mode("overwrite").parquet(out)
     _write_small_file(
         spark, out.rstrip("/") + "/" + _MANIFEST_FILE, manifest
     )
@@ -527,8 +532,8 @@ def more_like_this(
         # ES semantics: MLT on a missing/empty document has no query
         # terms and returns zero hits — typed empty, not an error
         id_type = dict(df.dtypes)[id_col]
-        return df.sparkSession.createDataFrame(
-            [], f"{id_col} {id_type}, score double, rank int"
+        return local_frame(
+            df.sparkSession, [], f"{id_col} {id_type}, score double, rank int"
         )
     return bm25_topk(
         df,
@@ -581,8 +586,8 @@ def more_like_this_indexed(
     if not tokens:
         # missing/empty anchor: zero query terms -> zero hits (ES)
         id_type = posts.schema["doc_id"].dataType.simpleString()
-        return spark.createDataFrame(
-            [], f"doc_id {id_type}, score double, rank int"
+        return local_frame(
+            spark, [], f"doc_id {id_type}, score double, rank int"
         )
     dfs = (
         posts.filter(F.col("token").isin(tokens))
@@ -775,7 +780,8 @@ def bm25_topk_batch_indexed(
     if any(not t for t in per_q.values()):
         raise ValueError("every query must analyze to >= 1 term")
     all_terms = sorted({t for ts in per_q.values() for t in ts})
-    qmap = spark.createDataFrame(
+    qmap = local_frame(
+        spark,
         [(q, t) for q, ts in per_q.items() for t in ts],
         "query string, token string",
     )

@@ -45,6 +45,7 @@ from wimbd_spark.operators.similarity import (
     _centroid_rows,
     _to_double,
 )
+from wimbd_spark.session import local_frame
 
 SUM_SCALE = 9  # component rounding before the exact decimal sum
 
@@ -286,8 +287,10 @@ def kmeans_cluster_stats(
     so oracle hashing is exact)."""
     cents = kmeans_fit(df, n_clusters, n_iter, id_col, vec_col)
     if not cents:
-        return df.sparkSession.createDataFrame(
-            [], "cluster long, n_members long, inertia_nano long"
+        return local_frame(
+            df.sparkSession,
+            [],
+            "cluster long, n_members long, inertia_nano long",
         )
     v = _to_double(F.col(vec_col))
     scored = F.transform(

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from wimbd_spark.functions.text import doc_hash
+from wimbd_spark.session import local_frame, plan_size_bytes
 
 
 def _null_safe_partition(key: Column) -> list[Column]:
@@ -202,9 +203,8 @@ def find_examples(
     wanted set. Parity: get_examples.py:8-33.
     """
     if isinstance(wanted_hashes, list):
-        spark = df.sparkSession
-        wanted = spark.createDataFrame(
-            [(h,) for h in wanted_hashes], ["_h"]
+        wanted = local_frame(
+            df.sparkSession, [(h,) for h in wanted_hashes], "_h string"
         )
     else:
         wanted = wanted_hashes.toDF("_h")
@@ -531,23 +531,13 @@ def _anchored_hits(corpus, phrases_tok, text_col):
     )
 
 
-def _plan_size_bytes(df: DataFrame) -> int | None:
-    """Catalyst's static size estimate for a plan (decompressed bytes),
-    or None if the internal accessor moves in a future Spark."""
-    try:
-        return int(
-            str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        )
-    except Exception:
-        return None
-
-
 def _rate_row(spark, n_hit: int, n_tot: int) -> DataFrame:
     """(contaminated, total, rate) single-row result. An empty eval
     set has an UNDEFINED rate (0/0) — NULL, not 0.0: emitting 0.0
     would falsely read as "checked and clean" (degenerate-corpus
     parity with the SQL oracle, where 0/0 division yields NULL)."""
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(n_hit, n_tot, float(n_hit) / n_tot if n_tot else None)],
         "contaminated long, total long, rate double",
     )
@@ -586,7 +576,7 @@ def contamination_rate(
     phrases = eval_df.select(F.col(phrase_col).alias("_p")).distinct()
     n_tot = phrases.count()
     if prefilter is None:
-        sz = _plan_size_bytes(corpus)
+        sz = plan_size_bytes(corpus)  # unknown counts as large
         prefilter = n_tot >= prefilter_threshold and (
             sz is None or sz * n_tot > bnlj_budget
         )
@@ -1515,7 +1505,4 @@ def contamination_rate_indexed(
 
     m = phrase_matches_batch(index, phrase_list, slop, analyzer)
     n_hit = m.select("pid").distinct().count()
-    return spark.createDataFrame(
-        [(n_hit, n_tot, float(n_hit) / n_tot)],
-        ["contaminated", "total", "rate"],
-    )
+    return _rate_row(spark, n_hit, n_tot)

@@ -11,7 +11,10 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 from pyspark.sql.window import Window
+
+from wimbd_spark.session import local_frame
 
 
 def key_count(
@@ -139,7 +142,11 @@ def id_lookup(
     to parquet); large ones should broadcast-semi-join instead."""
     if len(ids) <= 1000:
         return df.filter(F.col(id_col).isin(ids))
-    wanted = df.sparkSession.createDataFrame([(i,) for i in ids], [id_col])
+    wanted = local_frame(
+        df.sparkSession,
+        [(i,) for i in ids],
+        StructType([StructField(id_col, df.schema[id_col].dataType)]),
+    )
     return df.join(F.broadcast(wanted.distinct()), id_col, "left_semi")
 
 

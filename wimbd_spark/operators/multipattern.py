@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from wimbd_spark.functions.text import tokenize
+from wimbd_spark.session import local_frame
 
 
 def _build_automaton(patterns: list[str]):
@@ -219,8 +220,10 @@ def count_documents_for_each_phrase_ac(
 
     partial = toks.mapInPandas(gen, "pid long, n long")
     totals = partial.groupBy("pid").agg(F.sum("n").alias("count"))
-    names = df.sparkSession.createDataFrame(
-        [(i, p) for i, p in enumerate(phrases)], "pid long, phrase string"
+    names = local_frame(
+        df.sparkSession,
+        [(i, p) for i, p in enumerate(phrases)],
+        "pid long, phrase string",
     )
     return (
         F.broadcast(names)

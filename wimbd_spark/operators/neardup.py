@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from wimbd_spark.functions.text import hash32, ngram_strings, tokenize
+from wimbd_spark.session import local_frame
 
 
 def shingle_set(text: Column | str, n: int = 3) -> Column:
@@ -365,6 +366,7 @@ def _pairs_from_sigs(
     # pair's first agreeing band can be a bucket the cap dropped while
     # a later band kept the pair — survival of another band's bucket
     # is not knowable map-side, so the capped branch keeps distinct().
+    # The vectors grow each bucket's gather buffer by about bands×.
     dedup_mapside = max_bucket_size is None
     buckets = _banded_buckets(
         sigs, id_col, num_hashes, bands, with_vector=dedup_mapside
@@ -445,9 +447,12 @@ def _pairs_from_sigs(
             if first_band is None
             else first_band.when(agree, F.lit(j))
         )
-    return paired.filter(F.col("band") == first_band).select(
-        "id_a", F.col("_b.id").alias("id_b")
-    )
+    # id_a < id_b: members are sorted by (id, _bhs), so a duplicated
+    # id carrying two different signatures would otherwise pair with
+    # itself (collect_set(id) in the capped branch collapses it)
+    return paired.filter(
+        (F.col("band") == first_band) & (F.col("id_a") < F.col("_b.id"))
+    ).select("id_a", F.col("_b.id").alias("id_b"))
 
 
 def lsh_candidate_pairs(
@@ -467,7 +472,10 @@ def lsh_candidate_pairs(
     risk; `bands`/`rows` tune the candidate volume, and
     ``max_bucket_size`` (finite by default) hard-caps degenerate
     buckets before they are ever gathered (see _pairs_from_sigs;
-    audit with lsh_bucket_sizes; None disables).
+    audit with lsh_bucket_sizes; None disables). With None each bucket
+    member carries its full band-hash vector, so the per-bucket gather
+    buffer grows by about ``bands``× — an uncapped degenerate bucket
+    costs that much more memory.
     """
     sigs = minhash_signatures(df, id_col, text_col, num_hashes, shingle_n)
     return _pairs_from_sigs(sigs, id_col, num_hashes, bands, max_bucket_size)
@@ -1057,7 +1065,7 @@ def neardup_components(
                     StructField("comp", id_type, False),
                 ]
             )
-            return spark.createDataFrame(rows, schema)
+            return local_frame(spark, rows, schema)
         # big graph: iterate from the cached pairs
         pairs = p2.persist(StorageLevel.MEMORY_AND_DISK)
     if stats is not None:

@@ -29,10 +29,11 @@ import os
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType
 from pyspark.sql.window import Window
 
 from wimbd_spark.functions.text import hash32
-from wimbd_spark.session import parquet_plan
+from wimbd_spark.session import local_frame, parquet_plan, plan_size_bytes
 
 
 def _to_double(vec: Column) -> Column:
@@ -479,7 +480,8 @@ def cosine_topk_ivf(
     if cent_arr is None:  # empty corpus → no neighbors for any query
         qt = queries.schema[id_col].dataType.simpleString()
         ct = corpus.schema[id_col].dataType.simpleString()
-        return corpus.sparkSession.createDataFrame(
+        return local_frame(
+            corpus.sparkSession,
             [], f"query_id {qt}, neighbor_id {ct}, rank long"
         )
 
@@ -576,7 +578,8 @@ def semantic_duplicates(
     cent_arr = _deterministic_centroids(df, id_col, vec_col, n_centroids)
     if cent_arr is None:  # empty corpus → nothing to drop
         idt = df.schema[id_col].dataType.simpleString()
-        return df.sparkSession.createDataFrame(
+        return local_frame(
+            df.sparkSession,
             [], f"`{id_col}` {idt}, centroid {idt}, dup_of {idt}"
         )
     assigned = df.select(
@@ -758,19 +761,6 @@ def auto_nbits(n_rows: int, target_bucket: int = 256, max_bits: int = 24) -> int
     return max(1, min(max_bits, math.ceil(math.log2(max(2.0, n_rows / target_bucket)))))
 
 
-def _df_bytes(df: DataFrame) -> int:
-    """Optimizer size estimate of a DataFrame — driver-side plan
-    statistics, no Spark job (for parquet-backed plans this is the
-    file-size-derived estimate; the job-free signal the LSH block
-    gate needs, mirroring _dir_bytes for path-backed inputs)."""
-    try:
-        return int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:
-        return 0
-
-
 def _lsh_clean_probe(base: DataFrame, dim: int) -> tuple[bool, int]:
     """ONE map-only aggregation returning (clean, exact row count) —
     the count rides the same job so the block gate can resolve the
@@ -839,8 +829,11 @@ def _lsh_block_pairs(
         # true volume cannot reach the crossover — classic, no job.
         # Above it, ONE map-only probe job (which doubles as the clean
         # check and warms the persisted base) resolves the exact count.
-        est_rows = _df_bytes(df) // max(1, 8 * dim)
-        if _vol(est_rows) < _GEMM_MIN_BLOCK_VOLUME // 64:
+        # An unknown size counts as small: classic, no job.
+        sz = plan_size_bytes(df)
+        if sz is None or _vol(sz // max(1, 8 * dim)) < (
+            _GEMM_MIN_BLOCK_VOLUME // 64
+        ):
             return None
     clean, n_exact = _lsh_clean_probe(base, dim)
     if not clean:
@@ -1160,13 +1153,15 @@ def build_ivf_index(
         # empty corpus → a valid, empty index (degenerate shards must
         # build, not crash — the r6 item 5 rule)
         id_t = df.schema[id_col].dataType.simpleString()
-        spark.createDataFrame([], f"centroid_id {id_t}, v array<double>") \
+        local_frame(spark, [], f"centroid_id {id_t}, v array<double>") \
             .write.mode(mode).parquet(f"{path}/centroids")
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [], f"id {id_t}, uvec array<double>, centroid {id_t}"
         ).write.mode(mode).partitionBy("centroid").parquet(f"{path}/lists")
         if pq_m is not None:
-            spark.createDataFrame(
+            local_frame(
+                spark,
                 [], "s int, j int, cv array<double>"
             ).write.mode(mode).parquet(f"{path}/pq_codebooks")
         return
@@ -1192,7 +1187,8 @@ def build_ivf_index(
         assigned = assigned.withColumn(
             "rn2", _pq_recon_norm2(F.col("codes"), cb)
         )
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [
                 (s, j, cv)
                 for s, book in enumerate(cb)
@@ -1200,9 +1196,13 @@ def build_ivf_index(
             ],
             "s int, j int, cv array<double>",
         ).write.mode(mode).parquet(f"{path}/pq_codebooks")
-    spark.createDataFrame(
+    # the centroids file stores integral ids as bigint
+    id_t = df.schema[id_col].dataType
+    cid_t = "bigint" if isinstance(id_t, IntegralType) else id_t.simpleString()
+    local_frame(
+        spark,
         [(r["centroid_id"], list(r["_cent"])) for r in cents],
-        ["centroid_id", "v"],
+        f"centroid_id {cid_t}, v array<double>",
     ).write.mode(mode).parquet(f"{path}/centroids")
     assigned.write.mode(mode).partitionBy("centroid").parquet(
         f"{path}/lists"
@@ -1249,7 +1249,8 @@ def cosine_topk_ivf_indexed(
     cents = parquet_plan(spark, f"{path}/centroids").collect()
     if not cents:
         qt = queries.schema[id_col].dataType.simpleString()
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [], f"query_id {qt}, neighbor_id {qt}, rank long"
         )
     cent_arr = _centroid_literal(
@@ -1349,7 +1350,7 @@ def cosine_topk_ivf_indexed(
             fresh.setdefault(r["query_id"], []).append(r)
         rows.update(fresh)
     flat = [r for rs in rows.values() for r in rs]
-    return spark.createDataFrame(flat, out.schema)
+    return local_frame(spark, flat, out.schema)
 
 
 def cosine_topk_ivf_pq_indexed(
@@ -1404,7 +1405,8 @@ def cosine_topk_ivf_pq_indexed(
         # empty index (never reads the partitioned lists: an empty
         # partitionBy write leaves no partition dirs to infer from)
         qt = queries.schema[id_col].dataType.simpleString()
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [],
             f"query_id {qt}, neighbor_id {qt}, "
             "approx_cosine double, rank long"
@@ -1496,7 +1498,8 @@ def cosine_topk_ivf_pq_indexed(
                     flat.append(acc)
             qt_rows.append((r[id_col], flat))
         qid_t = queries.schema[id_col].dataType.simpleString()
-        qt_df = spark.createDataFrame(
+        qt_df = local_frame(
+            spark,
             qt_rows, f"query_id {qid_t}, _qt array<double>"
         )
         q = (
@@ -1683,7 +1686,8 @@ def cosine_topk_ivf_pq_rerank(
     pairs = cand.collect()  # bounded: <= |queries| * n_candidates
     if not pairs:
         qt = queries.schema[id_col].dataType.simpleString()
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [], f"query_id {qt}, neighbor_id {qt}, rank long"
         )
     ids = sorted({r["neighbor_id"] for r in pairs})
@@ -1693,7 +1697,8 @@ def cosine_topk_ivf_pq_rerank(
         .filter(F.col("id").isin(ids))  # row-group pruning
         .select(F.col("id").alias("neighbor_id"), "uvec")
     )
-    cand_df = spark.createDataFrame(
+    cand_df = local_frame(
+        spark,
         [(r["query_id"], r["neighbor_id"]) for r in pairs],
         cand.select("query_id", "neighbor_id").schema,
     )
@@ -2037,7 +2042,8 @@ def cosine_pairs_ivf(
     )
     if scored is None:
         qt = queries.schema[id_col].dataType.simpleString()
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [], f"id_a {qt}, id_b {qt}, cosine double"
         )
     return (
@@ -2082,7 +2088,8 @@ def semantic_duplicates_ivf(
     )
     if scored is None:
         qt = queries.schema[id_col].dataType.simpleString()
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [], f"`{id_col}` {qt}, dup_of {qt}"
         )
     return (
@@ -2193,7 +2200,8 @@ def knn_join(
     cents = parquet_plan(spark, f"{path}/centroids").collect()
     if not cents:  # empty centroid table
         qt = queries.schema[id_col].dataType.simpleString()
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [], f"query_id {qt}, neighbor_id {qt}, rank long"
         )
     n_cents = len(cents)
@@ -2328,7 +2336,8 @@ def knn_join_pq(
         # the empty-result contract must win over the missing-PQ raise
         # (degenerate-corpus rule, r6 VERDICT item 5)
         qt = queries.schema[id_col].dataType.simpleString()
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [], f"query_id {qt}, neighbor_id {qt}, rank long"
         )
     cb = _load_codebooks(spark, path)
@@ -2871,7 +2880,8 @@ def recluster_ivf_index(
         cb = pq_codebooks(
             corpus, m=m, n_codes=n_codes, id_col="id", vec_col="uvec"
         )
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [
                 (s, j, cv)
                 for s, book in enumerate(cb)
@@ -2886,7 +2896,8 @@ def recluster_ivf_index(
         assigned = assigned.withColumn(
             "codes", pq_encode_col(F.col("uvec"), cb)
         ).withColumn("rn2", _pq_recon_norm2(F.col("codes"), cb))
-    spark.createDataFrame(
+    local_frame(
+        spark,
         [(cid, list(v)) for cid, v in fitted], "centroid_id int, v array<double>"
     ).write.mode(mode).parquet(f"{fresh_path}/centroids")
     assigned.write.mode(mode).partitionBy("centroid").parquet(
@@ -3073,7 +3084,7 @@ def _cb_expr(spark, cb: list):
     flat = [
         float(x) for book in cb for cv in book for x in cv
     ]
-    cb_df = spark.createDataFrame([(flat,)], "_cbflat array<double>")
+    cb_df = local_frame(spark, [(flat,)], "_cbflat array<double>")
 
     def entry_for(s: int, code: Column) -> Column:
         return F.slice(
@@ -3184,7 +3195,8 @@ def cosine_topk_pq(
     if cb is None:
         qt = queries.schema[query_id_col or id_col].dataType.simpleString()
         ct = corpus.schema[id_col].dataType.simpleString()
-        return corpus.sparkSession.createDataFrame(
+        return local_frame(
+            corpus.sparkSession,
             [],
             f"query_id {qt}, neighbor_id {ct}, "
             "approx_cosine double, rank long",

@@ -194,8 +194,10 @@ def top_pmi_bigrams(
     # signal as the Arrow text engines): on tiny corpora the five
     # redundant branches run concurrently inside one job and beat the
     # cache-build barrier (+0.2 s at sf0.1), past the threshold the
-    # shared table wins 5× (sf1: top_npmi 7.0 s → 1.4 s).
-    share = plan_size_bytes(df) >= ARROW_TEXT_MIN_BYTES
+    # shared table wins 5× (sf1: top_npmi 7.0 s → 1.4 s). An unknown
+    # size counts as small, as for the text engines.
+    sz = plan_size_bytes(df)
+    share = sz is not None and sz >= ARROW_TEXT_MIN_BYTES
     uni = (
         df.select(F.explode(toks).alias("w"))
         .groupBy("w")

@@ -36,6 +36,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from wimbd_spark.functions.text import tokenize
+from wimbd_spark.session import local_frame
 
 
 def analyze_phrase(phrase: str) -> list[str]:
@@ -409,7 +410,7 @@ def count_total_occurrences_of_unigrams(
         .groupBy("unigram")
         .agg(F.count(F.lit(1)).alias("count"))
     )
-    wanted = spark.createDataFrame([(u,) for u in unigrams], ["unigram"])
+    wanted = local_frame(spark, [(u,) for u in unigrams], "unigram string")
     return (
         wanted.join(toks, "unigram", "left")
         .select("unigram", F.coalesce("count", F.lit(0)).alias("count"))

@@ -239,33 +239,78 @@ ARROW_TEXT_MIN_BYTES = int(
 )
 
 
-def plan_size_bytes(df: DataFrame) -> int:
+#: Optimizer size estimates at or past this are not sizes: a plan the
+#: optimizer cannot size (an RDD-backed relation, a cross product of
+#: estimates) reports Long.MaxValue or an overflowing product of
+#: estimates. ``plan_size_bytes`` reports those as unknown.
+_UNKNOWN_SIZE_BYTES = (2**63 - 1) // 2
+
+
+def plan_size_bytes(df: DataFrame) -> int | None:
     """Optimizer size estimate of a DataFrame — driver-side plan
     statistics, NO Spark job (file-size-derived for parquet-backed
-    plans). The job-free signal for engine auto-gates; 0 on failure
-    (callers treat 0 as small)."""
+    plans). The one job-free size signal for cost gates.
+
+    None means unknown: the probe failed or the estimate is at least
+    Long.MaxValue/2. Each gate states what unknown means for it."""
     try:
-        return int(
+        sz = int(
             df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
         )
     except Exception:
-        return 0
+        return None
+    return sz if sz < _UNKNOWN_SIZE_BYTES else None
 
 
 def resolve_text_engine(df: DataFrame, engine: str) -> str:
     """Resolve ``engine="auto"`` for text operators with an Arrow fast
     path: "arrow" past ARROW_TEXT_MIN_BYTES of estimated input, else
-    "expr". Explicit "arrow"/"expr" pass through; anything else
-    raises."""
+    "expr" (an unknown size counts as small). Explicit "arrow"/"expr"
+    pass through; anything else raises."""
     if engine == "auto":
+        sz = plan_size_bytes(df)
         return (
             "arrow"
-            if plan_size_bytes(df) >= ARROW_TEXT_MIN_BYTES
+            if sz is not None and sz >= ARROW_TEXT_MIN_BYTES
             else "expr"
         )
     if engine not in ("arrow", "expr"):
         raise ValueError(f"unknown engine {engine!r}")
     return engine
+
+
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """A DataFrame over driver-side ``rows`` (tuples or ``Row``s, in
+    ``schema`` field order), built as a ``pyarrow.Table`` so the JVM
+    reads it as a local relation.
+
+    Use this, not ``spark.createDataFrame(<list>, ...)``, for every
+    frame built from Python values. On PySpark 4.1 a list-built frame
+    is an RDD whose lineage holds a PythonRDD: every execution of any
+    plan that reads it starts a Python-worker map to re-pickle the
+    rows (~0.4 s of worker CPU plus short-lived JVM threads per call,
+    even for one row, on 4 cores at ``local[2]``). An Arrow-built frame
+    runs no Python worker, and the optimizer knows its size.
+
+    ``schema`` is a StructType or a DDL string (``"a long, b string"``);
+    names, types and nullability come out exactly as given. Naive
+    ``datetime`` values are read as UTC."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType, _parse_datatype_string
+
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    if not isinstance(schema, StructType):
+        raise TypeError(f"local_frame needs a struct schema, got {schema!r}")
+    arrow_schema = to_arrow_schema(schema)
+    rows = list(rows)
+    cols = list(zip(*rows)) if rows else [()] * len(schema.fields)
+    table = pa.Table.from_arrays(
+        [pa.array(list(c), type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def release_scoped_persists() -> int:

@@ -31,6 +31,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from wimbd_spark.session import local_frame
+
 __all__ = [
     "template_fields",
     "parse_templates_yaml",
@@ -144,7 +146,7 @@ def load_template_fields(
             parsed = parsed[:1]
         for t in parsed:
             rows.append((dataset, subset, t["template_name"], t["fields"]))
-    return spark.createDataFrame(rows, _SCHEMA)
+    return local_frame(spark, rows, _SCHEMA)
 
 
 def template_eval_phrases(

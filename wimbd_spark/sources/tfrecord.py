@@ -28,6 +28,8 @@ import struct
 
 from pyspark.sql import DataFrame, SparkSession
 
+from wimbd_spark.session import local_frame
+
 _CRC_TABLE: list[int] | None = None
 
 
@@ -266,7 +268,7 @@ def read_tfrecords(
                 if pending:
                     yield pd.DataFrame(rows, columns=names)
 
-    pathdf = spark.createDataFrame([(f,) for f in files], "path string")
+    pathdf = local_frame(spark, [(f,) for f in files], "path string")
     n = min(len(files), spark.sparkContext.defaultParallelism)
     return pathdf.repartition(n).mapInPandas(gen, schema=schema)
 
