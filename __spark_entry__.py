@@ -7666,13 +7666,100 @@ _REGISTRY: dict[str, tuple[Callable, Callable | None]] = {
     # tools/check_oracles.py additionally covers ALL entries locally
     # every round regardless of position.
     #
-    # Round 15 window: the 5 promoted r15 candidates (verified green
-    # by the r14 judge and tests/test_r15_candidates.py — never
-    # driver-checked, so the invariant REQUIRES them in-window), then
-    # the 11-query r11 cohort at its 4-round revisit bound, then 34
-    # of the 50 queries last checked in r12. The 16 r12 queries that
-    # did not fit lead the tail so r16's rotation surfaces the oldest
-    # first; then the r13 cohort, then the r14 cohort.
+    # Current window: the 50 queries last recorded in
+    # CORRECTNESS_r13.json and absent from r14-r16 (at N=166 a query
+    # may rest at most 3 distinct windows). The tail keeps its prior
+    # relative order, so the next rotation again surfaces the
+    # longest-resting cohort first.
+    "c4_span_dedup_text": (q_c4_span_dedup, o_c4_span_dedup),
+    "datasheet_overview": (q_datasheet_overview, o_datasheet_overview),
+    "ivf_kfill_filtered_top3": (q_ivf_kfill_filtered, o_ivf_kfill_filtered),
+    "streaming_tumbling_counts": (
+        q_streaming_tumbling_counts,
+        o_streaming_tumbling_counts,
+    ),
+    "streaming_sliding_counts": (
+        q_streaming_sliding_counts,
+        o_streaming_sliding_counts,
+    ),
+    "knn_join_bulk_top2": (q_knn_join_bulk, o_knn_join_bulk),
+    "bpe_train_roundtrip": (q_bpe_train_roundtrip, o_bpe_train_roundtrip),
+    "ivf_pq_rerank_top3": (q_ivf_pq_rerank, o_ivf_pq_rerank),
+    "more_like_this_indexed_top10": (
+        q_more_like_this_indexed,
+        o_more_like_this,
+    ),
+    "ngram_spectrum_n2": (q_ngram_spectrum, o_ngram_spectrum),
+    "top_pmi_bigrams_k20": (q_top_pmi_bigrams, o_top_pmi_bigrams),
+    "hybrid_rrf_filtered_top10": (
+        q_hybrid_rrf_filtered,
+        o_hybrid_rrf_filtered,
+    ),
+    "events_asof_next_click": (
+        q_events_asof_next_click,
+        o_events_asof_next_click,
+    ),
+    "events_asof_nearest_click": (
+        q_events_asof_nearest_click,
+        o_events_asof_nearest_click,
+    ),
+    "url_normalized": (q_url_normalized, o_url_normalized),
+    "url_dedup_keepfirst": (q_url_dedup_keepfirst, o_url_dedup_keepfirst),
+    "phrase_ac_counts": (q_phrase_ac_counts, o_phrase_batch_counts),
+    "topk_ngrams_by_source_n2_k5": (
+        q_topk_ngrams_by_source,
+        o_topk_ngrams_by_source,
+    ),
+    "shared_span_coverage": (q_shared_span_coverage, o_shared_span_coverage),
+    "zipf_fit_unigrams": (q_zipf_fit, o_zipf_fit),
+    "bm25_filtered_top10": (q_bm25_filtered, o_bm25_filtered),
+    "bm25_filtered_indexed_top10": (q_bm25_filtered_indexed, o_bm25_filtered),
+    "weighted_sample_chars_k50": (
+        q_weighted_sample_chars,
+        o_weighted_sample_chars,
+    ),
+    "weighted_sample_by_source_k10": (
+        q_weighted_sample_by_source,
+        o_weighted_sample_by_source,
+    ),
+    "kmeans_cluster_stats_k8_i2": (q_kmeans_stats, o_kmeans_stats),
+    "events_json_stats": (q_events_json_stats, o_events_json_stats),
+    "minhash_signatures": (q_minhash_signatures, o_minhash_signatures),
+    "simhash16": (q_simhash, o_simhash),
+    "simhash62": (q_simhash62, o_simhash62),
+    "embedding_cosine_pairs_lsh": (
+        q_embedding_cosine_pairs_lsh,
+        o_embedding_cosine_pairs_lsh,
+    ),
+    "langid_counts": (q_langid_counts, o_langid_counts),
+    "doc_fingerprints": (q_fingerprints, o_fingerprints),
+    "token_counts": (q_token_counts, o_token_counts),
+    "pii_extraction": (q_pii_extraction, o_pii_extraction),
+    "taxonomy_counts": (q_taxonomy_counts, o_taxonomy_counts),
+    "demographic_cooccurrence": (
+        q_demographic_cooccurrence,
+        o_demographic_cooccurrence,
+    ),
+    "sample_by_hash": (q_sample_by_hash, o_sample_by_hash),
+    "id_lookup": (q_id_lookup, o_id_lookup),
+    "length_dist_normalized": (
+        q_length_dist_normalized,
+        o_length_dist_normalized,
+    ),
+    "url_analysis": (q_url_analysis, o_url_analysis),
+    "search_locations": (q_search_locations, o_search_locations),
+    "orders_rollup": (q_orders_rollup, o_orders_rollup),
+    "script_profile": (q_script_profile, o_script_profile),
+    "tfidf_top3_terms": (q_tfidf_top3_terms, o_tfidf_top3_terms),
+    "lm_ppl_scores": (q_lm_ppl_scores, o_lm_ppl_scores),
+    "perplexity_filter_31": (q_perplexity_filter_31, o_perplexity_filter_31),
+    "domain_blocklist_filter": (
+        q_domain_blocklist_filter,
+        o_domain_blocklist_filter,
+    ),
+    "search_snippets_w20": (q_search_snippets, o_search_snippets),
+    "topk_ngrams_2pass_n2_k20": (q_topk_ngrams_2pass, o_topk_ngrams_2pass),
+    "dsir_log_weights_src0": (q_dsir_log_weights, o_dsir_log_weights),
     "embedding_cosine_pairs_lsh_auto": (
         q_embedding_cosine_pairs_lsh_auto,
         o_embedding_cosine_pairs_lsh_auto,
@@ -7802,95 +7889,6 @@ _REGISTRY: dict[str, tuple[Callable, Callable | None]] = {
     "multi_overlap_tokens": (q_multi_overlap, o_multi_overlap),
     "find_examples": (q_find_examples, o_find_examples),
     "semantic_dedup_drops": (q_semantic_dedup_drops, o_semantic_dedup_drops),
-    "c4_span_dedup_text": (q_c4_span_dedup, o_c4_span_dedup),
-    "datasheet_overview": (q_datasheet_overview, o_datasheet_overview),
-    "ivf_kfill_filtered_top3": (q_ivf_kfill_filtered, o_ivf_kfill_filtered),
-    "streaming_tumbling_counts": (
-        q_streaming_tumbling_counts,
-        o_streaming_tumbling_counts,
-    ),
-    "streaming_sliding_counts": (
-        q_streaming_sliding_counts,
-        o_streaming_sliding_counts,
-    ),
-    "knn_join_bulk_top2": (q_knn_join_bulk, o_knn_join_bulk),
-    "bpe_train_roundtrip": (q_bpe_train_roundtrip, o_bpe_train_roundtrip),
-    "ivf_pq_rerank_top3": (q_ivf_pq_rerank, o_ivf_pq_rerank),
-    "more_like_this_indexed_top10": (
-        q_more_like_this_indexed,
-        o_more_like_this,
-    ),
-    "ngram_spectrum_n2": (q_ngram_spectrum, o_ngram_spectrum),
-    "top_pmi_bigrams_k20": (q_top_pmi_bigrams, o_top_pmi_bigrams),
-    "hybrid_rrf_filtered_top10": (
-        q_hybrid_rrf_filtered,
-        o_hybrid_rrf_filtered,
-    ),
-    "events_asof_next_click": (
-        q_events_asof_next_click,
-        o_events_asof_next_click,
-    ),
-    "events_asof_nearest_click": (
-        q_events_asof_nearest_click,
-        o_events_asof_nearest_click,
-    ),
-    "url_normalized": (q_url_normalized, o_url_normalized),
-    "url_dedup_keepfirst": (q_url_dedup_keepfirst, o_url_dedup_keepfirst),
-    "phrase_ac_counts": (q_phrase_ac_counts, o_phrase_batch_counts),
-    "topk_ngrams_by_source_n2_k5": (
-        q_topk_ngrams_by_source,
-        o_topk_ngrams_by_source,
-    ),
-    "shared_span_coverage": (q_shared_span_coverage, o_shared_span_coverage),
-    "zipf_fit_unigrams": (q_zipf_fit, o_zipf_fit),
-    "bm25_filtered_top10": (q_bm25_filtered, o_bm25_filtered),
-    "bm25_filtered_indexed_top10": (q_bm25_filtered_indexed, o_bm25_filtered),
-    "weighted_sample_chars_k50": (
-        q_weighted_sample_chars,
-        o_weighted_sample_chars,
-    ),
-    "weighted_sample_by_source_k10": (
-        q_weighted_sample_by_source,
-        o_weighted_sample_by_source,
-    ),
-    "kmeans_cluster_stats_k8_i2": (q_kmeans_stats, o_kmeans_stats),
-    "events_json_stats": (q_events_json_stats, o_events_json_stats),
-    "minhash_signatures": (q_minhash_signatures, o_minhash_signatures),
-    "simhash16": (q_simhash, o_simhash),
-    "simhash62": (q_simhash62, o_simhash62),
-    "embedding_cosine_pairs_lsh": (
-        q_embedding_cosine_pairs_lsh,
-        o_embedding_cosine_pairs_lsh,
-    ),
-    "langid_counts": (q_langid_counts, o_langid_counts),
-    "doc_fingerprints": (q_fingerprints, o_fingerprints),
-    "token_counts": (q_token_counts, o_token_counts),
-    "pii_extraction": (q_pii_extraction, o_pii_extraction),
-    "taxonomy_counts": (q_taxonomy_counts, o_taxonomy_counts),
-    "demographic_cooccurrence": (
-        q_demographic_cooccurrence,
-        o_demographic_cooccurrence,
-    ),
-    "sample_by_hash": (q_sample_by_hash, o_sample_by_hash),
-    "id_lookup": (q_id_lookup, o_id_lookup),
-    "length_dist_normalized": (
-        q_length_dist_normalized,
-        o_length_dist_normalized,
-    ),
-    "url_analysis": (q_url_analysis, o_url_analysis),
-    "search_locations": (q_search_locations, o_search_locations),
-    "orders_rollup": (q_orders_rollup, o_orders_rollup),
-    "script_profile": (q_script_profile, o_script_profile),
-    "tfidf_top3_terms": (q_tfidf_top3_terms, o_tfidf_top3_terms),
-    "lm_ppl_scores": (q_lm_ppl_scores, o_lm_ppl_scores),
-    "perplexity_filter_31": (q_perplexity_filter_31, o_perplexity_filter_31),
-    "domain_blocklist_filter": (
-        q_domain_blocklist_filter,
-        o_domain_blocklist_filter,
-    ),
-    "search_snippets_w20": (q_search_snippets, o_search_snippets),
-    "topk_ngrams_2pass_n2_k20": (q_topk_ngrams_2pass, o_topk_ngrams_2pass),
-    "dsir_log_weights_src0": (q_dsir_log_weights, o_dsir_log_weights),
     "streaming_stateful_user_counts": (
         q_streaming_stateful_counts,
         o_streaming_stateful_counts,
