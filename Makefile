@@ -1,4 +1,4 @@
-.PHONY: test test-full check bench perfbench perfbench-trace smoke lint examples
+.PHONY: test test-full check bench perfbench perfbench-trace perfbench-pairs smoke lint examples
 
 # default tier: slow-tier tests (tests/conftest.py SLOW_TIER_NODE_IDS)
 # are skipped so the run fits a CI/verify window (~14 min)
@@ -13,7 +13,18 @@ test-full:
 check:
 	python tools/check_oracles.py
 
-check-smoke:
+check-# paired runs, base revision vs the working tree, alternating order:
+# medians, quartiles, wins and the gain-claim rule per end-to-end metric
+PAIRS_BASE = HEAD~1
+PAIRS_WORKLOAD = wimbd_scan
+PAIRS = 10
+PAIRS_SEED = 401
+
+perfbench-pairs:
+	python3 tools/bench_pairs.py --base $(PAIRS_BASE) --workload $(PAIRS_WORKLOAD) \
+		--pairs $(PAIRS) --seed $(PAIRS_SEED)
+
+smoke:
 	python tools/check_oracles.py /root/testdata/sf0.001
 
 bench:

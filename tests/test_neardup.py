@@ -514,27 +514,6 @@ def test_neardup_components_local_matches_distributed(spark):
     assert local == dist
 
 
-def test_ngram_jaccard_prefix_filter_matches_plain(spark, documents):
-    # AllPairs prefix filtering is exact: identical pairs + values
-    from wimbd_spark.operators.neardup import ngram_jaccard_pairs
-
-    docs = documents.select("doc_id", "text").filter("text is not null")
-    for t in (0.3, 0.5, 0.8):
-        plain = {
-            (r["id_a"], r["id_b"], round(r["jaccard"], 9))
-            for r in ngram_jaccard_pairs(
-                docs, threshold=t, prefix_filter=False
-            ).collect()
-        }
-        pref = {
-            (r["id_a"], r["id_b"], round(r["jaccard"], 9))
-            for r in ngram_jaccard_pairs(
-                docs, threshold=t, prefix_filter=True
-            ).collect()
-        }
-        assert pref == plain and len(plain) > 0, t
-
-
 def test_neardup_components_duckdb_recursive_oracle(spark):
     import duckdb
 

@@ -731,3 +731,25 @@ def test_bulk_threshold_forms_no_window_no_driver_state(spark, tmp_path):
         plan = explain_str(df)
         assert "Window" not in plan
         assert "LocalTableScan" not in plan and "ExistingRDD" not in plan
+
+
+def test_per_token_paths_have_no_lambda(raw_docs):
+    """A lambda higher-order function is interpreted once per array
+    element inside the compiled stage (SCALE.md, Python boundary):
+    the tokenize → unigram → term-count path must use built-in array
+    functions only."""
+    from wimbd_spark.functions.text import ngram_strings, tokenize
+    from wimbd_spark.search import count_total_occurrences_of_unigrams
+
+    def analyzed(df):
+        return df._jdf.queryExecution().analyzed().toString()
+
+    toks = tokenize(F.col("text"))
+    for df in (
+        raw_docs.select(toks),
+        raw_docs.select(ngram_strings(toks, 1)),
+        count_total_occurrences_of_unigrams(raw_docs, ["the", "a", "of"]),
+    ):
+        assert "lambdafunction" not in analyzed(df)
+    # negative control: the window form (n ≥ 2) still carries lambdas
+    assert "lambdafunction" in analyzed(raw_docs.select(ngram_strings(toks, 2)))

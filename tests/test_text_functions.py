@@ -11,6 +11,7 @@ from wimbd_spark.functions.text import (
     hash32,
     ngram_strings,
     ngrams,
+    term_count,
     tokenize,
     tokenize_words,
     url_ext_bucket,
@@ -110,6 +111,75 @@ def test_ngrams_unigram_and_short(spark):
     toks = tokenize(F.lit("a b"))
     assert one(spark, ngram_strings(toks, 1)) == ["a", "b"]
     assert one(spark, ngram_strings(toks, 3)) == []  # only full windows
+
+
+# The lambda forms the built-in array functions replaced, written out
+# as they were: the parity reference for tokenize / ngram_strings(·, 1)
+# / term_count, NULLs included.
+def _old_tokenize(c):
+    return F.filter(F.split(F.trim(c), r"\s+"), lambda x: x != F.lit(""))
+
+
+def _old_unigrams(t):
+    return F.when(
+        F.size(t) >= 1,
+        F.transform(
+            F.sequence(F.lit(1), F.size(t)),
+            lambda i: F.array_join(F.slice(t, i, 1), " "),
+        ),
+    ).otherwise(F.array().cast("array<string>"))
+
+
+def _old_term_count(t, term):
+    return F.size(F.filter(t, lambda x: x == F.lit(term)))
+
+
+def test_tokenize_matches_lambda_form(spark):
+    from wimbd_spark.session import local_frame
+
+    texts = [
+        None, "", "   ", "\tlead tab", "a\nb\r\n\r\nc", "x    y  z ",
+        "héllo wörld 日本語 テキスト", " \u00a0nbsp\u00a0 ", "one",
+    ]
+    df = local_frame(
+        spark, list(enumerate(texts)), "id int, text string"
+    ).select(
+        "id",
+        tokenize(F.col("text")).alias("new"),
+        _old_tokenize(F.col("text")).alias("old"),
+    )
+    rows = df.orderBy("id").collect()
+    assert len(rows) == len(texts)
+    for r in rows:
+        assert r["new"] == r["old"], texts[r["id"]]
+    assert rows[0]["new"] is None and rows[2]["new"] == []
+
+
+def test_unigrams_and_term_count_match_lambda_forms(spark):
+    from wimbd_spark.session import local_frame
+
+    token_rows = [None, [], ["a"], ["a", "b", "a", "a"], ["a.b", "c"]]
+    df = local_frame(
+        spark, list(enumerate(token_rows)), "id int, t array<string>"
+    )
+    terms = ["a", "zzz", "a.b", ""]
+    out = df.select(
+        "id",
+        ngram_strings(F.col("t"), 1).alias("new_g"),
+        _old_unigrams(F.col("t")).alias("old_g"),
+        *[term_count("t", u).alias(f"new{i}") for i, u in enumerate(terms)],
+        *[
+            _old_term_count(F.col("t"), u).alias(f"old{i}")
+            for i, u in enumerate(terms)
+        ],
+    ).orderBy("id").collect()
+    assert len(out) == len(token_rows)
+    for r in out:
+        assert r["new_g"] == r["old_g"], token_rows[r["id"]]
+        for i in range(len(terms)):
+            assert r[f"new{i}"] == r[f"old{i}"], (token_rows[r["id"]], terms[i])
+    assert out[0]["new_g"] == [] and out[0]["new0"] is None
+    assert out[3]["new0"] == 3 and out[3]["new1"] == 0
 
 
 def test_char_ngrams(spark):

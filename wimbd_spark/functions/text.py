@@ -57,9 +57,25 @@ def tokenize(text: Column | str) -> Column:
     itself ships three inconsistent tokenizers (unicode-segmentation,
     uniseg, nltk.wordpunct) — SURVEY.md §7.4(1) — so the engine picks
     one canonical fast path and documents the divergence.
+
+    Built-in array functions only: a lambda higher-order function
+    (``filter``/``transform``) is ``CodegenFallback``, so inside the
+    compiled stage its body is interpreted once per array element. Where
+    a single built-in is exact — here ``array_remove`` of the empty
+    strings, since ``split`` never yields NULL elements — use it; NULL
+    text still gives NULL and whitespace-only text ``[]``.
     """
     c = _col(text)
-    return F.filter(F.split(F.trim(c), r"\s+"), lambda x: x != F.lit(""))
+    return F.array_remove(F.split(F.trim(c), r"\s+"), "")
+
+
+def term_count(tokens: Column | str, term: str) -> Column:
+    """Occurrences of ``term`` in a token array, as
+    ``size(t) - size(array_remove(t, term))``: two built-ins in place
+    of a per-token ``filter`` lambda (see ``tokenize``). NULL tokens
+    give NULL under ANSI mode (the default), like ``size(filter(...))``."""
+    t = _col(tokens)
+    return F.size(t) - F.size(F.array_remove(t, term))
 
 
 # UAX-29 mid-character sets (subset of the UCD Word_Break property
@@ -386,8 +402,15 @@ def ngram_strings(tokens: Column | str, n: int, sep: str = " ") -> Column:
     `topk` renders n-grams joined by spaces for output
     (src/cmd/topk.rs:303-309); grouping on a flat string also avoids
     array comparators in the shuffle.
+
+    A 1-gram is its token, so ``n == 1`` returns the tokens themselves
+    (NULL → ``[]``) with no per-token lambda. That shortcut assumes
+    tokens with no NULL elements, which holds for ``tokenize`` output;
+    the window form would render a NULL element as ``""``.
     """
     empty = F.array().cast("array<string>")
+    if n == 1:
+        return F.coalesce(_col(tokens), empty)
     return let(
         _col(tokens),
         lambda t: F.when(

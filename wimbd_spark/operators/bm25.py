@@ -46,7 +46,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from wimbd_spark.functions.text import tokenize
+from wimbd_spark.functions.text import term_count, tokenize
 from wimbd_spark.session import local_frame, parquet_plan
 
 DEFAULT_K1 = 1.2
@@ -172,15 +172,10 @@ def bm25_topk(
     toked = df.filter(F.col(text_col).isNotNull()).select(
         F.col(id_col), tok(F.col(text_col)).alias("toks"), *keep
     )
-    def tf_of(term):
-        # closure factory, NOT a default arg: a second lambda param
-        # (even defaulted) makes pyspark bind the (element, index) form
-        return F.size(F.filter(F.col("toks"), lambda x: x == F.lit(term)))
-
     base = toked.select(
         id_col,
         F.size("toks").alias("dl"),
-        *[tf_of(terms[i]).alias(tf_cols[i]) for i in range(len(terms))],
+        *[term_count("toks", terms[i]).alias(tf_cols[i]) for i in range(len(terms))],
         *([F.col("__keep")] if filters is not None else []),
     )
 
@@ -674,13 +669,10 @@ def bm25_topk_batch(
         F.col(id_col), tok(F.col(text_col)).alias("toks"), *keep
     )
 
-    def tf_of(term):
-        return F.size(F.filter(F.col("toks"), lambda x: x == F.lit(term)))
-
     base = toked.select(
         id_col,
         F.size("toks").alias("dl"),
-        *[tf_of(all_terms[i]).alias(tf_cols[i]) for i in range(len(all_terms))],
+        *[term_count("toks", all_terms[i]).alias(tf_cols[i]) for i in range(len(all_terms))],
         *([F.col("__keep")] if filters is not None else []),
     )
     stats = base.agg(

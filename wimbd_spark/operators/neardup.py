@@ -617,7 +617,6 @@ def ngram_jaccard_pairs(
     shingle_n: int = 3,
     threshold: float = 0.2,
     max_shingle_freq: int | None | str = "auto",
-    prefix_filter: bool | None = None,
     candidate_estimate: int | None = None,
 ) -> DataFrame:
     """EXACT n-gram Jaccard near-dup pairs, self-contained: every pair
@@ -653,34 +652,9 @@ def ngram_jaccard_pairs(
     its policy (same warning, same cap) with zero extra jobs;
     ``candidate_estimate`` is ignored unless
     ``max_shingle_freq="auto"``.
-
-    ``prefix_filter`` enables the AllPairs/PPJoin prefix optimization
-    (exact, complete recall — a classic set-similarity-join result):
-    a pair with Jaccard ≥ τ must share a shingle in each side's first
-    |x| − ⌈τ|x|⌉ + 1 sorted shingles, so the candidate self-join
-    explodes only that prefix (join volume shrinks ~(1−τ)² plus a
-    size-ratio cut) and exact Jaccard verifies just the candidates.
-    Default OFF (None/False): the sf1 rehearsal measured the prefix
-    path 4-5× SLOWER on this workload (τ=0.5: 11.1 s vs 2.5 s plain at
-    sf1) — the candidate cut didn't pay for the extra shingle-set
-    verification joins, which ship array columns the counting path
-    never shuffles. Opt in (True) only for workloads where the
-    inverted-index join volume Σ df² actually explodes — boilerplate-
-    heavy corpora without a ``max_shingle_freq`` cap, or very high
-    thresholds (τ ≥ 0.8, prefix ≈ 0.2·|x|) — and MEASURE; both paths
-    return identical rows (equivalence-tested).
     """
     sh = _shingle_table(df, id_col, text_col, shingle_n)
-    if prefix_filter is None:
-        prefix_filter = False
-    if prefix_filter:
-        if max_shingle_freq not in (None, "auto"):
-            raise ValueError(
-                "prefix_filter composes with the full shingle space; "
-                "use max_shingle_freq with prefix_filter=False"
-            )
-        max_shingle_freq = None
-    elif max_shingle_freq == "auto":
+    if max_shingle_freq == "auto":
         if candidate_estimate is not None:
             max_shingle_freq = _cap_from_estimate(candidate_estimate)
         else:
@@ -692,46 +666,6 @@ def ngram_jaccard_pairs(
             f"max_shingle_freq must be an int, None, or 'auto'; "
             f"got {max_shingle_freq!r}"
         )
-    if prefix_filter:
-        if threshold <= 0:
-            raise ValueError("prefix_filter requires threshold > 0")
-        from pyspark import StorageLevel
-
-        from wimbd_spark.session import scoped_persist
-
-        # sh feeds candidate generation AND both verification sides
-        sh = scoped_persist(sh, StorageLevel.MEMORY_AND_DISK)
-        # ⌈τn⌉ with a downward epsilon so float error can only LENGTHEN
-        # the prefix (shortening it would break complete recall)
-        pref = sh.select(
-            F.col(id_col).alias("_id"),
-            F.size("hs").alias("_n"),
-            F.posexplode("hs").alias("_pos", "_h"),
-        ).filter(
-            F.col("_pos")
-            < F.col("_n")
-            - F.ceil(F.lit(threshold) * F.col("_n") - F.lit(1e-9))
-            + 1
-        )
-        a = pref.select(
-            F.col("_id").alias("id_a"), F.col("_n").alias("_na"), "_h"
-        )
-        b = pref.select(
-            F.col("_id").alias("id_b"), F.col("_n").alias("_nb"), "_h"
-        )
-        # size-ratio filter: J ≥ τ forces τ·|B| ≤ |A| ≤ |B|/τ
-        # (epsilon keeps boundary-ratio pairs in)
-        cand = (
-            a.join(b, "_h")
-            .filter(
-                (F.col("id_a") < F.col("id_b"))
-                & (F.col("_nb") * threshold <= F.col("_na") + F.lit(1e-9))
-                & (F.col("_na") * threshold <= F.col("_nb") + F.lit(1e-9))
-            )
-            .select("id_a", "id_b")
-            .distinct()
-        )
-        return _jaccard_from_shingle_table(sh, cand, threshold)
     ex = sh.select(
         F.col(id_col).alias("_id"),
         F.size("hs").alias("_n"),

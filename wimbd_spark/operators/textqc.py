@@ -784,7 +784,7 @@ def _c4_line_kept(line: Column, policy_phrases: list[str]) -> Column:
     expression — usable inside F.filter over split lines."""
     t = F.trim(line)
     lowered = F.lower(t)
-    words = F.size(F.filter(F.split(t, r"\s+"), lambda x: x != F.lit("")))
+    words = F.size(F.array_remove(F.split(t, r"\s+"), ""))
     cond = (
         (F.length(t) > 0)
         & t.rlike(_C4_TERMINAL_RE)

@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from wimbd_spark.functions.text import tokenize
+from wimbd_spark.functions.text import term_count, tokenize
 from wimbd_spark.session import local_frame
 
 
@@ -373,18 +373,12 @@ def count_total_occurrences_of_unigrams(
     spark = df.sparkSession
     if len(unigrams) <= 100:
         toksed = df.select(tokenize(F.col(text_col)).alias("_t"))
-
-        def _eq(u):
-            return lambda x: x == F.lit(u)
-
         # outer coalesce: SUM over an empty corpus is NULL per SQL,
         # but a term frequency is 0 (ES reports 0 for absent terms)
         aggs = [
             F.coalesce(
                 F.sum(
-                    F.coalesce(
-                        F.size(F.filter(F.col("_t"), _eq(u))), F.lit(0)
-                    )
+                    F.coalesce(term_count(F.col("_t"), u), F.lit(0))
                 ),
                 F.lit(0).cast("long"),
             ).alias(f"_c{i}")
