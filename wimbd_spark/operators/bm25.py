@@ -175,7 +175,7 @@ def bm25_topk(
     base = toked.select(
         id_col,
         F.size("toks").alias("dl"),
-        *[term_count("toks", terms[i]).alias(tf_cols[i]) for i in range(len(terms))],
+        *[term_count("toks", t).alias(c) for t, c in zip(terms, tf_cols)],
         *([F.col("__keep")] if filters is not None else []),
     )
 
@@ -672,7 +672,7 @@ def bm25_topk_batch(
     base = toked.select(
         id_col,
         F.size("toks").alias("dl"),
-        *[term_count("toks", all_terms[i]).alias(tf_cols[i]) for i in range(len(all_terms))],
+        *[term_count("toks", t).alias(c) for t, c in zip(all_terms, tf_cols)],
         *([F.col("__keep")] if filters is not None else []),
     )
     stats = base.agg(
