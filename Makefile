@@ -13,18 +13,7 @@ test-full:
 check:
 	python tools/check_oracles.py
 
-check-# paired runs, base revision vs the working tree, alternating order:
-# medians, quartiles, wins and the gain-claim rule per end-to-end metric
-PAIRS_BASE = HEAD~1
-PAIRS_WORKLOAD = wimbd_scan
-PAIRS = 10
-PAIRS_SEED = 401
-
-perfbench-pairs:
-	python3 tools/bench_pairs.py --base $(PAIRS_BASE) --workload $(PAIRS_WORKLOAD) \
-		--pairs $(PAIRS) --seed $(PAIRS_SEED)
-
-smoke:
+check-smoke:
 	python tools/check_oracles.py /root/testdata/sf0.001
 
 bench:
@@ -45,6 +34,18 @@ perfbench-trace:
 	for w in $(PERFBENCH_WORKLOADS); do \
 		python3 perfbench/run.py --workload $$w --seed $(PERFBENCH_SEED) \
 			--seconds 20 --trace 1 || exit 1; done
+
+# paired runs, base revision vs the working tree, alternating order:
+# medians, quartiles, wins, the gain-claim rule and the per-metric
+# regression bound for each end-to-end metric
+PAIRS_BASE = HEAD~1
+PAIRS_WORKLOAD = wimbd_scan
+PAIRS = 10
+PAIRS_SEED = 401
+
+perfbench-pairs:
+	python3 tools/bench_pairs.py --base $(PAIRS_BASE) --workload $(PAIRS_WORKLOAD) \
+		--pairs $(PAIRS) --seed $(PAIRS_SEED)
 
 smoke:
 	python -c "import __spark_entry__ as e; from wimbd_spark import get_spark; \

@@ -17,8 +17,13 @@ For every end-to-end metric in ``BENCHMARK.json`` the report gives each
 side's median and quartiles, the pairs each side won (ties count for
 neither), and whether a gain may be claimed: the change wins at least
 nine tenths of the pairs and the medians differ by more than the
-distance between the base's quartiles. The last stdout line is a JSON
-summary holding every run's metrics. The exit code is 1 when any run
+distance between the base's quartiles. It also checks each metric
+against its ``bound`` in ``BENCHMARK.json`` (a fraction of the base's
+median): "regression" when the change's median is worse than the
+base's by more than the bound, else "unresolved" when the base's IQR is
+wider than the bound (unless every change run beats every base run),
+else "within bound". The last stdout line is a JSON summary holding
+every run's metrics. The exit code is 1 when any run
 exits non-zero or reports a wrong result.
 """
 
@@ -77,14 +82,27 @@ def quartiles(xs: list[float]) -> tuple[float, float, float]:
     return q1, q2, q3
 
 
-def compare(base: list[float], change: list[float], better: str) -> dict:
-    """Medians, quartiles, wins and the claim rule for one metric."""
+def compare(base: list[float], change: list[float], better: str,
+            bound: float) -> dict:
+    """Medians, quartiles, wins, the claim rule and the bound verdict
+    for one metric."""
     sign = 1 if better == "lower" else -1
     change_wins = sum(sign * (b - c) > 0 for b, c in zip(base, change))
     base_wins = sum(sign * (c - b) > 0 for b, c in zip(base, change))
     bq, cq = quartiles(base), quartiles(change)
     gap = sign * (bq[1] - cq[1])
     base_iqr = bq[2] - bq[0]
+    limit = bound * abs(bq[1])
+    if sign > 0:
+        every_run_better = max(change) < min(base)
+    else:
+        every_run_better = min(change) > max(base)
+    if -gap > limit:
+        verdict = "regression"
+    elif base_iqr > limit and not every_run_better:
+        verdict = "unresolved"
+    else:
+        verdict = "within bound"
     return {
         "base": {"median": bq[1], "q1": bq[0], "q3": bq[2]},
         "change": {"median": cq[1], "q1": cq[0], "q3": cq[2]},
@@ -94,6 +112,9 @@ def compare(base: list[float], change: list[float], better: str) -> dict:
         "gap": gap,
         "base_iqr": base_iqr,
         "claim": change_wins >= WIN_SHARE * len(base) and gap > base_iqr,
+        "bound": bound,
+        "limit": limit,
+        "verdict": verdict,
     }
 
 
@@ -145,7 +166,7 @@ def main(argv=None) -> int:
             print(f"{name}: missing from some runs", flush=True)
             ok = False
             continue
-        c = report[name] = compare(base, change, m["better"])
+        c = report[name] = compare(base, change, m["better"], m["bound"])
         print(
             f"{args.workload} {name} ({m['unit']}, {m['better']} is better): "
             f"base {c['base']['median']:.4g} [{c['base']['q1']:.4g}, {c['base']['q3']:.4g}] "
@@ -153,7 +174,8 @@ def main(argv=None) -> int:
             f"[{c['change']['q1']:.4g}, {c['change']['q3']:.4g}]; "
             f"change won {c['change_wins']}/{c['pairs']}, base won {c['base_wins']}; "
             f"gap {c['gap']:.4g} vs base IQR {c['base_iqr']:.4g}: "
-            f"claim {'holds' if c['claim'] else 'does not hold'}",
+            f"claim {'holds' if c['claim'] else 'does not hold'}; "
+            f"bound {c['bound']:g} of base median = {c['limit']:.4g}: {c['verdict']}",
             flush=True,
         )
     print(json.dumps({"workload": args.workload, "base": args.base,
