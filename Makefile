@@ -39,13 +39,14 @@ perfbench-trace:
 # medians, quartiles, wins, the gain-claim rule and the per-metric
 # regression bound for each end-to-end metric
 PAIRS_BASE = HEAD~1
-PAIRS_WORKLOAD = wimbd_scan
+PAIRS_WORKLOADS = wimbd_scan neardup_dedup
 PAIRS = 10
 PAIRS_SEED = 401
 
 perfbench-pairs:
-	python3 tools/bench_pairs.py --base $(PAIRS_BASE) --workload $(PAIRS_WORKLOAD) \
-		--pairs $(PAIRS) --seed $(PAIRS_SEED)
+	for w in $(PAIRS_WORKLOADS); do \
+		python3 tools/bench_pairs.py --base $(PAIRS_BASE) --workload $$w \
+			--pairs $(PAIRS) --seed $(PAIRS_SEED) || exit 1; done
 
 smoke:
 	python -c "import __spark_entry__ as e; from wimbd_spark import get_spark; \

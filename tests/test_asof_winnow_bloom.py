@@ -1,6 +1,7 @@
 """As-of/interval joins, winnowing fingerprints, Bloom decontamination."""
 
 import hashlib
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -139,20 +140,32 @@ def test_interval_join_vs_bruteforce(spark, tables):
 # --------------------------------------------------------- winnowing
 
 
-def _py_winnow(text, k=3, w=4):
-    def h32(s):
-        return int(hashlib.md5(s.encode()).hexdigest()[:8], 16)
+def _py_tokens(text):
+    # tokenize splits on Java's \s: ASCII whitespace only
+    return [t for t in re.split(r"[ \t\n\x0b\f\r]+", text) if t] if text else []
 
-    toks = [t for t in text.strip().split() if t] if text else []
+
+def _py_hash32(s):
+    return int(hashlib.md5(s.encode()).hexdigest()[:8], 16)
+
+
+def _py_winnow(text, k=3, w=4):
+    toks = _py_tokens(text)
     if len(toks) < k:
         return set()
-    hs = [h32(" ".join(toks[i : i + k])) for i in range(len(toks) - k + 1)]
+    hs = [
+        _py_hash32(" ".join(toks[i : i + k]))
+        for i in range(len(toks) - k + 1)
+    ]
     sel = set()
     for j in range(len(hs) - w + 1):
         m = min(hs[j : j + w])
         pos = max(i for i in range(j, j + w) if hs[i] == m)
         sel.add((pos + 1, m))
     return sel
+
+
+_WINNOW_KW = [(3, 4), (2, 7), (1, 2)]
 
 
 @pytest.mark.parametrize(
@@ -162,42 +175,35 @@ def _py_winnow(text, k=3, w=4):
         "x x x x x x x x",  # all-equal hashes: rightmost-tie path
         "one two three",  # exactly k tokens -> 1 hash < w -> empty
         "",
+        None,
+        "a b",
+        "x x x x x x x x x x",
+        "  padded   whitespace    run   ok   end  x ",
+        "tab\tand\nnewline \r\n runs",
     ],
 )
 def test_winnow_matches_reference_impl(spark, text):
-    df = spark.createDataFrame([(1, text)], ["doc_id", "text"])
-    got = {
-        (r.pos, r.fp)
-        for r in winnow_fingerprints(df, k=3, w=4).collect()
-    }
-    assert got == _py_winnow(text, 3, 4)
+    df = spark.createDataFrame([(1, text)], "doc_id long, text string")
+    for k, w in _WINNOW_KW:
+        got = sorted(
+            (r.pos, r.fp)
+            for r in winnow_fingerprints(df, k=k, w=w).collect()
+        )
+        assert got == sorted(_py_winnow(text, k, w)), (k, w)
 
 
-@pytest.mark.parametrize("k,w", [(3, 4), (2, 7), (1, 2)])
-def test_winnow_engine_parity(spark, documents, k, w):
-    """The Arrow engine (JVM gram hashes + numpy per-window argmin)
-    must return the exact multiset of rows the pure-expression engine
-    returns — including NULL text, sub-w docs, whitespace runs, and
-    tie-heavy all-equal-hash docs (rightmost-tie rule)."""
-    extra = spark.createDataFrame(
-        [
-            (900001, None),
-            (900002, "a b"),
-            (900003, "x x x x x x x x x x"),
-            (900004, "  padded   whitespace    run   ok   end  x "),
-        ],
-        "doc_id bigint, text string",
+@pytest.mark.parametrize("k,w", _WINNOW_KW)
+def test_winnow_matches_reference_impl_on_corpus(documents, k, w):
+    got = sorted(
+        (r.doc_id, r.pos, r.fp)
+        for r in winnow_fingerprints(documents, k=k, w=w).collect()
     )
-    df = documents.select("doc_id", "text").unionByName(extra)
-    arrow = winnow_fingerprints(df, k=k, w=w, engine="arrow")
-    expr = winnow_fingerprints(df, k=k, w=w, engine="expr")
-    assert arrow.exceptAll(expr).count() == 0
-    assert expr.exceptAll(arrow).count() == 0
-
-
-def test_winnow_fingerprints_rejects_bad_engine(spark, documents):
-    with pytest.raises(ValueError, match="engine"):
-        winnow_fingerprints(documents, engine="nope")
+    exp = sorted(
+        (r.doc_id, pos, fp)
+        for r in documents.select("doc_id", "text").collect()
+        for pos, fp in _py_winnow(r.text, k, w)
+    )
+    assert got == exp
 
 
 def test_winnow_shared_substring_guarantee(spark):

@@ -842,10 +842,14 @@ def test_simhash_pairs_canonical_filter_no_duplicates(spark):
     assert set(wide) == set(rows)
 
 
-def test_shingle_table_engine_parity(spark, documents):
-    """Arrow (map-side Python md5, np.unique sets, zero shuffle) vs
-    classic explode → codegen hash32 → collect_set: identical rows,
-    including NULL text, sub-n docs, and whitespace runs."""
+@pytest.mark.parametrize("n", [1, 3])
+def test_shingle_table_matches_reference_impl(spark, documents, n):
+    """(id, sorted distinct md5-prefix shingle hashes) against a Python
+    set per document, including NULL text, sub-n docs, all-equal
+    tokens and whitespace runs (which yield no row or no empty gram)."""
+    import hashlib
+    import re
+
     from wimbd_spark.operators.neardup import _shingle_table
 
     extra = spark.createDataFrame(
@@ -858,11 +862,25 @@ def test_shingle_table_engine_parity(spark, documents):
         "doc_id bigint, text string",
     )
     df = documents.select("doc_id", "text").unionByName(extra)
-    for n in (1, 3):
-        a = _shingle_table(df, "doc_id", "text", n, engine="arrow")
-        e = _shingle_table(df, "doc_id", "text", n, engine="expr")
-        assert a.exceptAll(e).count() == 0
-        assert e.exceptAll(a).count() == 0
+
+    def ref(text):
+        # tokenize splits on Java's \s: ASCII whitespace only
+        toks = [t for t in re.split(r"[ \t\n\x0b\f\r]+", text or "") if t]
+        grams = {
+            " ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)
+        }
+        return sorted(
+            {int(hashlib.md5(g.encode()).hexdigest()[:8], 16) for g in grams}
+        )
+
+    got = sorted(
+        (r.doc_id, list(r.hs))
+        for r in _shingle_table(df, "doc_id", "text", n).collect()
+    )
+    exp = sorted(
+        (r.doc_id, hs) for r in df.collect() if (hs := ref(r.text))
+    )
+    assert got == exp
 
 
 def test_pairs_from_sigs_mapside_dedup_parity(documents):

@@ -3,7 +3,7 @@ each cost gate applies when the size is unknown."""
 
 import pytest
 
-from wimbd_spark.session import plan_size_bytes, resolve_text_engine
+from wimbd_spark.session import plan_size_bytes
 
 
 @pytest.fixture(scope="module")
@@ -26,8 +26,24 @@ def test_unsizable_plans_are_unknown(documents, rdd_docs):
     assert plan_size_bytes(big) is None
 
 
-def test_text_engine_gate_treats_unknown_as_small(rdd_docs):
-    assert resolve_text_engine(rdd_docs, "auto") == "expr"
+def test_pmi_persist_gate_treats_unknown_as_small(rdd_docs, monkeypatch):
+    import wimbd_spark.session as session
+    from wimbd_spark.operators.topk import top_pmi_bigrams
+
+    calls = []
+    real = session.scoped_persist
+
+    def spy(*a, **k):
+        calls.append(1)
+        return real(*a, **k)
+
+    monkeypatch.setattr(session, "scoped_persist", spy)
+    top_pmi_bigrams(rdd_docs, k=3)
+    assert not calls, "unknown size must not persist the count tables"
+    # a size past the threshold persists both tables
+    monkeypatch.setattr(session, "plan_size_bytes", lambda df: 1 << 40)
+    top_pmi_bigrams(rdd_docs, k=3)
+    assert len(calls) == 2
 
 
 def test_lsh_block_gate_treats_unknown_as_small(rdd_docs, monkeypatch):

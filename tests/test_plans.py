@@ -753,3 +753,30 @@ def test_per_token_paths_have_no_lambda(raw_docs):
         assert "lambdafunction" not in analyzed(df)
     # negative control: the window form (n ≥ 2) still carries lambdas
     assert "lambdafunction" in analyzed(raw_docs.select(ngram_strings(toks, 2)))
+
+
+def _physical(df):
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_winnow_pick_reads_scalars(raw_docs):
+    """The per-window pick is unrolled over w (element_at, least, a
+    CASE chain): no window array is built per window."""
+    from wimbd_spark.operators.winnow import winnow_fingerprints
+
+    plan = _physical(winnow_fingerprints(raw_docs))
+    assert "element_at(" in plan and "least(" in plan
+    assert "reverse(" not in plan and "array_position(" not in plan
+
+
+def test_winnow_and_shingle_tables_run_no_python(raw_docs):
+    from wimbd_spark.operators.neardup import _shingle_table
+    from wimbd_spark.operators.winnow import winnow_fingerprints
+
+    for df in (
+        winnow_fingerprints(raw_docs),
+        _shingle_table(raw_docs, "doc_id", "text", 3),
+    ):
+        plan = _physical(df)
+        for node in ("MapInArrow", "MapInPandas", "EvalPython", "PythonUDF"):
+            assert node not in plan, node

@@ -41,8 +41,8 @@ def shingle_hashes(text: Column | str, n: int = 3) -> Column:
     permutations, band hashes, Jaccard intersections) is integer
     arithmetic. Hash collisions would fold two shingles — at 32 bits
     and ≤10^4 shingles/doc the per-doc collision odds are ~1e-2 of a
-    single shingle pair, shifting Jaccard by <1/|set|; both engines
-    fold identically so oracles still match exactly.
+    single shingle pair, shifting Jaccard by <1/|set|; the DuckDB
+    oracle folds identically, so oracles still match exactly.
     """
     c = F.col(text) if isinstance(text, str) else text
     return F.array_sort(
@@ -101,147 +101,16 @@ def minhash_signatures(
     ).filter(F.col("mh0").isNotNull())
 
 
-#: Per-process memo of gram string → hash32 for the Arrow shingle
-#: engine — same rationale as _SIMHASH_HASH_CACHE (md5 is pure, worker
-#: processes are reused, vocabulary is Zipfian). No salt dimension:
-#: shingle hashes are unsalted hash32, so the gram string alone keys.
-_SHINGLE_HASH_CACHE: dict = {}
-_SHINGLE_HASH_CACHE_MAX = 1 << 20
-
-
-def _shingle_table_arrow(
-    df: DataFrame, id_col: str, text_col: str, shingle_n: int
-) -> DataFrame:
-    """(id, hs) built map-side in one mapInArrow stage — ZERO shuffle.
-
-    The expression/explode forms trade differently: per-row HOF md5 is
-    interpreted (measured 3.4× slower than codegen), and the explode
-    form gets codegen'd md5 back only by paying a corpus-wide
-    (id, hash) shuffle + collect_set. Hashing the grams in Python
-    (memoized per process — one md5 per vocabulary gram, not per
-    occurrence) removes both: each document's sorted distinct hash set
-    is built in-process (np.unique) and the stage stays map-only.
-    Values are identical by construction: same whitespace tokenize,
-    same " "-joined gram strings (the simhash Arrow engine's
-    parity-pinned recipe), same md5-prefix hash32.
-    """
-    from pyspark.sql.types import (
-        ArrayType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    src = df.select(
-        F.col(id_col), F.split(F.trim(F.col(text_col)), r"\s+").alias("__t")
-    )
-    id_field = src.schema.fields[0]
-    out_schema = StructType(
-        [
-            StructField(id_col, id_field.dataType, id_field.nullable),
-            StructField("hs", ArrayType(LongType(), False), False),
-        ]
-    )
-    n = int(shingle_n)
-
-    def gen(batches):
-        import hashlib
-
-        import numpy as np
-        import pyarrow as pa
-
-        cache = _SHINGLE_HASH_CACHE
-
-        def h32(g: str) -> int:
-            v = cache.get(g)
-            if v is None:
-                if len(cache) >= _SHINGLE_HASH_CACHE_MAX:
-                    cache.clear()
-                v = int.from_bytes(
-                    hashlib.md5(g.encode()).digest()[:4], "big"
-                )
-                cache[g] = v
-            return v
-
-        for batch in batches:
-            ids = batch.column(0)
-            tl = batch.column(1).to_pylist()
-            take_idx: list = []
-            sets: list = []
-            lens: list = []
-            for i, arr in enumerate(tl):
-                if arr is None:
-                    continue
-                toks = [t for t in arr if t != ""]
-                if len(toks) < n:
-                    continue
-                if n == 1:
-                    uniq = set(toks)
-                else:
-                    uniq = {
-                        " ".join(toks[j : j + n])
-                        for j in range(len(toks) - n + 1)
-                    }
-                hs = np.unique(
-                    np.fromiter(
-                        (h32(g) for g in uniq), dtype=np.int64,
-                        count=len(uniq),
-                    )
-                )
-                take_idx.append(i)
-                sets.append(hs)
-                lens.append(hs.size)
-            if not take_idx:
-                continue
-            offsets = np.zeros(len(lens) + 1, dtype=np.int32)
-            np.cumsum(lens, out=offsets[1:])
-            values = (
-                np.concatenate(sets)
-                if sets
-                else np.empty(0, dtype=np.int64)
-            )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    ids.take(pa.array(take_idx, type=pa.int64())),
-                    pa.ListArray.from_arrays(
-                        pa.array(offsets, type=pa.int32()),
-                        pa.array(values, type=pa.int64()),
-                    ),
-                ],
-                names=[id_col, "hs"],
-            )
-
-    return src.mapInArrow(gen, out_schema)
-
-
 def _shingle_table(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    shingle_n: int,
-    engine: str = "auto",
+    df: DataFrame, id_col: str, text_col: str, shingle_n: int
 ) -> DataFrame:
     """(id, hs: sorted distinct shingle hashes).
 
-    ``engine="arrow"`` builds each document's hash set map-side in
-    one mapInArrow stage — no shuffle at all (see
-    _shingle_table_arrow). ``engine="expr"`` keeps the classic
-    explode → codegen'd hash32 → collect_set plan: one shuffle of
-    (id, hash64) pairs, which leaves the table hash-partitioned on id
-    (useful when a downstream join keys on id and the corpus dwarfs
-    executor Python throughput). ``"auto"`` (default) picks by input
-    size (session.resolve_text_engine): the Arrow stage's fixed
-    Python cost loses on tiny corpora (measured +0.7 s/query at
-    sf0.1) and the removed corpus-token exchange is what matters at
-    scale. Identical rows any engine (parity-pinned). For a
-    pure-expression signature-only pass use `minhash_signatures`
-    (per-row expression).
+    explode → codegen'd hash32 → collect_set: one shuffle of
+    (id, hash) pairs, which leaves the table hash-partitioned on id
+    for downstream id joins. For a signature-only pass use
+    `minhash_signatures` (per-row expression, no shuffle).
     """
-    from wimbd_spark.session import resolve_text_engine
-
-    engine = resolve_text_engine(df, engine)
-    if engine == "arrow":
-        return _shingle_table_arrow(df, id_col, text_col, shingle_n)
     toks = tokenize(F.col(text_col))
     return (
         df.select(

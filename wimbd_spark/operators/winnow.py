@@ -13,11 +13,11 @@ overlap witness — the property MOSS uses for plagiarism detection and
 data-pipeline users use for boilerplate/near-dup audit.
 
 Plan shape (100 TB posture): fingerprint selection is a pure per-row
-expression chain — tokenize -> gram hash array -> per-window
-rightmost-argmin via nested higher-order functions. ZERO shuffle to
-select; all JVM/codegen (hash32 = md5-slice, portable to the DuckDB
-oracle). Cost O(grams * w) per document, map-side. The overlap
-aggregate shuffles only DISTINCT (source, fingerprint) pairs.
+expression chain — tokenize -> gram hash array -> per-window min and
+rightmost argmin, unrolled over w. ZERO shuffle to select; no Python
+workers (hash32 = md5-slice, portable to the DuckDB oracle). Cost
+O(grams * w) per document, map-side. The overlap aggregate shuffles
+only DISTINCT (source, fingerprint) pairs.
 """
 
 from __future__ import annotations
@@ -55,144 +55,40 @@ def winnow_select(text: Column | str, k: int = 3, w: int = 4) -> Column:
 
     def build(h: Column) -> Column:
         def pick(j: Column) -> Column:
-            # rightmost index attaining the window min = FIRST position
-            # of the min in the REVERSED window (array_position is
-            # first-occurrence, 1-based)
-            rev = F.reverse(F.slice(h, j, w))
-            m = F.array_min(rev)
-            pos = j + F.lit(w) - F.array_position(rev, m)
-            return F.struct(pos.cast("int").alias("pos"), m.alias("fp"))
+            # rightmost position of the window min, unrolled over w:
+            # least() of w scalar reads, then a CASE from j+w-1 down to
+            # j+1, else j. No per-window array is built.
+            if w == 1:
+                return j
+            at = [F.element_at(h, j + F.lit(i) if i else j) for i in range(w)]
+            m = F.least(*at)
+            pos = F.when(at[w - 1] == m, j + F.lit(w - 1))
+            for i in range(w - 2, 0, -1):
+                pos = pos.when(at[i] == m, j + F.lit(i))
+            return pos.otherwise(j)
 
-        # adjacent-dedupe, NOT array_distinct: repeats of a selected
-        # (pos, fp) are provably CONSECUTIVE (two windows picking
-        # position p are ≤ w−1 apart, and every window between them
-        # contains p and must also pick it — anything beating p in an
-        # in-between window would beat it in one of the outer two), so
-        # keeping each run's first element equals array_distinct.
-        # array_distinct on STRUCT elements has no hash-set fast path —
-        # O(n²) pairwise compares, measured minutes-not-seconds on
-        # 5000-token documents (r8, same sweep as the `let` finding).
-        def dedupe_adjacent(picks: Column) -> Column:
-            return F.filter(
-                picks,
-                lambda x, i: (i == F.lit(0))
-                | ~(x == F.element_at(picks, i)),
-            )
-
+        # Dedupe on int positions (fp = h[pos]). Windows picking the
+        # same position are consecutive (two windows picking p are
+        # ≤ w−1 apart, and every window between them contains p and
+        # must pick it too), so this equals an adjacent-run dedupe.
+        # array_distinct on ints is a built-in hash-set pass; on the
+        # (pos, fp) STRUCTS it has no hash-set fast path — O(n²)
+        # pairwise compares, measured minutes-not-seconds on
+        # 5000-token documents (r8).
+        positions = F.array_distinct(
+            F.transform(F.sequence(F.lit(1), F.size(h) - F.lit(w - 1)), pick)
+        )
         return F.when(
             F.size(h) >= w,
-            let(
-                F.transform(
-                    F.sequence(F.lit(1), F.size(h) - F.lit(w - 1)), pick
+            F.transform(
+                positions,
+                lambda p: F.struct(
+                    p.cast("int").alias("pos"), F.element_at(h, p).alias("fp")
                 ),
-                dedupe_adjacent,
             ),
         ).otherwise(empty)
 
     return let(hashes, build)
-
-
-def _winnow_rows_arrow(
-    df: DataFrame, id_col: str, text_col: str, k: int, w: int
-) -> DataFrame:
-    """Exploded (id_col, pos, fp) winnow rows, vectorized.
-
-    Two-stage split of winnow_select along the §4.2 boundary: the JVM
-    computes the per-gram hash array (tokenize → ngram_strings →
-    hash32 — one md5 per gram, the exact fingerprint values of the
-    expression form, so there is NO hash-parity surface), and a
-    mapInArrow stage does the per-window rightmost-argmin over the
-    int64 hash arrays in numpy (sliding_window_view over the Arrow
-    list buffers, zero-copy). The expression form's interpreted
-    per-window lambda re-evaluates its slice/reverse/array_min
-    subtree three times per window (plans/r16/
-    remove_shared_spans_keepfirst_before.txt operator (7)); here each
-    document is one vectorized argmin.
-
-    Parity with winnow_select (pinned in tests): rightmost tie via
-    argmin over the REVERSED window axis; adjacent-run dedupe on the
-    selected position (equal consecutive picks share pos AND fp since
-    fp = h[pos]); documents with NULL text or fewer than w gram
-    hashes emit nothing (the expression form's empty array, dropped
-    by the explode). Only (id, hashes) crosses the Python boundary —
-    never text.
-    """
-    from pyspark.sql.types import (
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    hashes = F.transform(
-        ngram_strings(tokenize(F.col(text_col)), k), lambda g: hash32(g)
-    )
-    src = df.select(F.col(id_col), hashes.alias("__h"))
-    id_field = src.schema.fields[0]
-    out_schema = StructType(
-        [
-            StructField(id_col, id_field.dataType, id_field.nullable),
-            StructField("pos", IntegerType(), False),
-            StructField("fp", LongType(), True),
-        ]
-    )
-
-    def gen(batches):
-        import numpy as np
-        import pyarrow as pa
-        from numpy.lib.stride_tricks import sliding_window_view
-
-        for batch in batches:
-            ids = batch.column(0)
-            hl = batch.column(1)
-            if isinstance(hl, pa.ChunkedArray):  # pragma: no cover
-                hl = hl.combine_chunks()
-            # list<int64> decomposes into absolute offsets + a flat
-            # values buffer (offsets are into the UNsliced values
-            # array, so this pairing survives batch slicing)
-            offs = hl.offsets.to_numpy(zero_copy_only=False)
-            vals = hl.values.to_numpy(zero_copy_only=False)
-            valid = (
-                pa.compute.is_valid(hl).to_numpy(zero_copy_only=False)
-                if hl.null_count
-                else None
-            )
-            take_idx = []
-            pos_out = []
-            fp_out = []
-            for i in range(len(hl)):
-                if valid is not None and not valid[i]:
-                    continue
-                s, e = offs[i], offs[i + 1]
-                m = e - s
-                if m < w:
-                    continue
-                h = vals[s:e]
-                win = sliding_window_view(h, w)
-                rel = (w - 1) - np.argmin(win[:, ::-1], axis=1)
-                p0 = np.arange(m - w + 1, dtype=np.int64) + rel
-                keep = np.ones(p0.shape, dtype=bool)
-                keep[1:] = p0[1:] != p0[:-1]
-                sel = p0[keep]
-                take_idx.append(np.full(sel.size, i, dtype=np.int64))
-                pos_out.append(sel + 1)
-                fp_out.append(h[sel])
-            if not take_idx:
-                continue
-            ti = np.concatenate(take_idx)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    ids.take(pa.array(ti)),
-                    pa.array(
-                        np.concatenate(pos_out).astype(np.int32),
-                        type=pa.int32(),
-                    ),
-                    pa.array(np.concatenate(fp_out), type=pa.int64()),
-                ],
-                names=[id_col, "pos", "fp"],
-            )
-
-    return src.mapInArrow(gen, out_schema)
 
 
 def winnow_fingerprints(
@@ -201,24 +97,9 @@ def winnow_fingerprints(
     id_col: str = "doc_id",
     k: int = 3,
     w: int = 4,
-    engine: str = "auto",
 ) -> DataFrame:
-    """One row per selected fingerprint: (id_col, pos, fp).
-
-    ``engine``: "arrow" runs the per-window argmin vectorized in
-    numpy over Arrow batches (_winnow_rows_arrow — the gram hashes
-    themselves stay JVM md5, so fingerprint values are identical by
-    construction); "expr" keeps the pure-Catalyst winnow_select
-    explode (no Python workers); "auto" (default) picks by input
-    size (session.resolve_text_engine — the Arrow stage's ~0.5 s
-    fixed local cost beats the interpreted window HOFs only past
-    ~MiBs of input; measured 13.4 s → 5.3 s at sf1 and a 0.4 s LOSS
-    at sf0.1). Bit-identical rows either way (parity-pinned)."""
-    from wimbd_spark.session import resolve_text_engine
-
-    engine = resolve_text_engine(df, engine)
-    if engine == "arrow":
-        return _winnow_rows_arrow(df, id_col, text_col, k, w)
+    """One row per selected fingerprint: (id_col, pos, fp) — the
+    winnow_select array exploded, map-side with no Python workers."""
     return df.select(
         F.col(id_col),
         F.explode(winnow_select(F.col(text_col), k=k, w=w)).alias("__s"),

@@ -76,9 +76,7 @@ def get_spark(
         # compilation again. Sized to hold a working set of ~hundreds
         # of query shapes; cost is class metadata (MBs). Same effect
         # on any cluster (driver and executors each hold this cache).
-        "spark.sql.codegen.cache.maxEntries": os.environ.get(
-            "WIMBD_CODEGEN_CACHE_ENTRIES", "4096"
-        ),
+        "spark.sql.codegen.cache.maxEntries": "4096",
         # pandas-written parquet uses TIMESTAMP(NANOS); read as long and
         # rebuild timestamps in load_tables (Spark has no ns timestamps).
         "spark.sql.legacy.parquet.nanosAsLong": "true",
@@ -224,21 +222,6 @@ def scoped_persist(df: DataFrame, level=None) -> DataFrame:
     return df
 
 
-#: Plan-stats byte threshold above which text operators with an Arrow
-#: engine (winnow fingerprint selection, shingle-set building) pick it
-#: over the pure-expression plan. The Arrow stage costs ~0.5 s of fixed
-#: Python-worker overhead per query locally and wins only once the
-#: per-token interpreted-HOF savings exceed that; parquet text
-#: compresses ~5-10×, so 2 MiB on-disk ≈ 10-20 MB of raw text ≈ the
-#: measured local crossover (sf0.1 regressed 0.4-0.7 s/query on
-#: arrow-always; sf1 won 2.5-3.5×). Results are engine-independent
-#: (parity-pinned), so the gate is pure cost routing; tune per
-#: deployment via WIMBD_ARROW_TEXT_MIN_BYTES.
-ARROW_TEXT_MIN_BYTES = int(
-    os.environ.get("WIMBD_ARROW_TEXT_MIN_BYTES", str(2 * 1024 * 1024))
-)
-
-
 #: Optimizer size estimates at or past this are not sizes: a plan the
 #: optimizer cannot size (an RDD-backed relation, a cross product of
 #: estimates) reports Long.MaxValue or an overflowing product of
@@ -260,23 +243,6 @@ def plan_size_bytes(df: DataFrame) -> int | None:
     except Exception:
         return None
     return sz if sz < _UNKNOWN_SIZE_BYTES else None
-
-
-def resolve_text_engine(df: DataFrame, engine: str) -> str:
-    """Resolve ``engine="auto"`` for text operators with an Arrow fast
-    path: "arrow" past ARROW_TEXT_MIN_BYTES of estimated input, else
-    "expr" (an unknown size counts as small). Explicit "arrow"/"expr"
-    pass through; anything else raises."""
-    if engine == "auto":
-        sz = plan_size_bytes(df)
-        return (
-            "arrow"
-            if sz is not None and sz >= ARROW_TEXT_MIN_BYTES
-            else "expr"
-        )
-    if engine not in ("arrow", "expr"):
-        raise ValueError(f"unknown engine {engine!r}")
-    return engine
 
 
 def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
