@@ -362,9 +362,9 @@ def test_unique_ngrams_hll_no_gram_repartition(spark):
         entry.bench_only_queries()["bench_unique_ngrams_hll"](spark, SF)
     )
     # no GRAM-key exchange: the only shuffles allowed are the
-    # harness's small-input rebalance (doc_id-hashed since r15 — the
-    # keyless form paid a sort-before-shuffle) and the
-    # SinglePartition sketch merge
+    # load-time rebalance of an input past REBALANCE_MIN_BYTES
+    # (doc_id-hashed; sf0.001 is under the gate, so absent here) and
+    # the SinglePartition sketch merge
     import re as _re
 
     keyed = _re.findall(r"hashpartitioning\((\w+)", plan)

@@ -28,7 +28,8 @@ TABLE_NAMES = [
 #: Tables whose per-row work is CPU-bound interpreted compute (text
 #: tokenization / n-gram explodes, vector higher-order functions) —
 #: these run at ~1-10 MB/s/core, so a sub-core-count scan partition
-#: serializes minutes of work and the rebalance shuffle always pays.
+#: of a large file serializes minutes of work and the rebalance
+#: shuffle pays (past REBALANCE_MIN_BYTES, below).
 #: Relational/event tables run through whole-stage-codegen'd
 #: filters/aggs at ~GB/s/core: for them a full-row rebalance shuffle
 #: costs MORE than just processing the small partition in place
@@ -40,6 +41,20 @@ REBALANCE_KEYS = {
     "documents": "doc_id",
     "embeddings": "vec_id",
 }
+
+#: Size gate of that spread: below this many bytes of scanned input
+#: (``plan_size_bytes``, the file size for a parquet scan) the hash
+#: exchange is not added. On small inputs its shuffle-map stage, AQE
+#: job and tasks cost more than the serial scan they spread. Measured
+#: on a 4-core box, local[4], sf0.1 documents/embeddings cut to a
+#: share of their rows, 12 bench.py queries (text and vector, 3
+#: alternating reps in one session), spread vs not: at 67/77 KB
+#: (documents/embeddings) wall 9.24 vs 8.98 s, CPU 17.2 vs 11.6 s; at
+#: 153/194 KB wall 9.41 vs 10.50 s, CPU 19.4 vs 13.6 s. The spread
+#: costs CPU at every size but buys wall time on interpreted text and
+#: vector work from ~150 KB on, so the gate sits between 67 and
+#: 153 KB, for both tables (SCALE.md "Input layer").
+REBALANCE_MIN_BYTES = 128 << 10
 
 
 def get_spark(
@@ -55,6 +70,15 @@ def get_spark(
       broadcast conversion) — replaces the reference's hand-tuned worker
       counts (src/cmd/util.rs:127-134).
     - Arrow enabled for the pandas_udf slow path.
+    - PySpark call-site capture off
+      (``spark.python.sql.dataFrameDebugging.enabled=false``). When on,
+      every DataFrame/Column API call costs ~8 py4j round trips and a
+      Python stack walk to record where it was made; the only thing
+      lost is that Python call-site fragment in analysis-error
+      messages. Turn it back on with ``extra_conf``. It is a static
+      conf, read once per process by PySpark on first use: it takes
+      effect only in the conf of the session that is built, not on a
+      running one.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = SparkSession.builder.appName(app_name).master(
@@ -68,6 +92,7 @@ def get_spark(
             shuffle_partitions if shuffle_partitions is not None else int(cpus)
         ),
         "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.python.sql.dataFrameDebugging.enabled": "false",
         # Generated-code cache (static conf, default 100 entries):
         # an analytics session runs MANY distinct query shapes (the
         # ES-parity usage: one long-lived session, ad-hoc queries),
@@ -93,12 +118,19 @@ def get_spark(
 
 
 def rebalance_small_input(df: DataFrame, key: str | None = None) -> DataFrame:
-    """Spread a tiny input (fewer partitions than cores) across the
+    """Spread a small input (fewer partitions than cores) across the
     cluster. CPU-bound text operators (tokenize/ngram explode) are
     otherwise serialized on one core when the source is a single small
     file. At real scale (many files / large row groups) the scan
     already yields >= defaultParallelism partitions and this is a
     no-op — no shuffle is added on the 100 TB path.
+
+    Size gate: an input whose job-free size (``plan_size_bytes``) is
+    under ``REBALANCE_MIN_BYTES`` is left as it is — there the
+    exchange, its extra stage and job cost more than the serial scan
+    it spreads. An unknown size is spread. The size is
+    probed after the partition count, which has already optimized the
+    plan, so an input past the gate pays nothing extra for it.
 
     ``key``: hash-partition on this column instead of round-robin.
     Keyless ``repartition(n)`` locally SORTS its whole input first
@@ -110,13 +142,16 @@ def rebalance_small_input(df: DataFrame, key: str | None = None) -> DataFrame:
     (guide: derive synthetic keys from data, not from rand()).
     """
     target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        if key is not None:
-            from pyspark.sql import functions as F
+    if df.rdd.getNumPartitions() >= target:
+        return df
+    size = plan_size_bytes(df)
+    if size is not None and size < REBALANCE_MIN_BYTES:
+        return df
+    if key is not None:
+        from pyspark.sql import functions as F
 
-            return df.repartition(target, F.col(key))
-        return df.repartition(target)
-    return df
+        return df.repartition(target, F.col(key))
+    return df.repartition(target)
 
 
 #: Per-process memo of lazily-planned parquet reads (the PLAN, never
