@@ -1,4 +1,4 @@
-.PHONY: test test-full check bench perfbench perfbench-trace perfbench-pairs smoke lint examples
+.PHONY: test test-full check check-smoke bench perfbench perfbench-trace perfbench-pairs smoke lint examples
 
 # default tier: slow-tier tests (tests/conftest.py SLOW_TIER_NODE_IDS)
 # are skipped so the run fits a CI/verify window (~14 min)
@@ -12,6 +12,13 @@ test-full:
 
 check:
 	python tools/check_oracles.py
+
+# static and plan lints: no env-knob reads outside the deployment
+# allow-list, and the registry-wide window / PythonRDD plan lint
+# (a slow-tier test, so the slow tier is switched on here)
+lint:
+	WIMBD_FULL_TESTS=1 python -m pytest tests/test_knob_lint.py \
+		tests/test_window_lint.py -q
 
 check-smoke:
 	python tools/check_oracles.py /root/testdata/sf0.001

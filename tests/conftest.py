@@ -50,7 +50,7 @@ SLOW_TIER_NODE_IDS = frozenset({
     "test_multipattern.py::test_ac_on_documents_table",
     "test_multipattern.py::test_auto_routing_and_validation",
     "test_neardup.py::test_neardup_components_local_matches_distributed",
-    "test_neardup.py::test_simhash_bits_engine_parity",
+    "test_neardup.py::test_simhash_bits_matches_md5_reference",
     "test_neardup.py::test_simhash_pairs_canonical_filter_no_duplicates",
     "test_plans.py::test_knn_join_pq_codes_only_stage1_no_driver_candidates",
     "test_plans.py::test_pq_rerank_join_no_candidate_collect",

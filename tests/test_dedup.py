@@ -659,3 +659,43 @@ def test_decontaminate_slop_hatch_matches_gram_plan(spark, monkeypatch):
     monkeypatch.setattr(dd, "SCAN_SLOP_MAX_PHRASES", 1)
     with pytest.raises(ValueError, match="expression budget"):
         decontaminate_by_ngrams(train, ev, slop=1)
+
+
+def test_ac_decon_route_rule():
+    """The auto AC-vs-gram rule shared by decontaminate_by_ngrams and
+    streaming_contamination_hits, one case per branch, on
+    {phrase length: distinct phrases} maps (pure Python, no Spark)."""
+    from wimbd_spark.index import GRAM_JOIN_MAX_PHRASE_TOKENS as cap
+    from wimbd_spark.operators.dedup import (
+        _AC_DECON_MAX_OVERLONG,
+        _AC_DECON_MAX_PHRASES,
+        _AC_DECON_MIN_LENGTHS,
+        _AC_DECON_MIN_PHRASES,
+        _ac_decon_route,
+    )
+
+    def short(n_lengths, total):
+        # `total` phrases over `n_lengths` distinct short lengths, the
+        # longest of them the cap itself (which still counts as short)
+        per = {L: 1 for L in range(cap - n_lengths + 1, cap + 1)}
+        per[cap] += total - n_lengths
+        return per
+
+    lo, hi = _AC_DECON_MIN_PHRASES, _AC_DECON_MAX_PHRASES
+    k = _AC_DECON_MIN_LENGTHS
+    # in budget, enough distinct short lengths → AC, at both ends
+    assert _ac_decon_route(short(k, lo))
+    assert _ac_decon_route(short(k, hi))
+    # too few or too many phrases → gram, though a multiplier bites
+    assert not _ac_decon_route(short(k, lo - 1))
+    assert not _ac_decon_route(short(k, hi + 1))
+    # in budget but one length short of the multiplier → gram
+    assert not _ac_decon_route(short(k - 1, 1000))
+    # in budget, few lengths, overlong phrases past the bound → AC;
+    # at the bound → gram (the cap itself counts as short)
+    over = {cap: 1000, cap + 1: _AC_DECON_MAX_OVERLONG + 1}
+    assert _ac_decon_route(over)
+    over[cap + 1] = _AC_DECON_MAX_OVERLONG
+    assert not _ac_decon_route(over)
+    # empty eval set → gram (callers answer it before routing)
+    assert not _ac_decon_route({})

@@ -753,11 +753,41 @@ def test_simhash_pairs_default_is_auto(spark):
     assert auto_nseg(10**9, 62, 6) > 7
 
 
-def test_simhash_bits_engine_parity(spark):
-    """r15 optimization: the Arrow/numpy signature engine must be
-    bit-identical to the pure-Catalyst expression form on every width
-    and on edge rows (NULL text → NULL, zero tokens → 0, unicode and
-    repeated tokens)."""
+def _py_simhash_bits(text, nbits, shingle_n):
+    """Python reference for simhash_bits: bit j is set iff more than
+    half of the distinct shingles have bit (j mod 32) set in
+    int(md5("sh64<j // 32>:" + shingle)[:8 hex], 16). Tokens are
+    split(trim(text), '\\s+') minus empties, as in `tokenize`."""
+    import hashlib
+    import re
+
+    if text is None:
+        return None if shingle_n == 1 else 0
+    toks = [t for t in re.split(r"[ \t\n\x0b\f\r]+", text) if t]
+    shingles = {
+        " ".join(toks[i : i + shingle_n])
+        for i in range(len(toks) - shingle_n + 1)
+    }
+    sig = 0
+    for j in range(nbits):
+        salt = f"sh64{j // 32}:".encode()
+        ones = sum(
+            int(hashlib.md5(salt + s.encode()).hexdigest()[:8], 16)
+            >> (j % 32)
+            & 1
+            for s in shingles
+        )
+        if 2 * ones > len(shingles):
+            sig |= 1 << j
+    return sig
+
+
+def test_simhash_bits_matches_md5_reference(spark):
+    """simhash_bits equals the hashlib-md5 reference on every width
+    (1, 16, 31, 32, 33, 62) at shingle_n 1 and 2, on edge rows: NULL
+    text (NULL at n=1, 0 at n>1), zero tokens (0), fewer tokens than
+    the shingle width, unicode, repeated tokens and mixed
+    whitespace."""
     from wimbd_spark.operators.neardup import simhash_bits
 
     rows = [
@@ -768,48 +798,30 @@ def test_simhash_bits_engine_parity(spark):
         (5, None),
         (6, "x"),
         (7, "a b c d e f g h i j k l m n o p q r s t u v w x y z"),
+        (8, " alpha\tbeta  \n alpha beta "),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    for nbits in (1, 16, 31, 32, 33, 62):
-        a = {
-            r["doc_id"]: r["sh"]
-            for r in df.select(
-                "doc_id",
-                simhash_bits(F.col("text"), nbits, engine="expr").alias(
-                    "sh"
-                ),
-            ).collect()
-        }
-        b = {
-            r["doc_id"]: r["sh"]
-            for r in df.select(
-                "doc_id",
-                simhash_bits(F.col("text"), nbits, engine="arrow").alias(
-                    "sh"
-                ),
-            ).collect()
-        }
-        assert a == b, f"nbits={nbits}: {a} != {b}"
-    with pytest.raises(ValueError, match="engine"):
-        simhash_bits(F.col("text"), 62, engine="bogus")
-    # shingle_n > 1 parity too (the arrow path dedups in Python)
-    a = {
-        r["doc_id"]: r["sh"]
-        for r in df.select(
-            "doc_id",
-            simhash_bits(F.col("text"), 62, shingle_n=2, engine="expr")
-            .alias("sh"),
-        ).collect()
-    }
-    b = {
-        r["doc_id"]: r["sh"]
-        for r in df.select(
-            "doc_id",
-            simhash_bits(F.col("text"), 62, shingle_n=2, engine="arrow")
-            .alias("sh"),
-        ).collect()
-    }
-    assert a == b
+    cases = [
+        (nbits, n) for nbits in (1, 16, 31, 32, 33, 62) for n in (1, 2)
+    ]
+    got = df.select(
+        "doc_id",
+        *[
+            simhash_bits(F.col("text"), nbits, shingle_n=n).alias(
+                f"b{nbits}_n{n}"
+            )
+            for nbits, n in cases
+        ],
+    ).collect()
+    assert len(got) == len(rows)
+    text_of = dict(rows)
+    for r in got:
+        for nbits, n in cases:
+            want = _py_simhash_bits(text_of[r["doc_id"]], nbits, n)
+            assert r[f"b{nbits}_n{n}"] == want, (r["doc_id"], nbits, n)
+    # the NULL contract is not vacuous: NULL stays NULL only at n=1
+    null_row = next(r for r in got if r["doc_id"] == 5)
+    assert null_row["b62_n1"] is None and null_row["b62_n2"] == 0
 
 
 def test_simhash_pairs_canonical_filter_no_duplicates(spark):

@@ -408,16 +408,17 @@ def test_psl_snapshot_sanity():
 
 
 def test_tokenize_words_jvm_twin_differential(spark):
-    """The JVM regex twin (r13 VERDICT item 5) is value-identical to
-    the Pandas-UDF char loop on a deterministic differential corpus
-    covering every automaton branch: ASCII word runs + mids, non-ASCII
-    letters/digits/marks, Katakana joins (incl. the block's non-letter
-    members ・ ゠), Hiragana/Han per-char breaks, underscore bridges,
-    emoji, and the ASCII fast branch's guard boundary (word-mid-word
-    across the ASCII/non-ASCII line)."""
+    """The JVM regex (r13 VERDICT item 5) is value-identical to the
+    Python reference ``_uax29_words``, run on the collected texts, on
+    a deterministic differential corpus covering every automaton
+    branch: ASCII word runs + mids, non-ASCII letters/digits/marks,
+    Katakana joins (incl. the block's non-letter members ・ ゠),
+    Hiragana/Han per-char breaks, underscore bridges, emoji, and the
+    ASCII fast branch's guard boundary (word-mid-word across the
+    ASCII/non-ASCII line)."""
     import random
 
-    from wimbd_spark.functions.text import tokenize_words
+    from wimbd_spark.functions.text import _uax29_words, tokenize_words
 
     curated = [
         "You can follow any responses to this entry through the RSS"
@@ -442,73 +443,17 @@ def test_tokenize_words_jvm_twin_differential(spark):
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(curated + fuzz)], ["id", "t"]
     )
-    bad = (
-        df.select(
-            "id",
-            tokenize_words(F.col("t")).alias("jvm"),
-            tokenize_words(F.col("t"), engine="python").alias("py"),
-        )
-        .filter("NOT (jvm <=> py)")
-        .collect()
-    )
-    assert bad == [], [(r["id"], r["jvm"], r["py"]) for r in bad[:5]]
-    # NULL passes through both engines
-    row = spark.range(1).select(
-        tokenize_words(F.lit(None).cast("string")).alias("j"),
-        tokenize_words(
-            F.lit(None).cast("string"), engine="python"
-        ).alias("p"),
-    ).collect()[0]
-    assert row["j"] is None and row["p"] is None
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="engine"):
-        tokenize_words(F.lit("x"), engine="rust")
+    got = df.select(
+        "id", "t", tokenize_words(F.col("t")).alias("jvm")
+    ).collect()
+    assert len(got) == len(curated) + len(fuzz)
+    bad = [
+        (r["id"], r["jvm"])
+        for r in got
+        if r["jvm"] != _uax29_words(r["t"])
+    ]
+    assert bad == [], bad[:5]
+    # NULL passes through
+    assert one(spark, tokenize_words(F.lit(None).cast("string"))) is None
 
 
-def test_tokenizer_engine_router(spark):
-    """VERDICT r14 item 5: engine='auto' routing — sample the corpus,
-    measure character-level ASCII fraction, pick jvm for ASCII-dominant
-    text and python for CJK-dense text (the jvm default lost up to
-    ~1.7x there, SCALE.md r15). Both engines are value-identical, so
-    only the choice is asserted — plus value parity of the wrapper."""
-    from pyspark.sql import functions as F
-
-    from wimbd_spark.functions.text import (
-        tokenize_words,
-        tokenize_words_auto,
-        tokenizer_engine_for,
-    )
-
-    web = spark.createDataFrame(
-        [(i, "the quick brown fox jumps over the lazy dog 2.0")
-         for i in range(20)],
-        "id long, text string",
-    )
-    assert tokenizer_engine_for(web) == "jvm"
-
-    dense = spark.createDataFrame(
-        [(i, "一丁丂七二三四五" * 40)
-         for i in range(20)],
-        "id long, text string",
-    )
-    assert tokenizer_engine_for(dense) == "python"
-
-    # NULL-only / empty corpora fall back to the jvm default
-    nulls = spark.createDataFrame(
-        [(1, None)], "id long, text string"
-    )
-    assert tokenizer_engine_for(nulls) == "jvm"
-    assert tokenizer_engine_for(nulls.filter("id < 0")) == "jvm"
-
-    # wrapper parity: auto output == both engines on mixed text
-    mixed = spark.createDataFrame(
-        [(1, "don't stop 2.0 一二三 カタカナ")],
-        "id long, text string",
-    )
-    auto = mixed.select(tokenize_words_auto(mixed).alias("t")).first()["t"]
-    for eng in ("jvm", "python"):
-        ref = mixed.select(
-            tokenize_words(F.col("text"), engine=eng).alias("t")
-        ).first()["t"]
-        assert auto == ref

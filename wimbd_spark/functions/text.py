@@ -2,9 +2,10 @@
 
 Everything here is a pure ``Column`` expression (JVM-side, whole-stage
 codegen) — including ``tokenize_words``, whose UAX-29 segmentation
-runs as one Java regex by default (r14); its original Pandas-UDF char
-loop remains as the verified ``engine="python"`` twin for Unicode
-word-boundary parity with the reference tokenizer (src/tokens.rs:8-17).
+runs as one Java regex matching the reference tokenizer
+(src/tokens.rs:8-17). ``_uax29_words`` is the same segmentation in
+Python: the analyzer for driver-side phrases (index.py) and the tests'
+reference.
 
 Reference parity map (file:line relative to /root/reference):
 - tokenize            src/tokens.rs:8-17 (unicode words); wimbd/url_per_tok_counts/map_count.py:19-20
@@ -19,8 +20,6 @@ Reference parity map (file:line relative to /root/reference):
 from __future__ import annotations
 
 import re as _re
-
-import pandas as pd  # noqa: F401 — needed at module scope for pandas_udf type hints
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -209,7 +208,7 @@ def _uax29_words_loop(t: str) -> list[str]:
     return out
 
 
-# --- JVM twin of _uax29_words: the whole segmentation as ONE Java
+# --- JVM form of _uax29_words: the whole segmentation as ONE Java
 # regex for regexp_extract_all, so tokenize_words stays inside
 # whole-stage codegen instead of paying an Arrow round-trip per batch
 # (r13 VERDICT item 5 — the last Python-rate operator on a parity
@@ -269,7 +268,7 @@ _UAX29_JAVA_PATTERN = (
 )
 
 
-def tokenize_words(text: Column | str, engine: str = "jvm") -> Column:
+def tokenize_words(text: Column | str) -> Column:
     """Unicode word-boundary tokenizer.
 
     UAX-29 word segmentation matching src/tokens.rs:8-17
@@ -278,100 +277,14 @@ def tokenize_words(text: Column | str, engine: str = "jvm") -> Column:
     own token, CJK ideographs segment per-character, Katakana runs
     join.
 
-    ``engine="jvm"`` (default) evaluates the segmentation as ONE Java
-    regex inside whole-stage codegen (regexp_extract_all) — no Python
-    workers, no Arrow transfer; value-identical to the char loop on
-    the src/tokens.rs goldens and three differential corpora (tested:
-    0 mismatches / 37k docs). Measured (SCALE.md r14): **2.4× faster
-    on ASCII-dominant text** (the guarded fast branch — real web
-    corpora), ~2.5× SLOWER on densely non-ASCII text, where the
-    automaton branch's per-char lookbehinds lose to the memoized
-    Python char loop. Pass ``engine="python"`` for CJK-dense corpora,
-    or let `tokenize_words_auto` sample the corpus and route; both
-    engines are value-identical everywhere.
+    Evaluated as ONE Java regex inside whole-stage codegen
+    (regexp_extract_all) — no Python workers, no Arrow transfer;
+    value-identical to ``_uax29_words`` on the src/tokens.rs goldens
+    and a differential corpus (tested). A Python char loop is faster
+    only on long non-Latin words (SCALE.md, tokenizer notes).
     """
-    if engine == "jvm":
-        return F.regexp_extract_all(
-            _col(text), F.lit(_UAX29_JAVA_PATTERN), F.lit(0)
-        )
-    if engine != "python":
-        raise ValueError(
-            f"engine must be 'jvm' or 'python', got {engine!r}"
-        )
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("array<string>")
-    def _tok(s: pd.Series) -> pd.Series:
-        return s.map(lambda t: _uax29_words(t) if t is not None else None)
-
-    return _tok(_col(text))
-
-
-#: Route `tokenize_words` engines by SAMPLED character-level ASCII
-#: fraction. Measured (SCALE.md r15, 8 cores): the JVM regex wins on
-#: every space-separated mix down to ~33% ASCII chars (0.48-0.82× the
-#: Python loop's time) — its guarded ASCII fast branch plus zero
-#: Arrow transfer — and only loses on DENSE unbroken CJK runs
-#: (0.80-0.91+ non-ASCII chars: 1.2-1.7× slower, the per-char
-#: lookbehind automaton against the memoized char loop). The
-#: crossover sits near 20-25% ASCII, so below this fraction the
-#: router picks the Python engine. Both engines are value-identical
-#: everywhere (goldens + 37k-doc differential, r14), so routing is
-#: purely a cost decision.
-_AUTO_ASCII_CUTOFF = 0.25
-
-#: Sample size for the router: ~1k docs bounds the probe to one
-#: sub-second job while the corpus-level ASCII fraction (web corpora
-#: are overwhelmingly mono-script per source) converges far earlier.
-_AUTO_SAMPLE_DOCS = 1024
-
-
-def tokenizer_engine_for(
-    df,
-    text_col: str = "text",
-    sample_docs: int = _AUTO_SAMPLE_DOCS,
-    ascii_cutoff: float = _AUTO_ASCII_CUTOFF,
-) -> str:
-    """Pick the cheaper `tokenize_words` engine for THIS corpus:
-    sample ``sample_docs`` docs, measure the character-level ASCII
-    fraction, return ``"jvm"`` at/above ``ascii_cutoff`` else
-    ``"python"`` (see `_AUTO_ASCII_CUTOFF` for the measured basis).
-    One small job against the first partitions (a limit, not a full
-    scan); empty/NULL-only corpora route to the jvm default."""
-    row = (
-        df.select(F.col(text_col).alias("_t"))
-        .filter(F.col("_t").isNotNull())
-        .limit(sample_docs)
-        .agg(
-            F.sum(F.length("_t")).alias("_total"),
-            F.sum(
-                F.length(
-                    F.regexp_replace("_t", r"[\x00-\x7F]", "")
-                )
-            ).alias("_nonascii"),
-        )
-        .first()
-    )
-    if not row["_total"]:
-        return "jvm"
-    ascii_frac = 1.0 - row["_nonascii"] / row["_total"]
-    return "jvm" if ascii_frac >= ascii_cutoff else "python"
-
-
-def tokenize_words_auto(
-    df,
-    text_col: str = "text",
-    sample_docs: int = _AUTO_SAMPLE_DOCS,
-) -> Column:
-    """`tokenize_words` with the engine chosen per-corpus by
-    `tokenizer_engine_for` — removes the only residual perf footgun
-    on the parity path (the jvm default losing up to ~1.7× on
-    CJK-dense corpora). Engine choice needs a DataFrame to sample,
-    which a bare Column expression cannot supply — hence this
-    df-level wrapper rather than an ``engine="auto"`` literal."""
-    return tokenize_words(
-        F.col(text_col),
-        engine=tokenizer_engine_for(df, text_col, sample_docs),
+    return F.regexp_extract_all(
+        _col(text), F.lit(_UAX29_JAVA_PATTERN), F.lit(0)
     )
 
 

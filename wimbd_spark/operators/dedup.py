@@ -734,10 +734,22 @@ _AC_DECON_MIN_LENGTHS = 4
 _AC_DECON_MAX_OVERLONG = 32
 
 
-def _gram_cap() -> int:
-    from wimbd_spark.index import GRAM_JOIN_MAX_PHRASE_TOKENS
+def _ac_decon_route(per_len: dict[int, int]) -> bool:
+    """True iff ``method="auto"`` decontamination should take the
+    Aho-Corasick route for an eval set with ``per_len`` = {phrase
+    length in tokens: distinct phrases of that length}: the phrase
+    count is inside [_AC_DECON_MIN_PHRASES, _AC_DECON_MAX_PHRASES]
+    AND a gram-path cost multiplier bites (see the constants above).
+    The one rule for the batch and streaming decontaminators."""
+    from wimbd_spark.index import GRAM_JOIN_MAX_PHRASE_TOKENS as cap
 
-    return GRAM_JOIN_MAX_PHRASE_TOKENS
+    n = sum(per_len.values())
+    n_short_lengths = sum(1 for L in per_len if L <= cap)
+    n_over = sum(c for L, c in per_len.items() if L > cap)
+    return _AC_DECON_MIN_PHRASES <= n <= _AC_DECON_MAX_PHRASES and (
+        n_short_lengths >= _AC_DECON_MIN_LENGTHS
+        or n_over > _AC_DECON_MAX_OVERLONG
+    )
 
 
 #: Expression-tree budget for the scan-predicate slop fallback: each
@@ -943,6 +955,7 @@ def decontaminate_by_ngrams(
                     "never materializes the phrase set in one process)"
                 )
             ac_phrases = [" ".join(r["_toks"]) for r in rows]
+            use_ac = True
         else:
             # auto: one small aggregate decides the route WITHOUT
             # collecting phrases (the set may be gram-route huge)
@@ -953,26 +966,14 @@ def decontaminate_by_ngrams(
                 .collect()
             }
             n = sum(per_len.values())
-            cap_probe = _gram_cap()
-            n_short_lengths = sum(1 for L in per_len if L <= cap_probe)
-            n_over = sum(
-                c for L, c in per_len.items() if L > cap_probe
-            )
-            gram_multiplier_bites = (
-                n_short_lengths >= _AC_DECON_MIN_LENGTHS
-                or n_over > _AC_DECON_MAX_OVERLONG
-            )
+            use_ac = _ac_decon_route(per_len)
         if n == 0:
             # nothing to match (empty/blank eval set) — same contract
             # as the gram path's empty-lengths return below
             if mode == "drop":
                 return train
             return train.withColumn(flag_col, F.lit(False))
-        if method == "ac" or (
-            n <= _AC_DECON_MAX_PHRASES
-            and n >= _AC_DECON_MIN_PHRASES
-            and gram_multiplier_bites
-        ):
+        if use_ac:
             from wimbd_spark.operators.multipattern import (
                 matching_doc_ids_ac,
             )

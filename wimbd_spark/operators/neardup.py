@@ -1022,7 +1022,7 @@ def simhash16(text: Column | str, shingle_n: int = 1) -> Column:
 
 
 #: Per-process memo of (token, nh) → packed salted hash32 halves for
-#: the Arrow simhash engine: md5 is a pure function of the token,
+#: simhash_bits' Python workers: md5 is a pure function of the token,
 #: worker processes are reused across tasks, and web-corpus vocabulary
 #: is Zipfian — the cache turns ~per-token-instance md5 cost into
 #: ~per-vocabulary-word cost. Bounded; cleared wholesale at the cap.
@@ -1034,23 +1034,35 @@ _SIMHASH_HASH_CACHE: dict = {}
 _SIMHASH_HASH_CACHE_MAX = 1 << 20
 
 
-def _simhash_bits_arrow(
-    raw_split: Column, nbits: int, shingle_n: int
+def simhash_bits(
+    text: Column | str,
+    nbits: int = 62,
+    shingle_n: int = 1,
 ) -> Column:
-    """Vectorized (Arrow + numpy) evaluation of the simhash_bits
-    vote, bit-for-bit identical to the expression form (parity-
-    pinned): per shingle s and half k, bit j of
-    hash32(s, f"sh64{k}") votes ±1 on signature bit k*32 + j mod 32.
+    """WIDE SimHash over distinct token shingles → BIGINT with
+    ``nbits`` (≤ 62) signature bits — the corpus-scale variant of
+    simhash16.
 
-    The expression form allocates ~2 arrays + nbits structs per
-    shingle in interpreted higher-order functions (~90 CPU-seconds
-    per 280k tokens measured r15, and the garbage presses on the GC
-    for the rest of the job); here each Arrow batch is one numpy
-    bit-matrix + one segmented reduce. md5 values are memoized per
-    process (see _SIMHASH_HASH_CACHE), so repeated vocabulary costs
-    one hash ever.
+    16 bits saturate at scale: 2^16 distinct signatures means that on
+    a 10⁹-doc corpus every bucket holds ~15k docs and Hamming blocking
+    degenerates to quadratic comparisons. 62 bits (the default; the
+    cap keeps the value a POSITIVE BIGINT) give 4e18 signatures —
+    collisions only from genuine similarity.
 
-    ``raw_split`` must be the LAMBDA-FREE ``split(trim(text), '\\s+')``
+    Bit j votes with bit (j mod 32) of the SALTED portable hash
+    hash32(shingle, "sh64" + chr(j // 32)), so the construction stays
+    md5-reproducible in a SQL oracle exactly like simhash16. Per-row,
+    no shuffle. NULL text gives NULL at ``shingle_n`` = 1 and 0 above
+    it; text with no shingles gives 0.
+
+    The vote runs vectorized in numpy over Arrow batches: one bit
+    matrix + one segmented reduce per batch, md5 values memoized per
+    process (see _SIMHASH_HASH_CACHE). The same vote as interpreted
+    higher-order functions allocated ~nbits structs per shingle; it
+    tied at 64 KB and lost up to 5.5× at sf0.1 on 4 cores (SCALE.md,
+    Round 15 simhash notes).
+
+    The UDF's argument is the LAMBDA-FREE ``split(trim(text), '\\s+')``
     — empty-token filtering and shingle assembly happen in Python
     (identical strings by construction: same slice bounds, same
     single-space join as functions.text.ngram_strings). A pandas_udf
@@ -1060,7 +1072,9 @@ def _simhash_bits_arrow(
     execution dies with INTERNAL_ERROR "Cannot evaluate expression" —
     reproduced deterministically r15), so no HOF may appear in the
     argument."""
-
+    if not (1 <= nbits <= 62):
+        raise ValueError("nbits must be in [1, 62]")
+    c = F.col(text) if isinstance(text, str) else text
     nh = (nbits + 31) // 32
 
     @F.pandas_udf("long")
@@ -1093,11 +1107,10 @@ def _simhash_bits_arrow(
         flat: list = []
         for arr in tok_s:
             if arr is None:
-                # expression-form NULL semantics differ by width:
-                # shingle_n == 1 propagates NULL (aggregate over a
-                # NULL array), shingle_n > 1 goes through
-                # ngram_strings, whose WHEN/OTHERWISE maps a NULL
-                # token array to the EMPTY gram array → signature 0
+                # NULL semantics differ by width, as in simhash16:
+                # shingle_n == 1 propagates NULL, shingle_n > 1 maps
+                # a NULL token array to the EMPTY gram array
+                # (ngram_strings) → signature 0
                 per_doc.append(None if shingle_n == 1 else 0)
                 continue
             toks = [t for t in arr if t != ""]
@@ -1142,85 +1155,7 @@ def _simhash_bits_arrow(
                 i += 1
         return pd.Series(out, dtype="object").astype("Int64")
 
-    return _sig(raw_split)
-
-
-def simhash_bits(
-    text: Column | str,
-    nbits: int = 62,
-    shingle_n: int = 1,
-    engine: str = "arrow",
-) -> Column:
-    """WIDE SimHash over distinct token shingles → BIGINT with
-    ``nbits`` (≤ 62) signature bits — the corpus-scale variant of
-    simhash16.
-
-    16 bits saturate at scale: 2^16 distinct signatures means that on
-    a 10⁹-doc corpus every bucket holds ~15k docs and Hamming blocking
-    degenerates to quadratic comparisons. 62 bits (the default; the
-    cap keeps the value a POSITIVE BIGINT on both engines) give 4e18
-    signatures — collisions only from genuine similarity.
-
-    Bit j votes with bit (j mod 32) of the SALTED portable hash
-    hash32(shingle, "sh64" + chr(j // 32)), so the construction stays
-    md5-reproducible in a SQL oracle exactly like simhash16. Per-row
-    in both engines — no shuffle.
-
-    ``engine``: "arrow" (default) evaluates the vote vectorized in
-    numpy over Arrow batches (_simhash_bits_arrow — the expression
-    form's interpreted higher-order functions allocate ~nbits structs
-    per shingle and were measured at ~90 CPU-seconds / 280k tokens,
-    r15); "expr" keeps the pure-Catalyst expression (no Python
-    workers — e.g. for streaming plans). Both engines are
-    bit-identical (parity-pinned in tests)."""
-    if not (1 <= nbits <= 62):
-        raise ValueError("nbits must be in [1, 62]")
-    if engine not in ("arrow", "expr"):
-        raise ValueError(f"unknown engine {engine!r}")
-    c = F.col(text) if isinstance(text, str) else text
-    if engine == "arrow":
-        # lambda-free argument (see _simhash_bits_arrow): the JVM does
-        # trim+split, Python drops empties / builds shingles / dedups
-        return _simhash_bits_arrow(
-            F.split(F.trim(c), r"\s+"), nbits, shingle_n
-        )
-    sh = (
-        F.array_sort(F.array_distinct(tokenize(c)))
-        if shingle_n == 1
-        else shingle_set(c, shingle_n)
-    )
-    nh = (nbits + 31) // 32
-    hs = F.transform(
-        sh,
-        lambda s: F.array(
-            *[hash32(s, f"sh64{k}") for k in range(nh)]
-        ),
-    )
-    # per-bit (source-hash index, probe mask) spec, zipped against the
-    # 62-slot vote vector — one pass over the shingle hashes
-    specs = [(j // 32, 2 ** (j % 32)) for j in range(nbits)]
-    probe = F.array(*[F.lit(p).cast("long") for _, p in specs])
-    which = F.array(*[F.lit(k) for k, _ in specs])
-    votes = F.aggregate(
-        hs,
-        F.array_repeat(F.lit(0).cast("long"), nbits),
-        lambda acc, hh: F.zip_with(
-            F.zip_with(acc, which, lambda a, k: F.struct(a.alias("a"), F.element_at(hh, k + 1).alias("h"))),
-            probe,
-            lambda ak, p: ak["a"]
-            + F.when(ak["h"].bitwiseAND(p) != 0, 1).otherwise(-1),
-        ),
-    )
-    outpow = F.array(*[F.lit(2**j).cast("long") for j in range(nbits)])
-    return F.aggregate(
-        F.zip_with(
-            votes,
-            outpow,
-            lambda v, q: F.when(v > 0, q).otherwise(F.lit(0).cast("long")),
-        ),
-        F.lit(0).cast("long"),
-        lambda a, x: a + x,
-    )
+    return _sig(F.split(F.trim(c), r"\s+"))
 
 
 MAX_PIGEONHOLE_COMBINATIONS = 512

@@ -25,8 +25,6 @@ compute on 2M pairs x dim 64, bit-identical by construction).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegralType
@@ -105,18 +103,12 @@ def dot(a: Column, b: Column) -> Column:
 #: codegen'd arithmetic chain (every other width — and NULL — takes
 #: the generic fold branch of the same expression, so results are
 #: identical for ALL inputs). 64 is this repo's canonical embedding
-#: width (testdata + examples); deployments with other embedding
-#: widths list theirs via WIMBD_DOT_UNROLL_DIMS (comma-separated) —
-#: the value only changes SPEED, never results. On top of the env
-#: list, operator builds that LEARN the corpus width (centroid seed
-#: collects, dim probes) register it via ``register_dot_width`` so
-#: the unroll applies at production embedding dims (256-1024) without
-#: configuration (VERDICT r15 item 2).
-_DOT_UNROLL_ENV: tuple[int, ...] = tuple(
-    int(x)
-    for x in os.environ.get("WIMBD_DOT_UNROLL_DIMS", "64").split(",")
-    if x.strip()
-)
+#: width (testdata + examples). Operator builds that LEARN the corpus
+#: width (centroid seed collects, dim probes) register it via
+#: ``register_dot_width``, so the unroll applies at production
+#: embedding dims (256-1024) without configuration (VERDICT r15
+#: item 2).
+_DOT_UNROLL_DIMS: tuple[int, ...] = (64,)
 
 #: Widest chain ``register_dot_width`` accepts: janino compilation of
 #: a flat arithmetic chain is linear-ish in width but the constant is
@@ -127,7 +119,7 @@ _DOT_UNROLL_ENV: tuple[int, ...] = tuple(
 #: family; past it the interpreted fold's per-element cost is
 #: amortized enough that the compile gamble stops being obviously
 #: right — measure before raising.
-_DOT_UNROLL_MAX_DIM = int(os.environ.get("WIMBD_DOT_UNROLL_MAX_DIM", "1024"))
+_DOT_UNROLL_MAX_DIM = 1024
 #: How many distinct learned widths may be live at once — each one
 #: adds a CASE branch to every subsequent dot_attrs expression, so
 #: the set must stay small (real deployments have 1-2 widths).
@@ -150,7 +142,7 @@ def register_dot_width(d) -> bool:
         return False
     if d < 1 or d > _DOT_UNROLL_MAX_DIM:
         return False
-    if d in _DOT_UNROLL_ENV:
+    if d in _DOT_UNROLL_DIMS:
         return True
     if d not in _DOT_UNROLL_LEARNED:
         while len(_DOT_UNROLL_LEARNED) >= _DOT_UNROLL_MAX_WIDTHS:
@@ -160,9 +152,9 @@ def register_dot_width(d) -> bool:
 
 
 def _dot_unroll_dims() -> tuple[int, ...]:
-    """Env-pinned widths first, then learned widths (insertion order);
+    """Built-in widths first, then learned widths (insertion order);
     deduplicated."""
-    return tuple(dict.fromkeys((*_DOT_UNROLL_ENV, *_DOT_UNROLL_LEARNED)))
+    return tuple(dict.fromkeys((*_DOT_UNROLL_DIMS, *_DOT_UNROLL_LEARNED)))
 
 
 def _bt(name: str) -> str:
@@ -203,13 +195,11 @@ def dot_attrs(a_name: str, b_name: str) -> Column:
     result is bit-identical to ``dot`` by construction; the guard also
     keeps the unrolled element accesses in bounds under ANSI mode.
     Built as ONE parsed SQL string (no per-element py4j round trips).
-    Unrolled widths = the env list plus any widths learned from the
-    data by operator builds (``register_dot_width``)."""
+    Unrolled widths = ``_DOT_UNROLL_DIMS`` plus any widths learned
+    from the data by operator builds (``register_dot_width``)."""
     a, b = _bt(a_name), _bt(b_name)
     fold = _fold_dot_sql(a, b)
     dims = _dot_unroll_dims()
-    if not dims:
-        return F.expr(fold)
     branches = " ".join(
         f"WHEN size({a}) = {d} AND size({b}) = {d} "
         f"THEN {_unrolled_dot_sql(a, b, d)}"
@@ -1779,9 +1769,9 @@ _GEMM_SLAB_CELLS = 4_000_000
 #: Upper bound on the list-side salt: each salt step replicates the
 #: query side once, so the probe-exploded query shuffle grows linearly
 #: in it. 16× replication of (id, unit-vec) rows is the most the
-#: parallelism win has ever justified locally; env-tunable for odd
-#: deployments (the value only changes SPEED, never results).
-_GEMM_MAX_SALT = int(os.environ.get("WIMBD_KNN_GEMM_MAX_SALT", "16"))
+#: parallelism win has ever justified locally (the value only changes
+#: SPEED, never results).
+_GEMM_MAX_SALT = 16
 
 
 #: Estimated scored-row volume (|queries|·n_probe·avg_list, with the
@@ -1789,10 +1779,8 @@ _GEMM_MAX_SALT = int(os.environ.get("WIMBD_KNN_GEMM_MAX_SALT", "16"))
 #: keeps the classic row stream: the block path's fixed costs (one
 #: clean-probe job, Python worker spin-up, two cogroup exchanges)
 #: measured ~0.5 s locally, which ~16M codegen'd row-dots also cost —
-#: the crossover. Env-tunable; only ever changes SPEED.
-_GEMM_MIN_BLOCK_VOLUME = int(
-    os.environ.get("WIMBD_KNN_GEMM_MIN_BLOCK", str(16_000_000))
-)
+#: the crossover. Only ever changes SPEED.
+_GEMM_MIN_BLOCK_VOLUME = 16_000_000
 
 
 def _dir_bytes(spark, p: str) -> int:

@@ -292,10 +292,8 @@ def streaming_contamination_hits(
         slop_combination_count,
     )
     from wimbd_spark.operators.dedup import (
-        _AC_DECON_MAX_OVERLONG,
         _AC_DECON_MAX_PHRASES,
-        _AC_DECON_MIN_LENGTHS,
-        _AC_DECON_MIN_PHRASES,
+        _ac_decon_route,
         _normalized_tokens_text,
         _text_grams,
     )
@@ -318,19 +316,9 @@ def streaming_contamination_hits(
             .collect()
         }
         n = sum(per_len.values())
-        cap_probe = GRAM_JOIN_MAX_PHRASE_TOKENS
-        n_short_lengths = sum(1 for L in per_len if L <= cap_probe)
-        n_over = sum(c for L, c in per_len.items() if L > cap_probe)
-        bites = (
-            n_short_lengths >= _AC_DECON_MIN_LENGTHS
-            or n_over > _AC_DECON_MAX_OVERLONG
-        )
         if n == 0:
             raise ValueError("eval_grams is empty — nothing to match")
-        if method == "ac" or (
-            _AC_DECON_MIN_PHRASES <= n <= _AC_DECON_MAX_PHRASES
-            and bites
-        ):
+        if method == "ac" or _ac_decon_route(per_len):
             if n > _AC_DECON_MAX_PHRASES:
                 raise ValueError(
                     f"method='ac' got {n} distinct phrases; the "
