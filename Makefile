@@ -1,4 +1,4 @@
-.PHONY: test test-full check check-smoke bench perfbench perfbench-trace perfbench-pairs smoke lint examples
+.PHONY: test test-full check check-smoke bench perfbench perfbench-trace perfbench-pairs perfbench-test smoke lint examples
 
 # default tier: slow-tier tests (tests/conftest.py SLOW_TIER_NODE_IDS)
 # are skipped so the run fits a CI/verify window (~14 min)
@@ -54,6 +54,10 @@ perfbench-pairs:
 	for w in $(PAIRS_WORKLOADS); do \
 		python3 tools/bench_pairs.py --base $(PAIRS_BASE) --workload $$w \
 			--pairs $(PAIRS) --seed $(PAIRS_SEED) || exit 1; done
+
+# the benchmark harness's own tests (perfbench/tests)
+perfbench-test:
+	python3 -m pytest perfbench/tests -q -p no:cacheprovider
 
 smoke:
 	python -c "import __spark_entry__ as e; from wimbd_spark import get_spark; \

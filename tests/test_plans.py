@@ -197,13 +197,24 @@ def test_pack_documents_window_is_partitioned(raw_docs):
     assert specs and all(s.startswith("source") for s in specs)
 
 
-def test_decontaminate_by_ngrams_broadcasts_eval_no_bnlj(spark, raw_docs):
+@pytest.mark.parametrize("op", ["batch", "stream"])
+def test_decontaminate_by_ngrams_broadcasts_eval_no_bnlj(spark, raw_docs, op):
+    # both operators plan through dedup._gram_phrase_hits; the batch
+    # side reads its hit ids off the same inner join the stream emits
     from wimbd_spark.operators.dedup import decontaminate_by_ngrams
+    from wimbd_spark.streaming import (
+        eval_gram_table,
+        streaming_contamination_hits,
+    )
 
     ev = spark.createDataFrame(
         [("alpha beta",), ("gamma delta e",)], ["phrase"]
     )
-    plan = explain_str(decontaminate_by_ngrams(raw_docs, ev))
+    if op == "batch":
+        q = decontaminate_by_ngrams(raw_docs, ev)
+    else:
+        q = streaming_contamination_hits(raw_docs, eval_gram_table(ev))
+    plan = explain_str(q)
     # eval grams must reach the train side as a broadcast hash join —
     # never a nested-loop contains scan, never a sort-merge of the
     # full-width train rows against grams

@@ -1253,6 +1253,142 @@ def test_streaming_contamination_hits_ac_parity(spark, tmp_path):
         )
 
 
+
+def _decon_docs(spark):
+    """Static docs for the batch/stream contamination agreement: NULL
+    text and a duplicated doc_id (the second copy of 6 is the
+    contaminated one) ride along with one hit per eval set below."""
+    from wimbd_spark.index import GRAM_JOIN_MAX_PHRASE_TOKENS
+    from wimbd_spark.session import local_frame
+
+    long_seq = " ".join(
+        f"w{i}" for i in range(GRAM_JOIN_MAX_PHRASE_TOKENS + 3)
+    )
+    rows = [
+        (1, "the quick brown fox jumps"),
+        (2, "alpha x beta gamma"),
+        (3, "one two x three four"),
+        (4, f"pre {long_seq} post"),
+        (5, None),
+        (6, "nothing to see here"),
+        (6, "alpha beta gamma delta"),
+        (7, "t3 t4 t5 t6 end"),
+    ]
+    return local_frame(spark, rows, "doc_id long, text string"), long_seq
+
+
+# (phrases, slop, AC route expected, flagged ids); the "ac" set spans
+# 4 short lengths and 40 phrases so method="auto" picks the automaton
+_DECON_CASES = {
+    "gram": (["quick brown", "alpha beta", "not present"], 0, False, {1, 6}),
+    "ac": (
+        [
+            " ".join(f"t{j}" for j in range(i, i + L))
+            for L in (2, 3, 4, 5)
+            for i in range(10, 20)
+        ]
+        + ["t3 t4"],
+        0,
+        True,
+        {7},
+    ),
+    "overlong": (None, 0, False, {1, 4}),
+    "slop_hatch": (["alpha beta", "one two three four"], 1, False, {2, 3, 6}),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_DECON_CASES))
+def test_contamination_hits_agree_with_batch_flags(spark, monkeypatch, case):
+    """streaming_contamination_hits and decontaminate_by_ngrams share
+    one phrase-hit planner, so on the same static frame the docs the
+    audit stream reports are exactly the ids the batch operator flags
+    — on the gram route, the auto-picked AC route, the overlong
+    contains join and the slop scan hatch."""
+    import wimbd_spark.index as idx
+    from wimbd_spark.operators.dedup import (
+        _phrase_route,
+        decontaminate_by_ngrams,
+    )
+    from wimbd_spark.session import local_frame
+    from wimbd_spark.streaming import (
+        eval_gram_table,
+        streaming_contamination_hits,
+    )
+
+    docs, long_seq = _decon_docs(spark)
+    phrases, slop, want_ac, want = _DECON_CASES[case]
+    if phrases is None:
+        phrases = [long_seq, "quick brown"]
+    if case == "slop_hatch":
+        # slop=1 costs: L=2 → 2, L=4 → 4; budget 3 → L=4 via the scan
+        monkeypatch.setattr(idx, "MAX_SLOP_COMBINATIONS", 3)
+    ev = local_frame(spark, [(p,) for p in phrases], "phrase string")
+    grams = eval_gram_table(ev)
+    _, ac_phrases = _phrase_route(grams, "auto", slop, None)
+    assert (ac_phrases is not None) == want_ac
+
+    flagged = {
+        r["doc_id"]
+        for r in decontaminate_by_ngrams(
+            docs, ev, mode="flag", slop=slop
+        ).collect()
+        if r["contaminated"]
+    }
+    hit_ids = {
+        r["doc_id"]
+        for r in streaming_contamination_hits(docs, grams, slop=slop)
+        .select("doc_id")
+        .distinct()
+        .collect()
+    }
+    assert flagged == hit_ids == want
+
+
+@pytest.mark.parametrize("method", ["auto", "ac"])
+def test_contamination_hits_setup_jobs_match_batch(spark, method):
+    """Building the audit stream runs exactly the driver jobs that
+    building the batch decontaminator runs on the same eval set and
+    method: both plan through one route (one bounded phrase collect
+    for "ac"; one per-length aggregate for a gram-routed "auto" set,
+    whose lengths are not collected a second time)."""
+    import uuid
+
+    from wimbd_spark.operators.dedup import decontaminate_by_ngrams
+    from wimbd_spark.session import local_frame
+    from wimbd_spark.streaming import (
+        eval_gram_table,
+        streaming_contamination_hits,
+    )
+
+    docs, _ = _decon_docs(spark)
+    # one length, under 32 phrases: method="auto" stays on grams
+    ev = local_frame(
+        spark,
+        [("quick brown",), ("alpha beta",), ("lazy dog",)],
+        "phrase string",
+    )
+    sc = spark.sparkContext
+
+    def jobs(build):
+        group = f"decon-setup-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            build()
+        finally:
+            sc._jsc.clearJobGroup()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    batch = jobs(
+        lambda: decontaminate_by_ngrams(docs, ev, method=method)
+    )
+    stream = jobs(
+        lambda: streaming_contamination_hits(
+            docs, eval_gram_table(ev), method=method
+        )
+    )
+    assert batch >= 1
+    assert stream == batch
+
 def test_streaming_ivf_ingest_delta_lifecycle(spark, tmp_path):
     """Vector-side streaming ingest: micro-batches land in the delta
     tier (exactly-once epoch dirs), queries see base ∪ delta at once

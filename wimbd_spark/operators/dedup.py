@@ -831,6 +831,189 @@ def _scan_slop_matches(
     ).select(*keep, F.col("_hit")["phrase"].alias("phrase"))
 
 
+def eval_gram_table(
+    eval_df: DataFrame,
+    phrase_col: str = "phrase",
+    tokenizer=None,
+) -> DataFrame:
+    """Distinct (_L, _toks) token-grams of an eval-phrase set — the
+    blocklist side of every token-phrase hit plan (_phrase_route +
+    _gram_phrase_hits): decontaminate_by_ngrams builds it per call,
+    the streaming contamination gate takes it materialized once per
+    eval snapshot. NULL/blank phrases contribute nothing."""
+    from wimbd_spark.functions.text import tokenize
+
+    tok = tokenizer if tokenizer is not None else tokenize
+    return (
+        eval_df.select(F.col(phrase_col).alias("_p"))
+        .filter(F.col("_p").isNotNull() & (F.trim(F.col("_p")) != ""))
+        .select(tok(F.col("_p")).alias("_toks"))
+        .filter(F.size("_toks") >= 1)
+        .withColumn("_L", F.size("_toks"))
+        .select("_L", "_toks")
+        .distinct()
+    )
+
+
+def _phrase_route(
+    evg: DataFrame, method: str, slop: int, tokenizer
+) -> tuple[list[int], list[str] | None]:
+    """Plan-time half of a token-phrase hit: validate ``method``, run
+    the route's driver collects over the eval grams ``evg``
+    (eval_gram_table) and return (sorted distinct phrase lengths, AC
+    phrase list or None). The phrase list is set exactly when the hit
+    plan is the Aho-Corasick pass; otherwise the lengths drive
+    _gram_phrase_hits. Empty lengths = nothing to match — each caller
+    keeps its own empty-set contract.
+
+    Collects: ``"ac"`` = ONE bounded collect yields the budget check,
+    the lengths and the patterns; ``"auto"`` = one per-length
+    aggregate decides the route (_ac_decon_route) WITHOUT collecting
+    phrases (the set may be gram-route huge), plus the phrase collect
+    only when it picks AC; ``"gram"`` or an AC-ineligible call
+    (slop>0 or a custom tokenizer) = one distinct-length collect."""
+    if method not in ("auto", "ac", "gram"):
+        raise ValueError(
+            f"unknown method {method!r}: expected 'auto', 'ac' or "
+            "'gram'"
+        )
+    ac_eligible = slop == 0 and tokenizer is None
+    if method == "ac" and not ac_eligible:
+        raise ValueError(
+            "method='ac' needs slop=0 and the default tokenizer "
+            "(the automaton matches on canonical whitespace "
+            "tokenization)"
+        )
+    if method == "ac":
+        rows = (
+            evg.select("_toks").limit(_AC_DECON_MAX_PHRASES + 1).collect()
+        )
+        if len(rows) > _AC_DECON_MAX_PHRASES:
+            raise ValueError(
+                f"method='ac' got more than {_AC_DECON_MAX_PHRASES} "
+                f"distinct phrases; the automaton budget is "
+                f"[1, {_AC_DECON_MAX_PHRASES}] — use method='gram' "
+                "beyond it (the gram join never materializes the "
+                "phrase set in one process)"
+            )
+        return (
+            sorted({len(r["_toks"]) for r in rows}),
+            [" ".join(r["_toks"]) for r in rows],
+        )
+    if method == "auto" and ac_eligible:
+        per_len = {
+            r["_L"]: r["_n"]
+            for r in evg.groupBy("_L")
+            .agg(F.count(F.lit(1)).alias("_n"))
+            .collect()
+        }
+        if not _ac_decon_route(per_len):
+            return sorted(per_len), None
+        return sorted(per_len), [
+            " ".join(r["_toks"]) for r in evg.select("_toks").collect()
+        ]
+    return sorted(r["_L"] for r in evg.select("_L").distinct().collect()), None
+
+
+def _gram_phrase_hits(
+    docs: DataFrame,
+    evg: DataFrame,
+    lengths: list[int],
+    text_col: str,
+    tokenizer,
+    slop: int,
+    broadcast_eval: bool = True,
+) -> DataFrame:
+    """(docs columns minus text ..., phrase): the gram-route hit plan
+    for the non-empty eval-gram ``lengths`` from _phrase_route.
+
+    - Lengths up to GRAM_JOIN_MAX_PHRASE_TOKENS: map-side gram explode
+      (_text_grams — no shuffle, no UDF) inner-joined on the distinct
+      eval grams (broadcast unless ``broadcast_eval=False``) — one row
+      per matching gram position; ``slop>0`` uses the anchored-
+      subsequence keys and may emit several rows per window hit.
+    - Longer phrases skip the explode (whose map-side output scales
+      with max L × corpus tokens): token-aligned containment IS
+      substring containment on space-normalized text
+      (_normalized_tokens_text), one broadcast nested-loop predicate
+      per (doc, overlong phrase) — one row per (doc, phrase).
+    - The slop escape hatch (r12 VERDICT #5): with ``slop>0``, lengths
+      whose windowed-subsequence enumeration breaks
+      index.MAX_SLOP_COMBINATIONS (cheapest lengths keep the gram plan,
+      _slop_budget_split), plus any overlong phrase (contains is
+      contiguous-only), route through the search tier's windowed scan
+      predicate (_scan_slop_matches) — one row per (doc, phrase). Only
+      a routed-phrase COUNT above SCAN_SLOP_MAX_PHRASES (an
+      expression-tree bound) raises.
+    """
+    from wimbd_spark.index import (
+        GRAM_JOIN_MAX_PHRASE_TOKENS,
+        MAX_SLOP_COMBINATIONS,
+    )
+
+    cap = GRAM_JOIN_MAX_PHRASE_TOKENS
+    short_lengths = [L for L in lengths if L <= cap]
+    scan_lengths: list[int] = []
+    if slop:
+        short_lengths, scan_lengths = _slop_budget_split(
+            short_lengths, slop, MAX_SLOP_COMBINATIONS
+        )
+        scan_lengths = scan_lengths + [L for L in lengths if L > cap]
+    parts = []
+    if scan_lengths:
+        sphr = [
+            " ".join(r["_toks"])
+            for r in evg.filter(F.col("_L").isin(scan_lengths))
+            .select("_toks")
+            .collect()
+        ]
+        if len(sphr) > SCAN_SLOP_MAX_PHRASES:
+            raise ValueError(
+                f"slop={slop} routes {len(sphr)} phrases (lengths "
+                f"{scan_lengths}) to the scan predicate — over the "
+                f"{SCAN_SLOP_MAX_PHRASES}-phrase expression budget; "
+                "match via the indexed matcher "
+                "(index.phrase_matches_batch) instead"
+            )
+        parts.append(
+            _scan_slop_matches(docs, sphr, text_col, tokenizer, slop)
+        )
+    if short_lengths:
+        evs = evg.filter(F.col("_L") <= cap)
+        if broadcast_eval:
+            evs = F.broadcast(evs)
+        parts.append(
+            _text_grams(docs, short_lengths, text_col, tokenizer, slop=slop)
+            .join(evs, ["_L", "_toks"], "inner")
+            .withColumn("phrase", F.array_join(F.col("_toks"), " "))
+            .drop("_L", "_toks")
+        )
+    if lengths[-1] > cap and not slop:
+        # the padded pattern is built once per phrase on the eval side,
+        # not once per (doc, phrase) pair inside the nested loop
+        evl = evg.filter(F.col("_L") > cap).select(
+            F.array_join(F.col("_toks"), " ").alias("phrase")
+        ).withColumn("_np", F.concat(F.lit(" "), "phrase", F.lit(" ")))
+        keep = [c for c in docs.columns if c != text_col]
+        norm = docs.select(
+            *keep,
+            _normalized_tokens_text(F.col(text_col), tokenizer).alias(
+                "_nt"
+            ),
+        )
+        parts.append(
+            norm.join(
+                F.broadcast(evl),
+                on=F.col("_nt").contains(F.col("_np")),
+                how="inner",
+            ).drop("_nt", "_np")
+        )
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionByName(p)
+    return out
+
+
 def decontaminate_by_ngrams(
     train: DataFrame,
     eval_df: DataFrame,
@@ -855,8 +1038,12 @@ def decontaminate_by_ngrams(
     this operator closes the loop: the docs the sweep would count are
     the docs this removes.
 
-    ``method``: ``"gram"`` = the gram-explode semi-join below;
-    ``"ac"`` = one Aho-Corasick pass
+    Planning is shared with streaming_contamination_hits:
+    _phrase_route validates ``method`` and picks the route,
+    _gram_phrase_hits builds the gram-route hit plan (short-gram
+    join, overlong ``contains``, slop scan hatch — see there).
+    ``method``: ``"gram"`` = the gram hit plan; ``"ac"`` = one
+    Aho-Corasick pass
     (operators.multipattern.matching_doc_ids_ac — per-doc cost
     independent of the phrase count AND the length mix, phrases
     collected to the driver and compiled into a per-task automaton;
@@ -880,219 +1067,39 @@ def decontaminate_by_ngrams(
     (broadcast by default — eval sets are small; pass
     ``broadcast_eval=False`` for corpus-scale phrase sets and AQE
     sizes the join); train docs → map-side gram explode carrying ONLY
-    ``id_col`` (one pass, no shuffle of full rows); semi-join + distinct
+    ``id_col`` (one pass, no shuffle of full rows); join + distinct
     gives contaminated ids; one id-probe anti/left join restores full
     rows. The train side is scanned twice but never shuffled at full
     width; the gram explode is the same cost class as an n-gram count.
-
-    Phrases longer than GRAM_JOIN_MAX_PHRASE_TOKENS skip the gram
-    explode (whose map-side output scales with max L × corpus tokens)
-    and match via normalized-text `contains` instead — token-aligned
-    containment IS substring containment on space-normalized text
-    (_normalized_tokens_text), one broadcast nested-loop predicate per
-    (doc, overlong phrase), fully distributed at any phrase length.
-
-    ``slop>0`` with a length mix whose windowed-subsequence
-    enumeration breaks index.MAX_SLOP_COMBINATIONS no longer raises:
-    the cheapest lengths keep the gram plan within the budget and the
-    rest (plus any overlong phrase, whose contains match is
-    contiguous-only) route through the search tier's windowed scan
-    predicate (_scan_slop_matches) — scan cost instead of explode
-    cost, same hit set. Only a routed-phrase COUNT above
-    SCAN_SLOP_MAX_PHRASES (an expression-tree bound) still raises,
-    pointing at the indexed matcher.
+    Phrases longer than GRAM_JOIN_MAX_PHRASE_TOKENS match via
+    normalized-text `contains`, and ``slop>0`` lengths past
+    index.MAX_SLOP_COMBINATIONS via the windowed scan predicate, so
+    any phrase length and slop plans without raising (only a
+    scan-routed phrase COUNT above SCAN_SLOP_MAX_PHRASES does).
     """
-    from wimbd_spark.functions.text import tokenize
-    from wimbd_spark.index import (
-        GRAM_JOIN_MAX_PHRASE_TOKENS,
-        MAX_SLOP_COMBINATIONS,
-        slop_combination_count,
-    )
-
     if mode not in ("drop", "flag"):
         raise ValueError(f"mode must be 'drop' or 'flag', got {mode!r}")
-    if method not in ("auto", "ac", "gram"):
-        raise ValueError(
-            f"unknown method {method!r}: expected 'auto', 'ac' or "
-            "'gram'"
-        )
-    ac_eligible = slop == 0 and tokenizer is None
-    if method == "ac" and not ac_eligible:
-        raise ValueError(
-            "method='ac' needs slop=0 and the default tokenizer "
-            "(the automaton matches on canonical whitespace "
-            "tokenization)"
-        )
-    tok = tokenizer if tokenizer is not None else tokenize
-    evg = (
-        eval_df.select(F.col(phrase_col).alias("_p"))
-        .filter(F.col("_p").isNotNull() & (F.trim(F.col("_p")) != ""))
-        .select(tok(F.col("_p")).alias("_toks"))
-        .filter(F.size("_toks") >= 1)
-        .withColumn("_L", F.size("_toks"))
-        .select("_L", "_toks")
-        .distinct()
-    )
-    if method == "ac" or (method == "auto" and ac_eligible):
-        ac_phrases: list[str] | None = None
-        if method == "ac":
-            # the automaton is pinned: ONE bounded collect yields both
-            # the routing count and the pattern list (the previous
-            # per-length probe + pattern collect ran the whole eval
-            # distinct pipeline TWICE — measured ~2.4 s per call, r15)
-            rows = (
-                evg.select("_toks")
-                .limit(_AC_DECON_MAX_PHRASES + 1)
-                .collect()
-            )
-            n = len(rows)
-            if n > _AC_DECON_MAX_PHRASES:
-                raise ValueError(
-                    f"method='ac' got more than "
-                    f"{_AC_DECON_MAX_PHRASES} distinct phrases; the "
-                    f"automaton budget is [1, {_AC_DECON_MAX_PHRASES}]"
-                    " — use method='gram' beyond it (the gram join "
-                    "never materializes the phrase set in one process)"
-                )
-            ac_phrases = [" ".join(r["_toks"]) for r in rows]
-            use_ac = True
-        else:
-            # auto: one small aggregate decides the route WITHOUT
-            # collecting phrases (the set may be gram-route huge)
-            per_len = {
-                r["_L"]: r["_n"]
-                for r in evg.groupBy("_L")
-                .agg(F.count(F.lit(1)).alias("_n"))
-                .collect()
-            }
-            n = sum(per_len.values())
-            use_ac = _ac_decon_route(per_len)
-        if n == 0:
-            # nothing to match (empty/blank eval set) — same contract
-            # as the gram path's empty-lengths return below
-            if mode == "drop":
-                return train
-            return train.withColumn(flag_col, F.lit(False))
-        if use_ac:
-            from wimbd_spark.operators.multipattern import (
-                matching_doc_ids_ac,
-            )
-
-            hits = matching_doc_ids_ac(
-                train.select(id_col, text_col),
-                ac_phrases
-                if ac_phrases is not None
-                else [
-                    " ".join(r["_toks"])
-                    for r in evg.select("_toks").collect()
-                ],
-                id_col=id_col,
-                text_col=text_col,
-            ).distinct()
-            # distinct matches the gram path's hits.distinct(): with
-            # duplicate ids in train, a bare left join in flag mode
-            # would fan out rows and break the documented row-identical
-            # parity between method='ac' and method='gram' (r11 ADVICE)
-            if mode == "drop":
-                return train.join(hits, id_col, "left_anti")
-            return (
-                train.join(
-                    hits.withColumn("_hit", F.lit(True)),
-                    id_col,
-                    "left",
-                )
-                .withColumn(
-                    flag_col, F.coalesce(F.col("_hit"), F.lit(False))
-                )
-                .drop("_hit")
-            )
-        lengths = sorted(per_len)
-    else:
-        lengths = sorted(
-            r["_L"] for r in evg.select("_L").distinct().collect()
-        )
+    evg = eval_gram_table(eval_df, phrase_col, tokenizer)
+    lengths, ac_phrases = _phrase_route(evg, method, slop, tokenizer)
     if not lengths:
+        # nothing to match (empty/blank eval set)
         if mode == "drop":
             return train
         return train.withColumn(flag_col, F.lit(False))
-    cap = GRAM_JOIN_MAX_PHRASE_TOKENS
-    short_lengths = [L for L in lengths if L <= cap]
-    scan_lengths: list[int] = []
-    if slop:
-        # the slop escape hatch (r12 VERDICT #5): lengths whose
-        # windowed-subsequence enumeration breaks the map-side budget
-        # route to the scan predicate instead of raising wholesale;
-        # budgeted lengths keep the explode plan unchanged. Overlong
-        # phrases (contains is contiguous-only, incompatible with
-        # slop) take the same scan route — the predicate works at any
-        # length.
-        short_lengths, scan_lengths = _slop_budget_split(
-            short_lengths, slop, MAX_SLOP_COMBINATIONS
+    docs = train.select(id_col, text_col)
+    if ac_phrases is not None:
+        from wimbd_spark.operators.multipattern import matching_doc_ids_ac
+
+        hits = matching_doc_ids_ac(
+            docs, ac_phrases, id_col=id_col, text_col=text_col
         )
-        scan_lengths = scan_lengths + [L for L in lengths if L > cap]
-    hit_parts = []
-    if scan_lengths:
-        sphr = [
-            " ".join(r["_toks"])
-            for r in evg.filter(F.col("_L").isin(scan_lengths))
-            .select("_toks")
-            .collect()
-        ]
-        if len(sphr) > SCAN_SLOP_MAX_PHRASES:
-            raise ValueError(
-                f"slop={slop} routes {len(sphr)} phrases (lengths "
-                f"{scan_lengths}) to the scan predicate — over the "
-                f"{SCAN_SLOP_MAX_PHRASES}-phrase expression budget; "
-                "decontaminate via the indexed matcher "
-                "(index.phrase_matches_batch) and anti-join the hit "
-                "ids"
-            )
-        hit_parts.append(
-            _scan_slop_matches(
-                train.select(id_col, text_col),
-                sphr,
-                text_col,
-                tokenizer,
-                slop,
-            ).select(id_col)
-        )
-    if short_lengths:
-        evs = evg.filter(F.col("_L") <= cap)
-        if broadcast_eval:
-            evs = F.broadcast(evs)
-        hit_parts.append(
-            _text_grams(
-                train.select(id_col, text_col),
-                short_lengths,
-                text_col,
-                tokenizer,
-                slop=slop,
-            )
-            .join(evs, ["_L", "_toks"], "left_semi")
-            .select(id_col)
-        )
-    if lengths[-1] > cap and not slop:
-        evl = evg.filter(F.col("_L") > cap).select(
-            F.concat(
-                F.lit(" "), F.array_join(F.col("_toks"), " "), F.lit(" ")
-            ).alias("_np")
-        )
-        norm = train.select(
-            F.col(id_col),
-            _normalized_tokens_text(F.col(text_col), tokenizer).alias(
-                "_nt"
-            ),
-        )
-        hit_parts.append(
-            norm.join(
-                F.broadcast(evl),
-                on=F.col("_nt").contains(F.col("_np")),
-                how="inner",
-            ).select(id_col)
-        )
-    hits = hit_parts[0]
-    for part in hit_parts[1:]:
-        hits = hits.unionByName(part)
+    else:
+        hits = _gram_phrase_hits(
+            docs, evg, lengths, text_col, tokenizer, slop, broadcast_eval
+        ).select(id_col)
+    # distinct: with duplicate ids in train, a bare left join in flag
+    # mode would fan out rows (and break the row-identical parity
+    # between the AC and gram routes, r11 ADVICE)
     hits = hits.distinct()
     if mode == "drop":
         return train.join(hits, id_col, "left_anti")

@@ -303,9 +303,10 @@ def phrase_hits_ac(
 ) -> DataFrame:
     """Per-OCCURRENCE phrase hits: one output row per (doc, phrase
     occurrence) carrying the doc's columns (minus ``text_col``) plus
-    ``phrase`` — the automaton form of the contamination-audit
-    explode-join (streaming.streaming_contamination_hits routes here),
-    row-multiset-identical to it: ``_matched_counts`` counts every
+    ``phrase`` — the automaton form of the gram hit plan
+    (operators.dedup._gram_phrase_hits; the shared route,
+    dedup._phrase_route, sends streaming.streaming_contamination_hits
+    here), row-multiset-identical to it: ``_matched_counts`` counts every
     end-state visit, which is exactly the number of gram positions the
     explode emits, overlapping occurrences included. Phrases LONGER
     than GRAM_JOIN_MAX_PHRASE_TOKENS are capped at ONE row per doc —

@@ -16,6 +16,10 @@ State/scale notes:
 - decontamination is a stream-static broadcast anti-join: the eval-set
   hash list broadcasts once per micro-batch plan, the stream never
   shuffles.
+- n-gram contamination hits are planned by operators.dedup, the one
+  token-phrase planner (_phrase_route + _gram_phrase_hits) that
+  decontaminate_by_ngrams also uses; its eval side, eval_gram_table,
+  is re-exported from wimbd_spark.streaming.
 """
 
 from __future__ import annotations
@@ -223,29 +227,6 @@ def streaming_neardup_filter(
     return cur.filter(no_hit).select(*docs.columns)
 
 
-def eval_gram_table(
-    eval_df: DataFrame,
-    phrase_col: str = "phrase",
-    tokenizer=None,
-) -> DataFrame:
-    """Distinct (_L, _toks) token-grams of a STATIC eval-phrase set —
-    the blocklist side of the streaming contamination gate (same
-    construction as the batch decontaminate_by_ngrams, so batch and
-    stream agree row-for-row). Materialize once per eval snapshot."""
-    from wimbd_spark.functions.text import tokenize
-
-    tok = tokenizer if tokenizer is not None else tokenize
-    return (
-        eval_df.select(F.col(phrase_col).alias("_p"))
-        .filter(F.col("_p").isNotNull() & (F.trim(F.col("_p")) != ""))
-        .select(tok(F.col("_p")).alias("_toks"))
-        .filter(F.size("_toks") >= 1)
-        .withColumn("_L", F.size("_toks"))
-        .select("_L", "_toks")
-        .distinct()
-    )
-
-
 def streaming_contamination_hits(
     docs: DataFrame,
     eval_grams: DataFrame,
@@ -262,167 +243,33 @@ def streaming_contamination_hits(
     a state store — use streaming_decontaminate_by_ngrams for exact
     enforcement via foreachBatch).
 
-    Plan: the eval set's distinct phrase LENGTHS are read once at
-    STREAM SETUP (a handful of ints — the static side's only
-    driver-visible state); each micro-batch then gram-explodes its
-    docs map-side (_text_grams — no shuffle, no UDF; ``slop>0`` uses
-    the anchored-subsequence keys, r8, multiplying the explode by the
-    combo count and possibly emitting several rows per (doc, phrase)
-    window hit, like multiple contiguous occurrences already do) and
-    inner-joins the broadcast static gram table. No watermark, no
-    state store: composes anywhere in a stateless gate chain.
-
-    ``method`` mirrors dedup.decontaminate_by_ngrams: ``"ac"`` = one
-    Aho-Corasick occurrence-counting pass per micro-batch
-    (multipattern.phrase_hits_ac — stateless mapInPandas, per-doc cost
-    flat in the phrase count AND the length mix; slop=0 and the
-    default tokenizer only), row-MULTISET-identical to the gram join
-    (one row per occurrence for phrases within
-    GRAM_JOIN_MAX_PHRASE_TOKENS, overlaps included; ONE row per doc
-    for overlong phrases — matching the gram path's contains
-    existence join, so the audit multiset is route-independent, r11
-    ADVICE); ``"auto"`` routes by
-    the same measured multipliers (≥ distinct-length / overlong
-    thresholds, phrase-count budget); ``"gram"`` pins the explode
-    join.
+    ``eval_grams`` is the static eval side (eval_gram_table). Route
+    and plan are decontaminate_by_ngrams' own (operators.dedup
+    _phrase_route + _gram_phrase_hits, same ``method``/``slop``/
+    ``tokenizer`` contract): the route's driver collects run once at
+    STREAM SETUP; each micro-batch then runs either the Aho-Corasick
+    occurrence-counting pass (multipattern.phrase_hits_ac) or the
+    gram plan — map-side explode inner-joined on the broadcast grams,
+    overlong ``contains``, slop scan hatch. No watermark, no state
+    store: composes anywhere in a stateless gate chain. Both routes
+    give the same row MULTISET: one row per occurrence of a phrase
+    within GRAM_JOIN_MAX_PHRASE_TOKENS (overlaps included; ``slop>0``
+    keys may emit several rows per window hit), ONE row per (doc,
+    phrase) for overlong and scan-routed phrases. Raises on an empty
+    eval set.
     """
-    from wimbd_spark.index import (
-        GRAM_JOIN_MAX_PHRASE_TOKENS,
-        MAX_SLOP_COMBINATIONS,
-        slop_combination_count,
-    )
-    from wimbd_spark.operators.dedup import (
-        _AC_DECON_MAX_PHRASES,
-        _ac_decon_route,
-        _normalized_tokens_text,
-        _text_grams,
-    )
+    from wimbd_spark.operators.dedup import _gram_phrase_hits, _phrase_route
 
-    if method not in ("auto", "ac", "gram"):
-        raise ValueError(
-            f"unknown method {method!r}: expected 'auto', 'ac' or "
-            "'gram'"
-        )
-    ac_eligible = slop == 0 and tokenizer is None
-    if method == "ac" and not ac_eligible:
-        raise ValueError(
-            "method='ac' needs slop=0 and the default tokenizer"
-        )
-    if method in ("ac", "auto") and ac_eligible:
-        per_len = {
-            r["_L"]: r["_n"]
-            for r in eval_grams.groupBy("_L")
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .collect()
-        }
-        n = sum(per_len.values())
-        if n == 0:
-            raise ValueError("eval_grams is empty — nothing to match")
-        if method == "ac" or _ac_decon_route(per_len):
-            if n > _AC_DECON_MAX_PHRASES:
-                raise ValueError(
-                    f"method='ac' got {n} distinct phrases; the "
-                    f"automaton budget is [1, {_AC_DECON_MAX_PHRASES}]"
-                    " — use method='gram' beyond it"
-                )
-            from wimbd_spark.operators.multipattern import (
-                phrase_hits_ac,
-            )
-
-            return phrase_hits_ac(
-                docs,
-                [
-                    " ".join(r["_toks"])
-                    for r in eval_grams.select("_toks").collect()
-                ],
-                text_col=text_col,
-            )
-
-    lengths = sorted(
-        r["_L"] for r in eval_grams.select("_L").distinct().collect()
-    )
+    lengths, ac_phrases = _phrase_route(eval_grams, method, slop, tokenizer)
     if not lengths:
         raise ValueError("eval_grams is empty — nothing to match")
-    cap = GRAM_JOIN_MAX_PHRASE_TOKENS
-    short_lengths = [L for L in lengths if L <= cap]
-    scan_lengths: list[int] = []
-    if slop:
-        # the slop escape hatch (r12 VERDICT #5), mirroring the batch
-        # operator: lengths past the map-side combination budget (and
-        # overlong phrases, whose contains match is contiguous-only)
-        # route through the scan predicate instead of raising; the
-        # routed phrases are collected ONCE at stream setup like the
-        # lengths themselves (static side). Scan-routed phrases emit
-        # ONE audit row per (doc, phrase) — the same existence
-        # convention the overlong-contains path below already uses.
-        from wimbd_spark.operators.dedup import (
-            SCAN_SLOP_MAX_PHRASES,
-            _scan_slop_matches,
-            _slop_budget_split,
-        )
+    if ac_phrases is not None:
+        from wimbd_spark.operators.multipattern import phrase_hits_ac
 
-        short_lengths, scan_lengths = _slop_budget_split(
-            short_lengths, slop, MAX_SLOP_COMBINATIONS
-        )
-        scan_lengths = scan_lengths + [L for L in lengths if L > cap]
-    parts = []
-    if scan_lengths:
-        sphr = [
-            " ".join(r["_toks"])
-            for r in eval_grams.filter(F.col("_L").isin(scan_lengths))
-            .select("_toks")
-            .collect()
-        ]
-        if len(sphr) > SCAN_SLOP_MAX_PHRASES:
-            raise ValueError(
-                f"slop={slop} routes {len(sphr)} phrases (lengths "
-                f"{scan_lengths}) to the scan predicate — over the "
-                f"{SCAN_SLOP_MAX_PHRASES}-phrase expression budget"
-            )
-        parts.append(
-            _scan_slop_matches(docs, sphr, text_col, tokenizer, slop)
-        )
-    if short_lengths:
-        grams = _text_grams(
-            docs, short_lengths, text_col, tokenizer, slop=slop
-        )
-        parts.append(
-            grams.join(
-                F.broadcast(eval_grams.filter(F.col("_L") <= cap)),
-                ["_L", "_toks"],
-                "inner",
-            )
-            .withColumn("phrase", F.array_join(F.col("_toks"), " "))
-            .drop("_L", "_toks")
-        )
-    if lengths[-1] > cap and not slop:
-        # overlong phrases skip the gram explode (map-side output
-        # scales with max L): token-aligned containment == substring
-        # containment on space-normalized text, one broadcast
-        # nested-loop predicate per (doc, overlong phrase)
-        evl = eval_grams.filter(F.col("_L") > cap).select(
-            F.array_join(F.col("_toks"), " ").alias("phrase")
-        )
-        keep = [c for c in docs.columns if c != text_col]
-        norm = docs.select(
-            *keep,
-            _normalized_tokens_text(F.col(text_col), tokenizer).alias(
-                "_nt"
-            ),
-        )
-        parts.append(
-            norm.join(
-                F.broadcast(evl),
-                on=F.col("_nt").contains(
-                    F.concat(F.lit(" "), F.col("phrase"), F.lit(" "))
-                ),
-                how="inner",
-            ).drop("_nt")
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+        return phrase_hits_ac(docs, ac_phrases, text_col=text_col)
+    return _gram_phrase_hits(
+        docs, eval_grams, lengths, text_col, tokenizer, slop
+    )
 
 
 def streaming_decontaminate_by_ngrams(
