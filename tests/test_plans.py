@@ -6,6 +6,8 @@ shuffles. A regression here is a 100× cost at scale even when results
 stay correct.
 """
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -658,6 +660,58 @@ def test_knn_join_is_fully_distributed(spark, tmp_path):
     assert "LocalTableScan" not in plan3 and "ExistingRDD" not in plan3
     with pytest.raises(ValueError, match="local_prune"):
         knn_join(spark, path, emb, k=2, local_prune="yes")
+
+
+@pytest.fixture(scope="module")
+def emb_ivf_pq_index(spark, tmp_path_factory):
+    from wimbd_spark.operators.similarity import build_ivf_index
+
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    path = str(tmp_path_factory.mktemp("rankplan") / "idx")
+    build_ivf_index(emb, path, n_centroids=8, pq_m=8, pq_codes=16)
+    return emb, path
+
+
+@pytest.mark.parametrize(
+    "route",
+    [
+        "cosine_topk_ivf",
+        "cosine_topk_lsh",
+        "cosine_topk_ivf_indexed",
+        "cosine_topk_ivf_pq_indexed",
+        "cosine_topk",
+        "knn_join",
+    ],
+)
+def test_topk_rank_single_query_exchange(spark, emb_ivf_pq_index, route):
+    """The rank tail (dense_rank → cut → dedupe) shuffles candidates
+    once, on query_id: the dedupe after the cut reuses that
+    partitioning. A dedupe before the window adds a second full
+    shuffle keyed (query_id, neighbor_id). cosine_topk and knn_join
+    keep their one exchange. Read from the executed (AQE final) plan."""
+    from wimbd_spark.operators import similarity as sim
+
+    emb, path = emb_ivf_pq_index
+    q = emb.filter(F.col("vec_id") < 3)
+    df = {
+        "cosine_topk_ivf": lambda: sim.cosine_topk_ivf(
+            emb, q, k=2, n_centroids=8, n_probe=2
+        ),
+        "cosine_topk_lsh": lambda: sim.cosine_topk_lsh(emb, q, k=2),
+        "cosine_topk_ivf_indexed": lambda: sim.cosine_topk_ivf_indexed(
+            spark, path, q, k=2, n_probe=2
+        ),
+        "cosine_topk_ivf_pq_indexed": lambda: (
+            sim.cosine_topk_ivf_pq_indexed(spark, path, q, k=2, n_probe=2)
+        ),
+        "cosine_topk": lambda: sim.cosine_topk(emb, q, k=2),
+        "knn_join": lambda: sim.knn_join(spark, path, emb, k=2, n_probe=2),
+    }[route]()
+    df.collect()
+    final = _physical(df).split("== Initial Plan ==")[0]
+    keys = re.findall(r"Exchange hashpartitioning\(([^)]*)\)", final)
+    assert len(keys) == 1, keys
+    assert re.fullmatch(r"query_id#\d+L?, \d+", keys[0]), keys
 
 
 def test_pq_rerank_join_no_candidate_collect(spark, tmp_path):

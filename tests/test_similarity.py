@@ -1491,3 +1491,177 @@ def test_lit_doubles_bit_identical(spark):
     assert [pack(x) for x in row["a"]] == [pack(x) for x in row["b"]]
     assert [pack(x) for x in row["m"][0]] == [pack(x) for x in row["a"]]
     assert row["m"][1] == row["a"][:3]
+
+
+# --------------------------------------------------- the one rank tail
+
+_TOPK_ROUTES = (
+    "cosine_topk",
+    "cosine_topk_ivf",
+    "cosine_topk_lsh",
+    "cosine_topk_ivf_indexed",
+    "cosine_topk_ivf_pq_indexed",
+    "cosine_topk_ivf_pq_rerank",
+    "cosine_topk_pq",
+    "knn_join",
+    "knn_join_pq",
+)
+
+
+def test_one_rank_window_in_similarity():
+    """Every vector top-k entry point ranks through ``_rank_topk``, so
+    similarity.py holds exactly one query_id window."""
+    import ast
+    import inspect
+    import re
+
+    from wimbd_spark.operators import similarity
+
+    src = inspect.getsource(similarity)
+    sites = re.findall(r"Window\.partitionBy\(\s*[\"']query_id[\"']", src)
+    assert len(sites) == 1
+    tree = ast.parse(src)
+    calls = {
+        fn.name: {
+            c.func.id
+            for c in ast.walk(fn)
+            if isinstance(c, ast.Call) and isinstance(c.func, ast.Name)
+        }
+        for fn in tree.body
+        if isinstance(fn, ast.FunctionDef)
+    }
+    for name in _TOPK_ROUTES:
+        assert "_rank_topk" in calls[name], name
+
+
+@pytest.fixture(scope="module")
+def tie_index(spark, tmp_path_factory):
+    """Eight 4-dim vectors; ids 5 and 3 hold the SAME vector (listed
+    5 first), the nearest direction to query 0. Two lists, so two
+    probes read everything."""
+    from wimbd_spark.operators.similarity import build_ivf_index
+
+    near = [2.0, 0.4, 0.2, 0.1]
+    rows = [
+        (0, [1.0, 0.2, 0.1, 0.05]),
+        (5, near),
+        (3, near),
+        (1, [0.9, 0.5, 0.1, 0.2]),
+        (2, [0.1, 1.0, 0.3, 0.2]),
+        (4, [0.2, 0.1, 1.0, 0.4]),
+        (6, [0.1, 0.3, 0.2, 1.0]),
+        (7, [0.6, 0.6, 0.3, 0.1]),
+    ]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    path = str(tmp_path_factory.mktemp("tie") / "idx")
+    build_ivf_index(emb, path, n_centroids=2, pq_m=2, pq_codes=4)
+    return emb, path
+
+
+@pytest.mark.parametrize(
+    "route", [*_TOPK_ROUTES, "rerank_join", "knn_join_prune"]
+)
+def test_topk_tie_rule_on_every_route(spark, tie_index, route):
+    """Equal scores rank by neighbor_id ASC, with ranks 1..k and no
+    repeated neighbor, on every route (the tie rule lives in
+    ``_rank_topk`` only)."""
+    from wimbd_spark.operators import similarity as sim
+
+    emb, path = tie_index
+    q = emb.filter(F.col("vec_id") == 0)
+    k = 4
+    run = {
+        "cosine_topk": lambda: sim.cosine_topk(emb, q, k=k),
+        "cosine_topk_ivf": lambda: sim.cosine_topk_ivf(
+            emb, q, k=k, n_centroids=2, n_probe=2
+        ),
+        "cosine_topk_lsh": lambda: sim.cosine_topk_lsh(
+            emb, q, k=k, nbits=1, dim=4
+        ),
+        "cosine_topk_ivf_indexed": lambda: sim.cosine_topk_ivf_indexed(
+            spark, path, q, k=k, n_probe=2
+        ),
+        "cosine_topk_ivf_pq_indexed": lambda: (
+            sim.cosine_topk_ivf_pq_indexed(spark, path, q, k=k, n_probe=2)
+        ),
+        "cosine_topk_ivf_pq_rerank": lambda: sim.cosine_topk_ivf_pq_rerank(
+            spark, path, q, k=k, n_probe=2
+        ),
+        "rerank_join": lambda: sim.cosine_topk_ivf_pq_rerank(
+            spark, path, q, k=k, n_probe=2, rerank="join"
+        ),
+        "cosine_topk_pq": lambda: sim.cosine_topk_pq(
+            emb, q, k=k, m=2, n_codes=4
+        ),
+        "knn_join": lambda: sim.knn_join(spark, path, q, k=k, n_probe=2),
+        "knn_join_prune": lambda: sim.knn_join(
+            spark, path, q, k=k, n_probe=2, local_prune=True
+        ),
+        "knn_join_pq": lambda: sim.knn_join_pq(
+            spark, path, q, k=k, n_probe=2
+        ),
+    }[route]
+    rows = sorted(run().collect(), key=lambda r: r["rank"])
+    assert [r["query_id"] for r in rows] == [0] * k
+    assert [r["rank"] for r in rows] == list(range(1, k + 1))
+    ids = [r["neighbor_id"] for r in rows]
+    # equal vectors score equal on every route (PQ may rank another id
+    # above the pair): the pair sits side by side, smaller id first
+    assert 3 in ids and ids.index(5) == ids.index(3) + 1
+    assert len(set(ids)) == k
+
+
+@pytest.fixture(scope="module")
+def delta_dup_index(spark, tmp_path_factory):
+    """(corpus, index whose id-1 lists row is copied verbatim into the
+    unabsorbed delta tier, clean index) — the layout
+    streaming_ivf_ingest leaves when a vector is ingested twice."""
+    base = tmp_path_factory.mktemp("deltadup")
+    emb, dup = _knn_fixture(spark, base, name="dup", pq=True)
+    spark.read.parquet(f"{dup}/lists").filter(F.col("id") == 1).write.parquet(
+        f"{dup}/delta/run=testdup/batch=0"
+    )
+    _, clean = _knn_fixture(spark, base, name="clean", pq=True)
+    return emb, dup, clean
+
+
+@pytest.mark.parametrize(
+    "route",
+    [
+        "rerank_collect",
+        "rerank_join",
+        "cosine_topk_ivf_indexed",
+        "cosine_topk_ivf_pq_indexed",
+        "knn_join_pq",
+    ],
+)
+def test_indexed_topk_delta_duplicate_counts_once(
+    spark, delta_dup_index, route
+):
+    """A vector in both the base lists and the delta is scored twice;
+    every indexed top-k route returns the rows of a clean index (the
+    copy neither takes a second rank nor shifts later ranks)."""
+    from wimbd_spark.operators import similarity as sim
+
+    emb, dup, clean = delta_dup_index
+    q = emb.filter(F.col("vec_id") < 5)
+    run = {
+        "rerank_collect": lambda p: sim.cosine_topk_ivf_pq_rerank(
+            spark, p, q, k=3, n_probe=2
+        ),
+        "rerank_join": lambda p: sim.cosine_topk_ivf_pq_rerank(
+            spark, p, q, k=3, n_probe=2, rerank="join"
+        ),
+        "cosine_topk_ivf_indexed": lambda p: sim.cosine_topk_ivf_indexed(
+            spark, p, q, k=3, n_probe=2
+        ),
+        "cosine_topk_ivf_pq_indexed": lambda p: (
+            sim.cosine_topk_ivf_pq_indexed(spark, p, q, k=3, n_probe=2)
+        ),
+        "knn_join_pq": lambda p: sim.knn_join_pq(
+            spark, p, q, k=3, n_probe=2
+        ),
+    }[route]
+    got = sorted(map(tuple, run(dup).collect()))
+    assert got == sorted(map(tuple, run(clean).collect()))
+    assert len(got) == 5 * 3

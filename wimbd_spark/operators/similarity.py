@@ -13,6 +13,10 @@ Two paths:
   narrow (id, bucket, vec) table that can be written bucketed/sorted,
   so a query probes O(corpus/2^bits) rows.
 
+Every top-k entry point is a candidate generator (crossJoin, centroid
+probe, sign-sketch bucket, indexed lists, PQ ADC) feeding one shared
+rank tail, ``_rank_topk``: self filter, tie rule and cut live there.
+
 All dot products run in DOUBLE — no UDF, no shuffle for scoring (the
 only shuffle is the top-k rank). The generic form is zip_with +
 aggregate; NOTE ArrayAggregate/ZipWith are CodegenFallback (evaluated
@@ -241,6 +245,111 @@ def _unit(vec: Column) -> Column:
     )
 
 
+def _unit_vecs(
+    df: DataFrame, id_col: str, vec_col: str, id_as: str = "query_id",
+    vec_as: str = "_qv",
+) -> DataFrame:
+    """(``id_col`` AS ``id_as``, unit vector AS ``vec_as``): the one
+    normalization every scorer runs before its dot products."""
+    return df.select(
+        F.col(id_col).alias(id_as),
+        _unit(_to_double(F.col(vec_col))).alias(vec_as),
+    )
+
+
+def _empty_topk(
+    queries: DataFrame, qid: str, corpus: DataFrame | None = None,
+    cid: str | None = None, keep: str = "",
+) -> DataFrame:
+    """The typed empty result of a top-k operator (empty corpus or
+    index): (query_id, neighbor_id, *keep, rank long), ids typed like
+    ``queries[qid]`` and ``corpus[cid]`` (the query type when no
+    corpus is given); ``keep`` is the DDL of the kept columns."""
+    qt = queries.schema[qid].dataType.simpleString()
+    nt = qt if corpus is None else corpus.schema[cid].dataType.simpleString()
+    return local_frame(
+        queries.sparkSession,
+        [],
+        f"query_id {qt}, neighbor_id {nt}, "
+        + (f"{keep}, " if keep else "") + "rank long",
+    )
+
+
+def _rank_topk(
+    scored: DataFrame,
+    k: int,
+    exclude_self: bool,
+    score: str = "cosine",
+    keep=(),
+    prune: bool = False,
+) -> DataFrame:
+    """The one rank tail of every vector top-k operator: candidate
+    rows (query_id, neighbor_id, ``score``, *keep) → (query_id,
+    neighbor_id, *keep, rank long), the ``k`` best neighbors per query
+    by (``score`` DESC, neighbor_id ASC) with ranks 1..k contiguous.
+    The entry points only generate candidates (crossJoin, centroid
+    probe, sign-sketch bucket, indexed lists, PQ ADC); the self filter,
+    the tie rule and the cut live here.
+
+    The rank is ``dense_rank`` → ``rank <= k`` → ``dropDuplicates(
+    query_id, neighbor_id)``. A pair scored twice — a vector sitting in
+    both the base lists and the unabsorbed delta, or a repeated query
+    row — carries bitwise-equal scores (same unit vectors, same
+    expression), so every copy gets the rank the deduplicated pair
+    would get and one copy survives the dedupe. The dedupe runs on the
+    ≤ |queries|·k survivors and its clustering is already satisfied by
+    the window's hashpartitioning(query_id): one exchange in all
+    (plan-pinned), where a dedupe before the window shuffles every
+    candidate pair a second time.
+
+    Precondition: ``neighbor_id`` names one vector — apart from the
+    same vector in base and delta. A corpus that repeats an id with a
+    DIFFERENT vector gives undefined rows.
+
+    ``prune=True`` (the bulk tier) puts an exact Arrow pre-prune
+    between the self filter and the window: each batch keeps its own
+    top ``k`` per query under the same tie rule (stable mergesort), so
+    the rank shuffle carries ≤ batch-local |queries|·k rows. A global
+    top-k row is top-k in every subset it appears in; each batch drops
+    its duplicate pairs first, so a copy never takes a second slot.
+    collect_list-style aggregation cannot express this (partial
+    aggregation concatenates, it never truncates)."""
+    if exclude_self:
+        scored = scored.filter(F.col("query_id") != F.col("neighbor_id"))
+    if prune:
+
+        def _batch_topk(batches):
+            for pdf in batches:
+                if len(pdf) == 0:
+                    continue
+                yield (
+                    pdf.drop_duplicates(["query_id", "neighbor_id"])
+                    .sort_values(
+                        [score, "neighbor_id"],
+                        ascending=[False, True],
+                        kind="mergesort",
+                    )
+                    .groupby("query_id", sort=False)
+                    .head(k)
+                )
+
+        scored = scored.mapInPandas(_batch_topk, scored.schema)
+    w = Window.partitionBy("query_id").orderBy(
+        F.col(score).desc(), F.col("neighbor_id").asc()
+    )
+    return (
+        scored.withColumn("rank", F.dense_rank().over(w))
+        .filter(F.col("rank") <= k)
+        .dropDuplicates(["query_id", "neighbor_id"])
+        .select(
+            "query_id",
+            "neighbor_id",
+            *keep,
+            F.col("rank").cast("long").alias("rank"),
+        )
+    )
+
+
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -255,8 +364,7 @@ def cosine_topk(
     (query_id, neighbor_id, rank).
 
     queries is broadcast (small); scoring is a map-side projection over
-    the corpus; the per-query top-k is a window rank — at scale,
-    replace with groupBy(query).agg(max_by-style heap) if k is tiny.
+    the corpus; the per-query top-k is ``_rank_topk``.
 
     ``filters`` = attribute filter on CORPUS columns (the vector-DB
     "filtered ANN" pattern): either an equality dict routed through
@@ -270,38 +378,18 @@ def cosine_topk(
     """
     from wimbd_spark.search import apply_filters
 
-    qid = query_id_col or id_col
-    q = F.broadcast(
-        queries.select(
-            F.col(qid).alias("query_id"),
-            _unit(_to_double(F.col(vec_col))).alias("_qv"),
-        )
-    )
+    q = F.broadcast(_unit_vecs(queries, query_id_col or id_col, vec_col))
     if filters is None or isinstance(filters, dict):
         filtered = apply_filters(corpus, filters)
     else:
         filtered = corpus.filter(filters)
-    c = filtered.select(
-        F.col(id_col).alias("neighbor_id"),
-        _unit(_to_double(F.col(vec_col))).alias("_cv"),
-    )
+    c = _unit_vecs(filtered, id_col, vec_col, "neighbor_id", "_cv")
     scored = q.crossJoin(c).select(
         "query_id",
         "neighbor_id",
         dot_attrs("_qv", "_cv").alias("cosine"),
     )
-    if exclude_self:
-        scored = scored.filter(F.col("query_id") != F.col("neighbor_id"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "neighbor_id", F.col("rank").cast("long").alias("rank")
-        )
-    )
+    return _rank_topk(scored, k, exclude_self)
 
 
 def _hyperplane(plane: int, dim: int) -> list[float]:
@@ -344,6 +432,16 @@ def sign_sketch(vec_name: str, planes: list[list[float]]) -> Column:
             f"THEN {2 ** p} ELSE 0 END)"
         )
     return F.expr(f"CAST({' + '.join(bits)} AS BIGINT)")
+
+
+def _sketch_probes(nbits: int, multiprobe: bool) -> Column:
+    """The buckets a row with home bucket ``_b0`` probes: its own, and
+    with ``multiprobe`` every 1-bit flip of it (pairwise distinct)."""
+    flips = range(nbits) if multiprobe else ()
+    return F.array(
+        F.col("_b0"),
+        *[F.col("_b0").bitwiseXOR(F.lit(2**p)).cast("long") for p in flips],
+    )
 
 
 def _centroid_rows(
@@ -445,6 +543,27 @@ def _nearest_centroids(vec: Column, cent_arr: Column, n: int) -> Column:
     return F.element_at(scored_sorted, F.lit(1))
 
 
+def _probe_lists(cent_arr: Column, n, vec: str = "_qv") -> Column:
+    """One row per probed list: the ids of the ``n`` nearest centroids
+    to the unit-vector column ``vec``, exploded."""
+    return F.explode(
+        F.transform(
+            _nearest_centroids(F.col(vec), cent_arr, n), lambda c: c["cid"]
+        )
+    )
+
+
+def _index_centroids(spark, path: str):
+    """(rows, literal array) of an index's centroid table; the literal
+    is None when the table is empty."""
+    cents = parquet_plan(spark, f"{path}/centroids").collect()
+    if not cents:
+        return cents, None
+    return cents, _centroid_literal(
+        [{"centroid_id": r["centroid_id"], "_cent": r["v"]} for r in cents]
+    )
+
+
 def cosine_topk_ivf(
     corpus: DataFrame,
     queries: DataFrame,
@@ -468,35 +587,14 @@ def cosine_topk_ivf(
     """
     cent_arr = _deterministic_centroids(corpus, id_col, vec_col, n_centroids)
     if cent_arr is None:  # empty corpus → no neighbors for any query
-        qt = queries.schema[id_col].dataType.simpleString()
-        ct = corpus.schema[id_col].dataType.simpleString()
-        return local_frame(
-            corpus.sparkSession,
-            [], f"query_id {qt}, neighbor_id {ct}, rank long"
-        )
-
-    def top_centroids(vec: Column, n: int) -> Column:
-        return _nearest_centroids(vec, cent_arr, n)
-
+        return _empty_topk(queries, id_col, corpus, id_col)
     # unit vectors: centroid assignment via cosine() is scale-invariant,
     # and the pairwise score below reduces to a single dot product
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        _unit(_to_double(F.col(vec_col))).alias("_cv"),
-    ).withColumn("centroid", top_centroids(F.col("_cv"), 1)[0]["cid"])
-    q = (
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            _unit(_to_double(F.col(vec_col))).alias("_qv"),
-        )
-        .withColumn(
-            "centroid",
-            F.explode(
-                F.transform(
-                    top_centroids(F.col("_qv"), n_probe), lambda s: s["cid"]
-                )
-            ),
-        )
+    c = _unit_vecs(corpus, id_col, vec_col, "neighbor_id", "_cv").withColumn(
+        "centroid", _nearest_centroids(F.col("_cv"), cent_arr, 1)[0]["cid"]
+    )
+    q = _unit_vecs(queries, id_col, vec_col).withColumn(
+        "centroid", _probe_lists(cent_arr, n_probe)
     )
     scored = (
         F.broadcast(q)
@@ -507,19 +605,7 @@ def cosine_topk_ivf(
             dot_attrs("_qv", "_cv").alias("cosine"),
         )
     )
-    if exclude_self:
-        scored = scored.filter(F.col("query_id") != F.col("neighbor_id"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.dropDuplicates(["query_id", "neighbor_id"])
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "neighbor_id", F.col("rank").cast("long").alias("rank")
-        )
-    )
+    return _rank_topk(scored, k, exclude_self)
 
 
 def auto_ncentroids(n_rows: int, target_cluster: int = 4096) -> int:
@@ -572,10 +658,7 @@ def semantic_duplicates(
             df.sparkSession,
             [], f"`{id_col}` {idt}, centroid {idt}, dup_of {idt}"
         )
-    assigned = df.select(
-        F.col(id_col).alias("_id"),
-        _unit(_to_double(F.col(vec_col))).alias("_v"),
-    ).withColumn(
+    assigned = _unit_vecs(df, id_col, vec_col, "_id", "_v").withColumn(
         "centroid", _nearest_centroids(F.col("_v"), cent_arr, 1)[0]["cid"]
     )
     a = assigned.select(
@@ -705,14 +788,8 @@ def cosine_pairs(
     oracle / small-collection path; at corpus scale use
     cosine_pairs_lsh, which replaces the cross join with a bucketed
     self-join."""
-    a = df.select(
-        F.col(id_col).alias("id_a"),
-        _unit(_to_double(F.col(vec_col))).alias("_va"),
-    )
-    b = df.select(
-        F.col(id_col).alias("id_b"),
-        _unit(_to_double(F.col(vec_col))).alias("_vb"),
-    )
+    a = _unit_vecs(df, id_col, vec_col, "id_a", "_va")
+    b = _unit_vecs(df, id_col, vec_col, "id_b", "_vb")
     return (
         a.join(b, F.col("id_a") < F.col("id_b"))
         .withColumn("cosine", dot_attrs("_va", "_vb"))
@@ -841,16 +918,6 @@ def _lsh_block_pairs(
     ).withColumn(
         "_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1)))
     )
-    if multiprobe:
-        probes = F.array(
-            F.col("_b0"),
-            *[
-                F.col("_b0").bitwiseXOR(F.lit(2**p)).cast("long")
-                for p in range(nbits)
-            ],
-        )
-    else:
-        probes = F.array(F.col("_b0"))
     # fresh aliases (_idb/_vb): both cogroup sides derive from the
     # same `live` plan, and attributes sharing the left side's exprIds
     # are deduplicated out of the right side's schema — the Python
@@ -858,7 +925,7 @@ def _lsh_block_pairs(
     probe = live.select(
         F.col("_id").alias("_idb"),
         F.col("_v").alias("_vb"),
-        F.explode(probes).alias("bucket"),
+        F.explode(_sketch_probes(nbits, multiprobe)).alias("bucket"),
     ).withColumn(
         "_salt", F.pmod(F.xxhash64("_idb"), F.lit(n_salt)).cast("int")
     )
@@ -975,10 +1042,9 @@ def cosine_pairs_lsh(
     # of either verification path — persisted, the scan + unit
     # normalization + sign sketch run once instead of twice
     base = scoped_persist(
-        df.select(
-            F.col(id_col).alias("_id"),
-            _unit(_to_double(F.col(vec_col))).alias("_v"),
-        ).withColumn("_b0", sign_sketch("_v", planes))
+        _unit_vecs(df, id_col, vec_col, "_id", "_v").withColumn(
+            "_b0", sign_sketch("_v", planes)
+        )
     )
     if block_gemm in (True, "auto"):
         out = _lsh_block_pairs(
@@ -994,18 +1060,11 @@ def cosine_pairs_lsh(
                 "block_gemm='auto' (or False) to route dirty "
                 "collections down the classic join"
             )
-    if multiprobe:
-        probes = F.array(
-            F.col("_b0"),
-            *[
-                F.col("_b0").bitwiseXOR(F.lit(2**p)).cast("long")
-                for p in range(nbits)
-            ],
-        )
-    else:
-        probes = F.array(F.col("_b0"))
     exp = base.select(
-        "_id", "_v", F.col("_b0"), F.explode(probes).alias("bucket")
+        "_id",
+        "_v",
+        F.col("_b0"),
+        F.explode(_sketch_probes(nbits, multiprobe)).alias("bucket"),
     )
     # a-side keeps its home bucket only, b-side probes: a pair meets
     # exactly where a's home bucket equals one of b's probes, and since
@@ -1050,26 +1109,14 @@ def cosine_topk_lsh(
     if nbits is None:
         nbits = auto_nbits(corpus.count())
     planes = [_hyperplane(p, dim) for p in range(nbits)]
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        _unit(_to_double(F.col(vec_col))).alias("_cv"),
-    ).withColumn("bucket", sign_sketch("_cv", planes))
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        _unit(_to_double(F.col(vec_col))).alias("_qv"),
-    ).withColumn("_b0", sign_sketch("_qv", planes))
-    if multiprobe:
-        probes = F.array(
-            F.col("_b0"),
-            *[
-                F.col("_b0").bitwiseXOR(F.lit(2**p)).cast("long")
-                for p in range(nbits)
-            ],
-        )
-    else:
-        probes = F.array(F.col("_b0"))
-    q = q.select(
-        "query_id", "_qv", F.explode(probes).alias("bucket")
+    c = _unit_vecs(corpus, id_col, vec_col, "neighbor_id", "_cv").withColumn(
+        "bucket", sign_sketch("_cv", planes)
+    )
+    q = (
+        _unit_vecs(queries, id_col, vec_col)
+        .withColumn("_b0", sign_sketch("_qv", planes))
+        .withColumn("bucket", F.explode(_sketch_probes(nbits, multiprobe)))
+        .drop("_b0")
     )
     scored = (
         F.broadcast(q)
@@ -1080,19 +1127,7 @@ def cosine_topk_lsh(
             dot_attrs("_qv", "_cv").alias("cosine"),
         )
     )
-    if exclude_self:
-        scored = scored.filter(F.col("query_id") != F.col("neighbor_id"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.dropDuplicates(["query_id", "neighbor_id"])
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "neighbor_id", F.col("rank").cast("long").alias("rank")
-        )
-    )
+    return _rank_topk(scored, k, exclude_self)
 
 
 # ---------------------------------------------------------- IVF index
@@ -1236,35 +1271,16 @@ def cosine_topk_ivf_indexed(
     return is a materialized DataFrame, and no round recomputes a
     prior round's plan). Geometric doubling keeps total re-scored
     work within ~2× the final round's."""
-    cents = parquet_plan(spark, f"{path}/centroids").collect()
+    cents, cent_arr = _index_centroids(spark, path)
     if not cents:
-        qt = queries.schema[id_col].dataType.simpleString()
-        return local_frame(
-            spark,
-            [], f"query_id {qt}, neighbor_id {qt}, rank long"
-        )
-    cent_arr = _centroid_literal(
-        [{"centroid_id": r["centroid_id"], "_cent": r["v"]} for r in cents]
-    )
+        return _empty_topk(queries, id_col)
     allow = (
         candidates.toDF("id").distinct() if candidates is not None else None
     )
 
     def run(qdf: DataFrame, np_: int) -> DataFrame:
-        q = (
-            qdf.select(
-                F.col(id_col).alias("query_id"),
-                _unit(_to_double(F.col(vec_col))).alias("_qv"),
-            )
-            .withColumn(
-                "centroid",
-                F.explode(
-                    F.transform(
-                        _nearest_centroids(F.col("_qv"), cent_arr, np_),
-                        lambda s: s["cid"],
-                    )
-                ),
-            )
+        q = _unit_vecs(qdf, id_col, vec_col).withColumn(
+            "centroid", _probe_lists(cent_arr, np_)
         )
         # static partition pruning: the probed id set is bounded by
         # |queries|·n_probe (queries are the small side by contract),
@@ -1289,23 +1305,7 @@ def cosine_topk_ivf_indexed(
                 dot_attrs("_qv", "uvec").alias("cosine"),
             )
         )
-        if exclude_self:
-            scored = scored.filter(
-                F.col("query_id") != F.col("neighbor_id")
-            )
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("cosine").desc(), F.col("neighbor_id").asc()
-        )
-        return (
-            scored.dropDuplicates(["query_id", "neighbor_id"])
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(
-                "query_id",
-                "neighbor_id",
-                F.col("rank").cast("long").alias("rank"),
-            )
-        )
+        return _rank_topk(scored, k, exclude_self)
 
     out = run(queries, n_probe)
     if not k_fill:
@@ -1379,9 +1379,7 @@ def cosine_topk_ivf_pq_indexed(
         f_cb = pool.submit(
             lambda: parquet_plan(spark, f"{path}/pq_codebooks").collect()
         )
-        f_ct = pool.submit(
-            lambda: parquet_plan(spark, f"{path}/centroids").collect()
-        )
+        f_ct = pool.submit(_index_centroids, spark, path)
         try:
             cb_rows = f_cb.result()
         except Exception as exc:
@@ -1390,16 +1388,14 @@ def cosine_topk_ivf_pq_indexed(
                 f"index at {path} has no pq_codebooks — rebuild with "
                 "build_ivf_index(..., pq_m=)"
             ) from exc
-        cents = f_ct.result()
+        cents, cent_arr = f_ct.result()
+    keep = ["approx_cosine"] + (["centroid"] if _with_centroid else [])
     if not cents:
         # empty index (never reads the partitioned lists: an empty
         # partitionBy write leaves no partition dirs to infer from)
-        qt = queries.schema[id_col].dataType.simpleString()
-        return local_frame(
-            spark,
-            [],
-            f"query_id {qt}, neighbor_id {qt}, "
-            "approx_cosine double, rank long"
+        return _empty_topk(
+            queries, id_col,
+            keep="approx_cosine double"
             + (", centroid bigint" if _with_centroid else ""),
         )
     if not cb_rows:
@@ -1407,16 +1403,8 @@ def cosine_topk_ivf_pq_indexed(
             f"index at {path} has empty pq_codebooks for a non-empty "
             "corpus — rebuild with build_ivf_index(..., pq_m=)"
         )
-    by_s: dict = {}
-    for r in cb_rows:
-        by_s.setdefault(r["s"], {})[r["j"]] = list(r["cv"])
-    cb = [
-        [by_s[s][j] for j in sorted(by_s[s])] for s in sorted(by_s)
-    ]
+    cb = _codebooks_of(cb_rows)
     d = len(cb[0][0])
-    cent_arr = _centroid_literal(
-        [{"centroid_id": r["centroid_id"], "_cent": r["v"]} for r in cents]
-    )
     qv = _unit(_to_double(F.col(vec_col)))
     # wide codebooks ride one broadcast row instead of plan literals
     # (r14: 65k-literal trees cost ~100 s of analysis/codegen per
@@ -1493,18 +1481,8 @@ def cosine_topk_ivf_pq_indexed(
             qt_rows, f"query_id {qid_t}, _qt array<double>"
         )
         q = (
-            base.select(F.col(id_col).alias("query_id"), qv.alias("_qv"))
-            .withColumn(
-                "centroid",
-                F.explode(
-                    F.transform(
-                        _nearest_centroids(
-                            F.col("_qv"), cent_arr, n_probe
-                        ),
-                        lambda c: c["cid"],
-                    )
-                ),
-            )
+            _unit_vecs(base, id_col, vec_col)
+            .withColumn("centroid", _probe_lists(cent_arr, n_probe))
             .drop("_qv")
             .join(F.broadcast(qt_df), "query_id")
         )
@@ -1519,17 +1497,7 @@ def cosine_topk_ivf_pq_indexed(
                 F.flatten(_qtables_nested(qv, cb, d)).alias("_qt"),
                 qv.alias("_qv"),
             )
-            .withColumn(
-                "centroid",
-                F.explode(
-                    F.transform(
-                        _nearest_centroids(
-                            F.col("_qv"), cent_arr, n_probe
-                        ),
-                        lambda c: c["cid"],
-                    )
-                ),
-            )
+            .withColumn("centroid", _probe_lists(cent_arr, n_probe))
             .drop("_qv")
         )
     probed = sorted(
@@ -1559,24 +1527,7 @@ def cosine_topk_ivf_pq_indexed(
             "centroid",
         )
     )
-    if exclude_self:
-        scored = scored.filter(F.col("query_id") != F.col("neighbor_id"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("approx_cosine").desc(), F.col("neighbor_id").asc()
-    )
-    extra = ["centroid"] if _with_centroid else []
-    return (
-        scored.dropDuplicates(["query_id", "neighbor_id"])
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "approx_cosine",
-            F.col("rank").cast("long").alias("rank"),
-            *extra,
-        )
-    )
+    return _rank_topk(scored, k, exclude_self, "approx_cosine", keep)
 
 
 def cosine_topk_ivf_pq_rerank(
@@ -1643,58 +1594,35 @@ def cosine_topk_ivf_pq_rerank(
         exclude_self=exclude_self,
         _with_centroid=True,
     ).select("query_id", "neighbor_id", "centroid")
-    q = queries.filter(F.col(vec_col).isNotNull()).select(
-        F.col(id_col).alias("query_id"),
-        _unit(_to_double(F.col(vec_col))).alias("_qv"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
+    q = _unit_vecs(
+        queries.filter(F.col(vec_col).isNotNull()), id_col, vec_col
     )
     if rerank == "join":
-        vecs = _read_lists(spark, path, columns=["id", "uvec"]).select(
-            F.col("id").alias("neighbor_id"), "uvec"
+        vecs = _read_lists(spark, path, columns=["id", "uvec"])
+        cand = cand.select("query_id", "neighbor_id")
+    else:
+        pairs = cand.collect()  # bounded: <= |queries| * n_candidates
+        if not pairs:
+            return _empty_topk(queries, id_col)
+        ids = sorted({r["neighbor_id"] for r in pairs})
+        cents = sorted({r["centroid"] for r in pairs})
+        vecs = (
+            _read_lists(spark, path, probed=cents)  # partition pruning
+            .filter(F.col("id").isin(ids))  # row-group pruning
         )
-        scored = (
-            cand.select("query_id", "neighbor_id")
-            .join(vecs, "neighbor_id")
-            .join(F.broadcast(q), "query_id")
-            .select(
-                "query_id",
-                "neighbor_id",
-                dot_attrs("_qv", "uvec").alias("cosine"),
+        cand = F.broadcast(
+            local_frame(
+                spark,
+                [(r["query_id"], r["neighbor_id"]) for r in pairs],
+                cand.select("query_id", "neighbor_id").schema,
             )
         )
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(
-                "query_id",
-                "neighbor_id",
-                F.col("rank").cast("long").alias("rank"),
-            )
-        )
-    pairs = cand.collect()  # bounded: <= |queries| * n_candidates
-    if not pairs:
-        qt = queries.schema[id_col].dataType.simpleString()
-        return local_frame(
-            spark,
-            [], f"query_id {qt}, neighbor_id {qt}, rank long"
-        )
-    ids = sorted({r["neighbor_id"] for r in pairs})
-    cents = sorted({r["centroid"] for r in pairs})
-    vecs = (
-        _read_lists(spark, path, probed=cents)  # partition pruning
-        .filter(F.col("id").isin(ids))  # row-group pruning
-        .select(F.col("id").alias("neighbor_id"), "uvec")
-    )
-    cand_df = local_frame(
-        spark,
-        [(r["query_id"], r["neighbor_id"]) for r in pairs],
-        cand.select("query_id", "neighbor_id").schema,
-    )
     # uvec is unit-normalized at build time → dot IS the exact cosine
     scored = (
-        vecs.join(F.broadcast(cand_df), "neighbor_id")
+        cand.join(
+            vecs.select(F.col("id").alias("neighbor_id"), "uvec"),
+            "neighbor_id",
+        )
         .join(F.broadcast(q), "query_id")
         .select(
             "query_id",
@@ -1702,15 +1630,7 @@ def cosine_topk_ivf_pq_rerank(
             dot_attrs("_qv", "uvec").alias("cosine"),
         )
     )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rank").cast("long").alias("rank"),
-        )
-    )
+    return _rank_topk(scored, k, exclude_self)
 
 
 def _ivf_scored_stream(
@@ -1723,8 +1643,9 @@ def _ivf_scored_stream(
     against the broadcast centroid literal, ONE shuffle join with the
     lists on ``centroid``, exact dot on the stored unit vectors. A
     pair may appear twice when a vector sits in base AND the
-    unabsorbed delta (bitwise-equal cosine — every consumer handles
-    the duplicate without a corpus-scale dropDuplicates). None when
+    unabsorbed delta (bitwise-equal cosine — ``_rank_topk`` and the
+    threshold forms collapse it without a corpus-scale
+    dropDuplicates). None when
     the index has an empty centroid table. Driver footprint:
     the centroid table only (≤ n_centroids rows by construction).
     Callers that hold a frozen centroid literal (the streaming gates)
@@ -1732,28 +1653,15 @@ def _ivf_scored_stream(
     if _cent_arr is not None:
         cent_arr, n_cents = _cent_arr, _n_cents
     else:
-        cents = parquet_plan(spark, f"{path}/centroids").collect()
+        cents, cent_arr = _index_centroids(spark, path)
         if not cents:
             return None
         n_cents = len(cents)
-        cent_arr = _centroid_literal(
-            [{"centroid_id": r["centroid_id"], "_cent": r["v"]}
-             for r in cents]
-        )
     if n_probe == "all":
         n_probe = n_cents
-    q = queries.filter(F.col(vec_col).isNotNull()).select(
-        F.col(id_col).alias("query_id"),
-        _unit(_to_double(F.col(vec_col))).alias("_qv"),
-    ).withColumn(
-        "centroid",
-        F.explode(
-            F.transform(
-                _nearest_centroids(F.col("_qv"), cent_arr, n_probe),
-                lambda c: c["cid"],
-            )
-        ),
-    )
+    q = _unit_vecs(
+        queries.filter(F.col(vec_col).isNotNull()), id_col, vec_col
+    ).withColumn("centroid", _probe_lists(cent_arr, n_probe))
     lists = _read_lists(spark, path, columns=["centroid", "id", "uvec"])
     return q.join(lists, "centroid").select(
         "query_id",
@@ -1852,8 +1760,8 @@ def _ivf_block_topk(
     - the per-block top-k keeps every row the global rank ≤ k window
       could keep (a global top-k row is top-k within every subset it
       appears in, same (cosine DESC, neighbor_id ASC) order — the
-      local_prune argument), so the downstream window output is
-      row-identical;
+      ``_rank_topk`` pre-prune argument), so the rank tail's output
+      is row-identical;
     - eligibility is decided job-free first (a lists-bytes volume
       estimate — below the measured crossover the classic stream's
       codegen'd dots beat the block path's fixed costs) and then by
@@ -1894,9 +1802,8 @@ def _ivf_block_topk(
             _GEMM_MIN_BLOCK_VOLUME
         ):
             return None
-    q_base = queries.filter(F.col(vec_col).isNotNull()).select(
-        F.col(id_col).alias("query_id"),
-        _unit(_to_double(F.col(vec_col))).alias("_qv"),
+    q_base = _unit_vecs(
+        queries.filter(F.col(vec_col).isNotNull()), id_col, vec_col
     )
     lists = _read_lists(spark, path, columns=["centroid", "id", "uvec"])
     if not _gemm_clean_probe(
@@ -1906,13 +1813,7 @@ def _ivf_block_topk(
     par = spark.sparkContext.defaultParallelism or 1
     n_salt = max(1, min(_GEMM_MAX_SALT, -(-2 * par // max(1, n_cents))))
     q = q_base.withColumn(
-        "centroid",
-        F.explode(
-            F.transform(
-                _nearest_centroids(F.col("_qv"), cent_arr, n_probe),
-                lambda c: c["cid"],
-            )
-        ),
+        "centroid", _probe_lists(cent_arr, n_probe)
     ).withColumn(
         "_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1)))
     )
@@ -2136,22 +2037,19 @@ def knn_join(
       hot centroids are skew-join territory, which AQE splits.
     - ``local_prune`` cuts the top-k shuffle from
       |queries|·n_probe·avg_list_size scored rows to ≤ batch-local
-      |queries|·k: an Arrow-batched per-batch top-k (mapInPandas)
-      IMMEDIATELY after the join, exact by construction — a global
-      top-k row is top-k within every subset it appears in, and the
-      batch prune uses the same (cosine DESC, neighbor_id ASC) order
-      as the final rank. collect_list-style aggregation cannot
-      express this (partial aggregation concatenates, it never
-      truncates), which is what makes this the one justified Python
-      hop in the ANN tier. The Arrow hop only PAYS when the rank
-      shuffle it shrinks crosses a network (SCALE.md r13: +6 s at sf1
-      on one box, where "shuffle" is a local disk/memory exchange),
-      so the default is ``"auto"``: prune on a cluster master, skip
-      it when the session master is ``local[*]`` (single-JVM —
-      exactly the deployment where the measured cost lives). Pass
-      True/False to pin either plan; results are row-identical
-      (parity-pinned) because the prune is exact.
-    - one final shuffle on query_id for the exact global rank.
+      |queries|·k with ``_rank_topk``'s exact Arrow pre-prune
+      IMMEDIATELY after the join — the one justified Python hop in
+      the ANN tier. It only PAYS when the rank shuffle it shrinks
+      crosses a network (SCALE.md r13: +6 s at sf1 on one box, where
+      "shuffle" is a local disk/memory exchange), so the default is
+      ``"auto"``: prune on a cluster master, skip it when the session
+      master is ``local[*]`` (single-JVM — exactly the deployment
+      where the measured cost lives). Pass True/False to pin either
+      plan; results are row-identical (parity-pinned) because the
+      prune is exact.
+    - one final shuffle on query_id for the exact global rank
+      (``_rank_topk``, which also collapses a pair scored twice from
+      base and delta).
 
     ``min_cosine`` filters scored pairs before BOTH shuffles — for
     near-dup mining (pairs above a bar) it does most of the volume
@@ -2185,17 +2083,10 @@ def knn_join(
             f"block_gemm must be True, False or 'auto', got "
             f"{block_gemm!r}"
         )
-    cents = parquet_plan(spark, f"{path}/centroids").collect()
+    cents, cent_arr = _index_centroids(spark, path)
     if not cents:  # empty centroid table
-        qt = queries.schema[id_col].dataType.simpleString()
-        return local_frame(
-            spark,
-            [], f"query_id {qt}, neighbor_id {qt}, rank long"
-        )
+        return _empty_topk(queries, id_col)
     n_cents = len(cents)
-    cent_arr = _centroid_literal(
-        [{"centroid_id": r["centroid_id"], "_cent": r["v"]} for r in cents]
-    )
     scored = None
     if block_gemm in (True, "auto"):
         scored = _ivf_block_topk(
@@ -2212,65 +2103,17 @@ def knn_join(
             )
     if scored is not None:
         # the block prune already applied exclude_self / min_cosine
-        # and keeps ≤ k rows per (query, centroid-block); fall through
-        # to the exact global rank window over the pruned survivors
+        # and keeps ≤ k rows per (query, centroid-block); the rank tail
+        # runs the exact global rank over the pruned survivors
         local_prune = False
     else:
         scored = _ivf_scored_stream(
             spark, path, queries, n_probe, id_col, vec_col,
             _cent_arr=cent_arr, _n_cents=n_cents,
         )
-        if exclude_self:
-            scored = scored.filter(
-                F.col("query_id") != F.col("neighbor_id")
-            )
         if min_cosine is not None:
             scored = scored.filter(F.col("cosine") >= F.lit(min_cosine))
-    # A query probing two lists that share a vector (delta tier not
-    # yet absorbed) double-scores the pair. The interactive path
-    # dropDuplicates()es — a full-volume shuffle that would defeat
-    # local_prune here. Instead: copies of a pair carry BITWISE-equal
-    # cosine (same _qv, same stored uvec, same expression), so
-    # dense_rank over (cosine, neighbor_id) gives every copy the rank
-    # row_number would give the deduplicated pair, and distinct pairs
-    # always differ in neighbor_id — one cheap dropDuplicates on the
-    # ≤ |queries|·k survivors replaces the corpus-scale one.
-    if local_prune:
-        out_schema = scored.schema
-
-        def _batch_topk(batches):
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                yield (
-                    # within-batch dedup so a double-scored pair
-                    # occupies ONE of the k slots, never two (a dup
-                    # evicting a real candidate would break the
-                    # prune-is-exact argument)
-                    pdf.drop_duplicates(["query_id", "neighbor_id"])
-                    .sort_values(
-                        ["cosine", "neighbor_id"],
-                        ascending=[False, True],
-                        kind="mergesort",
-                    )
-                    .groupby("query_id", sort=False)
-                    .head(k)
-                )
-
-        scored = scored.mapInPandas(_batch_topk, out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.dense_rank().over(w))
-        .filter(F.col("rank") <= k)
-        .dropDuplicates(["query_id", "neighbor_id"])
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rank").cast("long").alias("rank"),
-        )
-    )
+    return _rank_topk(scored, k, exclude_self, prune=local_prune)
 
 
 def knn_join_pq(
@@ -2305,11 +2148,12 @@ def knn_join_pq(
     dots against the broadcast codebook literal, computed map-side —
     carrying the table through the ONE centroid shuffle join costs
     ~m·n_codes doubles per probe row but makes per-pair scoring m
-    lookups instead of dim multiplies), Arrow local prune, dense_rank
-    ≤ n_candidates. Stage 2 = candidates ⋈ lists(uvec) ⋈ queries,
-    exact dot, one rank window. Same rounding (6 dp) and tie-break
-    as the interactive PQ path, so the candidate set is IDENTICAL to
-    cosine_topk_ivf_pq_rerank's at equal parameters (parity-pinned).
+    lookups instead of dim multiplies), then ``_rank_topk`` with its
+    Arrow pre-prune cuts to n_candidates. Stage 2 = candidates ⋈
+    lists(uvec) ⋈ queries, exact dot, ``_rank_topk`` again. Same
+    rounding (6 dp) and tie-break as the interactive PQ path, so the
+    candidate set is IDENTICAL to cosine_topk_ivf_pq_rerank's at equal
+    parameters (parity-pinned).
     """
     if k <= 0:
         raise ValueError(f"k must be positive, got {k}")
@@ -2317,17 +2161,13 @@ def knn_join_pq(
         n_candidates = max(10 * k, 50)
     if n_candidates < k:
         raise ValueError("n_candidates must be >= k")
-    cents = parquet_plan(spark, f"{path}/centroids").collect()
+    cents, cent_arr = _index_centroids(spark, path)
     if not cents:
         # empty index: a PQ build over an empty corpus writes an empty
         # pq_codebooks sidecar, indistinguishable from "no sidecar" —
         # the empty-result contract must win over the missing-PQ raise
         # (degenerate-corpus rule, r6 VERDICT item 5)
-        qt = queries.schema[id_col].dataType.simpleString()
-        return local_frame(
-            spark,
-            [], f"query_id {qt}, neighbor_id {qt}, rank long"
-        )
+        return _empty_topk(queries, id_col)
     cb = _load_codebooks(spark, path)
     if cb is None:
         raise ValueError(
@@ -2337,9 +2177,6 @@ def knn_join_pq(
     if n_probe == "all":
         n_probe = len(cents)
     d = len(cb[0][0])
-    cent_arr = _centroid_literal(
-        [{"centroid_id": r["centroid_id"], "_cent": r["v"]} for r in cents]
-    )
     qv = _unit(_to_double(F.col(vec_col)))
 
     n_codes = len(cb[0])
@@ -2398,18 +2235,9 @@ def knn_join_pq(
             *(cb_drop if adc == "table" else []),
         )
         .select("query_id", *stage1_cols, "_qv")
-        .withColumn(
-            "centroid",
-            F.explode(
-                F.transform(
-                    _nearest_centroids(F.col("_qv"), cent_arr, n_probe),
-                    lambda c: c["cid"],
-                )
-            ),
-        )
+        .withColumn("centroid", _probe_lists(cent_arr, n_probe))
         .drop("_qv")  # codes-only stage: never shuffle a second copy
     )
-    q = q_base
     lists = _read_lists(
         spark, path, columns=["centroid", "id", "codes", "rn2"]
     )
@@ -2430,7 +2258,7 @@ def knn_join_pq(
                 F.slice(F.col("_q"), s * d + 1, d),
                 cb_entry(s, F.element_at(F.col("codes"), s + 1)),
             )
-    joined = q.join(lists, "centroid")
+    joined = q_base.join(lists, "centroid")
     if adc == "recon" and cb_drop:
         # attach the broadcast codebook row AFTER the shuffle join:
         # the one-row nested-loop broadcast fuses into the projection
@@ -2444,41 +2272,14 @@ def knn_join_pq(
         # candidate sets must be identical at equal parameters
         F.round(sdot / F.sqrt(F.col("rn2")), 6).alias("approx_cosine"),
     )
-    if exclude_self:
-        scored = scored.filter(F.col("query_id") != F.col("neighbor_id"))
-    out_schema = scored.schema
-
-    def _batch_topc(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            yield (
-                pdf.drop_duplicates(["query_id", "neighbor_id"])
-                .sort_values(
-                    ["approx_cosine", "neighbor_id"],
-                    ascending=[False, True],
-                    kind="mergesort",
-                )
-                .groupby("query_id", sort=False)
-                .head(n_candidates)
-            )
-
-    w1 = Window.partitionBy("query_id").orderBy(
-        F.col("approx_cosine").desc(), F.col("neighbor_id").asc()
-    )
-    cand = (
-        scored.mapInPandas(_batch_topc, out_schema)
-        .withColumn("_r", F.dense_rank().over(w1))
-        .filter(F.col("_r") <= n_candidates)
-        .select("query_id", "neighbor_id")
-        .dropDuplicates(["query_id", "neighbor_id"])
+    cand = _rank_topk(
+        scored, n_candidates, exclude_self, "approx_cosine", prune=True
     )
     vecs = _read_lists(spark, path, columns=["id", "uvec"]).select(
         F.col("id").alias("neighbor_id"), "uvec"
     )
-    q2 = queries.filter(F.col(vec_col).isNotNull()).select(
-        F.col(id_col).alias("query_id"),
-        _unit(_to_double(F.col(vec_col))).alias("_qv"),
+    q2 = _unit_vecs(
+        queries.filter(F.col(vec_col).isNotNull()), id_col, vec_col
     )
     rescored = (
         cand.join(vecs, "neighbor_id")
@@ -2489,19 +2290,7 @@ def knn_join_pq(
             dot_attrs("_qv", "uvec").alias("cosine"),
         )
     )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        rescored.withColumn("rank", F.dense_rank().over(w2))
-        .filter(F.col("rank") <= k)
-        .dropDuplicates(["query_id", "neighbor_id"])
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rank").cast("long").alias("rank"),
-        )
-    )
+    return _rank_topk(rescored, k, exclude_self)
 
 
 def _hadoop_exists(spark, p: str) -> bool:
@@ -2518,8 +2307,11 @@ def _load_codebooks(spark, path: str):
     if not _hadoop_exists(spark, f"{path}/pq_codebooks"):
         return None
     rows = parquet_plan(spark, f"{path}/pq_codebooks").collect()
-    if not rows:
-        return None
+    return _codebooks_of(rows) if rows else None
+
+
+def _codebooks_of(rows) -> list:
+    """Collected (s, j, cv) codebook rows → ``cb[s][j]`` vectors."""
     by_s: dict = {}
     for r in rows:
         by_s.setdefault(r["s"], {})[r["j"]] = list(r["cv"])
@@ -2532,10 +2324,7 @@ def _assign_rows(
     """(id, uvec, centroid[, codes, rn2]) assignment projection against
     the literal centroid array — map-only, shared by batch append and
     streaming delta ingest."""
-    out = df.select(
-        F.col(id_col).alias("id"),
-        _unit(_to_double(F.col(vec_col))).alias("uvec"),
-    ).withColumn(
+    out = _unit_vecs(df, id_col, vec_col, "id", "uvec").withColumn(
         "centroid", _nearest_centroids(F.col("uvec"), cent_arr, 1)[0]["cid"]
     )
     if cb is not None:
@@ -3169,8 +2958,8 @@ def cosine_topk_pq(
     codes, recon-norm) — at 100 TB that is a ~dim×4/m-fold read
     reduction, and the codes column can be persisted alongside the IVF
     partitioning for the full IVF-PQ read path. approx_cosine is
-    rounded to 6 dp and ranked on the rounded value (deterministic
-    cross-engine ordering, tie → smallest neighbor_id).
+    rounded to 6 dp and ranked on the rounded value by
+    ``_rank_topk`` (deterministic cross-engine ordering).
 
     Exactness: results are approximate in RECALL (the reconstruction
     reorders near-ties); the exact twin is cosine_topk. Oracle
@@ -3181,13 +2970,9 @@ def cosine_topk_pq(
     """
     cb = pq_codebooks(corpus, m, n_codes, id_col, vec_col, iters=iters)
     if cb is None:
-        qt = queries.schema[query_id_col or id_col].dataType.simpleString()
-        ct = corpus.schema[id_col].dataType.simpleString()
-        return local_frame(
-            corpus.sparkSession,
-            [],
-            f"query_id {qt}, neighbor_id {ct}, "
-            "approx_cosine double, rank long",
+        return _empty_topk(
+            queries, query_id_col or id_col, corpus, id_col,
+            keep="approx_cosine double",
         )
     d = len(cb[0][0])
     qid = query_id_col or id_col
@@ -3215,18 +3000,6 @@ def cosine_topk_pq(
         "neighbor_id",
         F.round(sdot / F.sqrt(F.col("_rn2")), 6).alias("approx_cosine"),
     )
-    if exclude_self:
-        scored = scored.filter(F.col("query_id") != F.col("neighbor_id"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("approx_cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "approx_cosine",
-            F.col("rank").cast("long").alias("rank"),
-        )
+    return _rank_topk(
+        scored, k, exclude_self, "approx_cosine", ("approx_cosine",)
     )

@@ -353,10 +353,12 @@ def lm_map_table(lm: DataFrame) -> DataFrame:
     """Fold a (token, logp) unigram model (lm.unigram_lm) into ONE row
     (vocab: map<string,double>, unseen: double) — the static side of
     streaming_perplexity_gate. The fold runs once per model snapshot;
-    materialize it (parquet) alongside the model. Bound: the map lives
-    in a single JVM row (~2 GB hard cap ⇒ vocabularies to tens of
-    millions of tokens — far beyond any whitespace-token unigram
-    model's useful size)."""
+    materialize it (parquet) alongside the model. Bounds: the map lives
+    in a single JVM row (~2 GB hard cap), and — the binding one —
+    Spark's map lookup scans the keys linearly, so every token costs
+    O(|model|): 0.62 / 14.4 / 54.7 s at 31 / 1,031 / 4,031 keys
+    against 0.3-0.4 s for explode + broadcast join on sf0.1 (SCALE.md,
+    "One-row map lookups"). Keep the gate to small models."""
     return (
         lm.filter(F.col("token").isNotNull())
         .groupBy()
@@ -442,10 +444,10 @@ def bigram_map_table(uni: DataFrame, bi: DataFrame) -> DataFrame:
     bivocab: map<struct<p,t>,double>) — the static side of
     streaming_bigram_perplexity_gate. ``bivocab`` keys are
     (prev, token) STRUCTS (injective for arbitrary token content —
-    see `_bigram_key`); values are the ML conditional pml. Same
-    single-JVM-row bound as lm_map_table — observed-bigram tables to
-    tens of millions of entries; CCNet-scale Wikipedia bigram models
-    fit, full web-crawl 5-gram models belong in the batch join path."""
+    see `_bigram_key`); values are the ML conditional pml. Same bounds
+    as lm_map_table: one JVM row, and a linear key scan per lookup —
+    O(|vocab| + |bivocab|) per token, so observed-bigram tables past a
+    few thousand entries belong in the batch join path."""
     bifold = (
         bi.groupBy()
         .agg(
@@ -537,9 +539,11 @@ def streaming_bigram_perplexity_gate(
 def blocked_domain_table(blocklist: DataFrame, domain_col: str = "domain") -> DataFrame:
     """Fold a domain blocklist into ONE row (blocked:
     map<string,boolean>) — the static side of streaming_url_filter.
-    Same single-row-map bound as lm_map_table (UT1-scale lists of a
-    few million domains fit comfortably). Entries are lowercased to
-    match the lowercased host probe in streaming_url_filter."""
+    Same bounds as lm_map_table: one JVM row, and a linear key scan per
+    probe — O(|blocklist|) per URL, so UT1-scale lists of millions of
+    domains belong in the batch join (filter_by_domain_blocklist).
+    Entries are lowercased to match the lowercased host probe in
+    streaming_url_filter."""
     return (
         blocklist.select(F.lower(F.col(domain_col)).alias("_d"))
         .distinct()
@@ -753,8 +757,10 @@ def dsir_map_table(ratio: DataFrame) -> DataFrame:
     """Fold a (bucket, log_ratio) DSIR model (operators.dsir.
     fit_log_ratio) into ONE row (ratios: map<bigint,decimal>) — the
     static side of streaming_dsir_gate. At most ``buckets`` entries
-    (default 8192), far inside the single-row-map bound shared with
-    lm_map_table; materialize it alongside the model snapshot."""
+    (default 8192): inside the one-row bound, but each lookup scans the
+    keys linearly (see lm_map_table), so a token costs O(buckets) —
+    the dense bucket ids could index an array instead. Materialize it
+    alongside the model snapshot."""
     return ratio.groupBy().agg(
         F.map_from_entries(
             F.collect_list(F.struct("bucket", "log_ratio"))
@@ -812,9 +818,10 @@ def nb_map_table(model: DataFrame) -> DataFrame:
     """Fold a (token, weight) NB classifier model (operators.
     classifier.fit_nb_classifier) into ONE row (nb_weights:
     map<string,decimal>) — the static side of streaming_nb_gate. At
-    most max_vocab entries (default 8192), the same single-row-map
-    bound as dsir_map_table / lm_map_table; materialize it alongside
-    the model snapshot."""
+    most max_vocab entries (default 8192): inside the one-row bound,
+    but each lookup scans the keys linearly (see lm_map_table), so a
+    token costs O(max_vocab). Materialize it alongside the model
+    snapshot."""
     return model.groupBy().agg(
         F.map_from_entries(
             F.collect_list(F.struct("token", "weight"))
