@@ -7,6 +7,8 @@ sweep path, no postings×slot fan-out, density-guard routing, and value
 parity of every new path with the established slot-join/scan paths.
 """
 
+import math
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -567,16 +569,169 @@ def test_scan_path_slop_matches_indexed(spark, corpus, index):
         ), slop
 
 
-def test_scan_path_slop_guards(spark, corpus):
-    from wimbd_spark.operators.dedup import contamination_rate_ngrams
+def _rate_pair(df):
+    row = df.collect()[0]
+    return row["contaminated"], row["total"]
 
-    ev = _eval_grams(corpus.limit(5), n=3)
-    with pytest.raises(ValueError, match="indexed sweep"):
+
+def test_scan_rate_overlong_slop_agrees_with_decontaminator(spark):
+    # a 34-token phrase with slop=1 (overlong, so contiguous contains
+    # cannot take it): the rate counts through the decontaminator's
+    # planner, so the two agree phrase by phrase
+    from wimbd_spark.operators.dedup import (
+        contamination_rate_ngrams,
+        contamination_report,
+        decontaminate_by_ngrams,
+    )
+    from wimbd_spark.session import local_frame
+
+    long_seq = " ".join(f"w{i}" for i in range(34))
+    docs = local_frame(
+        spark,
+        [(1, f"pre {long_seq} post"), (2, "alpha x beta")],
+        "doc_id long, text string",
+    )
+    phrases = [
+        long_seq,                               # contiguous hit
+        " ".join(f"w{i}" for i in range(34) if i != 5),  # gap of one
+        f"x {long_seq}",                        # absent
+        "alpha beta",                           # slop-1 hit
+        "beta alpha",                           # out of order
+    ]
+    got = {}
+    for p in phrases:
+        ev = local_frame(spark, [(p,)], "phrase string")
+        flagged = any(
+            r["contaminated"]
+            for r in decontaminate_by_ngrams(
+                docs, ev, mode="flag", slop=1
+            ).collect()
+        )
+        rate = _rate_pair(
+            contamination_rate_ngrams(ev, docs, "phrase", slop=1)
+        )
+        assert rate == (int(flagged), 1), p
+        got[p] = flagged
+    assert got == {
+        phrases[0]: True,
+        phrases[1]: True,
+        phrases[2]: False,
+        phrases[3]: True,
+        phrases[4]: False,
+    }
+    ev = local_frame(spark, [(p,) for p in phrases], "phrase string")
+    assert _rate_pair(
+        contamination_report(
+            ev, "phrase", corpus=docs, slop=1, token_aligned=True
+        )
+    ) == (3, 5)
+
+
+def test_scan_rate_wide_slop_agrees_with_indexed(spark, corpus, tmp_path):
+    # slop=40 over 3-grams: C(42, 2) = 861 combinations break the
+    # map-side budget, so every phrase takes the scan hatch (the index
+    # side takes its slot-join batch)
+    from wimbd_spark.index import MAX_SLOP_COMBINATIONS
+    from wimbd_spark.operators.dedup import (
+        SCAN_SLOP_MAX_PHRASES,
+        contamination_rate_ngrams,
+    )
+    from wimbd_spark.session import local_frame
+
+    small = corpus.filter(F.col("doc_id") < 12)
+    path = str(tmp_path / "wideslop")
+    build_phrase_index(small, path, num_files=1)
+    idx = load_phrase_index(spark, path)
+    toks = [
+        r["text"].split()
+        for r in corpus.filter(F.col("doc_id").between(12, 14)).collect()
+    ]
+    phrases = sorted(
+        {" ".join(t[i:i + 3]) for t in toks for i in range(len(t) - 2)}
+        | {f"{t[i]} {t[i + 9]} {t[i + 30]}" for t in toks
+           for i in range(len(t) - 30)}
+        | {f"{t[i]} zzq {t[i + 1]}" for t in toks for i in range(8)}
+    )
+    assert math.comb(3 + 40 - 1, 2) > MAX_SLOP_COMBINATIONS
+    assert len(phrases) <= SCAN_SLOP_MAX_PHRASES
+    ev = local_frame(spark, [(p,) for p in phrases], "phrase string")
+    scan = _rate_pair(contamination_rate_ngrams(ev, small, "phrase", slop=40))
+    idxd = _rate_pair(contamination_rate_indexed(idx, ev, "phrase", slop=40))
+    assert scan == idxd
+    assert 0 < scan[0] < scan[1] == len(phrases)
+
+
+def test_scan_rate_raises_past_scan_budget(spark, corpus):
+    # the one refusal left: more than SCAN_SLOP_MAX_PHRASES phrases
+    # routed to the scan predicate (an expression-tree bound)
+    from wimbd_spark.operators.dedup import (
+        SCAN_SLOP_MAX_PHRASES,
+        contamination_rate_ngrams,
+    )
+    from wimbd_spark.session import local_frame
+
+    ev = local_frame(
+        spark,
+        [(f"a{i} b{i} c{i}",) for i in range(SCAN_SLOP_MAX_PHRASES + 1)],
+        "phrase string",
+    )
+    with pytest.raises(ValueError, match="expression budget"):
         contamination_rate_ngrams(ev, corpus, "phrase", slop=40)
-    long_phrase = " ".join(f"w{i}" for i in range(40))
-    evl = spark.createDataFrame([(long_phrase,)], ["phrase"])
-    with pytest.raises(ValueError, match="contiguous-only"):
-        contamination_rate_ngrams(evl, corpus, "phrase", slop=1)
+
+
+@pytest.mark.parametrize("hatch", [False, True])
+def test_scan_rate_build_jobs_are_the_planners(spark, hatch):
+    """Building the index-free rate runs only the shared planner's
+    driver jobs: _phrase_route's length collect, plus the scan-hatch
+    phrase collect when an overlong phrase meets slop>0 — the jobs
+    building decontaminate_by_ngrams runs on the same input."""
+    import uuid
+
+    from wimbd_spark.operators.dedup import (
+        _phrase_route,
+        contamination_rate_ngrams,
+        decontaminate_by_ngrams,
+        eval_gram_table,
+    )
+    from wimbd_spark.session import local_frame
+
+    long_seq = " ".join(f"w{i}" for i in range(34))
+    docs = local_frame(
+        spark, [(1, f"pre {long_seq} post"), (2, "a b c")],
+        "doc_id long, text string",
+    )
+    ev = local_frame(
+        spark, [("a b",), ("b c",), (long_seq,)], "phrase string"
+    )
+    slop = 1 if hatch else 0
+    sc = spark.sparkContext
+
+    def jobs(build):
+        group = f"rate-build-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            build()
+        finally:
+            sc._jsc.clearJobGroup()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    route = jobs(
+        lambda: _phrase_route(eval_gram_table(ev), "gram", slop, None)
+    )
+    scan = jobs(
+        lambda: eval_gram_table(ev)
+        .filter(F.col("_L") > 32)
+        .select("_toks")
+        .collect()
+    )
+    rate = jobs(
+        lambda: contamination_rate_ngrams(ev, docs, "phrase", slop=slop)
+    )
+    decon = jobs(
+        lambda: decontaminate_by_ngrams(docs, ev, slop=slop, method="gram")
+    )
+    assert route >= 1
+    assert rate == decon == route + (scan if hatch else 0)
 
 
 def test_phrase_df_counts_slop_matches_list_api(spark, index):

@@ -165,6 +165,76 @@ def test_contamination_rate_prefilter(spark):
         assert abs(row["rate"] - expect[2]) < 1e-12
 
 
+def _rate_substring(spark, ev, docs, tmp_path):
+    return contamination_rate(ev, docs, "phrase")
+
+
+def _rate_tokens(spark, ev, docs, tmp_path):
+    from wimbd_spark.operators.dedup import contamination_rate_ngrams
+
+    return contamination_rate_ngrams(ev, docs, "phrase")
+
+
+def _rate_indexed(spark, ev, docs, tmp_path):
+    from wimbd_spark.index import build_phrase_index, load_phrase_index
+    from wimbd_spark.operators.dedup import contamination_rate_indexed
+
+    path = str(tmp_path / "degidx")
+    build_phrase_index(docs, path, num_files=1)
+    return contamination_rate_indexed(
+        load_phrase_index(spark, path), ev, "phrase"
+    )
+
+
+@pytest.mark.parametrize(
+    "rate", [_rate_substring, _rate_tokens, _rate_indexed],
+    ids=["substring", "tokens", "indexed"],
+)
+def test_contamination_rates_drop_degenerate_phrases(spark, tmp_path, rate):
+    """Every rate operator counts the same eval phrase set: distinct
+    raw strings, NULL and blank phrases dropped (a NULL is no test
+    item, and contains("") is true for every doc). An empty eval set
+    has a NULL rate."""
+    from wimbd_spark.session import local_frame
+
+    docs = local_frame(
+        spark,
+        [(1, "the quick brown fox"), (2, "a b c")],
+        "doc_id long, text string",
+    )
+    ev = local_frame(
+        spark,
+        [("quick brown",), (None,), ("",), ("   ",), ("zzz",), ("zzz",)],
+        "phrase string",
+    )
+    row = rate(spark, ev, docs, tmp_path).collect()[0]
+    assert (row["contaminated"], row["total"], row["rate"]) == (1, 2, 0.5)
+    empty = local_frame(spark, [], "phrase string")
+    row = rate(spark, empty, docs, tmp_path).collect()[0]
+    assert (row["contaminated"], row["total"], row["rate"]) == (0, 0, None)
+
+
+def test_contamination_rate_builds_without_jobs(spark, corpus):
+    """The substring rate is one lazy aggregate: with the route fixed
+    (prefilter=False/True) building it runs no driver job."""
+    import uuid
+
+    from wimbd_spark.session import local_frame
+
+    ev = local_frame(spark, [("alpha",), ("nothere",)], "phrase string")
+    sc = spark.sparkContext
+    for pf in (False, True):
+        group = f"rate-build-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            df = contamination_rate(ev, corpus, "phrase", prefilter=pf)
+        finally:
+            sc._jsc.clearJobGroup()
+        assert sc.statusTracker().getJobIdsForGroup(group) == [], pf
+        row = df.collect()[0]
+        assert (row["contaminated"], row["total"]) == (1, 2)
+
+
 def test_contamination_rate_indexed_matches_token_semantics(spark, tmp_path):
     from pyspark.sql import functions as F
 
@@ -699,3 +769,37 @@ def test_ac_decon_route_rule():
     assert not _ac_decon_route(over)
     # empty eval set → gram (callers answer it before routing)
     assert not _ac_decon_route({})
+
+
+def test_one_phrase_hit_planner_in_dedup():
+    """The token-phrase hit plan is built in one place: the gram
+    explode and the normalized-text form are called only inside
+    _gram_phrase_hits, so the batch decontaminator, the stream gate
+    and the index-free rate cannot drift apart."""
+    import ast
+    import pathlib
+
+    import wimbd_spark
+
+    callers: dict[str, set[str]] = {
+        "_text_grams": set(),
+        "_normalized_tokens_text": set(),
+    }
+    for path in pathlib.Path(wimbd_spark.__file__).parent.rglob("*.py"):
+        tree = ast.parse(path.read_text())
+        for fn in ast.walk(tree):
+            if not isinstance(fn, ast.FunctionDef):
+                continue
+            for c in ast.walk(fn):
+                if not isinstance(c, ast.Call):
+                    continue
+                f = c.func
+                name = f.id if isinstance(f, ast.Name) else getattr(
+                    f, "attr", None
+                )
+                if name in callers:
+                    callers[name].add(fn.name)
+    assert callers == {
+        "_text_grams": {"_gram_phrase_hits"},
+        "_normalized_tokens_text": {"_gram_phrase_hits"},
+    }

@@ -531,11 +531,42 @@ def _anchored_hits(corpus, phrases_tok, text_col):
     )
 
 
+def _eval_phrases(eval_df: DataFrame, phrase_col: str) -> DataFrame:
+    """(_p): the eval phrases every contamination operator matches —
+    NULL and blank phrases dropped (a blank phrase is no test item,
+    and ``contains("")`` holds for every doc). Consumers take the rows
+    distinct at their own grain: raw strings for the rates, token
+    grams in eval_gram_table (a raw-string distinct there would add an
+    eval-side shuffle to every decontamination)."""
+    return eval_df.select(F.col(phrase_col).alias("_p")).filter(
+        F.col("_p").isNotNull() & (F.trim(F.col("_p")) != "")
+    )
+
+
+def _rate_of(phrases: DataFrame, hit_keys: DataFrame) -> DataFrame:
+    """(contaminated, total, rate) as ONE lazy aggregate: the distinct
+    eval ``phrases`` rows left-joined to the distinct ``hit_keys`` on
+    the key columns of ``hit_keys`` — the count stays in the plan, no
+    driver job. An empty eval set has an UNDEFINED rate (0/0) — NULL,
+    not 0.0: 0.0 would falsely read as "checked and clean"
+    (degenerate-corpus parity with the SQL oracle). try_divide, since
+    ANSI-mode ``x/0`` raises."""
+    hits = hit_keys.distinct().withColumn("_hit", F.lit(1))
+    return (
+        phrases.distinct()
+        .join(hits, hit_keys.columns, "left")
+        .agg(
+            F.count("_hit").alias("contaminated"),
+            F.count(F.lit(1)).alias("total"),
+        )
+        .withColumn("rate", F.try_divide("contaminated", "total"))
+    )
+
+
 def _rate_row(spark, n_hit: int, n_tot: int) -> DataFrame:
-    """(contaminated, total, rate) single-row result. An empty eval
-    set has an UNDEFINED rate (0/0) — NULL, not 0.0: emitting 0.0
-    would falsely read as "checked and clean" (degenerate-corpus
-    parity with the SQL oracle, where 0/0 division yields NULL)."""
+    """(contaminated, total, rate) single-row result from driver-side
+    counts (contamination_rate_indexed); NULL rate for an empty eval
+    set, as in _rate_of."""
     return local_frame(
         spark,
         [(n_hit, n_tot, float(n_hit) / n_tot if n_tot else None)],
@@ -552,8 +583,9 @@ def contamination_rate(
     prefilter_threshold: int = 64,
     bnlj_budget: float = 5e11,
 ) -> DataFrame:
-    """Fraction of eval rows whose phrase appears (substring) in ≥1
-    corpus doc → single row (contaminated, total, rate).
+    """Fraction of distinct eval phrases (NULL/blank dropped) that
+    appear (substring) in ≥1 corpus doc → single row (contaminated,
+    total, rate), counted lazily by _rate_of.
 
     Parity: wimbd/es/corpus_contamination.py:28-58 (per-row phrase
     count > 0, then mean). Two physical strategies, same answer:
@@ -573,9 +605,9 @@ def contamination_rate(
     """
     from wimbd_spark.functions.text import tokenize
 
-    phrases = eval_df.select(F.col(phrase_col).alias("_p")).distinct()
-    n_tot = phrases.count()
+    phrases = _eval_phrases(eval_df, phrase_col).distinct()
     if prefilter is None:
+        n_tot = phrases.count()
         sz = plan_size_bytes(corpus)  # unknown counts as large
         prefilter = n_tot >= prefilter_threshold and (
             sz is None or sz * n_tot > bnlj_budget
@@ -590,9 +622,8 @@ def contamination_rate(
         ).drop("_toks")
         hits = _anchored_hits(corpus, anchorable, text_col).union(
             _contains_hits(corpus, rest, text_col)
-        ).distinct()
-    n_hit = hits.count()
-    return _rate_row(eval_df.sparkSession, n_hit, n_tot)
+        )
+    return _rate_of(phrases, hits)
 
 
 def _text_grams(
@@ -845,8 +876,7 @@ def eval_gram_table(
 
     tok = tokenizer if tokenizer is not None else tokenize
     return (
-        eval_df.select(F.col(phrase_col).alias("_p"))
-        .filter(F.col("_p").isNotNull() & (F.trim(F.col("_p")) != ""))
+        _eval_phrases(eval_df, phrase_col)
         .select(tok(F.col("_p")).alias("_toks"))
         .filter(F.size("_toks") >= 1)
         .withColumn("_L", F.size("_toks"))
@@ -1140,14 +1170,19 @@ def contamination_report(
       batches only).
     - no index, ``token_aligned=True`` → index-free token-aligned
       scan (contamination_rate_ngrams — same answers as the indexed
-      path, corpus gram-exploded instead of postings-reconstructed;
-      slop>0 included since r8 via the same anchored-subsequence
-      enumeration, map-side over the token arrays).
+      path; its hits come from decontaminate_by_ngrams' planner,
+      _phrase_route + _gram_phrase_hits, so it accepts every phrase
+      length and slop the decontaminator accepts and flags the same
+      phrases).
     - no index, default → substring scan over ``corpus``
       (contamination_rate; its own cost model picks broadcast
       nested-loop vs the rare-anchor prefilter, steered by
       ``prefilter``). slop has no substring meaning — rejected on
       that path rather than silently ignored.
+
+    Both index-free routes count through one rate tail (_rate_of): a
+    lazy aggregate over the same eval phrase set (_eval_phrases:
+    NULL/blank dropped), counted as distinct raw strings.
 
     Parity: the reference's single contamination workflow
     (wimbd/es/corpus_contamination.py:28-58) always runs against ES;
@@ -1197,108 +1232,32 @@ def contamination_rate_ngrams(
     agree row-for-row); use this when no posting index exists. The
     substring-semantics cousin is contamination_rate.
 
-    Plan: eval phrases stay a DataFrame; corpus docs gram-explode
-    map-side for the eval set's distinct lengths (_text_grams — the
-    slop>0 form enumerates the anchored subsequence combos, budgeted
-    by index.MAX_SLOP_COMBINATIONS) into a distinct (L, gram) table,
-    one left join + ONE aggregation yields both counts. Phrases longer
-    than GRAM_JOIN_MAX_PHRASE_TOKENS match via normalized-text
-    `contains` (token-aligned containment == substring containment on
-    space-normalized text) — contiguous-only, so overlong + slop>0 is
-    rejected (route that shape through the indexed sweep). Fully
-    distributed at any phrase length, no driver collect beyond the
-    distinct-length set.
+    Plan: the hits are decontaminate_by_ngrams' — _phrase_route
+    ("gram") collects the distinct phrase lengths, _gram_phrase_hits
+    builds the hit plan (short-gram join, overlong ``contains``, slop
+    scan hatch), so every input the decontaminator accepts is
+    accepted here and the same phrases hit. The distinct hit phrases
+    join back to the raw eval phrases on their space-joined tokens,
+    and _rate_of counts distinct raw phrase strings in one lazy
+    aggregate. Driver jobs: the length collect, plus the scan-hatch
+    phrase collect when it fires; only a scan-routed phrase COUNT
+    above SCAN_SLOP_MAX_PHRASES raises.
     """
     from wimbd_spark.functions.text import tokenize
-    from wimbd_spark.index import (
-        GRAM_JOIN_MAX_PHRASE_TOKENS,
-        MAX_SLOP_COMBINATIONS,
-        slop_combination_count,
-    )
 
-    spark = eval_df.sparkSession
     tok = tokenizer if tokenizer is not None else tokenize
-    evp = (
-        eval_df.select(F.col(phrase_col).alias("_p"))
-        .filter(F.col("_p").isNotNull() & (F.trim(F.col("_p")) != ""))
-        .distinct()
-        .withColumn("_toks", tok(F.col("_p")))
-        .withColumn("_L", F.size("_toks"))
+    phrases = _eval_phrases(eval_df, phrase_col).withColumn(
+        "phrase", F.array_join(tok(F.col("_p")), " ")
     )
-    lengths = sorted(
-        r["_L"]
-        for r in evp.filter(F.col("_L") >= 1)
-        .select("_L")
-        .distinct()
-        .collect()
+    evg = eval_gram_table(eval_df, phrase_col, tokenizer)
+    lengths, _ = _phrase_route(evg, "gram", slop, tokenizer)
+    if not lengths:
+        # nothing tokenizes: every phrase counts, none can hit
+        return _rate_of(phrases, phrases.select("phrase").limit(0))
+    hits = _gram_phrase_hits(
+        corpus.select(text_col), evg, lengths, text_col, tokenizer, slop
     )
-    cap = GRAM_JOIN_MAX_PHRASE_TOKENS
-    short_lengths = [L for L in lengths if L <= cap]
-    if slop and short_lengths and (
-        slop_combination_count(short_lengths, slop)
-        > MAX_SLOP_COMBINATIONS
-    ):
-        raise ValueError(
-            f"slop={slop} over phrase lengths {short_lengths} exceeds "
-            f"the {MAX_SLOP_COMBINATIONS}-combination map-side budget; "
-            "this shape belongs on the indexed sweep "
-            "(contamination_rate_indexed routes it through the "
-            "bounded slot-join batch)"
-        )
-    if slop and lengths and lengths[-1] > cap:
-        raise ValueError(
-            f"phrases longer than {cap} tokens match via normalized-"
-            "text contains, which is contiguous-only — incompatible "
-            "with slop>0; use contamination_rate_indexed for "
-            "overlong windowed phrases"
-        )
-    if short_lengths:
-        cg = (
-            _text_grams(
-                corpus.select(text_col),
-                short_lengths,
-                text_col,
-                tokenizer,
-                slop=slop,
-            )
-            .select("_L", "_toks")
-            .distinct()
-        )
-        row = (
-            evp.join(
-                cg.withColumn("_hit", F.lit(1)), ["_L", "_toks"], "left"
-            )
-            .agg(
-                F.count("_hit").alias("_c"), F.count(F.lit(1)).alias("_t")
-            )
-            .collect()[0]
-        )
-        n_hit, n_tot = row["_c"], row["_t"]
-    else:
-        n_hit, n_tot = 0, evp.count()
-    if lengths and lengths[-1] > cap:
-        evl = evp.filter(F.col("_L") > cap).select(
-            "_p",
-            F.concat(
-                F.lit(" "), F.array_join(F.col("_toks"), " "), F.lit(" ")
-            ).alias("_np"),
-        )
-        norm = corpus.select(
-            _normalized_tokens_text(F.col(text_col), tokenizer).alias(
-                "_nt"
-            )
-        )
-        n_hit += (
-            norm.join(
-                F.broadcast(evl),
-                on=F.col("_nt").contains(F.col("_np")),
-                how="inner",
-            )
-            .select("_p")  # count distinct phrase STRINGS, like the
-            .distinct()    # short path and the indexed twin
-            .count()
-        )
-    return _rate_row(spark, n_hit, n_tot)
+    return _rate_of(phrases, hits.select("phrase"))
 
 
 #: Overlong phrases (> GRAM_JOIN_MAX_PHRASE_TOKENS tokens) fall back
@@ -1397,10 +1356,7 @@ def contamination_rate_indexed(
     )
 
     spark = eval_df.sparkSession
-    _base = eval_df.select(F.col(phrase_col).alias("_p")).filter(
-        F.col("_p").isNotNull() & (F.trim(F.col("_p")) != "")
-    )
-    phrases = _base.distinct()
+    phrases = _eval_phrases(eval_df, phrase_col).distinct()
     if analyzer is None:
         from wimbd_spark.index import (
             GRAM_JOIN_MAX_PHRASE_TOKENS,
