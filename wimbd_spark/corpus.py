@@ -33,7 +33,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from wimbd_spark.session import local_frame
+from wimbd_spark.session import local_frame, read_parquet
 
 # Canonical union document schema (SURVEY.md §1.1; ES mapping
 # wimbd/es/README.md "Indices Mapping" + observed optional fields).
@@ -330,7 +330,7 @@ def load_hf_dataset(
     if os.path.isdir(dataset):
         kind, files = _hf_split_files(dataset.rstrip("/"), split)
         if kind == "parquet":
-            df = spark.read.parquet(*files)
+            df = read_parquet(spark, *files)
         elif kind == "arrow":
             df = _read_arrow_shards(spark, files)
         else:

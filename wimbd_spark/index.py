@@ -45,7 +45,7 @@ from pyspark.sql.window import Window
 
 from wimbd_spark.functions.text import tokenize
 from wimbd_spark.search import analyze_phrase
-from wimbd_spark.session import local_frame, parquet_plan
+from wimbd_spark.session import local_frame, parquet_plan, read_parquet
 
 #: Bucket count of the ``as_table`` catalog variant when num_files is
 #: None.
@@ -212,7 +212,7 @@ def needs_compaction(
     ``factor × num_files`` parquet files — the documented trigger for
     compact_phrase_index (call between micro-batches or from a
     maintenance cron; file listing only, no data read)."""
-    return len(spark.read.parquet(path).inputFiles()) > factor * num_files
+    return len(read_parquet(spark, path).inputFiles()) > factor * num_files
 
 
 def compact_phrase_index(
@@ -245,7 +245,7 @@ def compact_phrase_index(
     in ``path`` for the next compaction cycle.
     """
     posts = (
-        spark.read.parquet(path)
+        read_parquet(spark, path)
         .select("token", "doc_id", "positions")
         .groupBy("token", "doc_id")
         .agg(

@@ -35,7 +35,12 @@ from pyspark.sql.types import IntegralType
 from pyspark.sql.window import Window
 
 from wimbd_spark.functions.text import hash32
-from wimbd_spark.session import local_frame, parquet_plan, plan_size_bytes
+from wimbd_spark.session import (
+    local_frame,
+    parquet_plan,
+    plan_size_bytes,
+    read_parquet,
+)
 
 
 def _to_double(vec: Column) -> Column:
@@ -2430,7 +2435,7 @@ def needs_absorb(
     if not _hadoop_exists(spark, f"{path}/delta"):
         return False
     try:
-        n_delta = spark.read.parquet(f"{path}/delta").count()
+        n_delta = read_parquet(spark, f"{path}/delta").count()
     except AnalysisException:
         # delta dir exists but holds no readable data (failed first
         # epoch write, manual cleanup) — nothing to absorb
@@ -2455,11 +2460,11 @@ def absorb_ivf_delta(
     the next cycle."""
     if not _hadoop_exists(spark, f"{path}/delta"):
         raise ValueError(f"no delta tier at {path!r} — nothing to absorb")
-    spark.read.parquet(f"{path}/centroids").write.mode(mode).parquet(
+    read_parquet(spark, f"{path}/centroids").write.mode(mode).parquet(
         f"{fresh_path}/centroids"
     )
     if _hadoop_exists(spark, f"{path}/pq_codebooks"):
-        spark.read.parquet(f"{path}/pq_codebooks").write.mode(
+        read_parquet(spark, f"{path}/pq_codebooks").write.mode(
             mode
         ).parquet(f"{fresh_path}/pq_codebooks")
     _read_lists(spark, path).write.mode(mode).partitionBy(
@@ -2530,7 +2535,7 @@ def needs_recluster(
     sizes = [r["size"] for r in ivf_list_sizes(spark, path).collect()]
     if not sizes or sum(sizes) < min_rows:
         return False  # short-circuit before the centroids read
-    n_cent = spark.read.parquet(f"{path}/centroids").count()
+    n_cent = read_parquet(spark, f"{path}/centroids").count()
     return skew_triggered(sizes, n_cent, skew_factor, min_rows)
 
 
@@ -2563,7 +2568,7 @@ def maintain_ivf_index(
     from pyspark.errors import AnalysisException
 
     sizes = [r["size"] for r in ivf_list_sizes(spark, path).collect()]
-    n_cent = spark.read.parquet(f"{path}/centroids").count()
+    n_cent = read_parquet(spark, f"{path}/centroids").count()
     if skew_triggered(sizes, n_cent, skew_factor=skew_factor):
         recluster_ivf_index(
             spark, path, fresh_path, n_centroids=n_centroids
@@ -2572,7 +2577,7 @@ def maintain_ivf_index(
     n_delta = 0
     if _hadoop_exists(spark, f"{path}/delta"):
         try:
-            n_delta = spark.read.parquet(f"{path}/delta").count()
+            n_delta = read_parquet(spark, f"{path}/delta").count()
         except AnalysisException:
             n_delta = 0
     if n_delta > absorb_fraction * sum(sizes):

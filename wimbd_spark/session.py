@@ -11,6 +11,7 @@ import os
 import threading
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 TABLE_NAMES = [
     "region",
@@ -154,9 +155,155 @@ def rebalance_small_input(df: DataFrame, key: str | None = None) -> DataFrame:
     return df.repartition(target)
 
 
+#: Footer key under which Spark stores the exact Spark schema of every
+#: parquet file it writes.
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+#: Arrow types whose Spark type inference is known to return exactly
+#: (by ``str`` of the Arrow type). Timestamps are left out: inference
+#: reads pandas-written ones as ``timestamp_ntz``, Arrow says
+#: ``timestamp``. Unsigned ints, binary, decimals and dates are left
+#: out because nothing here needs them.
+_SPARK_OF_ARROW = {
+    "int8": T.ByteType(),
+    "int16": T.ShortType(),
+    "int32": T.IntegerType(),
+    "int64": T.LongType(),
+    "float": T.FloatType(),
+    "double": T.DoubleType(),
+    "string": T.StringType(),
+    "bool": T.BooleanType(),
+}
+
+#: Parquet summary files. When one is present Spark reads its schema
+#: from it rather than from a data file.
+_SUMMARY_FILES = ("_metadata", "_common_metadata")
+
+
+def read_parquet(spark: SparkSession, *paths: str) -> DataFrame:
+    """``spark.read.parquet(*paths)`` without a schema-inference job.
+
+    Spark infers a parquet schema with a Spark job (``parallelize`` +
+    ``mapPartitions``, one task) that reads one footer, the first data
+    file in path order (``mergeSchema`` is off). This reads that same
+    footer on the driver and hands the schema to the reader, so
+    opening a local table or index runs no job. The schema is the
+    footer's Spark schema when Spark wrote the file, else its Arrow
+    schema when every type is in ``_SPARK_OF_ARROW`` (lists and
+    structs of them too). Spark makes a given file schema nullable,
+    as inference does, so a non-null footer field reads nullable.
+
+    Anything the footer cannot prove falls back to plain inference:
+    non-local or glob paths, summary files, nested partition
+    directories, a partition column that is also a data column, other
+    types, an unreadable file, ``spark.sql.parquet.mergeSchema`` on."""
+    schema = _footer_schema(spark, paths)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(*paths)
+
+
+def _footer_schema(spark: SparkSession, paths):
+    """The schema inference would give ``paths``, from one footer read
+    on the driver, or None when it cannot be proven here."""
+    import json
+
+    import pyarrow.parquet as pq
+
+    try:
+        found = _schema_footer_file(paths)
+        if found is None:
+            return None
+        footer, part_cols = found
+        if spark.conf.get("spark.sql.parquet.mergeSchema") != "false":
+            return None
+        with pq.ParquetFile(footer) as pf:
+            spark_json = (pf.metadata.metadata or {}).get(_SPARK_SCHEMA_KEY)
+            if spark_json is not None:
+                schema = T.StructType.fromJson(json.loads(spark_json))
+            else:
+                schema = _spark_type_of_arrow(pf.schema_arrow)
+    except Exception:
+        return None
+    if not schema.fields or {f.name.lower() for f in schema} & part_cols:
+        return None
+    return schema
+
+
+def _spark_hidden(name: str) -> bool:
+    """Spark's file-listing filter: names it skips as not data."""
+    return (
+        (name.startswith("_") and "=" not in name)
+        or name.startswith(".")
+        or name.endswith("._COPYING_")
+    )
+
+
+def _schema_footer_file(paths) -> tuple[str, set[str]] | None:
+    """The data file whose footer Spark's inference reads for
+    ``paths`` (the first in path order; Spark sorts its leaf files)
+    and the lower-cased partition column names, or None when Spark's
+    choice is not certain: a non-local or glob path, a summary file, a
+    directory nested past one ``col=value`` level, files beside
+    partition directories, or no data file."""
+    files: list[str] = []
+    part_cols: set[str] = set()
+    for path in paths:
+        if "://" in path or path.startswith("file:") or any(
+            c in path for c in "*?[]{}"
+        ):
+            return None
+        if os.path.isfile(path):
+            files.append(os.path.abspath(path))
+            continue
+        if len(paths) > 1:
+            return None
+        top: list[str] = []
+        for e in list(os.scandir(path)):
+            if e.name in _SUMMARY_FILES:
+                return None
+            if _spark_hidden(e.name):
+                continue
+            if not e.is_dir():
+                top.append(os.path.abspath(e.path))
+                continue
+            col, eq, _ = e.name.partition("=")
+            if not eq:
+                return None
+            part_cols.add(col.lower())
+            for g in list(os.scandir(e.path)):
+                if g.name in _SUMMARY_FILES:
+                    return None
+                if _spark_hidden(g.name):
+                    continue
+                if g.is_dir():
+                    return None
+                files.append(os.path.abspath(g.path))
+        if top and part_cols:
+            return None
+        files += top
+    return (min(files), part_cols) if files else None
+
+
+def _spark_type_of_arrow(t):
+    """The Spark type of Arrow type ``t`` (a schema reads as a
+    struct); KeyError for a type outside ``_SPARK_OF_ARROW``."""
+    import pyarrow as pa
+    import pyarrow.types as pat
+
+    if isinstance(t, pa.Schema) or pat.is_struct(t):
+        return T.StructType(
+            [T.StructField(f.name, _spark_type_of_arrow(f.type)) for f in t]
+        )
+    if pat.is_list(t):
+        return T.ArrayType(_spark_type_of_arrow(t.value_type))
+    return _SPARK_OF_ARROW[str(t)]
+
+
 #: Per-process memo of lazily-planned parquet reads (the PLAN, never
-#: results): spark.read.parquet costs ~70-150 ms of driver time per
-#: call (footer/schema read, partition discovery), and index-backed
+#: results). A miss goes through ``read_parquet``, which runs no Spark
+#: job for a local path, so it costs the footer read on the driver
+#: (~0.02-0.04 s of CPU for a sf0.001 table) plus the reader's file
+#: listing and plan analysis; a hit costs neither. Index-backed
 #: operators issue 2-4 such reads per query. The DataFrame is
 #: immutable and unexecuted — every action still computes from the
 #: files. The key carries the Spark applicationId (a new session never
@@ -195,15 +342,15 @@ def parquet_plan(spark: SparkSession, path: str) -> DataFrame:
                     if g.is_dir():
                         deep_dirs = True
         if deep_dirs:
-            return spark.read.parquet(path)
+            return read_parquet(spark, path)
         stamp = (st.st_mtime_ns, st.st_size, tuple(entries))
     except OSError:
-        return spark.read.parquet(path)
+        return read_parquet(spark, path)
     key = (spark.sparkContext.applicationId, path)
     hit = _PARQUET_PLAN_MEMO.get(key)
     if hit is not None and hit[0] == stamp:
         return hit[1]
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     # One entry per (app, path): a rewrite REPLACES the stale plan
     # instead of accumulating one memo entry per historical stamp.
     _PARQUET_PLAN_MEMO[key] = (stamp, df)
@@ -361,7 +508,7 @@ def load_tables(
         path = os.path.join(sf_dir, f"{name}.parquet")
         if not os.path.exists(path):
             continue
-        df = spark.read.parquet(path)
+        df = read_parquet(spark, path)
         if rebalance and name in REBALANCE_KEYS:
             df = rebalance_small_input(df, key=REBALANCE_KEYS[name])
         if name == "events":

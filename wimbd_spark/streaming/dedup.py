@@ -35,6 +35,7 @@ from pyspark.sql.types import (
 )
 
 from wimbd_spark.functions.text import doc_hash
+from wimbd_spark.session import read_parquet
 
 DOC_STREAM_SCHEMA = StructType(
     [
@@ -594,7 +595,7 @@ def semantic_reference_table(spark: SparkSession, index_path: str) -> DataFrame:
     dim doubles) — size n_centroids so clusters stay broadcast-able,
     exactly the auto_ncentroids rule."""
     return (
-        spark.read.parquet(f"{index_path}/lists")
+        read_parquet(spark, f"{index_path}/lists")
         .groupBy("centroid")
         .agg(F.collect_list("uvec").alias("uvecs"))
     )
@@ -634,7 +635,7 @@ def streaming_semantic_filter(
     )
 
     spark = vecs.sparkSession
-    cents = spark.read.parquet(f"{index_path}/centroids").collect()
+    cents = read_parquet(spark, f"{index_path}/centroids").collect()
     if not cents:
         return vecs  # empty index: nothing to collide with
     cent_arr = _centroid_literal(

@@ -45,6 +45,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from wimbd_spark.session import read_parquet
+
 VECTOR_SCHEMA = StructType(
     [
         StructField("vec_id", LongType()),
@@ -141,7 +143,7 @@ def streaming_ivf_ingest(
 
     spark = vectors.sparkSession
     run_dir = _delta_run_dir(spark, path, checkpoint)
-    cents = spark.read.parquet(f"{path}/centroids").collect()
+    cents = read_parquet(spark, f"{path}/centroids").collect()
     if not cents:
         raise ValueError(
             f"streaming_ivf_ingest: no centroids at {path!r} — build "
@@ -208,7 +210,7 @@ def streaming_ivf_dedup_ingest(
 
     spark = vectors.sparkSession
     run_dir = _delta_run_dir(spark, path, checkpoint)
-    cents = spark.read.parquet(f"{path}/centroids").collect()
+    cents = read_parquet(spark, f"{path}/centroids").collect()
     if not cents:
         raise ValueError(
             f"streaming_ivf_dedup_ingest: no centroids at {path!r} — "
