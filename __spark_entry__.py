@@ -574,8 +574,9 @@ def _phrase_index(spark, sf_dir, docs=None, name="phrase"):
         )
         _BUILT_INDEX_PATHS.add(path)
     # load_phrase_index delegates to session.parquet_plan, which
-    # already memoizes the loaded PLAN (~90 ms of parquet footer/
-    # schema reads per query construction; never results) under a
+    # already memoizes the loaded PLAN (~20 ms of parquet footer/
+    # schema reads per query construction, ~0.6 ms memoized, at
+    # sf0.001 and sf0.1 on 4 cores; never results) under a
     # mtime+size freshness stamp — an in-process index rebuild
     # invalidates it. No second stampless memo layer here (the r15
     # form kept one keyed (appId, path, "index"), which could serve a
@@ -720,19 +721,14 @@ def o_phrase_index_counts():
 
 
 def q_phrase_ac_counts(spark, sf_dir):
-    """Index-FREE many-phrase batch via the Aho-Corasick automaton
-    (operators/multipattern.py): 122 phrases in ONE document pass,
-    per-doc cost independent of the phrase count (measured at sf0.1:
-    flat ~1.5 s vs 16 s / 142 s for the per-phrase aggregates at
-    P=100 / 1000 — SCALE.md). Row-identical to the aggregate and
-    indexed batches; shares their oracle. Shuffle carries only
-    per-partition (phrase, n) partials — the bounded-summary shape."""
-    from wimbd_spark.operators.multipattern import (
-        count_documents_for_each_phrase_ac,
-    )
-
-    return count_documents_for_each_phrase_ac(
-        _docs(spark, sf_dir), BATCH_PHRASES
+    """Index-FREE many-phrase batch on the Aho-Corasick route
+    (search.count_documents_for_each_phrase, method="ac"): 122 phrases
+    in ONE document pass (operators/multipattern.py), per-doc cost
+    independent of the phrase count, then the per-phrase count tail
+    (distinct docs per phrase, zero-filled). Row-identical to the scan
+    and indexed batches; shares their oracle."""
+    return count_documents_for_each_phrase(
+        _docs(spark, sf_dir), BATCH_PHRASES, method="ac"
     ).select("phrase", F.col("count").cast("long").alias("count"))
 
 

@@ -731,61 +731,65 @@ def test_decontaminate_slop_hatch_matches_gram_plan(spark, monkeypatch):
         decontaminate_by_ngrams(train, ev, slop=1)
 
 
-def test_ac_decon_route_rule():
-    """The auto AC-vs-gram rule shared by decontaminate_by_ngrams and
-    streaming_contamination_hits, one case per branch, on
+def test_phrase_route_rule():
+    """The one token-phrase route rule shared by the search tails, the
+    batch decontaminator and the stream gate, one case per branch, on
     {phrase length: distinct phrases} maps (pure Python, no Spark)."""
     from wimbd_spark.index import GRAM_JOIN_MAX_PHRASE_TOKENS as cap
     from wimbd_spark.operators.dedup import (
-        _AC_DECON_MAX_OVERLONG,
-        _AC_DECON_MAX_PHRASES,
-        _AC_DECON_MIN_LENGTHS,
-        _AC_DECON_MIN_PHRASES,
-        _ac_decon_route,
+        _AC_MAX_PHRASES,
+        _SCAN_MAX_BEFORE_AC,
+        _SCAN_MAX_BEFORE_GRAM,
+        _route_rule,
     )
 
-    def short(n_lengths, total):
-        # `total` phrases over `n_lengths` distinct short lengths, the
-        # longest of them the cap itself (which still counts as short)
-        per = {L: 1 for L in range(cap - n_lengths + 1, cap + 1)}
-        per[cap] += total - n_lengths
+    def mix(total):
+        # `total` phrases over lengths 2..4 plus one overlong phrase
+        per = {2: 0, 3: 0, 4: 0, cap + 1: 1}
+        for i in range(total - 1):
+            per[2 + i % 3] += 1
         return per
 
-    lo, hi = _AC_DECON_MIN_PHRASES, _AC_DECON_MAX_PHRASES
-    k = _AC_DECON_MIN_LENGTHS
-    # in budget, enough distinct short lengths → AC, at both ends
-    assert _ac_decon_route(short(k, lo))
-    assert _ac_decon_route(short(k, hi))
-    # too few or too many phrases → gram, though a multiplier bites
-    assert not _ac_decon_route(short(k, lo - 1))
-    assert not _ac_decon_route(short(k, hi + 1))
-    # in budget but one length short of the multiplier → gram
-    assert not _ac_decon_route(short(k - 1, 1000))
-    # in budget, few lengths, overlong phrases past the bound → AC;
-    # at the bound → gram (the cap itself counts as short)
-    over = {cap: 1000, cap + 1: _AC_DECON_MAX_OVERLONG + 1}
-    assert _ac_decon_route(over)
-    over[cap + 1] = _AC_DECON_MAX_OVERLONG
-    assert not _ac_decon_route(over)
-    # empty eval set → gram (callers answer it before routing)
-    assert not _ac_decon_route({})
+    # slop 0, canonical tokenizer: the scan up to its bound, then the
+    # automaton up to its memory bound, then the gram join
+    assert _route_rule(mix(_SCAN_MAX_BEFORE_AC), 0, None) == "scan"
+    assert _route_rule(mix(_SCAN_MAX_BEFORE_AC + 1), 0, None) == "ac"
+    assert _route_rule(mix(_AC_MAX_PHRASES), 0, None) == "ac"
+    assert _route_rule(mix(_AC_MAX_PHRASES + 1), 0, None) == "gram"
+    # slop > 0 or a custom tokenizer: the scan, then the gram join
+    for slop, tok in ((1, None), (2, None), (0, str.split)):
+        assert _route_rule(mix(_SCAN_MAX_BEFORE_GRAM), slop, tok) == "scan"
+        assert (
+            _route_rule(mix(_SCAN_MAX_BEFORE_GRAM + 1), slop, tok) == "gram"
+        )
+    # the empty set plans nothing; callers answer it before hitting
+    assert _route_rule({}, 0, None) == "scan"
 
 
 def test_one_phrase_hit_planner_in_dedup():
-    """The token-phrase hit plan is built in one place: the gram
-    explode and the normalized-text form are called only inside
-    _gram_phrase_hits, so the batch decontaminator, the stream gate
-    and the index-free rate cannot drift apart."""
+    """The token-phrase hit plan is built in one place, so the search
+    tails, the batch decontaminator, the stream gate and the index-free
+    rate cannot drift apart:
+
+    - the gram explode and the normalized-text form are called only
+      inside dedup._gram_phrase_hits;
+    - the scan and the automaton walker are called only by the
+      planner (dedup._phrase_hits, and the gram plan's slop hatch);
+    - search.py routes nothing itself: no module constant, no
+      per-phrase ``count_if`` aggregate, no multipattern import."""
     import ast
     import pathlib
 
     import wimbd_spark
 
+    pkg = pathlib.Path(wimbd_spark.__file__).parent
     callers: dict[str, set[str]] = {
         "_text_grams": set(),
         "_normalized_tokens_text": set(),
+        "_scan_slop_matches": set(),
+        "phrase_hits_ac": set(),
     }
-    for path in pathlib.Path(wimbd_spark.__file__).parent.rglob("*.py"):
+    for path in pkg.rglob("*.py"):
         tree = ast.parse(path.read_text())
         for fn in ast.walk(tree):
             if not isinstance(fn, ast.FunctionDef):
@@ -798,8 +802,31 @@ def test_one_phrase_hit_planner_in_dedup():
                     f, "attr", None
                 )
                 if name in callers:
-                    callers[name].add(fn.name)
+                    callers[name].add(f"{path.stem}.{fn.name}")
     assert callers == {
-        "_text_grams": {"_gram_phrase_hits"},
-        "_normalized_tokens_text": {"_gram_phrase_hits"},
+        "_text_grams": {"dedup._gram_phrase_hits"},
+        "_normalized_tokens_text": {"dedup._gram_phrase_hits"},
+        "_scan_slop_matches": {
+            "dedup._phrase_hits",
+            "dedup._gram_phrase_hits",
+        },
+        "phrase_hits_ac": {"dedup._phrase_hits"},
     }
+
+    search = ast.parse((pkg / "search.py").read_text())
+    constants = [
+        t.id
+        for node in search.body
+        if isinstance(node, (ast.Assign, ast.AnnAssign))
+        for t in (
+            node.targets if isinstance(node, ast.Assign) else [node.target]
+        )
+        if isinstance(t, ast.Name)
+    ]
+    assert constants == []
+    for node in ast.walk(search):
+        if isinstance(node, (ast.Import, ast.ImportFrom)):
+            mods = [node.module or ""] + [a.name for a in node.names]
+            assert not any("multipattern" in m for m in mods), mods
+        if isinstance(node, ast.Attribute):
+            assert node.attr != "count_if"

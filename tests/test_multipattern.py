@@ -1,5 +1,6 @@
-"""Aho-Corasick multi-pattern batch counting: automaton correctness,
-row-identity with the per-phrase aggregate scan, and auto routing."""
+"""Aho-Corasick multi-pattern matching: automaton correctness,
+row-identity of the automaton route with the predicate scan, and auto
+routing."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -7,7 +8,6 @@ from pyspark.sql import functions as F
 from wimbd_spark.operators.multipattern import (
     _build_automaton,
     _matched_ids,
-    count_documents_for_each_phrase_ac,
 )
 from wimbd_spark.search import count_documents_for_each_phrase
 
@@ -43,7 +43,9 @@ def test_ac_matches_aggregate_scan(spark):
     ]
     got = sorted(
         (r.phrase, r["count"])
-        for r in count_documents_for_each_phrase_ac(df, phrases).collect()
+        for r in count_documents_for_each_phrase(
+            df, phrases, method="ac"
+        ).collect()
     )
     want = sorted(
         (r.phrase, r["count"])
@@ -60,26 +62,37 @@ def test_ac_matches_aggregate_scan(spark):
 def test_auto_routing_and_validation(spark):
     df = spark.createDataFrame([(1, "a b")], ["doc_id", "text"])
     many = [f"tok{i}" for i in range(40)]
-    # auto with >= 32 plain phrases routes to the automaton: the plan
-    # must contain the Python map stage, not 40 conditional aggregates
-    q = count_documents_for_each_phrase(df, many)
-    plan = q._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" in plan
-    # AND-groups / slop stay on the aggregate path
-    q2 = count_documents_for_each_phrase(df, [["a", "b"]] * 40)
-    assert "MapInPandas" not in (
-        q2._jdf.queryExecution().executedPlan().toString()
+
+    def plan(q):
+        return q._jdf.queryExecution().executedPlan().toString()
+
+    # auto past the scan's handful of phrases routes slop-0 batches to
+    # the automaton — AND-groups included: the plan holds the Python
+    # map stage, not 40 predicates
+    assert "MapInPandas" in plan(count_documents_for_each_phrase(df, many))
+    assert "MapInPandas" in plan(
+        count_documents_for_each_phrase(df, [["a", "b"]] * 40)
     )
-    q3 = count_documents_for_each_phrase(df, many, slop=1)
-    assert "MapInPandas" not in (
-        q3._jdf.queryExecution().executedPlan().toString()
+    # slop>0 joins grams instead
+    assert "MapInPandas" not in plan(
+        count_documents_for_each_phrase(df, many, slop=1)
     )
     with pytest.raises(ValueError):
-        count_documents_for_each_phrase(df, [["a"]], method="ac")
+        count_documents_for_each_phrase(df, ["a"], method="ac", slop=1)
     with pytest.raises(ValueError):
-        count_documents_for_each_phrase_ac(df, [])
-    with pytest.raises(ValueError):
-        count_documents_for_each_phrase_ac(df, ["ok", "   "])
+        count_documents_for_each_phrase(
+            df, ["a"], method="ac", token_aligned=False
+        )
+    # a blank phrase counts 0 on the automaton route, it does not raise
+    got = dict(
+        map(
+            tuple,
+            count_documents_for_each_phrase(
+                df, ["a b", "   "], method="ac"
+            ).collect(),
+        )
+    )
+    assert got == {"a b": 1, "   ": 0}
     # a typo'd method must error, not silently run the slow path
     # (r10 ADVICE: method='AC'/'aho' fell through to the default)
     from wimbd_spark.search import get_documents_containing_phrases
@@ -105,7 +118,12 @@ def test_ac_on_documents_table(spark):
     ]
     phrases = toks[:30] + [f"{a} {b}" for a, b in zip(toks[:15], toks[15:30])]
     got = sorted(
-        map(tuple, count_documents_for_each_phrase_ac(docs, phrases).collect())
+        map(
+            tuple,
+            count_documents_for_each_phrase(
+                docs, phrases, method="ac"
+            ).collect(),
+        )
     )
     want = sorted(
         map(

@@ -201,8 +201,9 @@ def test_pack_documents_window_is_partitioned(raw_docs):
 
 @pytest.mark.parametrize("op", ["batch", "stream"])
 def test_decontaminate_by_ngrams_broadcasts_eval_no_bnlj(spark, raw_docs, op):
-    # both operators plan through dedup._gram_phrase_hits; the batch
-    # side reads its hit ids off the same inner join the stream emits
+    # both operators plan the gram route through dedup._phrase_hits;
+    # the batch side reads its hit ids off the same inner join the
+    # stream emits (auto would take the automaton for two phrases)
     from wimbd_spark.operators.dedup import decontaminate_by_ngrams
     from wimbd_spark.streaming import (
         eval_gram_table,
@@ -213,9 +214,11 @@ def test_decontaminate_by_ngrams_broadcasts_eval_no_bnlj(spark, raw_docs, op):
         [("alpha beta",), ("gamma delta e",)], ["phrase"]
     )
     if op == "batch":
-        q = decontaminate_by_ngrams(raw_docs, ev)
+        q = decontaminate_by_ngrams(raw_docs, ev, method="gram")
     else:
-        q = streaming_contamination_hits(raw_docs, eval_gram_table(ev))
+        q = streaming_contamination_hits(
+            raw_docs, eval_gram_table(ev), method="gram"
+        )
     plan = explain_str(q)
     # eval grams must reach the train side as a broadcast hash join —
     # never a nested-loop contains scan, never a sort-merge of the

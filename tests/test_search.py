@@ -92,3 +92,145 @@ def test_substring_mode(corpus):
     # but substring "like I" does match doc 3 and 4.
     ids = _match_ids(corpus, phrases=["like I"], token_aligned=False)
     assert ids == [3, 4]
+
+
+# ----------------------------------------------- one phrase-hit planner
+
+_LONG = " ".join(f"w{i}" for i in range(34))  # past the 32-token gram cap
+
+
+@pytest.fixture(scope="module")
+def route_corpus(spark):
+    from wimbd_spark.session import local_frame
+
+    rows = [
+        (1, "I like apples"),
+        (2, "I really like apples"),
+        (3, "like I said"),
+        (4, f"apples like I {_LONG}"),
+        (5, "I like"),
+        (6, None),
+        (7, "I like I like apples apples"),
+        (7, "no match here"),  # a repeated id
+        (8, f"{_LONG} I like"),
+    ]
+    return local_frame(spark, rows, "doc_id long, text string")
+
+
+_ELEMENTS = [
+    "I like",
+    "apples",
+    ["I", "really"],
+    ["like I", _LONG],  # an AND-group across the gram plan's branches
+    "   ",  # blank: counts 0
+    "I like",  # duplicate phrase
+    ["apples", "  "],  # a group holding a blank never matches
+    "zzz",
+    _LONG,
+]
+
+
+def _pred_rows(df, phrases, all_phrases, slop):
+    pred = build_phrase_predicate(phrases, all_phrases=all_phrases, slop=slop)
+    return df.filter(pred)
+
+
+@pytest.mark.parametrize("route", ["scan", "ac", "gram"])
+@pytest.mark.parametrize("slop", [0, 1])
+def test_search_rows_agree_on_every_route(
+    spark, route_corpus, monkeypatch, route, slop
+):
+    """Every search entry point gives the predicate's rows on every
+    route the planner can take (forced through the one rule): AND
+    groups (one across the gram plan's overlong branch, which pins
+    that the synthesized row id agrees across branches), NULL text, a
+    blank phrase, a repeated id and a duplicate phrase. Retrieval off
+    the scan semi-joins on the hit ids, so a row sharing an id with a
+    matching row comes back too (documented)."""
+    import wimbd_spark.operators.dedup as dd
+
+    if route == "ac" and slop:
+        pytest.skip("the automaton matches contiguous phrases only")
+    monkeypatch.setattr(dd, "_route_rule", lambda *a: route)
+    df = route_corpus
+
+    want = sorted(
+        (" AND ".join(g) if isinstance(g, list) else g,
+         _pred_rows(df, g if isinstance(g, list) else [g], True, slop).count())
+        for g in _ELEMENTS
+    )
+    got = sorted(
+        map(
+            tuple,
+            count_documents_for_each_phrase(df, _ELEMENTS, slop=slop).collect(),
+        )
+    )
+    assert got == want
+    assert dict(got)["   "] == 0 and dict(got)["zzz"] == 0
+
+    for phrases in (["I like", _LONG], ["apples", "really", "   "], ["   "]):
+        for all_p in (False, True):
+            match = _pred_rows(df, phrases, all_p, slop)
+            assert count_documents_containing_phrases(
+                df, phrases, all_phrases=all_p, slop=slop
+            ) == match.count()
+            if route != "scan":
+                match = df.join(match.select("doc_id"), "doc_id", "left_semi")
+            assert sorted(
+                map(
+                    tuple,
+                    get_documents_containing_phrases(
+                        df, phrases, num_documents=None,
+                        all_phrases=all_p, slop=slop,
+                    ).collect(),
+                )
+            ) == sorted(map(tuple, match.collect())), (phrases, all_p)
+
+
+def test_blank_phrase_matches_nothing_past_the_scan(spark, route_corpus):
+    """A blank phrase in a batch big enough for the automaton counts 0
+    and matches nothing (it used to raise "every phrase must contain
+    >= 1 token" there, while the predicate counted it 0)."""
+    phrases = ["I really"] + [f"zz{i}" for i in range(31)] + ["   "]
+    got = dict(
+        map(
+            tuple,
+            count_documents_for_each_phrase(route_corpus, phrases).collect(),
+        )
+    )
+    assert got["   "] == 0 and got["I really"] == 1
+    ids = [
+        r.doc_id
+        for r in get_documents_containing_phrases(
+            route_corpus, phrases, num_documents=None
+        ).collect()
+    ]
+    assert ids == [2]
+    assert ids == [
+        r.doc_id
+        for r in get_documents_containing_phrases(
+            route_corpus, phrases, num_documents=None, method="pred"
+        ).collect()
+    ]
+
+
+def test_search_builds_with_no_spark_job(spark, route_corpus):
+    """The route reads the per-length counts off the driver-side
+    phrase list: building a search query on any route runs no job."""
+    import uuid
+
+    sc = spark.sparkContext
+    many = [f"zz{i} yy" for i in range(40)]
+    for build in (
+        lambda: count_documents_for_each_phrase(route_corpus, many),
+        lambda: count_documents_for_each_phrase(route_corpus, many, slop=1),
+        lambda: count_documents_for_each_phrase(route_corpus, ["I like"]),
+        lambda: get_documents_containing_phrases(route_corpus, many),
+    ):
+        group = f"search-build-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            build()
+        finally:
+            sc._jsc.clearJobGroup()
+        assert sc.statusTracker().getJobIdsForGroup(group) == []

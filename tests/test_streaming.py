@@ -1277,10 +1277,13 @@ def _decon_docs(spark):
     return local_frame(spark, rows, "doc_id long, text string"), long_seq
 
 
-# (phrases, slop, AC route expected, flagged ids); the "ac" set spans
-# 4 short lengths and 40 phrases so method="auto" picks the automaton
+# case: (phrases, slop, method, the route it plans, flagged ids)
 _DECON_CASES = {
-    "gram": (["quick brown", "alpha beta", "not present"], 0, False, {1, 6}),
+    "scan": (["quick brown", "alpha beta"], 1, "auto", "scan", {1, 2, 6}),
+    "gram": (
+        ["quick brown", "alpha beta", "not present"], 0, "gram", "gram",
+        {1, 6},
+    ),
     "ac": (
         [
             " ".join(f"t{j}" for j in range(i, i + L))
@@ -1289,11 +1292,14 @@ _DECON_CASES = {
         ]
         + ["t3 t4"],
         0,
-        True,
+        "auto",
+        "ac",
         {7},
     ),
-    "overlong": (None, 0, False, {1, 4}),
-    "slop_hatch": (["alpha beta", "one two three four"], 1, False, {2, 3, 6}),
+    "overlong": (None, 0, "gram", "gram", {1, 4}),
+    "slop_hatch": (
+        ["alpha beta", "one two three four"], 1, "gram", "gram", {2, 3, 6},
+    ),
 }
 
 
@@ -1302,8 +1308,9 @@ def test_contamination_hits_agree_with_batch_flags(spark, monkeypatch, case):
     """streaming_contamination_hits and decontaminate_by_ngrams share
     one phrase-hit planner, so on the same static frame the docs the
     audit stream reports are exactly the ids the batch operator flags
-    — on the gram route, the auto-picked AC route, the overlong
-    contains join and the slop scan hatch."""
+    — on the auto-picked scan (which the stream runs on grams) and AC
+    routes, the gram route, the overlong contains join and the slop
+    scan hatch."""
     import wimbd_spark.index as idx
     from wimbd_spark.operators.dedup import (
         _phrase_route,
@@ -1316,7 +1323,7 @@ def test_contamination_hits_agree_with_batch_flags(spark, monkeypatch, case):
     )
 
     docs, long_seq = _decon_docs(spark)
-    phrases, slop, want_ac, want = _DECON_CASES[case]
+    phrases, slop, method, want_route, want = _DECON_CASES[case]
     if phrases is None:
         phrases = [long_seq, "quick brown"]
     if case == "slop_hatch":
@@ -1324,19 +1331,20 @@ def test_contamination_hits_agree_with_batch_flags(spark, monkeypatch, case):
         monkeypatch.setattr(idx, "MAX_SLOP_COMBINATIONS", 3)
     ev = local_frame(spark, [(p,) for p in phrases], "phrase string")
     grams = eval_gram_table(ev)
-    _, ac_phrases = _phrase_route(grams, "auto", slop, None)
-    assert (ac_phrases is not None) == want_ac
+    assert _phrase_route(grams, method, slop, None).route == want_route
 
     flagged = {
         r["doc_id"]
         for r in decontaminate_by_ngrams(
-            docs, ev, mode="flag", slop=slop
+            docs, ev, mode="flag", slop=slop, method=method
         ).collect()
         if r["contaminated"]
     }
     hit_ids = {
         r["doc_id"]
-        for r in streaming_contamination_hits(docs, grams, slop=slop)
+        for r in streaming_contamination_hits(
+            docs, grams, slop=slop, method=method
+        )
         .select("doc_id")
         .distinct()
         .collect()
@@ -1348,9 +1356,8 @@ def test_contamination_hits_agree_with_batch_flags(spark, monkeypatch, case):
 def test_contamination_hits_setup_jobs_match_batch(spark, method):
     """Building the audit stream runs exactly the driver jobs that
     building the batch decontaminator runs on the same eval set and
-    method: both plan through one route (one bounded phrase collect
-    for "ac"; one per-length aggregate for a gram-routed "auto" set,
-    whose lengths are not collected a second time)."""
+    method: both plan through one route (one bounded phrase collect,
+    which also gives "auto" its per-length counts)."""
     import uuid
 
     from wimbd_spark.operators.dedup import decontaminate_by_ngrams
@@ -1361,7 +1368,7 @@ def test_contamination_hits_setup_jobs_match_batch(spark, method):
     )
 
     docs, _ = _decon_docs(spark)
-    # one length, under 32 phrases: method="auto" stays on grams
+    # three phrases at slop 0: method="auto" picks the automaton too
     ev = local_frame(
         spark,
         [("quick brown",), ("alpha beta",), ("lazy dog",)],

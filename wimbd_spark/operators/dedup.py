@@ -23,6 +23,9 @@ Spark-first notes:
 
 from __future__ import annotations
 
+from collections import Counter
+from typing import NamedTuple
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -745,42 +748,45 @@ def _normalized_tokens_text(text: Column, tokenizer=None) -> Column:
     return F.concat(F.lit(" "), F.array_join(tok(text), " "), F.lit(" "))
 
 
-# Aho-Corasick routing bounds for decontaminate_by_ngrams: below MIN
-# the compiled gram join beats the Python automaton walk (measured
-# crossover ~tens of phrases, SCALE.md); above MAX the per-TASK trie
-# cost dominates — every concurrent partition task builds its own
-# automaton (measured: 20k 4-gram phrases ≈ 0.7 s build / ~300k
-# states ≈ 100 MB; 100k ≈ 6.6 s / 1.5M states) and executor memory is
-# the binding constraint at cluster scale. Beyond MAX, route back to
-# the distributed gram join, which never materializes the phrase set
-# in one process.
-_AC_DECON_MIN_PHRASES = 32
-_AC_DECON_MAX_PHRASES = 20_000
-# auto routes to AC only where the gram path's cost MULTIPLIERS bite
-# (single-length sets are flat in P on the gram join — measured):
-# >= MIN_LENGTHS distinct short lengths (map-side explode emits one
-# gram per token per length) or > MAX_OVERLONG overlong phrases (each
-# adds a per-doc contains to the broadcast nested loop).
-_AC_DECON_MIN_LENGTHS = 4
-_AC_DECON_MAX_OVERLONG = 32
+# The one token-phrase route rule (_route_rule), for the search tier,
+# batch and streaming decontamination alike. Fitted on a 4-core box
+# with tools/phrase_route_ab.py (sf0.1 documents, cached, local[2];
+# SCALE.md "Many-phrase batches"). The scan — one window predicate per
+# phrase in one projection, no automaton build, no gram explode, no
+# join — costs ~0.25 s more per phrase; the automaton is flat at
+# ~0.5 s and the gram join at ~1.5-2 s (slop 0) to ~4-5 s (slop 1):
+# - slop 0 with the canonical tokenizer: the automaton past
+#   _SCAN_MAX_BEFORE_AC phrases (at 1 phrase the two tie), up to
+#   _AC_MAX_PHRASES, where every concurrent task's trie (~100 MB at
+#   20k 4-gram phrases, ~1.5M states at 100k) makes executor memory
+#   the bound;
+# - else the gram join past _SCAN_MAX_BEFORE_GRAM phrases (the slop-1
+#   crossover lies between 10 and 30); it never holds the phrase set
+#   in one process.
+_SCAN_MAX_BEFORE_AC = 1
+_SCAN_MAX_BEFORE_GRAM = 15
+_AC_MAX_PHRASES = 20_000
 
 
-def _ac_decon_route(per_len: dict[int, int]) -> bool:
-    """True iff ``method="auto"`` decontamination should take the
-    Aho-Corasick route for an eval set with ``per_len`` = {phrase
-    length in tokens: distinct phrases of that length}: the phrase
-    count is inside [_AC_DECON_MIN_PHRASES, _AC_DECON_MAX_PHRASES]
-    AND a gram-path cost multiplier bites (see the constants above).
-    The one rule for the batch and streaming decontaminators."""
-    from wimbd_spark.index import GRAM_JOIN_MAX_PHRASE_TOKENS as cap
-
+def _route_rule(per_len: dict[int, int], slop: int, tokenizer) -> str:
+    """The route ("ac", "gram" or "scan") of a token-phrase hit plan
+    for ``per_len`` = {phrase length in tokens: distinct phrases},
+    ``slop`` and ``tokenizer`` (None = the canonical whitespace
+    tokenizer). Pure: the thresholds above are its only other
+    inputs."""
     n = sum(per_len.values())
-    n_short_lengths = sum(1 for L in per_len if L <= cap)
-    n_over = sum(c for L, c in per_len.items() if L > cap)
-    return _AC_DECON_MIN_PHRASES <= n <= _AC_DECON_MAX_PHRASES and (
-        n_short_lengths >= _AC_DECON_MIN_LENGTHS
-        or n_over > _AC_DECON_MAX_OVERLONG
-    )
+    if slop == 0 and tokenizer is None and n <= _AC_MAX_PHRASES:
+        return "scan" if n <= _SCAN_MAX_BEFORE_AC else "ac"
+    return "scan" if n <= _SCAN_MAX_BEFORE_GRAM else "gram"
+
+
+def _check_method(method: str, allowed: tuple[str, ...]) -> None:
+    if method not in allowed:
+        raise ValueError(
+            f"unknown method {method!r}: expected "
+            + ", ".join(repr(m) for m in allowed[:-1])
+            + f" or {allowed[-1]!r}"
+        )
 
 
 #: Expression-tree budget for the scan-predicate slop fallback: each
@@ -825,33 +831,36 @@ def _scan_slop_matches(
     slop: int,
 ) -> DataFrame:
     """(docs columns minus text ..., phrase): one row per (doc,
-    matching phrase), matched by the SEARCH tier's windowed scan
-    predicate (search._phrase_window_match — phrase tokens in order
-    within a len+slop window, pure SQL aggregate, no UDF). The slop
-    escape hatch (r12 VERDICT #5): phrase lengths whose combination
-    count breaks the gram plan's map-side budget — where the explode
-    multiplier IS the cost — fall back to scanning the corpus once
-    with one predicate per routed phrase: cost corpus_tokens ×
-    Σ(L+slop) per doc, independent of the combination count, and no
-    explode. Existence semantics (one row per doc-phrase pair), the
-    same convention the overlong-contains path already uses. The
-    phrase list is driver-side by construction (SCAN_SLOP_MAX_PHRASES
-    caps the expression tree)."""
+    matching phrase), matched by the search tier's windowed predicate
+    (search._phrase_window_match — phrase tokens in order within a
+    len+slop window, pure SQL aggregate, no UDF), one predicate per
+    phrase in one projection: cost corpus_tokens × Σ(L+slop) per doc,
+    no explode, no join. With the canonical tokenizer a substring
+    ``contains`` of the phrase's longest token (every token is a
+    substring of its text) short-circuits the window scan for most
+    docs that cannot match. The scan route of _route_rule, and the
+    slop escape hatch of _gram_phrase_hits (r12 VERDICT #5). The
+    phrase list is driver-side by construction."""
     from wimbd_spark.functions.text import tokenize
     from wimbd_spark.search import _phrase_window_match
 
     tokf = tokenizer if tokenizer is not None else tokenize
     keep = [c for c in docs.columns if c != text_col]
-    staged = docs.select(*keep, tokf(F.col(text_col)).alias("_sst"))
+    staged = docs.select(
+        *keep, F.col(text_col), tokf(F.col(text_col)).alias("_sst")
+    )
+
+    def matches(p: str) -> Column:
+        m = _phrase_window_match(F.col("_sst"), p, slop)
+        if tokenizer is None:
+            longest = max(p.split(), key=len)
+            m = F.coalesce(F.col(text_col).contains(longest), F.lit(False)) & m
+        return m
+
     matched = F.filter(
         F.array(
             *[
-                F.struct(
-                    F.lit(p).alias("phrase"),
-                    _phrase_window_match(
-                        F.col("_sst"), p, slop
-                    ).alias("_m"),
-                )
+                F.struct(F.lit(p).alias("phrase"), matches(p).alias("_m"))
                 for p in phrases
             ]
         ),
@@ -885,77 +894,116 @@ def eval_gram_table(
     )
 
 
-def _phrase_route(
-    evg: DataFrame, method: str, slop: int, tokenizer
-) -> tuple[list[int], list[str] | None]:
-    """Plan-time half of a token-phrase hit: validate ``method``, run
-    the route's driver collects over the eval grams ``evg``
-    (eval_gram_table) and return (sorted distinct phrase lengths, AC
-    phrase list or None). The phrase list is set exactly when the hit
-    plan is the Aho-Corasick pass; otherwise the lengths drive
-    _gram_phrase_hits. Empty lengths = nothing to match — each caller
-    keeps its own empty-set contract.
+class _PhrasePlan(NamedTuple):
+    """The driver-side half of a token-phrase hit plan (_phrase_route),
+    read by _phrase_hits."""
 
-    Collects: ``"ac"`` = ONE bounded collect yields the budget check,
-    the lengths and the patterns; ``"auto"`` = one per-length
-    aggregate decides the route (_ac_decon_route) WITHOUT collecting
-    phrases (the set may be gram-route huge), plus the phrase collect
-    only when it picks AC; ``"gram"`` or an AC-ineligible call
-    (slop>0 or a custom tokenizer) = one distinct-length collect."""
-    if method not in ("auto", "ac", "gram"):
-        raise ValueError(
-            f"unknown method {method!r}: expected 'auto', 'ac' or "
-            "'gram'"
-        )
-    ac_eligible = slop == 0 and tokenizer is None
-    if method == "ac" and not ac_eligible:
+    route: str  # "ac", "gram" or "scan"
+    lengths: list[int]  # sorted distinct phrase lengths; [] = no phrase
+    phrases: list[str] | None  # space-joined tokens, when driver-side
+    evg: DataFrame | None  # eval grams; None = built from ``phrases``
+    slop: int
+    tokenizer: object
+
+
+def _phrase_route(
+    source: DataFrame | list[str], method: str, slop: int, tokenizer
+) -> _PhrasePlan:
+    """Plan-time half of a token-phrase hit: route the phrases of
+    ``source`` — a driver-side phrase list (the search tier) or eval
+    grams (eval_gram_table) — by ``method``: "auto" (_route_rule) or
+    a forced route ("ac", "gram", "scan"). Blank phrases match nothing
+    and drop out here, so empty lengths = nothing to match; each
+    caller keeps its own empty-set contract.
+
+    A list pays no Spark job: the per-length counts come off the list.
+    Eval grams pay the collects: "gram" = one distinct-length collect;
+    "auto", "ac" and "scan" = ONE bounded collect of the distinct
+    phrases, which yields the per-length counts, the route and the
+    phrases the automaton, the scan and the gram route's slop hatch
+    read. Past _AC_MAX_PHRASES phrases "auto" takes the gram route
+    (one more, distinct-length, collect) and a forced "ac" or "scan"
+    raises."""
+    _check_method(method, ("auto", "ac", "gram", "scan"))
+    if method == "ac" and (slop or tokenizer is not None):
         raise ValueError(
             "method='ac' needs slop=0 and the default tokenizer "
             "(the automaton matches on canonical whitespace "
             "tokenization)"
         )
-    if method == "ac":
-        rows = (
-            evg.select("_toks").limit(_AC_DECON_MAX_PHRASES + 1).collect()
-        )
-        if len(rows) > _AC_DECON_MAX_PHRASES:
-            raise ValueError(
-                f"method='ac' got more than {_AC_DECON_MAX_PHRASES} "
-                f"distinct phrases; the automaton budget is "
-                f"[1, {_AC_DECON_MAX_PHRASES}] — use method='gram' "
-                "beyond it (the gram join never materializes the "
-                "phrase set in one process)"
+    evg = None
+    if isinstance(source, list):
+        phrases = sorted({" ".join(p.split()) for p in source} - {""})
+    else:
+        evg = source
+
+        def lengths() -> list[int]:
+            return sorted(
+                r["_L"] for r in evg.select("_L").distinct().collect()
             )
-        return (
-            sorted({len(r["_toks"]) for r in rows}),
-            [" ".join(r["_toks"]) for r in rows],
+
+        if method == "gram":
+            return _PhrasePlan("gram", lengths(), None, evg, slop, tokenizer)
+        rows = evg.select("_toks").limit(_AC_MAX_PHRASES + 1).collect()
+        if len(rows) > _AC_MAX_PHRASES:
+            if method != "auto":
+                raise ValueError(
+                    f"method={method!r} got more than {_AC_MAX_PHRASES} "
+                    "distinct phrases — use method='gram' beyond it "
+                    "(the gram join never materializes the phrase set "
+                    "in one process)"
+                )
+            return _PhrasePlan("gram", lengths(), None, evg, slop, tokenizer)
+        phrases = [" ".join(r["_toks"]) for r in rows]
+    per_len = Counter(len(p.split()) for p in phrases)
+    route = (
+        _route_rule(per_len, slop, tokenizer) if method == "auto" else method
+    )
+    return _PhrasePlan(route, sorted(per_len), phrases, evg, slop, tokenizer)
+
+
+def _phrase_hits(
+    docs: DataFrame,
+    plan: _PhrasePlan,
+    text_col: str = "text",
+    grain: str = "phrase",
+    broadcast_eval: bool = True,
+) -> DataFrame:
+    """(docs columns minus text ..., phrase): the token-phrase hits of
+    ``plan`` (_phrase_route) in ``docs``, ``phrase`` = the phrase's
+    space-joined tokens — THE hit function of the search tails, the
+    decontaminators and the index-free rate. ``plan.lengths`` must be
+    non-empty. ``grain`` is the least the caller needs:
+
+    - "doc": at least one row for each matching doc (the automaton
+      stops at the first match);
+    - "phrase": exactly one row for each (doc, matching phrase) — the
+      gram route pays a distinct for it;
+    - "occurrence": the stream audit multiset — a row per occurrence
+      of a phrase the gram join matches, one per (doc, phrase) for
+      overlong and slop-hatch phrases. The scan route does not serve
+      it; such a plan runs on grams."""
+    if plan.route == "ac":
+        from wimbd_spark.operators.multipattern import phrase_hits_ac
+
+        return phrase_hits_ac(docs, plan.phrases, text_col, grain)
+    if plan.route == "scan" and grain != "occurrence":
+        return _scan_slop_matches(
+            docs, plan.phrases, text_col, plan.tokenizer, plan.slop
         )
-    if method == "auto" and ac_eligible:
-        per_len = {
-            r["_L"]: r["_n"]
-            for r in evg.groupBy("_L")
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .collect()
-        }
-        if not _ac_decon_route(per_len):
-            return sorted(per_len), None
-        return sorted(per_len), [
-            " ".join(r["_toks"]) for r in evg.select("_toks").collect()
-        ]
-    return sorted(r["_L"] for r in evg.select("_L").distinct().collect()), None
+    hits = _gram_phrase_hits(docs, plan, text_col, broadcast_eval)
+    return hits.distinct() if grain == "phrase" else hits
 
 
 def _gram_phrase_hits(
     docs: DataFrame,
-    evg: DataFrame,
-    lengths: list[int],
+    plan: _PhrasePlan,
     text_col: str,
-    tokenizer,
-    slop: int,
     broadcast_eval: bool = True,
 ) -> DataFrame:
     """(docs columns minus text ..., phrase): the gram-route hit plan
-    for the non-empty eval-gram ``lengths`` from _phrase_route.
+    for ``plan``'s non-empty phrase lengths. Its eval grams are
+    ``plan.evg``, or a local frame of ``plan.phrases``.
 
     - Lengths up to GRAM_JOIN_MAX_PHRASE_TOKENS: map-side gram explode
       (_text_grams — no shuffle, no UDF) inner-joined on the distinct
@@ -972,15 +1020,24 @@ def _gram_phrase_hits(
       index.MAX_SLOP_COMBINATIONS (cheapest lengths keep the gram plan,
       _slop_budget_split), plus any overlong phrase (contains is
       contiguous-only), route through the search tier's windowed scan
-      predicate (_scan_slop_matches) — one row per (doc, phrase). Only
-      a routed-phrase COUNT above SCAN_SLOP_MAX_PHRASES (an
-      expression-tree bound) raises.
+      predicate (_scan_slop_matches) — one row per (doc, phrase);
+      their phrases come off the plan when it holds them, else from
+      one collect. Only a routed-phrase COUNT above
+      SCAN_SLOP_MAX_PHRASES (an expression-tree bound) raises.
     """
     from wimbd_spark.index import (
         GRAM_JOIN_MAX_PHRASE_TOKENS,
         MAX_SLOP_COMBINATIONS,
     )
 
+    lengths, slop, tokenizer = plan.lengths, plan.slop, plan.tokenizer
+    evg = plan.evg
+    if evg is None:
+        evg = local_frame(
+            docs.sparkSession,
+            [(len(p.split()), p.split()) for p in plan.phrases],
+            "_L int, _toks array<string>",
+        )
     cap = GRAM_JOIN_MAX_PHRASE_TOKENS
     short_lengths = [L for L in lengths if L <= cap]
     scan_lengths: list[int] = []
@@ -991,12 +1048,17 @@ def _gram_phrase_hits(
         scan_lengths = scan_lengths + [L for L in lengths if L > cap]
     parts = []
     if scan_lengths:
-        sphr = [
-            " ".join(r["_toks"])
-            for r in evg.filter(F.col("_L").isin(scan_lengths))
-            .select("_toks")
-            .collect()
-        ]
+        if plan.phrases is not None:
+            sphr = [
+                p for p in plan.phrases if len(p.split()) in scan_lengths
+            ]
+        else:
+            sphr = [
+                " ".join(r["_toks"])
+                for r in evg.filter(F.col("_L").isin(scan_lengths))
+                .select("_toks")
+                .collect()
+            ]
         if len(sphr) > SCAN_SLOP_MAX_PHRASES:
             raise ValueError(
                 f"slop={slop} routes {len(sphr)} phrases (lengths "
@@ -1068,30 +1130,24 @@ def decontaminate_by_ngrams(
     this operator closes the loop: the docs the sweep would count are
     the docs this removes.
 
-    Planning is shared with streaming_contamination_hits:
-    _phrase_route validates ``method`` and picks the route,
-    _gram_phrase_hits builds the gram-route hit plan (short-gram
-    join, overlong ``contains``, slop scan hatch — see there).
-    ``method``: ``"gram"`` = the gram hit plan; ``"ac"`` = one
-    Aho-Corasick pass
-    (operators.multipattern.matching_doc_ids_ac — per-doc cost
-    independent of the phrase count AND the length mix, phrases
-    collected to the driver and compiled into a per-task automaton;
-    slop=0 and the default tokenizer only, raises otherwise);
-    ``"auto"`` (default) routes to the automaton exactly where the
-    gram path's cost multipliers bite — the map-side explode emits one
-    gram per (token, DISTINCT PHRASE LENGTH) and each overlong phrase
-    (> GRAM_JOIN_MAX_PHRASE_TOKENS) adds a per-doc `contains` to a
-    broadcast nested loop, so a single-length set is flat in the
-    phrase count and stays on grams (measured sf0.1, P=12.5k single
-    length: gram 1.35 s ≈ AC 1.2 s), while ≥ _AC_DECON_MIN_LENGTHS
-    distinct short lengths or > _AC_DECON_MAX_OVERLONG overlong
-    phrases route to AC (measured sf0.1, P=10k over 8 lengths: gram
-    3.1–3.7 s vs AC 1.0–2.4 s). Both paths are row-identical
-    (parity-pinned); auto additionally requires
-    [_AC_DECON_MIN_PHRASES, _AC_DECON_MAX_PHRASES] distinct phrases
-    (below, automaton build cost isn't worth it; above, the per-task
-    trie memory is).
+    Planning is the one token-phrase hit planner, shared with the
+    search tails and streaming_contamination_hits: _phrase_route
+    picks the route, _phrase_hits builds the hits, and the contaminated
+    ids are their distinct doc ids. ``method``: ``"auto"`` (default)
+    takes the one route rule (_route_rule, fitted by
+    tools/phrase_route_ab.py): the windowed scan predicate for a
+    handful of phrases; past it, at slop 0 with the default tokenizer,
+    one Aho-Corasick pass (operators.multipattern — per-doc cost
+    independent of the phrase count and the length mix, the phrases
+    compiled into a per-task automaton, up to _AC_MAX_PHRASES); else
+    the gram plan (_gram_phrase_hits: short-gram join, overlong
+    ``contains``, slop scan hatch — see there). ``"gram"`` and
+    ``"ac"`` force those routes (``"ac"`` needs slop=0 and the default
+    tokenizer and at most _AC_MAX_PHRASES distinct phrases; it raises
+    otherwise). Every route is row-identical (parity-pinned). Driver
+    jobs: one bounded phrase collect for ``"auto"`` and ``"ac"`` (a
+    distinct-length collect for ``"gram"``, and for ``"auto"`` past
+    the automaton bound).
 
     100 TB plan shape: eval phrases → distinct (L, token-array) grams
     (broadcast by default — eval sets are small; pass
@@ -1109,28 +1165,25 @@ def decontaminate_by_ngrams(
     """
     if mode not in ("drop", "flag"):
         raise ValueError(f"mode must be 'drop' or 'flag', got {mode!r}")
+    _check_method(method, ("auto", "ac", "gram"))
     evg = eval_gram_table(eval_df, phrase_col, tokenizer)
-    lengths, ac_phrases = _phrase_route(evg, method, slop, tokenizer)
-    if not lengths:
+    plan = _phrase_route(evg, method, slop, tokenizer)
+    if not plan.lengths:
         # nothing to match (empty/blank eval set)
         if mode == "drop":
             return train
         return train.withColumn(flag_col, F.lit(False))
-    docs = train.select(id_col, text_col)
-    if ac_phrases is not None:
-        from wimbd_spark.operators.multipattern import matching_doc_ids_ac
-
-        hits = matching_doc_ids_ac(
-            docs, ac_phrases, id_col=id_col, text_col=text_col
-        )
-    else:
-        hits = _gram_phrase_hits(
-            docs, evg, lengths, text_col, tokenizer, slop, broadcast_eval
-        ).select(id_col)
     # distinct: with duplicate ids in train, a bare left join in flag
     # mode would fan out rows (and break the row-identical parity
-    # between the AC and gram routes, r11 ADVICE)
-    hits = hits.distinct()
+    # between the routes, r11 ADVICE)
+    hits = (
+        _phrase_hits(
+            train.select(id_col, text_col), plan, text_col, "doc",
+            broadcast_eval,
+        )
+        .select(id_col)
+        .distinct()
+    )
     if mode == "drop":
         return train.join(hits, id_col, "left_anti")
     return (
@@ -1250,13 +1303,11 @@ def contamination_rate_ngrams(
         "phrase", F.array_join(tok(F.col("_p")), " ")
     )
     evg = eval_gram_table(eval_df, phrase_col, tokenizer)
-    lengths, _ = _phrase_route(evg, "gram", slop, tokenizer)
-    if not lengths:
+    plan = _phrase_route(evg, "gram", slop, tokenizer)
+    if not plan.lengths:
         # nothing tokenizes: every phrase counts, none can hit
         return _rate_of(phrases, phrases.select("phrase").limit(0))
-    hits = _gram_phrase_hits(
-        corpus.select(text_col), evg, lengths, text_col, tokenizer, slop
-    )
+    hits = _phrase_hits(corpus.select(text_col), plan, text_col, "occurrence")
     return _rate_of(phrases, hits.select("phrase"))
 
 

@@ -1,35 +1,27 @@
-"""Aho-Corasick multi-pattern phrase counting — the many-phrase scale
-path.
+"""Aho-Corasick multi-pattern phrase matching — the automaton route
+of the token-phrase hit function (operators.dedup._phrase_hits).
 
-The engine answers per-phrase doc counts two ways already: the scan
-batch (search.count_documents_for_each_phrase — ONE corpus pass, but
-each document's token array is probed once PER PHRASE, so per-doc cost
-and plan size grow linearly in the phrase count) and the postings
-batch (index.count_documents_for_each_phrase_indexed — constant plan,
-needs a prebuilt index). The reference's ES tier pays the scan shape
-through 500-query msearch chunks (wimbd/es/__init__.py:308-344). At
-eval-decontamination scale — tens of thousands of phrases, no index —
-the right tool is a multi-pattern automaton (Aho & Corasick 1975):
-build the trie + failure links ONCE (O(total pattern chars)), stream
-each document through it once (O(doc chars + matches)) — per-document
-cost independent of the phrase count.
+A multi-pattern automaton (Aho & Corasick 1975) is built ONCE per
+phrase set (O(total pattern chars)) and streams each document through
+it once (O(doc chars + matches)): per-document cost independent of
+the phrase count and of the phrase-length mix. The search tails,
+n-gram decontamination and the streaming audit take this route where
+dedup._route_rule picks it (slop 0, the canonical tokenizer, past a
+handful of phrases); the crossover against the predicate scan and the
+gram join is measured by tools/phrase_route_ab.py (SCALE.md).
 
 Token alignment: the canonical tokenizer is whitespace split, so
 "phrase tokens appear consecutively" is EXACTLY "' phrase '" being a
 substring of "' ' + ' '.join(tokens) + ' '". Tokenization stays
 JVM-side (the same `tokenize` every other operator uses — no Python
 re-implementation to drift); Python only joins the tokens and walks
-the automaton. Row-identity with the scan batch is test-pinned.
+the automaton, behind a C-speed trie-regex prefilter. Row-identity
+with the gram join and the scan is test-pinned.
 
-Plan shape: iterator mapInPandas emits per-PARTITION partial
-(pattern_id, n_docs) counts — the shuffle carries at most
-partitions × P tiny rows (the bounded-summary convention of
-heavyhitters.py), never per-document rows; a final groupBy sums, and a
-broadcast join against the pattern table restores zero-count phrases.
-The automaton is built once per partition from the closure-shipped
-pattern list. Pure-Python walking runs ~10-50 MB/s/core; the crossover
-vs the JVM per-phrase conditional aggregates is measured in SCALE.md
-(the automaton wins once P is in the hundreds).
+Plan shape: one stateless mapInPandas emits hit rows (doc columns +
+phrase) at the grain the caller asks for; the automaton is built once
+per Python worker from the closure-shipped pattern list and cached
+(``_MATCHER_CACHE``). Pure-Python walking runs ~10-50 MB/s/core.
 """
 
 from __future__ import annotations
@@ -41,7 +33,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from wimbd_spark.functions.text import tokenize
-from wimbd_spark.session import local_frame
 
 
 def _build_automaton(patterns: list[str]):
@@ -174,155 +165,39 @@ def _matched_ids(text: str, goto, fail, out) -> set:
     return hits
 
 
-def count_documents_for_each_phrase_ac(
-    df: DataFrame,
-    phrases: list[str],
-    text_col: str = "text",
-) -> DataFrame:
-    """Per-phrase document counts → (phrase, count), row-identical to
-    ``search.count_documents_for_each_phrase(phrases)`` (token-aligned,
-    slop=0) — one automaton pass per document instead of one predicate
-    per phrase."""
-    if not phrases:
-        raise ValueError("phrases must be non-empty")
-    # analyze each phrase with the engine's query convention
-    # (whitespace split, drop empties), space-pad for token alignment
-    analyzed = [" ".join(p.split()) for p in phrases]
-    if any(not a for a in analyzed):
-        raise ValueError("every phrase must contain >= 1 token")
-    pats = [f" {a} " for a in analyzed]
-
-    toks = df.filter(F.col(text_col).isNotNull()).select(
-        tokenize(F.col(text_col)).alias("toks")
-    )
-
-    def gen(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        rx = _compiled(pats, "regex")
-        goto, fail, out = _compiled(pats, "automaton")
-        c: Counter = Counter()
-        for pdf in batches:
-            for arr in pdf["toks"]:
-                if arr is None or len(arr) == 0:
-                    continue
-                padded = " " + " ".join(arr) + " "
-                # C-speed prefilter: the exact (all-matches) walk only
-                # runs on docs the regex proves contain >= 1 pattern
-                if rx.search(padded) is None:
-                    continue
-                for pid in _matched_ids(padded, goto, fail, out):
-                    c[pid] += 1
-        if c:
-            yield pd.DataFrame(
-                {"pid": list(c.keys()), "n": list(c.values())}
-            )
-
-    partial = toks.mapInPandas(gen, "pid long, n long")
-    totals = partial.groupBy("pid").agg(F.sum("n").alias("count"))
-    names = local_frame(
-        df.sparkSession,
-        [(i, p) for i, p in enumerate(phrases)],
-        "pid long, phrase string",
-    )
-    return (
-        F.broadcast(names)
-        .join(totals, "pid", "left")
-        .select(
-            "phrase",
-            F.coalesce(F.col("count"), F.lit(0)).cast("long").alias("count"),
-        )
-        .orderBy("phrase")
-    )
-
-
-def matching_doc_ids_ac(
-    df: DataFrame,
-    phrases: list[str],
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    all_phrases: bool = False,
-) -> DataFrame:
-    """Ids of documents containing ANY (or, with ``all_phrases``,
-    EVERY) phrase — the automaton form of the OR-of-contains
-    predicate, for phrase lists too large to compile into a plan.
-    Returns a (id_col) DataFrame to LEFT SEMI join against the corpus
-    (`search.get_documents_containing_phrases(method="ac")` does
-    exactly that); per-doc cost independent of the phrase count."""
-    if not phrases:
-        raise ValueError("phrases must be non-empty")
-    analyzed = [" ".join(p.split()) for p in phrases]
-    if any(not a for a in analyzed):
-        raise ValueError("every phrase must contain >= 1 token")
-    pats = [f" {a} " for a in analyzed]
-    need = len(set(pats)) if all_phrases else 1
-
-    toks = df.filter(F.col(text_col).isNotNull()).select(
-        F.col(id_col).alias("__id"),
-        tokenize(F.col(text_col)).alias("toks"),
-    )
-
-    def gen(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        rx = _compiled(pats, "regex")
-        if all_phrases:
-            goto, fail, out = _compiled(pats, "automaton")
-        for pdf in batches:
-            ids = []
-            for i, arr in zip(pdf["__id"], pdf["toks"]):
-                if arr is None or len(arr) == 0:
-                    continue
-                padded = " " + " ".join(arr) + " "
-                if all_phrases:
-                    # C-speed prefilter, then the exact all-matches
-                    # walk; count distinct PATTERN STRINGS matched
-                    # (dup phrases in the input list count once)
-                    if rx.search(padded) is None:
-                        continue
-                    hit = _matched_ids(padded, goto, fail, out)
-                    if len({pats[p] for p in hit}) >= need:
-                        ids.append(i)
-                elif rx.search(padded) is not None:
-                    # ANY-mode is pure existence: the trie regex IS
-                    # the walk (measured 6-7x the per-char automaton)
-                    ids.append(i)
-            if ids:
-                yield pd.DataFrame({"__id": ids})
-
-    schema = toks.select("__id").schema
-    return toks.mapInPandas(gen, schema).withColumnRenamed(
-        "__id", id_col
-    )
-
-
 def phrase_hits_ac(
     df: DataFrame,
     phrases: list[str],
     text_col: str = "text",
+    grain: str = "occurrence",
 ) -> DataFrame:
-    """Per-OCCURRENCE phrase hits: one output row per (doc, phrase
-    occurrence) carrying the doc's columns (minus ``text_col``) plus
-    ``phrase`` — the automaton form of the gram hit plan
-    (operators.dedup._gram_phrase_hits; the shared route,
-    dedup._phrase_route, sends streaming.streaming_contamination_hits
-    here), row-multiset-identical to it: ``_matched_counts`` counts every
-    end-state visit, which is exactly the number of gram positions the
-    explode emits, overlapping occurrences included. Phrases LONGER
-    than GRAM_JOIN_MAX_PHRASE_TOKENS are capped at ONE row per doc —
-    the gram path matches those via a contains EXISTENCE join (one
-    row per (doc, phrase), however many occurrences), and the parity
-    contract follows the gram semantics (r11 ADVICE: method='auto'
-    flips routes on phrase-set shape, so the audit row multiset must
-    not depend on the route). Works on batch AND streaming DataFrames
-    (stateless mapInPandas)."""
+    """Phrase hits by one automaton pass: rows carrying the doc's
+    columns (minus ``text_col``) plus ``phrase`` (its space-joined
+    tokens) — the AC route of the token-phrase hit function
+    (operators.dedup._phrase_hits). ``grain`` picks the rows:
+
+    - "occurrence": one row per (doc, phrase occurrence),
+      row-multiset-identical to the gram hit plan
+      (dedup._gram_phrase_hits) that streaming_contamination_hits
+      also runs: ``_matched_counts`` counts every end-state visit,
+      which is exactly the number of gram positions the explode
+      emits, overlapping occurrences included. Phrases LONGER than
+      GRAM_JOIN_MAX_PHRASE_TOKENS are capped at ONE row per doc — the
+      gram path matches those via a contains EXISTENCE join, and the
+      audit row multiset must not depend on the route (r11 ADVICE);
+    - "phrase": one row per (doc, distinct matching phrase);
+    - "doc": one row per matching doc, naming the leftmost match —
+      the trie regex alone decides it, no per-char walk.
+
+    Works on batch AND streaming DataFrames (stateless mapInPandas)."""
     if not phrases:
         raise ValueError("phrases must be non-empty")
+    if grain not in ("occurrence", "phrase", "doc"):
+        raise ValueError(f"unknown grain {grain!r}")
     analyzed = [" ".join(p.split()) for p in phrases]
     if any(not a for a in analyzed):
         raise ValueError("every phrase must contain >= 1 token")
     pats = [f" {a} " for a in analyzed]
-    names = [p.strip() for p in pats]
     from wimbd_spark.index import GRAM_JOIN_MAX_PHRASE_TOKENS
 
     overlong = [
@@ -337,32 +212,37 @@ def phrase_hits_ac(
         "phrase", F.lit("")
     ).schema
 
+    def doc_hits(padded: str, rx, automaton) -> list[tuple[str, int]]:
+        """(phrase, rows) pairs of one padded doc."""
+        m = rx.search(padded)
+        if m is None:
+            return []
+        if grain == "doc":
+            return [(m.group(0).strip(), 1)]
+        if grain == "phrase":
+            hit = {analyzed[p] for p in _matched_ids(padded, *automaton)}
+            return [(a, 1) for a in hit]
+        return [
+            (analyzed[p], 1 if overlong[p] else n)
+            for p, n in _matched_counts(padded, *automaton).items()
+        ]
+
     def gen(batches: Iterator) -> Iterator:
         rx = _compiled(pats, "regex")
-        goto, fail, out = _compiled(pats, "automaton")
+        automaton = None if grain == "doc" else _compiled(pats, "automaton")
         for pdf in batches:
-            rows = {c: [] for c in keep}
-            ph: list = []
-            for idx in range(len(pdf)):
-                arr = pdf["__toks"].iloc[idx]
+            at: list[int] = []  # the batch row of each hit row
+            ph: list[str] = []
+            for idx, arr in enumerate(pdf["__toks"]):
                 if arr is None or len(arr) == 0:
                     continue
                 padded = " " + " ".join(arr) + " "
-                if rx.search(padded) is None:
-                    continue
-                for pid, cnt in _matched_counts(
-                    padded, goto, fail, out
-                ).items():
-                    if overlong[pid]:
-                        cnt = 1  # gram path = contains existence join
-                    for _ in range(cnt):
-                        for c in keep:
-                            rows[c].append(pdf[c].iloc[idx])
-                        ph.append(names[pid])
+                for name, n in doc_hits(padded, rx, automaton):
+                    at += [idx] * n
+                    ph += [name] * n
             if ph:
-                import pandas as pd
-
-                rows["phrase"] = ph
-                yield pd.DataFrame(rows)
+                yield pdf[keep].iloc[at].reset_index(drop=True).assign(
+                    phrase=ph
+                )
 
     return toks.mapInPandas(gen, out_schema)

@@ -24,10 +24,18 @@ Semantics notes:
 - The c4 implicit `subset=="en"` filter (:170-181) generalizes to
   ``filters={col: value}``.
 
-Scale: phrase lists are tiny → every phrase predicate is a pure Column
-expression evaluated in one corpus scan; no join, no shuffle for
-counts (aggregate only). Per-phrase counts build one boolean aggregate
-per phrase over a single scan.
+Plan: the token-aligned entry points are thin tails over ONE
+token-phrase hit function, operators.dedup._phrase_hits, the planner
+n-gram decontamination also runs. Its route rule
+(operators.dedup._route_rule) reads the per-length phrase counts off
+the driver-side phrase list — no Spark job at construction — and picks
+the predicate scan for a handful of phrases, else the Aho-Corasick
+automaton (slop 0) or the gram join against the broadcast phrase set,
+both flat in the phrase count. Per-phrase counts are distinct docs per
+phrase, AND-groups keep the docs holding every phrase of the group,
+and retrieval semi-joins the docs on the hit ids or, on the scan,
+filters with the compiled predicate. ``is_regexp`` and
+``token_aligned=False`` stay predicates.
 """
 
 from __future__ import annotations
@@ -160,6 +168,47 @@ def apply_filters(df: DataFrame, filters: dict[str, str] | None) -> DataFrame:
         df = df.filter(F.col(col) == val)
     return df
 
+def _matching_keys(
+    docs: DataFrame,
+    phrases: list[str],
+    all_phrases: bool,
+    slop: int,
+    method: str,
+    key: str,
+    text_col: str,
+) -> DataFrame | None:
+    """The ``key`` values of the rows of ``docs`` holding ANY (or,
+    with ``all_phrases``, every) token-aligned phrase, read off the
+    token-phrase hits (operators.dedup._phrase_hits); None where the
+    planner picks the scan, or where no row can match (a phrase
+    without a token matches nothing) — callers then filter with
+    build_phrase_predicate. ``method`` is a planner method. ALL-mode
+    groups the hits by row (a synthesized row id), so a row must
+    hold every phrase itself."""
+    from wimbd_spark.operators.dedup import _phrase_hits, _phrase_route
+
+    analyzed = {" ".join(analyze_phrase(p)) for p in phrases}
+    plan = _phrase_route(sorted(analyzed), method, slop, None)
+    if plan.route == "scan" or not plan.lengths or (
+        all_phrases and "" in analyzed
+    ):
+        return None
+    if not all_phrases:
+        return _phrase_hits(
+            docs.select(key, text_col), plan, text_col, "doc"
+        ).select(key)
+    rows = docs.select(
+        key, F.monotonically_increasing_id().alias("_rid"), text_col
+    )
+    return (
+        _phrase_hits(rows, plan, text_col)
+        .groupBy("_rid", key)
+        .count()
+        .filter(F.col("count") == len(analyzed))
+        .select(key)
+    )
+
+
 def count_documents_containing_phrases(
     df: DataFrame,
     phrases: list[str],
@@ -170,11 +219,15 @@ def count_documents_containing_phrases(
     text_col: str = "text",
     token_aligned: bool = True,
 ) -> int:
-    """Count docs matching the phrase query (ES es.count parity)."""
-    pred = build_phrase_predicate(
-        phrases, text_col, all_phrases, slop, is_regexp, token_aligned
-    )
-    return apply_filters(df, filters).filter(pred).count()
+    """Count docs matching the phrase query (ES es.count parity): the
+    rows get_documents_containing_phrases retrieves, keyed by a
+    synthesized row id so that repeated ids count as the rows they
+    are."""
+    rows = df.withColumn("_row", F.monotonically_increasing_id())
+    return get_documents_containing_phrases(
+        rows, phrases, None, all_phrases, slop, is_regexp, filters,
+        text_col=text_col, token_aligned=token_aligned, id_col="_row",
+    ).count()
 
 
 def get_documents_containing_phrases(
@@ -195,70 +248,50 @@ def get_documents_containing_phrases(
     (≙ the PIT + search_after pagination loop, which Spark replaces
     with plain partition streaming via toLocalIterator).
 
-    ``method``: ``"pred"`` = the compiled OR/AND predicate (plan size
-    grows with the phrase count); ``"ac"`` = the Aho-Corasick pass
-    (operators.multipattern.matching_doc_ids_ac + LEFT SEMI join —
-    per-doc cost independent of the phrase count; needs ``id_col``);
-    ``"auto"`` routes plain token-aligned slop=0 batches of ≥ 32
-    phrases to the automaton when ``id_col`` exists, like the
-    counting batch. Anything else (slop>0, regexp, AND-groups over
-    non-strings) raises under ``"ac"`` and routes to the predicate
-    under ``"auto"`` — the fast path never silently changes
-    semantics.
+    ``method``: ``"auto"`` (default) takes the token-phrase planner's
+    route (operators.dedup._route_rule: the predicate scan for a
+    handful of phrases, else the Aho-Corasick automaton at slop 0 or
+    the gram join); ``"ac"`` forces the automaton; ``"pred"`` forces
+    the scan. On the automaton and gram routes the matching docs are
+    a LEFT SEMI join on the hit ids (``id_col``); on the scan, a
+    plain filter with the compiled predicate (build_phrase_predicate).
+    ``is_regexp``, ``token_aligned=False`` and a frame without
+    ``id_col`` always filter, and ``method="ac"`` raises on them (and
+    on slop>0) — the fast path never silently changes semantics. A
+    phrase without a token matches nothing on every route.
 
-    The ``"ac"`` path assumes ``id_col`` uniquely identifies rows:
-    match resolution is a LEFT SEMI join on ``id_col``, so a
-    non-matching row sharing an id with a matching row would also be
-    returned (the predicate path has no such divergence). Pass a
-    row-unique id or use ``method="pred"`` when ids can repeat."""
-    if method not in ("auto", "ac", "pred"):
+    The semi-join assumes ``id_col`` uniquely identifies rows: a
+    non-matching row sharing an id with a matching row is returned
+    too (the scan has no such divergence). Pass a row-unique id or
+    ``method="pred"`` when ids can repeat."""
+    from wimbd_spark.operators.dedup import _check_method
+
+    _check_method(method, ("auto", "ac", "pred"))
+    base = apply_filters(df, filters)
+    keys = None
+    if token_aligned and not is_regexp and id_col in base.columns:
+        keys = _matching_keys(
+            base, phrases, all_phrases, slop,
+            "scan" if method == "pred" else method, id_col, text_col,
+        )
+    elif method == "ac":
         raise ValueError(
-            f"unknown method {method!r}: expected 'auto', 'ac' or "
-            "'pred'"
+            "method='ac' needs token_aligned=True, is_regexp=False and "
+            f"an existing id column ({id_col!r})"
         )
-    ac_eligible = (
-        token_aligned
-        and slop == 0
-        and not is_regexp
-        and bool(phrases)
-        and all(isinstance(p, str) for p in phrases)
-        and id_col in df.columns
-    )
-    if method == "ac" or (
-        method == "auto"
-        and ac_eligible
-        and len(phrases) >= _AC_MIN_PHRASES
-    ):
-        if not ac_eligible:
-            raise ValueError(
-                "method='ac' needs plain string phrases, "
-                "token_aligned=True, slop=0, is_regexp=False, and an "
-                f"existing id column ({id_col!r})"
-            )
-        from wimbd_spark.operators.multipattern import (
-            matching_doc_ids_ac,
-        )
-
-        base = apply_filters(df, filters)
-        ids = matching_doc_ids_ac(
-            base, phrases, id_col=id_col, text_col=text_col,
-            all_phrases=all_phrases,
-        )
-        out = base.join(ids, id_col, "left_semi")
+    if keys is not None:
+        out = base.join(keys, id_col, "left_semi")
     else:
         pred = build_phrase_predicate(
             phrases, text_col, all_phrases, slop, is_regexp,
             token_aligned,
         )
-        out = apply_filters(df, filters).filter(pred)
+        out = base.filter(pred)
     if sort_field:
         out = out.orderBy(F.col(sort_field).asc())
     if num_documents is not None:
         out = out.limit(num_documents)
     return out
-
-
-_AC_MIN_PHRASES = 32  # measured crossover is ~tens of phrases (SCALE.md)
 
 
 def count_documents_for_each_phrase(
@@ -270,83 +303,107 @@ def count_documents_for_each_phrase(
     token_aligned: bool = True,
     method: str = "auto",
 ) -> DataFrame:
-    """Per-phrase (or per AND-group) doc counts → (phrase, count).
+    """Per-phrase (or per AND-group) doc counts → (phrase, count),
+    one row per input element, ordered by name (an AND-group is named
+    "a AND b"), zero-filled like ES reports.
 
     The reference batches 500 ES msearch count queries per round trip
-    (:308-344); here every phrase is one conditional-count aggregate
-    over a SINGLE corpus scan — no batching protocol at any corpus
-    size, and no shuffle (final agg of partial counts only).
+    (:308-344); here the whole batch is one plan at any corpus size:
+    the token-phrase hits (operators.dedup._phrase_hits) give one row
+    per (doc, matching phrase); an AND-group keeps the docs whose
+    hits hold every phrase of the group; the count is docs per
+    element.
 
-    ``method``: ``"agg"`` = the per-phrase conditional aggregates
-    (per-doc cost and plan size grow with the phrase count);
-    ``"ac"`` = the Aho-Corasick automaton pass
-    (operators.multipattern — per-doc cost independent of the phrase
-    count; row-identical, pinned); ``"auto"`` (default) routes plain
-    token-aligned slop=0 string batches of ≥ 32 phrases to the
-    automaton (measured at sf0.1: agg 16 s / 142 s at P=100 / 1000 vs
-    a FLAT ~1.5 s for the automaton — SCALE.md) and everything else
-    (AND-groups, slop, regexp-ish, substring mode) to the aggregates.
-    ``method="ac"`` with an ineligible query (slop>0, AND-groups)
-    raises rather than silently degrading.
+    ``method``: ``"auto"`` (default) takes the planner's route
+    (operators.dedup._route_rule: the predicate scan for a handful of
+    phrases, else the Aho-Corasick automaton at slop 0 or the gram
+    join, both flat in the phrase count); ``"ac"`` forces the
+    automaton (raises with slop>0 or ``token_aligned=False``);
+    ``"agg"`` forces the scan. Row-identical on every route (pinned).
+    A phrase without a token counts 0 on every route.
+    ``token_aligned=False`` counts raw substring ``contains`` with one
+    predicate per element over the same scan.
     """
-    if method not in ("auto", "ac", "agg"):
-        raise ValueError(
-            f"unknown method {method!r}: expected 'auto', 'ac' or "
-            "'agg'"
-        )
-    ac_eligible = (
-        token_aligned
-        and slop == 0
-        and bool(phrases)
-        and all(isinstance(p, str) for p in phrases)
+    from wimbd_spark.operators.dedup import (
+        _check_method,
+        _phrase_hits,
+        _phrase_route,
     )
-    if method == "ac" or (
-        method == "auto"
-        and ac_eligible
-        and len(phrases) >= _AC_MIN_PHRASES
-    ):
-        if not ac_eligible:
-            raise ValueError(
-                "method='ac' needs plain string phrases, "
-                "token_aligned=True, slop=0"
-            )
-        from wimbd_spark.operators.multipattern import (
-            count_documents_for_each_phrase_ac,
-        )
 
-        return count_documents_for_each_phrase_ac(
-            apply_filters(df, filters), phrases, text_col=text_col
-        )
-    out = apply_filters(df, filters)
-    # Tokenize once for all phrases (projected column, not re-derived
-    # inside each predicate).
-    out = out.select(
-        F.col(text_col), tokenize(F.col(text_col)).alias("_toks")
+    _check_method(method, ("auto", "ac", "agg"))
+    if not phrases:
+        raise ValueError("phrases must be non-empty")
+    groups = [p if isinstance(p, list) else [p] for p in phrases]
+    names = [" AND ".join(g) for g in groups]
+    rows = apply_filters(df, filters).select(
+        F.monotonically_increasing_id().alias("_rid"), text_col
     )
-    aggs, names = [], []
-    for i, p in enumerate(phrases):
-        group = p if isinstance(p, list) else [p]
-        pred = build_phrase_predicate(
-            group,
-            text_col,
-            True,
-            slop,
-            False,
-            token_aligned,
-            tokens=F.col("_toks"),
-        )
-        names.append(" AND ".join(group))
-        aggs.append(F.count_if(pred).alias(f"_c{i}"))
-    row = out.agg(*aggs)
-    pairs = F.array(
-        *[
-            F.struct(F.lit(n).alias("phrase"), F.col(f"_c{i}").alias("count"))
-            for i, n in enumerate(names)
+    if token_aligned:
+        keyed = [{" ".join(analyze_phrase(p)) for p in g} for g in groups]
+        # (phrase, element, phrases the element needs); an element
+        # holding a blank phrase can never match
+        member = [
+            (k, i, names[i], len(g))
+            for i, g in enumerate(keyed)
+            if "" not in g
+            for k in g
         ]
-    )
+        plan = _phrase_route(
+            [k for k, *_ in member], "scan" if method == "agg" else method,
+            slop, None,
+        )
+        matched = None
+        if plan.lengths:
+            matched = _phrase_hits(rows, plan, text_col).join(
+                F.broadcast(
+                    local_frame(
+                        df.sparkSession, member,
+                        "phrase string, _gid long, _name string, "
+                        "_need int",
+                    )
+                ),
+                "phrase",
+            )
+            if any(len(g) > 1 for g in keyed):
+                matched = (
+                    matched.groupBy("_gid", "_name", "_need", "_rid")
+                    .count()
+                    .filter(F.col("count") == F.col("_need"))
+                )
+            matched = matched.select("_rid", "_gid", "_name")
+    elif method == "ac":
+        raise ValueError("method='ac' needs token_aligned=True")
+    else:
+        hit = F.filter(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(i).cast("long").alias("_gid"),
+                        F.lit(names[i]).alias("_name"),
+                        build_phrase_predicate(
+                            g, text_col, True, token_aligned=False
+                        ).alias("_m"),
+                    )
+                    for i, g in enumerate(groups)
+                ]
+            ),
+            lambda m: m["_m"],
+        )
+        matched = rows.select("_rid", F.explode(hit).alias("_h")).select(
+            "_rid", "_h._gid", "_h._name"
+        )
+    counted = local_frame(
+        df.sparkSession,
+        [(None, i, n) for i, n in enumerate(names)],
+        "_rid long, _gid long, _name string",
+    )  # the zero fill: a NULL row id counts no doc
+    if matched is not None:
+        counted = matched.unionByName(counted)
     return (
-        row.select(F.explode(pairs).alias("p"))
-        .select("p.phrase", "p.count")
+        counted.groupBy("_gid", "_name")
+        .agg(F.count("_rid").alias("count"))
+        .select(F.col("_name").alias("phrase"), "count")
+        .coalesce(1)  # one row per element: sort it with no exchange
         .orderBy("phrase")
     )
 

@@ -17,9 +17,9 @@ State/scale notes:
   hash list broadcasts once per micro-batch plan, the stream never
   shuffles.
 - n-gram contamination hits are planned by operators.dedup, the one
-  token-phrase planner (_phrase_route + _gram_phrase_hits) that
-  decontaminate_by_ngrams also uses; its eval side, eval_gram_table,
-  is re-exported from wimbd_spark.streaming.
+  token-phrase planner (_phrase_route + _phrase_hits) that
+  decontaminate_by_ngrams and the search tails also use; its eval
+  side, eval_gram_table, is re-exported from wimbd_spark.streaming.
 """
 
 from __future__ import annotations
@@ -246,31 +246,32 @@ def streaming_contamination_hits(
 
     ``eval_grams`` is the static eval side (eval_gram_table). Route
     and plan are decontaminate_by_ngrams' own (operators.dedup
-    _phrase_route + _gram_phrase_hits, same ``method``/``slop``/
+    _phrase_route + _phrase_hits, same ``method``/``slop``/
     ``tokenizer`` contract): the route's driver collects run once at
     STREAM SETUP; each micro-batch then runs either the Aho-Corasick
     occurrence-counting pass (multipattern.phrase_hits_ac) or the
     gram plan — map-side explode inner-joined on the broadcast grams,
-    overlong ``contains``, slop scan hatch. No watermark, no state
-    store: composes anywhere in a stateless gate chain. Both routes
-    give the same row MULTISET: one row per occurrence of a phrase
+    overlong ``contains``, slop scan hatch. A set the rule sends to
+    the scan runs on the gram plan here, which keeps occurrence rows.
+    No watermark, no state store: composes anywhere in a stateless
+    gate chain. Both routes give the same row MULTISET: one row per
+    occurrence of a phrase
     within GRAM_JOIN_MAX_PHRASE_TOKENS (overlaps included; ``slop>0``
     keys may emit several rows per window hit), ONE row per (doc,
     phrase) for overlong and scan-routed phrases. Raises on an empty
     eval set.
     """
-    from wimbd_spark.operators.dedup import _gram_phrase_hits, _phrase_route
-
-    lengths, ac_phrases = _phrase_route(eval_grams, method, slop, tokenizer)
-    if not lengths:
-        raise ValueError("eval_grams is empty — nothing to match")
-    if ac_phrases is not None:
-        from wimbd_spark.operators.multipattern import phrase_hits_ac
-
-        return phrase_hits_ac(docs, ac_phrases, text_col=text_col)
-    return _gram_phrase_hits(
-        docs, eval_grams, lengths, text_col, tokenizer, slop
+    from wimbd_spark.operators.dedup import (
+        _check_method,
+        _phrase_hits,
+        _phrase_route,
     )
+
+    _check_method(method, ("auto", "ac", "gram"))
+    plan = _phrase_route(eval_grams, method, slop, tokenizer)
+    if not plan.lengths:
+        raise ValueError("eval_grams is empty — nothing to match")
+    return _phrase_hits(docs, plan, text_col, "occurrence")
 
 
 def streaming_decontaminate_by_ngrams(
