@@ -51,13 +51,11 @@ JOB_BUDGET = {
     "bloom_decontaminate_src0": (3, 1),
     "contamination_rate_indexed": (12, 1),
     # search and index-free decontamination (the token-phrase hit
-    # planner's callers; not in a benchmark workload). Three and two
-    # phrases take the automaton and its count or semi-join tail,
-    # which run one job more than the predicate scan they replaced.
-    "phrase_doc_counts": (0, 3),
-    "phrase_ac_counts": (0, 3),
+    # planner's callers; not in a benchmark workload)
+    "phrase_doc_counts": (0, 2),
+    "phrase_ac_counts": (0, 2),
     "phrase_retrieval_top10": (0, 1),
-    "phrase_retrieval_allhits": (0, 2),
+    "phrase_retrieval_allhits": (0, 1),
     "phrase_slop_count": (0, 2),
     "phrase_count_filtered": (0, 2),
     "phrase_hits_ac": (0, 1),

@@ -66,9 +66,8 @@ def test_auto_routing_and_validation(spark):
     def plan(q):
         return q._jdf.queryExecution().executedPlan().toString()
 
-    # auto past the scan's handful of phrases routes slop-0 batches to
-    # the automaton — AND-groups included: the plan holds the Python
-    # map stage, not 40 predicates
+    # auto routes slop-0 batches to the automaton — AND-groups
+    # included: the plan holds the Python map stage, not 40 predicates
     assert "MapInPandas" in plan(count_documents_for_each_phrase(df, many))
     assert "MapInPandas" in plan(
         count_documents_for_each_phrase(df, [["a", "b"]] * 40)

@@ -113,8 +113,11 @@ def route_corpus(spark):
         (7, "I like I like apples apples"),
         (7, "no match here"),  # a repeated id
         (8, f"{_LONG} I like"),
+        (9, "I like apples"),  # the text of another row
+        (9, "I like apples"),  # a duplicate row
     ]
-    return local_frame(spark, rows, "doc_id long, text string")
+    # spread over partitions by a shuffle, like a rebalanced table
+    return local_frame(spark, rows, "doc_id long, text string").repartition(3)
 
 
 _ELEMENTS = [
@@ -141,12 +144,10 @@ def test_search_rows_agree_on_every_route(
     spark, route_corpus, monkeypatch, route, slop
 ):
     """Every search entry point gives the predicate's rows on every
-    route the planner can take (forced through the one rule): AND
-    groups (one across the gram plan's overlong branch, which pins
-    that the synthesized row id agrees across branches), NULL text, a
-    blank phrase, a repeated id and a duplicate phrase. Retrieval off
-    the scan semi-joins on the hit ids, so a row sharing an id with a
-    matching row comes back too (documented)."""
+    route the planner can take (forced through the one rule), on a
+    shuffled input: AND groups (one across the gram plan's overlong
+    branch), NULL text, a blank phrase, a repeated id, rows sharing a
+    text, a duplicate row and a duplicate phrase."""
     import wimbd_spark.operators.dedup as dd
 
     if route == "ac" and slop:
@@ -174,8 +175,6 @@ def test_search_rows_agree_on_every_route(
             assert count_documents_containing_phrases(
                 df, phrases, all_phrases=all_p, slop=slop
             ) == match.count()
-            if route != "scan":
-                match = df.join(match.select("doc_id"), "doc_id", "left_semi")
             assert sorted(
                 map(
                     tuple,
@@ -185,6 +184,35 @@ def test_search_rows_agree_on_every_route(
                     ).collect(),
                 )
             ) == sorted(map(tuple, match.collect())), (phrases, all_p)
+            # a top-k takes k of those rows (the automaton stops each
+            # partition's walk at k hits)
+            top = get_documents_containing_phrases(
+                df, phrases, num_documents=2, all_phrases=all_p, slop=slop
+            ).collect()
+            assert len(top) == min(2, match.count())
+            assert set(map(tuple, top)) <= set(map(tuple, match.collect()))
+
+
+def test_substring_counts_per_element(spark, route_corpus):
+    """token_aligned=False counts each element's substring matches,
+    duplicate elements included."""
+    elements = ["like I", "like I", ["I", "apples"], "zzz"]
+    got = count_documents_for_each_phrase(
+        route_corpus, elements, token_aligned=False
+    ).collect()
+    want = sorted(
+        (
+            " AND ".join(g) if isinstance(g, list) else g,
+            route_corpus.filter(
+                build_phrase_predicate(
+                    g if isinstance(g, list) else [g], all_phrases=True,
+                    token_aligned=False,
+                )
+            ).count(),
+        )
+        for g in elements
+    )
+    assert sorted(map(tuple, got)) == want
 
 
 def test_blank_phrase_matches_nothing_past_the_scan(spark, route_corpus):

@@ -2,29 +2,36 @@
 """A/B of the token-phrase hit routes: predicate scan, Aho-Corasick
 automaton and gram join, per phrase count and slop.
 
-Two consumers of the one planner (``operators.dedup._phrase_route`` +
-``_phrase_hits``) are timed: the per-phrase count tail
-(``search.count_documents_for_each_phrase``, phrases from a driver
-list) and ``dedup.decontaminate_by_ngrams`` (phrases from a DataFrame,
-so the route's driver collects are in the time). Each runs through
-its public ``method`` values and, where the tree has the one route
-rule (``dedup._route_rule``), on every route forced by replacing that
-rule: ``route=scan``, ``route=ac`` (slop 0 only) and ``route=gram``.
-Run on a tree without the rule, only the public methods run, so the
-same command measures a parent commit for comparison.
+Every consumer of the one planner (``operators.dedup._phrase_route`` +
+``_phrase_hits``) that the search tier and decontamination expose is
+timed: the per-phrase count tail (``count``:
+``search.count_documents_for_each_phrase``), retrieval of every hit
+(``retr``: ``search.get_documents_containing_phrases`` with
+``num_documents=None``, the plan ``count_documents_containing_phrases``
+counts), top-10 retrieval (``top10``: the same with its default
+``num_documents=10``, where a filter may stop early) and
+``dedup.decontaminate_by_ngrams`` (``decon``: phrases from a
+DataFrame, so the route's driver collects are in the time). Each runs
+through its public ``method`` values; where the tree has the one route
+rule (``dedup._route_rule``), the one route no public method forces is
+added by replacing that rule (``route=gram`` for counts,
+``route=scan`` for decontamination). Run on a tree without the rule,
+only the public methods run, so the same command measures a parent
+commit for comparison.
 
 Phrases are random 2-4-token windows of the corpus, 30% of them with
 a last token the corpus never has, drawn with a fixed seed.
 ``documents`` is cached; each form is written to the noop sink once
-to warm up, then ``reps`` times. A row prints the median wall seconds
-and the median program CPU seconds (``perfbench.cpu``: driver, JVM
-and Python workers, less JIT threads). A form whose warm-up run takes
-longer than ``cap`` seconds reports that run alone, marked ``*``,
-and is not run at the larger phrase counts of the same slop (its cost
-grows with the phrase count).
+to warm up, then ``reps`` times. A row prints the median and the
+range (min-max) of the wall seconds, and the median program CPU
+seconds (``perfbench.cpu``: driver, JVM and Python workers, less JIT
+threads). A form whose warm-up run takes longer than ``cap`` seconds
+reports that run alone, marked ``*``, and is not run at the larger
+phrase counts of the same slop (its cost grows with the phrase
+count). ``ops`` (comma-separated, default all) picks the consumers.
 
-Usage: python tools/phrase_route_ab.py sf_dir [reps] [cap]
-  e.g. python tools/phrase_route_ab.py <sf0.1 tables dir> 3 30
+Usage: python tools/phrase_route_ab.py sf_dir [reps] [cap] [ops]
+  e.g. python tools/phrase_route_ab.py <sf0.1 tables dir> 5 10
 """
 
 from __future__ import annotations
@@ -42,6 +49,7 @@ if len(sys.argv) < 2:
 SF_DIR = sys.argv[1]
 REPS = int(sys.argv[2]) if len(sys.argv) > 2 else 3
 CAP = float(sys.argv[3]) if len(sys.argv) > 3 else 30.0
+OPS = sys.argv[4].split(",") if len(sys.argv) > 4 else None
 COUNTS = (1, 3, 10, 30, 100, 300)
 SLOPS = (0, 1)
 
@@ -78,7 +86,10 @@ def main():
     from pyspark import SparkContext
 
     from wimbd_spark import get_spark
-    from wimbd_spark.search import count_documents_for_each_phrase
+    from wimbd_spark.search import (
+        count_documents_for_each_phrase,
+        get_documents_containing_phrases,
+    )
     from wimbd_spark.session import local_frame
 
     spark = get_spark(
@@ -98,10 +109,16 @@ def main():
         return time.perf_counter() - t0, cpu() - c0
 
     def forms(slop: int):
-        """(label, build(phrases) -> DataFrame, forced route or None)."""
+        """(op, label, build(phrases) -> DataFrame, forced route or
+        None)."""
         def count(m):
             return lambda ps: count_documents_for_each_phrase(
                 docs, ps, slop=slop, method=m
+            )
+
+        def retr(n):
+            return lambda m: lambda ps: get_documents_containing_phrases(
+                docs, ps, num_documents=n, slop=slop, method=m
             )
 
         def decon(m):
@@ -112,24 +129,26 @@ def main():
                 method=m,
             )
 
-        for op, build, methods in (
-            ("count", count, ("auto", "agg", "ac")),
-            ("decon", decon, ("auto", "gram", "ac")),
+        for op, build, methods, forced in (
+            ("count", count, ("auto", "agg", "ac"), "gram"),
+            ("retr", retr(None), ("auto", "pred", "ac"), None),
+            ("top10", retr(10), ("auto", "pred", "ac"), None),
+            ("decon", decon, ("auto", "gram", "ac"), "scan"),
         ):
+            if OPS is not None and op not in OPS:
+                continue
             for m in methods:
                 if m != "ac" or slop == 0:
                     yield op, f"method={m}", build(m), None
-            if rule is not None:
-                for r in ("scan", "ac", "gram"):
-                    if r != "ac" or slop == 0:
-                        yield op, f"route={r}", build("auto"), r
+            if rule is not None and forced is not None:
+                yield op, f"route={forced}", build("auto"), forced
 
     print(
         f"# sf_dir={SF_DIR} docs={n_docs} reps={REPS} master=local[2] "
         f"rule={'yes' if rule else 'no'}"
     )
-    print("| op | form | phrases | slop | wall s | cpu s |")
-    print("|---|---|---|---|---|---|")
+    print("| op | form | phrases | slop | wall s | wall range s | cpu s |")
+    print("|---|---|---|---|---|---|---|")
     for slop in SLOPS:
         over_cap: set[tuple[str, str]] = set()
         for p in COUNTS:
@@ -155,6 +174,7 @@ def main():
                 print(
                     f"| {op} | {label} | {p} | {slop} | "
                     f"{statistics.median(walls):.2f}{mark} | "
+                    f"{min(walls):.2f}-{max(walls):.2f} | "
                     f"{statistics.median(cpus):.2f}{mark} |",
                     flush=True,
                 )

@@ -749,21 +749,17 @@ def _normalized_tokens_text(text: Column, tokenizer=None) -> Column:
 
 
 # The one token-phrase route rule (_route_rule), for the search tier,
-# batch and streaming decontamination alike. Fitted on a 4-core box
-# with tools/phrase_route_ab.py (sf0.1 documents, cached, local[2];
-# SCALE.md "Many-phrase batches"). The scan — one window predicate per
-# phrase in one projection, no automaton build, no gram explode, no
-# join — costs ~0.25 s more per phrase; the automaton is flat at
-# ~0.5 s and the gram join at ~1.5-2 s (slop 0) to ~4-5 s (slop 1):
-# - slop 0 with the canonical tokenizer: the automaton past
-#   _SCAN_MAX_BEFORE_AC phrases (at 1 phrase the two tie), up to
-#   _AC_MAX_PHRASES, where every concurrent task's trie (~100 MB at
-#   20k 4-gram phrases, ~1.5M states at 100k) makes executor memory
-#   the bound;
-# - else the gram join past _SCAN_MAX_BEFORE_GRAM phrases (the slop-1
-#   crossover lies between 10 and 30); it never holds the phrase set
-#   in one process.
-_SCAN_MAX_BEFORE_AC = 1
+# batch and streaming decontamination alike, fitted with
+# tools/phrase_route_ab.py (SCALE.md "Many-phrase batches"). The scan
+# costs ~0.25 s more per phrase; the automaton is flat from one phrase
+# up (it ties or beats the scan there, but for a top-k the scan can
+# stop early) and the gram join sits at ~1.5 s (slop 0) to ~4 s
+# (slop 1). So: the automaton at slop 0 with the canonical tokenizer,
+# up to _AC_MAX_PHRASES, where every concurrent task's trie (~100 MB at
+# 20k 4-gram phrases) makes executor memory the bound; else the scan
+# up to _SCAN_MAX_BEFORE_GRAM phrases (the slop-1 crossover lies
+# between 10 and 30) and the gram join, which never holds the phrase
+# set in one process, past it.
 _SCAN_MAX_BEFORE_GRAM = 15
 _AC_MAX_PHRASES = 20_000
 
@@ -776,7 +772,7 @@ def _route_rule(per_len: dict[int, int], slop: int, tokenizer) -> str:
     inputs."""
     n = sum(per_len.values())
     if slop == 0 and tokenizer is None and n <= _AC_MAX_PHRASES:
-        return "scan" if n <= _SCAN_MAX_BEFORE_AC else "ac"
+        return "ac"
     return "scan" if n <= _SCAN_MAX_BEFORE_GRAM else "gram"
 
 
@@ -968,6 +964,7 @@ def _phrase_hits(
     text_col: str = "text",
     grain: str = "phrase",
     broadcast_eval: bool = True,
+    limit: int | None = None,
 ) -> DataFrame:
     """(docs columns minus text ..., phrase): the token-phrase hits of
     ``plan`` (_phrase_route) in ``docs``, ``phrase`` = the phrase's
@@ -975,24 +972,31 @@ def _phrase_hits(
     decontaminators and the index-free rate. ``plan.lengths`` must be
     non-empty. ``grain`` is the least the caller needs:
 
-    - "doc": at least one row for each matching doc (the automaton
-      stops at the first match);
-    - "phrase": exactly one row for each (doc, matching phrase) — the
-      gram route pays a distinct for it;
+    - "doc": at least one row per matching doc row (the automaton
+      gives exactly one: it stops at the first match);
+    - "phrase": exactly one row per (doc row, matching phrase). The
+      gram route pays a distinct over a row id it adds for that alone:
+      a phrase lives in one branch of the gram plan, so the id is only
+      compared within the branch that generated it;
     - "occurrence": the stream audit multiset — a row per occurrence
       of a phrase the gram join matches, one per (doc, phrase) for
       overlong and slop-hatch phrases. The scan route does not serve
-      it; such a plan runs on grams."""
+      it; such a plan runs on grams.
+
+    ``limit`` caps the automaton's rows per partition (phrase_hits_ac);
+    other routes ignore it."""
     if plan.route == "ac":
         from wimbd_spark.operators.multipattern import phrase_hits_ac
 
-        return phrase_hits_ac(docs, plan.phrases, text_col, grain)
+        return phrase_hits_ac(docs, plan.phrases, text_col, grain, limit)
     if plan.route == "scan" and grain != "occurrence":
         return _scan_slop_matches(
             docs, plan.phrases, text_col, plan.tokenizer, plan.slop
         )
+    if grain == "phrase":
+        docs = docs.withColumn("_hit_row", F.monotonically_increasing_id())
     hits = _gram_phrase_hits(docs, plan, text_col, broadcast_eval)
-    return hits.distinct() if grain == "phrase" else hits
+    return hits.distinct().drop("_hit_row") if grain == "phrase" else hits
 
 
 def _gram_phrase_hits(
@@ -1135,12 +1139,12 @@ def decontaminate_by_ngrams(
     picks the route, _phrase_hits builds the hits, and the contaminated
     ids are their distinct doc ids. ``method``: ``"auto"`` (default)
     takes the one route rule (_route_rule, fitted by
-    tools/phrase_route_ab.py): the windowed scan predicate for a
-    handful of phrases; past it, at slop 0 with the default tokenizer,
+    tools/phrase_route_ab.py): at slop 0 with the default tokenizer,
     one Aho-Corasick pass (operators.multipattern — per-doc cost
     independent of the phrase count and the length mix, the phrases
     compiled into a per-task automaton, up to _AC_MAX_PHRASES); else
-    the gram plan (_gram_phrase_hits: short-gram join, overlong
+    the windowed scan predicate for a handful of phrases and the gram
+    plan past it (_gram_phrase_hits: short-gram join, overlong
     ``contains``, slop scan hatch — see there). ``"gram"`` and
     ``"ac"`` force those routes (``"ac"`` needs slop=0 and the default
     tokenizer and at most _AC_MAX_PHRASES distinct phrases; it raises

@@ -6,9 +6,9 @@ phrase set (O(total pattern chars)) and streams each document through
 it once (O(doc chars + matches)): per-document cost independent of
 the phrase count and of the phrase-length mix. The search tails,
 n-gram decontamination and the streaming audit take this route where
-dedup._route_rule picks it (slop 0, the canonical tokenizer, past a
-handful of phrases); the crossover against the predicate scan and the
-gram join is measured by tools/phrase_route_ab.py (SCALE.md).
+dedup._route_rule picks it (slop 0 and the canonical tokenizer, from
+one phrase up); its cost against the predicate scan and the gram join
+is measured by tools/phrase_route_ab.py (SCALE.md).
 
 Token alignment: the canonical tokenizer is whitespace split, so
 "phrase tokens appear consecutively" is EXACTLY "' phrase '" being a
@@ -170,6 +170,7 @@ def phrase_hits_ac(
     phrases: list[str],
     text_col: str = "text",
     grain: str = "occurrence",
+    limit: int | None = None,
 ) -> DataFrame:
     """Phrase hits by one automaton pass: rows carrying the doc's
     columns (minus ``text_col``) plus ``phrase`` (its space-joined
@@ -188,6 +189,10 @@ def phrase_hits_ac(
     - "phrase": one row per (doc, distinct matching phrase);
     - "doc": one row per matching doc, naming the leftmost match —
       the trie regex alone decides it, no per-char walk.
+
+    ``limit`` caps each partition's rows for a consumer that takes no
+    more: past it the rest of the input is read, not walked, so the
+    stream still ends and its Python worker is reused.
 
     Works on batch AND streaming DataFrames (stateless mapInPandas)."""
     if not phrases:
@@ -230,7 +235,10 @@ def phrase_hits_ac(
     def gen(batches: Iterator) -> Iterator:
         rx = _compiled(pats, "regex")
         automaton = None if grain == "doc" else _compiled(pats, "automaton")
+        left = limit
         for pdf in batches:
+            if left == 0:
+                continue
             at: list[int] = []  # the batch row of each hit row
             ph: list[str] = []
             for idx, arr in enumerate(pdf["__toks"]):
@@ -240,6 +248,11 @@ def phrase_hits_ac(
                 for name, n in doc_hits(padded, rx, automaton):
                     at += [idx] * n
                     ph += [name] * n
+                if left is not None and len(ph) >= left:
+                    break
+            if left is not None:
+                at, ph = at[:left], ph[:left]
+                left -= len(ph)
             if ph:
                 yield pdf[keep].iloc[at].reset_index(drop=True).assign(
                     phrase=ph

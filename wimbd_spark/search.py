@@ -25,17 +25,13 @@ Semantics notes:
   ``filters={col: value}``.
 
 Plan: the token-aligned entry points are thin tails over ONE
-token-phrase hit function, operators.dedup._phrase_hits, the planner
-n-gram decontamination also runs. Its route rule
-(operators.dedup._route_rule) reads the per-length phrase counts off
-the driver-side phrase list — no Spark job at construction — and picks
-the predicate scan for a handful of phrases, else the Aho-Corasick
-automaton (slop 0) or the gram join against the broadcast phrase set,
-both flat in the phrase count. Per-phrase counts are distinct docs per
-phrase, AND-groups keep the docs holding every phrase of the group,
-and retrieval semi-joins the docs on the hit ids or, on the scan,
-filters with the compiled predicate. ``is_regexp`` and
-``token_aligned=False`` stay predicates.
+token-phrase hit function, operators.dedup._phrase_hits, which n-gram
+decontamination also runs. Its route rule (operators.dedup._route_rule)
+reads the per-length phrase counts off the driver-side phrase list (no
+Spark job at construction). Counts are hit rows per element; retrieval
+keeps the rows the automaton's hits carry whole, or filters with the
+compiled predicate. No tail joins hits back on an id. ``is_regexp``
+and ``token_aligned=False`` stay predicates.
 """
 
 from __future__ import annotations
@@ -168,47 +164,6 @@ def apply_filters(df: DataFrame, filters: dict[str, str] | None) -> DataFrame:
         df = df.filter(F.col(col) == val)
     return df
 
-def _matching_keys(
-    docs: DataFrame,
-    phrases: list[str],
-    all_phrases: bool,
-    slop: int,
-    method: str,
-    key: str,
-    text_col: str,
-) -> DataFrame | None:
-    """The ``key`` values of the rows of ``docs`` holding ANY (or,
-    with ``all_phrases``, every) token-aligned phrase, read off the
-    token-phrase hits (operators.dedup._phrase_hits); None where the
-    planner picks the scan, or where no row can match (a phrase
-    without a token matches nothing) — callers then filter with
-    build_phrase_predicate. ``method`` is a planner method. ALL-mode
-    groups the hits by row (a synthesized row id), so a row must
-    hold every phrase itself."""
-    from wimbd_spark.operators.dedup import _phrase_hits, _phrase_route
-
-    analyzed = {" ".join(analyze_phrase(p)) for p in phrases}
-    plan = _phrase_route(sorted(analyzed), method, slop, None)
-    if plan.route == "scan" or not plan.lengths or (
-        all_phrases and "" in analyzed
-    ):
-        return None
-    if not all_phrases:
-        return _phrase_hits(
-            docs.select(key, text_col), plan, text_col, "doc"
-        ).select(key)
-    rows = docs.select(
-        key, F.monotonically_increasing_id().alias("_rid"), text_col
-    )
-    return (
-        _phrase_hits(rows, plan, text_col)
-        .groupBy("_rid", key)
-        .count()
-        .filter(F.col("count") == len(analyzed))
-        .select(key)
-    )
-
-
 def count_documents_containing_phrases(
     df: DataFrame,
     phrases: list[str],
@@ -220,13 +175,10 @@ def count_documents_containing_phrases(
     token_aligned: bool = True,
 ) -> int:
     """Count docs matching the phrase query (ES es.count parity): the
-    rows get_documents_containing_phrases retrieves, keyed by a
-    synthesized row id so that repeated ids count as the rows they
-    are."""
-    rows = df.withColumn("_row", F.monotonically_increasing_id())
+    rows get_documents_containing_phrases retrieves."""
     return get_documents_containing_phrases(
-        rows, phrases, None, all_phrases, slop, is_regexp, filters,
-        text_col=text_col, token_aligned=token_aligned, id_col="_row",
+        df, phrases, None, all_phrases, slop, is_regexp, filters,
+        text_col=text_col, token_aligned=token_aligned,
     ).count()
 
 
@@ -242,51 +194,69 @@ def get_documents_containing_phrases(
     text_col: str = "text",
     token_aligned: bool = True,
     method: str = "auto",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Retrieve matching docs; num_documents=None returns all hits
     (≙ the PIT + search_after pagination loop, which Spark replaces
     with plain partition streaming via toLocalIterator).
 
     ``method``: ``"auto"`` (default) takes the token-phrase planner's
-    route (operators.dedup._route_rule: the predicate scan for a
-    handful of phrases, else the Aho-Corasick automaton at slop 0 or
-    the gram join); ``"ac"`` forces the automaton; ``"pred"`` forces
-    the scan. On the automaton and gram routes the matching docs are
-    a LEFT SEMI join on the hit ids (``id_col``); on the scan, a
-    plain filter with the compiled predicate (build_phrase_predicate).
-    ``is_regexp``, ``token_aligned=False`` and a frame without
-    ``id_col`` always filter, and ``method="ac"`` raises on them (and
-    on slop>0) — the fast path never silently changes semantics. A
-    phrase without a token matches nothing on every route.
-
-    The semi-join assumes ``id_col`` uniquely identifies rows: a
-    non-matching row sharing an id with a matching row is returned
-    too (the scan has no such divergence). Pass a row-unique id or
-    ``method="pred"`` when ids can repeat."""
-    from wimbd_spark.operators.dedup import _check_method
+    route (operators.dedup._route_rule); ``"ac"`` forces the
+    Aho-Corasick automaton; ``"pred"`` forces the compiled predicate
+    (build_phrase_predicate). On the automaton route the rows are its
+    hits at the "doc" grain, which carry each matching row whole (no
+    key, no join back: repeated ids and duplicate rows come back as
+    they are); an AND query then filters them with the predicate.
+    Every other route filters with the predicate. ``is_regexp`` and
+    ``token_aligned=False`` always filter, and ``method="ac"`` raises
+    on them (and on slop>0). Row-identical on every route (pinned); a
+    phrase without a token matches nothing."""
+    from wimbd_spark.operators.dedup import (
+        _check_method,
+        _phrase_hits,
+        _phrase_route,
+    )
 
     _check_method(method, ("auto", "ac", "pred"))
-    base = apply_filters(df, filters)
-    keys = None
-    if token_aligned and not is_regexp and id_col in base.columns:
-        keys = _matching_keys(
-            base, phrases, all_phrases, slop,
-            "scan" if method == "pred" else method, id_col, text_col,
+    if not phrases:
+        raise ValueError("phrases must be non-empty")
+    out = apply_filters(df, filters)
+    plan = None
+    if token_aligned and not is_regexp:
+        plan = _phrase_route(
+            phrases, "scan" if method == "pred" else method, slop, None
         )
     elif method == "ac":
         raise ValueError(
-            "method='ac' needs token_aligned=True, is_regexp=False and "
-            f"an existing id column ({id_col!r})"
+            "method='ac' needs token_aligned=True and is_regexp=False"
         )
-    if keys is not None:
-        out = base.join(keys, id_col, "left_semi")
-    else:
-        pred = build_phrase_predicate(
-            phrases, text_col, all_phrases, slop, is_regexp,
-            token_aligned,
+    filtered = True
+    if plan is not None and plan.route == "ac" and plan.lengths:
+        # the hits carry every column under a positional name and a
+        # copy of the text, so matched rows come back whole
+        cols = out.columns
+        filtered = all_phrases  # the hits hold any phrase, not all
+        cap = None if filtered or sort_field else num_documents
+        out = _phrase_hits(
+            out.select(
+                *[F.col(c).alias(f"_c{i}") for i, c in enumerate(cols)],
+                F.col(text_col).alias("_hit_text"),
+            ),
+            plan, "_hit_text", "doc", limit=cap,
         )
-        out = base.filter(pred)
+        if cap is not None:
+            # top-k: each partition's walker stops at k hits; sorting
+            # those reads the stream to its end (the limit would not)
+            out = out.sortWithinPartitions("phrase")
+        out = out.select(
+            *[F.col(f"_c{i}").alias(c) for i, c in enumerate(cols)]
+        )
+    if filtered:
+        out = out.filter(
+            build_phrase_predicate(
+                phrases, text_col, all_phrases, slop, is_regexp,
+                token_aligned,
+            )
+        )
     if sort_field:
         out = out.orderBy(F.col(sort_field).asc())
     if num_documents is not None:
@@ -310,19 +280,20 @@ def count_documents_for_each_phrase(
     The reference batches 500 ES msearch count queries per round trip
     (:308-344); here the whole batch is one plan at any corpus size:
     the token-phrase hits (operators.dedup._phrase_hits) give one row
-    per (doc, matching phrase); an AND-group keeps the docs whose
-    hits hold every phrase of the group; the count is docs per
-    element.
+    per (doc row, matching phrase), counted per element. AND-groups
+    group the hits by a hash key of the text, which every branch of
+    the hit plan computes alike: a text holding the whole group counts
+    once per row that has it.
 
     ``method``: ``"auto"`` (default) takes the planner's route
-    (operators.dedup._route_rule: the predicate scan for a handful of
-    phrases, else the Aho-Corasick automaton at slop 0 or the gram
-    join, both flat in the phrase count); ``"ac"`` forces the
-    automaton (raises with slop>0 or ``token_aligned=False``);
-    ``"agg"`` forces the scan. Row-identical on every route (pinned).
-    A phrase without a token counts 0 on every route.
-    ``token_aligned=False`` counts raw substring ``contains`` with one
-    predicate per element over the same scan.
+    (operators.dedup._route_rule: the Aho-Corasick automaton at slop
+    0, else the predicate scan for a handful of phrases and the gram
+    join past it); ``"ac"`` forces the automaton (raises with slop>0
+    or ``token_aligned=False``); ``"agg"`` forces the scan.
+    Row-identical on every route (pinned). A phrase without a token
+    counts 0 on every route. ``token_aligned=False`` counts raw
+    substring ``contains`` with one predicate per element over the
+    same scan.
     """
     from wimbd_spark.operators.dedup import (
         _check_method,
@@ -333,76 +304,92 @@ def count_documents_for_each_phrase(
     _check_method(method, ("auto", "ac", "agg"))
     if not phrases:
         raise ValueError("phrases must be non-empty")
+    spark = df.sparkSession
     groups = [p if isinstance(p, list) else [p] for p in phrases]
     names = [" AND ".join(g) for g in groups]
-    rows = apply_filters(df, filters).select(
-        F.monotonically_increasing_id().alias("_rid"), text_col
-    )
+    base = apply_filters(df, filters)
+    # each element's key, ``_e``: the sorted phrases it needs (None
+    # when it holds a blank phrase: it never matches); elements with
+    # one key share its count
+    matched = None  # (_e, n): n more matching rows of the elements _e
     if token_aligned:
-        keyed = [{" ".join(analyze_phrase(p)) for p in g} for g in groups]
-        # (phrase, element, phrases the element needs); an element
-        # holding a blank phrase can never match
-        member = [
-            (k, i, names[i], len(g))
-            for i, g in enumerate(keyed)
-            if "" not in g
-            for k in g
+        keys = [
+            sorted({" ".join(analyze_phrase(p)) for p in g}) for g in groups
         ]
+        keys = [None if "" in k else k for k in keys]
+        member = sorted({(p, tuple(k)) for k in keys if k for p in k})
         plan = _phrase_route(
-            [k for k, *_ in member], "scan" if method == "agg" else method,
+            [p for p, _ in member], "scan" if method == "agg" else method,
             slop, None,
         )
-        matched = None
-        if plan.lengths:
-            matched = _phrase_hits(rows, plan, text_col).join(
-                F.broadcast(
-                    local_frame(
-                        df.sparkSession, member,
-                        "phrase string, _gid long, _name string, "
-                        "_need int",
-                    )
-                ),
-                "phrase",
+        single = all(len(k) == 1 for k in keys if k)
+        if plan.lengths and single:
+            matched = _phrase_hits(
+                base.select(text_col), plan, text_col
+            ).select(F.array("phrase").alias("_e"), F.lit(1).alias("n"))
+        elif plan.lengths:
+            # AND-groups: a key of the text (two 64-bit hashes) groups
+            # a doc's hits across the plan's branches; every doc row of
+            # a text holding the whole group gives one hit row per
+            # phrase of the group
+            text = F.col(text_col)
+            rows = base.select(
+                F.xxhash64(text).alias("_k1"),
+                F.xxhash64(F.lit(1), text).alias("_k2"),
+                text_col,
             )
-            if any(len(g) > 1 for g in keyed):
-                matched = (
-                    matched.groupBy("_gid", "_name", "_need", "_rid")
-                    .count()
-                    .filter(F.col("count") == F.col("_need"))
+            matched = (
+                _phrase_hits(rows, plan, text_col)
+                .join(
+                    F.broadcast(
+                        local_frame(
+                            spark,
+                            [(p, list(k)) for p, k in member],
+                            "phrase string, _e array<string>",
+                        )
+                    ),
+                    "phrase",
                 )
-            matched = matched.select("_rid", "_gid", "_name")
+                .groupBy("_e", "_k1", "_k2")
+                .agg(
+                    F.count_distinct("phrase").alias("_has"),
+                    F.count("*").alias("_hits"),
+                )
+                .filter(F.col("_has") == F.size("_e"))
+                .select("_e", F.expr("_hits div _has").alias("n"))
+            )
     elif method == "ac":
         raise ValueError("method='ac' needs token_aligned=True")
-    else:
-        hit = F.filter(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).cast("long").alias("_gid"),
-                        F.lit(names[i]).alias("_name"),
-                        build_phrase_predicate(
-                            g, text_col, True, token_aligned=False
-                        ).alias("_m"),
-                    )
-                    for i, g in enumerate(groups)
-                ]
-            ),
-            lambda m: m["_m"],
+    else:  # an element's name is its key
+        keys = [[n] for n in names]
+        hit = F.array(
+            *[
+                F.when(
+                    build_phrase_predicate(
+                        g, text_col, True, token_aligned=False
+                    ),
+                    F.array(F.lit(n)),
+                )
+                for n, g in dict(zip(names, groups)).items()
+            ]
         )
-        matched = rows.select("_rid", F.explode(hit).alias("_h")).select(
-            "_rid", "_h._gid", "_h._name"
+        matched = base.select(
+            F.explode(F.filter(hit, Column.isNotNull)).alias("_e"),
+            F.lit(1).alias("n"),
         )
     counted = local_frame(
-        df.sparkSession,
-        [(None, i, n) for i, n in enumerate(names)],
-        "_rid long, _gid long, _name string",
-    )  # the zero fill: a NULL row id counts no doc
+        spark,
+        [(k, n, 0) for k, n in zip(keys, names)],
+        "_e array<string>, _name string, n long",
+    )  # the zero fill, which also names the elements of each key
     if matched is not None:
-        counted = matched.unionByName(counted)
+        counted = matched.withColumn(
+            "_name", F.lit(None).cast("string")
+        ).unionByName(counted)
     return (
-        counted.groupBy("_gid", "_name")
-        .agg(F.count("_rid").alias("count"))
-        .select(F.col("_name").alias("phrase"), "count")
+        counted.groupBy("_e")
+        .agg(F.sum("n").alias("count"), F.collect_list("_name").alias("_ns"))
+        .select(F.explode("_ns").alias("phrase"), "count")
         .coalesce(1)  # one row per element: sort it with no exchange
         .orderBy("phrase")
     )
