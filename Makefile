@@ -14,12 +14,15 @@ check:
 	python tools/check_oracles.py
 
 # static and plan lints: no env-knob reads outside the deployment
-# allow-list, one planner per semantics (one phrase-hit planner, one
-# vector rank window), opening a table or index runs no Spark job, and
-# the registry-wide window / PythonRDD plan lint (a slow-tier test, so
-# the slow tier is switched on here)
+# allow-list, one cost router (only wimbd_spark/route.py reads a
+# spark.wimbd.* conf key or defines the moved gate thresholds, and
+# their sites never probe sizes themselves), one planner per semantics
+# (one phrase-hit planner, one vector rank window), opening a table or
+# index runs no Spark job, and the registry-wide window / PythonRDD
+# plan lint (a slow-tier test, so the slow tier is switched on here)
 lint:
 	WIMBD_FULL_TESTS=1 python -m pytest tests/test_knob_lint.py \
+		tests/test_route_lint.py \
 		tests/test_dedup.py::test_one_phrase_hit_planner_in_dedup \
 		tests/test_similarity.py::test_one_rank_window_in_similarity \
 		tests/test_read_parquet.py::test_open_runs_no_spark_job \

@@ -1,5 +1,6 @@
 import os
 import sys
+from contextlib import contextmanager
 
 import pytest
 
@@ -118,6 +119,18 @@ def pytest_collection_modifyitems(config, items):
             nid = nid[len("tests/"):]
         if nid in SLOW_TIER_NODE_IDS or item.get_closest_marker("slow"):
             item.add_marker(skip)
+
+
+@contextmanager
+def forced_route(spark, choice, gate=None):
+    """Force ``choice`` ("small", "large" or "auto") on one cost gate, or
+    on every gate, for the block: the session conf route.choose reads."""
+    key = "spark.wimbd.route" + (f".{gate}" if gate else "")
+    spark.conf.set(key, choice)
+    try:
+        yield
+    finally:
+        spark.conf.unset(key)
 
 
 @pytest.fixture(scope="session")

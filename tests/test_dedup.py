@@ -14,6 +14,8 @@ from wimbd_spark.operators.dedup import (
     overlap,
 )
 
+from conftest import forced_route
+
 
 @pytest.fixture(scope="module")
 def corpus(spark):
@@ -158,8 +160,9 @@ def test_contamination_rate_prefilter(spark):
         ["phrase"],
     )
     expect = (3, 5, 3 / 5)
-    for pf in (False, True):
-        r = contamination_rate(evalset, corpus, "phrase", prefilter=pf)
+    for pf in ("small", "large"):
+        with forced_route(spark, pf, "prefilter"):
+            r = contamination_rate(evalset, corpus, "phrase")
         row = r.collect()[0]
         assert (row["contaminated"], row["total"]) == expect[:2], pf
         assert abs(row["rate"] - expect[2]) < 1e-12
@@ -215,19 +218,21 @@ def test_contamination_rates_drop_degenerate_phrases(spark, tmp_path, rate):
 
 
 def test_contamination_rate_builds_without_jobs(spark, corpus):
-    """The substring rate is one lazy aggregate: with the route fixed
-    (prefilter=False/True) building it runs no driver job."""
+    """The substring rate is one lazy aggregate: with the route forced
+    (spark.wimbd.route.prefilter=small/large) building it runs no
+    driver job."""
     import uuid
 
     from wimbd_spark.session import local_frame
 
     ev = local_frame(spark, [("alpha",), ("nothere",)], "phrase string")
     sc = spark.sparkContext
-    for pf in (False, True):
+    for pf in ("small", "large"):
         group = f"rate-build-{uuid.uuid4().hex}"
         sc.setJobGroup(group, group)
         try:
-            df = contamination_rate(ev, corpus, "phrase", prefilter=pf)
+            with forced_route(spark, pf, "prefilter"):
+                df = contamination_rate(ev, corpus, "phrase")
         finally:
             sc._jsc.clearJobGroup()
         assert sc.statusTracker().getJobIdsForGroup(group) == [], pf

@@ -1,5 +1,6 @@
 """session.plan_size_bytes, the one job-free size probe, and the policy
-each cost gate applies when the size is unknown."""
+of a gate outside wimbd_spark.route when the size is unknown (the
+router's gates: tests/test_route.py)."""
 
 import pytest
 
@@ -26,26 +27,6 @@ def test_unsizable_plans_are_unknown(documents, rdd_docs):
     assert plan_size_bytes(big) is None
 
 
-def test_pmi_persist_gate_treats_unknown_as_small(rdd_docs, monkeypatch):
-    import wimbd_spark.session as session
-    from wimbd_spark.operators.topk import top_pmi_bigrams
-
-    calls = []
-    real = session.scoped_persist
-
-    def spy(*a, **k):
-        calls.append(1)
-        return real(*a, **k)
-
-    monkeypatch.setattr(session, "scoped_persist", spy)
-    top_pmi_bigrams(rdd_docs, k=3)
-    assert not calls, "unknown size must not persist the count tables"
-    # a size past the threshold persists both tables
-    monkeypatch.setattr(session, "plan_size_bytes", lambda df: 1 << 40)
-    top_pmi_bigrams(rdd_docs, k=3)
-    assert len(calls) == 2
-
-
 def test_lsh_block_gate_treats_unknown_as_small(rdd_docs, monkeypatch):
     import wimbd_spark.operators.similarity as sim
 
@@ -58,31 +39,3 @@ def test_lsh_block_gate_treats_unknown_as_small(rdd_docs, monkeypatch):
     )
     assert out is None
 
-
-def test_contamination_prefilter_treats_unknown_as_large(
-    spark, documents, rdd_docs, monkeypatch
-):
-    import wimbd_spark.operators.dedup as dd
-
-    calls = []
-    real = dd._anchored_hits
-
-    def spy(*a, **k):
-        calls.append(1)
-        return real(*a, **k)
-
-    monkeypatch.setattr(dd, "_anchored_hits", spy)
-    evalset = spark.createDataFrame(
-        [(f"zz{i} yy{i} xx{i}",) for i in range(3)], "phrase string"
-    )
-    row = dd.contamination_rate(
-        evalset, rdd_docs, "phrase", prefilter_threshold=2
-    ).collect()[0]
-    assert calls, "unknown corpus size must take the prefilter"
-    assert (row["contaminated"], row["total"]) == (0, 3)
-    # a sized corpus under the budget stays on the direct path
-    calls.clear()
-    dd.contamination_rate(
-        evalset, documents, "phrase", prefilter_threshold=2
-    ).collect()
-    assert not calls

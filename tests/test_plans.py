@@ -378,7 +378,7 @@ def test_unique_ngrams_hll_no_gram_repartition(spark):
         entry.bench_only_queries()["bench_unique_ngrams_hll"](spark, SF)
     )
     # no GRAM-key exchange: the only shuffles allowed are the
-    # load-time rebalance of an input past REBALANCE_MIN_BYTES
+    # load-time rebalance of an input past route's spread gate
     # (doc_id-hashed; sf0.001 is under the gate, so absent here) and
     # the SinglePartition sketch merge
     import re as _re

@@ -1,15 +1,17 @@
-"""The load-time rebalance size gate (``session.REBALANCE_MIN_BYTES``):
-one test per policy, and the spread branch's rows against the
-unspread ones. Every fixture is under the gate, so the spread branch
-is reached here by forcing it."""
+"""The load-time spread (route's ``spread`` gate): small fixtures are
+not spread, and the spread branch returns the unspread rows. Every
+fixture is under the gate, so the spread is forced through the session
+conf (``spark.wimbd.route.spread``); tests/test_route.py flips the plan
+both ways and checks the unknown-size policy."""
 
 import pytest
 from pyspark.sql import functions as F
 
 import wimbd_spark.session as session
+from wimbd_spark import route
 from wimbd_spark.plans import explain_str
 
-from conftest import SF_DIR as SF
+from conftest import SF_DIR as SF, forced_route
 
 
 def _load_documents(spark):
@@ -26,18 +28,8 @@ def _spread(df) -> bool:
 def test_small_documents_are_not_spread(spark):
     docs = _load_documents(spark)
     assert docs.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism
-    assert session.plan_size_bytes(docs) < session.REBALANCE_MIN_BYTES
+    assert session.plan_size_bytes(docs) < route.GATES["spread"].threshold
     assert "REPARTITION_BY_NUM" not in explain_str(docs)
-
-
-def test_zero_threshold_spreads_by_doc_id(spark, monkeypatch):
-    monkeypatch.setattr(session, "REBALANCE_MIN_BYTES", 0)
-    assert _spread(_load_documents(spark))
-
-
-def test_unknown_size_is_spread(spark, monkeypatch):
-    monkeypatch.setattr(session, "plan_size_bytes", lambda df: None)
-    assert _spread(_load_documents(spark))
 
 
 @pytest.fixture(scope="module")
@@ -48,14 +40,14 @@ def raw_docs(spark):
 @pytest.mark.parametrize(
     "op", ["minhash_dedup_pairs", "winnow_fingerprints", "topk_ngrams"]
 )
-def test_spread_and_unspread_give_the_same_rows(raw_docs, op, monkeypatch):
+def test_spread_and_unspread_give_the_same_rows(spark, raw_docs, op):
     from wimbd_spark.operators.neardup import minhash_dedup_pairs
     from wimbd_spark.operators.topk import topk_ngrams
     from wimbd_spark.operators.winnow import winnow_fingerprints
 
     plain = session.rebalance_small_input(raw_docs, key="doc_id")
-    monkeypatch.setattr(session, "REBALANCE_MIN_BYTES", 0)
-    spread = session.rebalance_small_input(raw_docs, key="doc_id")
+    with forced_route(spark, "large", "spread"):
+        spread = session.rebalance_small_input(raw_docs, key="doc_id")
     assert _spread(spread) and plain is raw_docs
 
     def with_neardups(df):

@@ -21,9 +21,12 @@ commit for comparison.
 
 Phrases are random 2-4-token windows of the corpus, 30% of them with
 a last token the corpus never has, drawn with a fixed seed.
-``documents`` is cached; each form is written to the noop sink once
-to warm up, then ``reps`` times. A row prints the median and the
-range (min-max) of the wall seconds, and the median program CPU
+``documents`` is cached and one untimed query warms the session up
+before the first timed form. In each (phrase count, slop) cell every
+form is written to the noop sink once to warm up, then ``reps`` times
+with the forms' order alternating per rep (forward, then reversed), so
+no form always runs after the same one. A row prints the median and
+the range (min-max) of the wall seconds, and the median program CPU
 seconds (``perfbench.cpu``: driver, JVM and Python workers, less JIT
 threads). A form whose warm-up run takes longer than ``cap`` seconds
 reports that run alone, marked ``*``, and is not run at the larger
@@ -103,10 +106,18 @@ def main():
     pool = phrase_sample(docs, max(COUNTS))
     rule = getattr(dd, "_route_rule", None)
 
-    def run(build) -> tuple[float, float]:
-        c0, t0 = cpu(), time.perf_counter()
-        build().write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0, cpu() - c0
+    def run(build, route=None) -> tuple[float, float]:
+        """Wall and CPU seconds of one noop write of ``build()``, with
+        the route rule replaced by ``route`` when it is forced."""
+        if route is not None:
+            dd._route_rule = lambda *a, r=route: r
+        try:
+            c0, t0 = cpu(), time.perf_counter()
+            build().write.format("noop").mode("overwrite").save()
+            return time.perf_counter() - t0, cpu() - c0
+        finally:
+            if rule is not None:
+                dd._route_rule = rule
 
     def forms(slop: int):
         """(op, label, build(phrases) -> DataFrame, forced route or
@@ -149,28 +160,32 @@ def main():
     )
     print("| op | form | phrases | slop | wall s | wall range s | cpu s |")
     print("|---|---|---|---|---|---|---|")
+    # untimed: the session's first query pays JVM warm-up
+    _op, _label, build, route = next(forms(SLOPS[0]))
+    run(lambda: build(pool[: COUNTS[0]]), route)
     for slop in SLOPS:
         over_cap: set[tuple[str, str]] = set()
         for p in COUNTS:
             ps = pool[:p]
-            for op, label, build, route in forms(slop):
-                if (op, label) in over_cap:
-                    continue
-                if route is not None:
-                    dd._route_rule = lambda *a, r=route: r
-                try:
-                    first = run(lambda: build(ps))
-                    if first[0] > CAP:
-                        walls, cpus, mark = [first[0]], [first[1]], "*"
-                        over_cap.add((op, label))
-                    else:
-                        reps = [run(lambda: build(ps)) for _ in range(REPS)]
-                        walls = [w for w, _ in reps]
-                        cpus = [c for _, c in reps]
-                        mark = ""
-                finally:
-                    if rule is not None:
-                        dd._route_rule = rule
+            cell = [f for f in forms(slop) if f[:2] not in over_cap]
+            times: dict[tuple[str, str], list[tuple[float, float]]] = {}
+            for op, label, build, route in cell:
+                first = run(lambda: build(ps), route)
+                if first[0] > CAP:
+                    times[op, label] = [first]
+                    over_cap.add((op, label))
+            timed = [f for f in cell if f[:2] not in over_cap]
+            for rep in range(REPS):
+                for op, label, build, route in (
+                    timed if rep % 2 == 0 else timed[::-1]
+                ):
+                    times.setdefault((op, label), []).append(
+                        run(lambda: build(ps), route)
+                    )
+            for op, label, _build, _route in cell:
+                walls = [w for w, _ in times[op, label]]
+                cpus = [c for _, c in times[op, label]]
+                mark = "*" if (op, label) in over_cap else ""
                 print(
                     f"| {op} | {label} | {p} | {slop} | "
                     f"{statistics.median(walls):.2f}{mark} | "

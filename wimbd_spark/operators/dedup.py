@@ -24,14 +24,16 @@ Spark-first notes:
 from __future__ import annotations
 
 from collections import Counter
+from functools import partial
 from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from wimbd_spark import route
 from wimbd_spark.functions.text import doc_hash
-from wimbd_spark.session import local_frame, plan_size_bytes
+from wimbd_spark.session import local_frame
 
 
 def _null_safe_partition(key: Column) -> list[Column]:
@@ -480,16 +482,8 @@ def _anchored_hits(corpus, phrases_tok, text_col):
     signal allows — a length heuristic picks stopword-adjacent anchors
     and floods the verify join.
 
-    Plan shape at 100 TB: three linear corpus scans, ZERO corpus
-    shuffles — scan 1 counts document frequency for interior tokens
-    only (broadcast semi-join before the agg, so the DF table is
-    eval-vocabulary-sized); scan 2 emits (md5, token) pairs into a
-    broadcast hash join with the per-phrase rare anchors; scan 3
-    verifies candidates with `contains`. The verify join carries no
-    broadcast hint: AQE converts it to broadcast when the candidate
-    set is small (the common case with rare anchors) and falls back to
-    a shuffle join when an adversarial eval set makes it large —
-    never an OOM, and only candidates ever shuffle with it.
+    Plan shape at 100 TB: three linear corpus scans, no corpus shuffle
+    (SCALE.md "Contamination / decontamination substring checks").
 
     ``phrases_tok``: (_p, _toks) rows with size(_toks) >= 3.
     """
@@ -582,40 +576,23 @@ def contamination_rate(
     corpus: DataFrame,
     phrase_col: str,
     text_col: str = "text",
-    prefilter: bool | None = None,
-    prefilter_threshold: int = 64,
-    bnlj_budget: float = 5e11,
 ) -> DataFrame:
     """Fraction of distinct eval phrases (NULL/blank dropped) that
     appear (substring) in ≥1 corpus doc → single row (contaminated,
     total, rate), counted lazily by _rate_of.
 
     Parity: wimbd/es/corpus_contamination.py:28-58 (per-row phrase
-    count > 0, then mean). Two physical strategies, same answer:
-
-    - direct: broadcast the phrases into the corpus scan, nested-loop
-      `contains`. Work ~ corpus_bytes × n_phrases char ops — unbeatable
-      on small corpora (one scan, zero joins), catastrophic at 100 TB.
-    - prefilter: rare-interior-token candidate join (_anchored_hits),
-      ~3 linear corpus scans regardless of phrase count. Phrases too
-      short to carry an interior token always take the direct path.
-
-    ``prefilter=None`` picks by the cost model: direct while
-    corpus_bytes × n_phrases ≤ ``bnlj_budget`` (Catalyst's static size
-    estimate; ~1e10 contains-char-ops/s on 32 cores ⇒ 5e11 ≈ under a
-    minute of scan work) or when n_phrases < ``prefilter_threshold``,
-    else prefilter.
+    count > 0, then mean). route's ``prefilter`` gate picks the plan
+    (same answer; SCALE.md "Contamination / decontamination substring
+    checks"): small is a nested-loop ``contains`` over the broadcast
+    phrases, large the rare-interior-token join (_anchored_hits, ~3
+    corpus scans), which phrases too short to carry one skip.
     """
     from wimbd_spark.functions.text import tokenize
 
     phrases = _eval_phrases(eval_df, phrase_col).distinct()
-    if prefilter is None:
-        n_tot = phrases.count()
-        sz = plan_size_bytes(corpus)  # unknown counts as large
-        prefilter = n_tot >= prefilter_threshold and (
-            sz is None or sz * n_tot > bnlj_budget
-        )
-    if not prefilter:
+    work = partial(route.scan_work, corpus, phrases)
+    if route.choose(corpus.sparkSession, "prefilter", work) == "small":
         hits = _contains_hits(corpus, phrases, text_col)
     else:
         pt = phrases.withColumn("_toks", tokenize(F.col("_p")))
@@ -1208,13 +1185,11 @@ def contamination_report(
     text_col: str = "text",
     analyzer=None,
     tokenizer=None,
-    prefilter: bool | None = None,
     token_aligned: bool = False,
 ) -> DataFrame:
     """ONE contamination entry point → (contaminated, total, rate).
 
-    Routes by available inputs, mirroring how contamination_rate
-    already cost-models direct vs prefilter internally:
+    Routes by available inputs:
 
     - ``index`` given, default analyzer → the distributed gram
       semi-join (contamination_rate_indexed fast path — eval set stays
@@ -1232,10 +1207,8 @@ def contamination_report(
       length and slop the decontaminator accepts and flags the same
       phrases).
     - no index, default → substring scan over ``corpus``
-      (contamination_rate; its own cost model picks broadcast
-      nested-loop vs the rare-anchor prefilter, steered by
-      ``prefilter``). slop has no substring meaning — rejected on
-      that path rather than silently ignored.
+      (contamination_rate). slop has no substring meaning — rejected
+      on that path rather than silently ignored.
 
     Both index-free routes count through one rate tail (_rate_of): a
     lazy aggregate over the same eval phrase set (_eval_phrases:
@@ -1268,9 +1241,7 @@ def contamination_report(
             "meaning — pass token_aligned=True for the index-free "
             "windowed scan, or an index= for the postings sweep"
         )
-    return contamination_rate(
-        eval_df, corpus, phrase_col, text_col=text_col, prefilter=prefilter
-    )
+    return contamination_rate(eval_df, corpus, phrase_col, text_col=text_col)
 
 
 def contamination_rate_ngrams(

@@ -30,12 +30,6 @@ from pyspark.sql.window import Window
 
 from wimbd_spark.functions.text import ngram_strings, tokenize
 
-#: Optimizer size (bytes) from which top_pmi_bigrams persists its
-#: unigram and bigram count tables. Below it the redundant branches
-#: run concurrently inside one job and beat the cache-build barrier
-#: (+0.2 s at sf0.1); past it the shared tables win 5× (sf1:
-#: top_npmi 7.0 s → 1.4 s).
-PMI_PERSIST_MIN_BYTES = 2 * 1024 * 1024
 
 def ngram_counts(
     df: DataFrame,
@@ -183,26 +177,19 @@ def top_pmi_bigrams(
         raise ValueError(
             f"rank_by must be 'pmi' or 'npmi', got {rank_by!r}"
         )
-    from wimbd_spark.session import plan_size_bytes, scoped_persist
+    from wimbd_spark import route
+    from wimbd_spark.session import scoped_persist
 
     toks = tokenize(F.col(text_col))
-    # The unigram table feeds THREE consumers (w1 join, w2 join, the
-    # corpus token total) and the bigram table TWO (scored pairs, the
-    # bigram-slot total); unpersisted, Catalyst re-executes the full
-    # scan → tokenize → explode → aggregate chain once per consumer —
-    # the before-plan showed FIVE parquet scans of the corpus for one
-    # query. Both tables are vocabulary-sized, far smaller than the
-    # gram stream that builds them. Gated on the job-free plan size
-    # (PMI_PERSIST_MIN_BYTES); an unknown size counts as small.
-    sz = plan_size_bytes(df)
-    share = sz is not None and sz >= PMI_PERSIST_MIN_BYTES
     uni = (
         df.select(F.explode(toks).alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("wc"))
     )
     bi_all = ngram_counts(df, 2, text_col)
-    if share:
+    # Persisted past route's pmi_persist gate; else each of the count
+    # tables' five consumers re-runs the corpus scan (SCALE.md).
+    if route.choose(df.sparkSession, "pmi_persist", df) == "large":
         uni = scoped_persist(uni)
         bi_all = scoped_persist(bi_all)
     bi = bi_all.filter(F.col("count") >= F.lit(min_count))

@@ -26,36 +26,11 @@ TABLE_NAMES = [
     "embeddings",
 ]
 
-#: Tables whose per-row work is CPU-bound interpreted compute (text
-#: tokenization / n-gram explodes, vector higher-order functions) —
-#: these run at ~1-10 MB/s/core, so a sub-core-count scan partition
-#: of a large file serializes minutes of work and the rebalance
-#: shuffle pays (past REBALANCE_MIN_BYTES, below).
-#: Relational/event tables run through whole-stage-codegen'd
-#: filters/aggs at ~GB/s/core: for them a full-row rebalance shuffle
-#: costs MORE than just processing the small partition in place
-#: (measured r15: lineitem agg 0.31 s unrebalanced vs 1.21 s
-#: rebalanced at sf0.1), and at real scale the scan splits large
-#: files itself — so they are no longer rebalanced on load. The hash
-#: key avoids keyless repartition's sort-before-shuffle tax.
-REBALANCE_KEYS = {
-    "documents": "doc_id",
-    "embeddings": "vec_id",
-}
-
-#: Size gate of that spread: below this many bytes of scanned input
-#: (``plan_size_bytes``, the file size for a parquet scan) the hash
-#: exchange is not added. On small inputs its shuffle-map stage, AQE
-#: job and tasks cost more than the serial scan they spread. Measured
-#: on a 4-core box, local[4], sf0.1 documents/embeddings cut to a
-#: share of their rows, 12 bench.py queries (text and vector, 3
-#: alternating reps in one session), spread vs not: at 67/77 KB
-#: (documents/embeddings) wall 9.24 vs 8.98 s, CPU 17.2 vs 11.6 s; at
-#: 153/194 KB wall 9.41 vs 10.50 s, CPU 19.4 vs 13.6 s. The spread
-#: costs CPU at every size but buys wall time on interpreted text and
-#: vector work from ~150 KB on, so the gate sits between 67 and
-#: 153 KB, for both tables (SCALE.md "Input layer").
-REBALANCE_MIN_BYTES = 128 << 10
+#: The tables spread on load, with their hash key: interpreted text and
+#: vector work, where one core per small file serializes the query.
+#: Codegen'd relational tables cost more spread than not (SCALE.md,
+#: Round 15 (optimization) item 3).
+REBALANCE_KEYS = {"documents": "doc_id", "embeddings": "vec_id"}
 
 
 def get_spark(
@@ -119,40 +94,20 @@ def get_spark(
 
 
 def rebalance_small_input(df: DataFrame, key: str | None = None) -> DataFrame:
-    """Spread a small input (fewer partitions than cores) across the
-    cluster. CPU-bound text operators (tokenize/ngram explode) are
-    otherwise serialized on one core when the source is a single small
-    file. At real scale (many files / large row groups) the scan
-    already yields >= defaultParallelism partitions and this is a
-    no-op — no shuffle is added on the 100 TB path.
+    """Spread a table read in fewer partitions than cores across them
+    when route's ``spread`` gate says large, so CPU-bound text work does
+    not run on one core; at real scale this is a no-op. ``key``: hash
+    on this column, not round-robin (a keyless ``repartition`` sorts
+    its input first; SCALE.md, Round 15 (optimization) item 3)."""
+    from wimbd_spark import route
 
-    Size gate: an input whose job-free size (``plan_size_bytes``) is
-    under ``REBALANCE_MIN_BYTES`` is left as it is — there the
-    exchange, its extra stage and job cost more than the serial scan
-    it spreads. An unknown size is spread. The size is
-    probed after the partition count, which has already optimized the
-    plan, so an input past the gate pays nothing extra for it.
-
-    ``key``: hash-partition on this column instead of round-robin.
-    Keyless ``repartition(n)`` locally SORTS its whole input first
-    (spark.sql.execution.sortBeforeRepartition, on by default since
-    SPARK-23207, so retried tasks reproduce the same row placement) —
-    measured at ~40% of the repartition cost on a 600k-row table
-    (r15). Hashing a unique id column spreads just as evenly, needs
-    no sort, and is deterministic under retries by construction
-    (guide: derive synthetic keys from data, not from rand()).
-    """
     target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() >= target:
+    if (
+        df.rdd.getNumPartitions() >= target
+        or route.choose(df.sparkSession, "spread", df) == "small"
+    ):
         return df
-    size = plan_size_bytes(df)
-    if size is not None and size < REBALANCE_MIN_BYTES:
-        return df
-    if key is not None:
-        from pyspark.sql import functions as F
-
-        return df.repartition(target, F.col(key))
-    return df.repartition(target)
+    return df.repartition(target, key) if key else df.repartition(target)
 
 
 #: Footer key under which Spark stores the exact Spark schema of every
@@ -404,20 +359,18 @@ def scoped_persist(df: DataFrame, level=None) -> DataFrame:
     return df
 
 
-#: Optimizer size estimates at or past this are not sizes: a plan the
-#: optimizer cannot size (an RDD-backed relation, a cross product of
-#: estimates) reports Long.MaxValue or an overflowing product of
-#: estimates. ``plan_size_bytes`` reports those as unknown.
+#: Estimates at or past this are not sizes: Long.MaxValue, or an
+#: overflowing product, for a plan the optimizer cannot size (an
+#: RDD-backed relation, a cross product of estimates).
 _UNKNOWN_SIZE_BYTES = (2**63 - 1) // 2
 
 
 def plan_size_bytes(df: DataFrame) -> int | None:
     """Optimizer size estimate of a DataFrame — driver-side plan
     statistics, NO Spark job (file-size-derived for parquet-backed
-    plans). The one job-free size signal for cost gates.
-
-    None means unknown: the probe failed or the estimate is at least
-    Long.MaxValue/2. Each gate states what unknown means for it."""
+    plans). The one job-free size signal for cost gates. None if the
+    probe failed or the estimate is no size; route.GATES says what
+    that means per gate."""
     try:
         sz = int(
             df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
@@ -494,7 +447,6 @@ def load_tables(
     sf_dir: str,
     names: list[str] | None = None,
     register_views: bool = True,
-    rebalance: bool = True,
 ) -> dict[str, DataFrame]:
     """Load the driver's parquet tables from ``sf_dir``; optionally
     register them as temp views so ``spark.sql`` works on them.
@@ -509,7 +461,7 @@ def load_tables(
         if not os.path.exists(path):
             continue
         df = read_parquet(spark, path)
-        if rebalance and name in REBALANCE_KEYS:
+        if name in REBALANCE_KEYS:
             df = rebalance_small_input(df, key=REBALANCE_KEYS[name])
         if name == "events":
             # Normalize the TIMESTAMP(NANOS) column to a microsecond
